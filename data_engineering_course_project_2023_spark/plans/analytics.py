@@ -25,7 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.expr import MONEY, money, revenue
-from ..session import iterative_shuffle_parts as _iterative_shuffle_parts
+from ..operators.dedup import connected_components
+from ..session import fixpoint, iterative_shuffle_parts as _iterative_shuffle_parts
 
 Tables = dict[str, DataFrame]
 
@@ -111,7 +112,7 @@ def coorder_pair_stream(li: DataFrame) -> DataFrame:
 def coorder_edges(li: DataFrame) -> DataFrame:
     """Canonical co-order edge list (src < dst, co-order weight ≥ 2) —
     the ONE graph build shared by copair_components, triangle_counts,
-    community_labels, kcore_nodes(_adaptive), and node_jaccard."""
+    community_labels, kcore_nodes, and node_jaccard."""
     return (
         coorder_pair_stream(li)
         .groupBy("src", "dst")
@@ -786,62 +787,22 @@ FROM spend
 # --- iterative algorithm: connected components of the co-order graph -------
 def copair_components(t: Tables, max_iter: int = 40) -> DataFrame:
     """Connected components over the part co-order graph (edges =
-    copair_counts pairs): iterative min-label propagation, the
-    DataFrame spelling of GraphFrames/Pregel CC.
-
-    The driver-side loop is legitimate here — iteration count is
-    O(component diameter), data never leaves the cluster; each round is
-    one join + one aggregate, with the label frame persisted and the
-    previous iteration unpersisted. Converges when no label changes.
+    copair_counts pairs, weight ≥ 2): the engine's one min-label
+    propagation kernel, :func:`operators.dedup.connected_components`,
+    over every part that appears in an order. Data never leaves the
+    cluster; rounds ≤ component diameter + 1, and a graph past the
+    round cap raises a typed ScaleGuard instead of a partial answer.
     Oracle: a DuckDB recursive CTE computing min-reachable-label — so
     even the iterative path is exact-checked.
     """
-    # localCheckpoint (not persist) each round: without lineage
-    # truncation the logical plan doubles per iteration and planning
-    # itself OOMs long before the data does — the canonical iterative-
-    # algorithm discipline (GraphFrames checkpoints the same way).
-    edges = coorder_adjacency(t["lineitem"]).localCheckpoint()
-    nodes = t["lineitem"].select(F.col("l_partkey").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
-    # convergence via the label sum: min-label propagation only ever
-    # DECREASES labels, so sum(lbl) is strictly monotone until fixpoint —
-    # a single cheap agg replaces a join-based changed-row count.
-    prev_sum = labels.agg(F.sum("lbl")).first()[0]
-    spark = labels.sparkSession
-    # NOTE: plain per-round propagation, NOT pointer jumping — measured
-    # here, the extra label-of-label join per round costs more than the
-    # rounds it saves (8 → ~5 on this graph). On a 1000-executor cluster
-    # where each round is a synchronization barrier, jumping's
-    # O(log diameter) rounds win; flip when barrier cost dominates.
-    # One propagation step per checkpoint round — measured better than
-    # double-stepping: labels feeds the next step TWICE (union side +
-    # join side), so skipping the materialization makes Spark recompute
-    # the grouped frame and costs more than the barrier it saves.
-    with _iterative_shuffle_parts(spark, edges.count()):
-        for i in range(max_iter):
-            msgs = (
-                edges.join(labels, edges.src == labels.node)
-                .select(F.col("dst").alias("node"), "lbl")
-            )
-            # the convergence probe rides the checkpoint job via
-            # observe(): one job per round instead of two (the separate
-            # post-checkpoint agg was ~25% of end-to-end at sf0.1 —
-            # 4.8 s → 3.4 s, tools/cc_observe_probe.py)
-            obs = Observation(f"cc_sum_{i}")
-            labels = (
-                labels.unionByName(msgs)
-                .groupBy("node")
-                .agg(F.min("lbl").alias("lbl"))
-                .observe(obs, F.sum("lbl").alias("s"))
-                .localCheckpoint()
-            )
-            new_sum = obs.get["s"]
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-    # labels is materialized, so consumers never replan under the
-    # iterative setting
-    return labels.select(F.col("node").alias("l_partkey"), F.col("lbl").alias("component"))
+    li = t["lineitem"]
+    # materialized, so the pair aggregation runs once for the kernel's
+    # symmetrized edge frame
+    edges = coorder_edges(li).localCheckpoint()
+    nodes = li.select(F.col("l_partkey").alias("node")).distinct()
+    return connected_components(nodes, edges, max_iter).select(
+        F.col("node").alias("l_partkey"), F.col("lbl").alias("component")
+    )
 
 
 COPAIR_COMPONENTS_SQL = """
@@ -1794,8 +1755,6 @@ def part_golden_records(t: Tables) -> DataFrame:
     Measured: >485 s (context death) → 4.3 s at sf10.
     Singleton name-nodes are their own golden record — the LEFT join
     + coalesce keeps them."""
-    from ..operators.dedup import connected_components
-
     p = t["part"].select("p_partkey", "p_brand", "p_size", "p_name",
                          "p_retailprice")
     g = (
@@ -1962,11 +1921,13 @@ def trade_hops(t: Tables) -> DataFrame:
         )
         .distinct()
     )
+    n_edges = Observation()
     edges = (
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionByName(
             pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
+        .observe(n_edges, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
     seed = edges.sparkSession.range(1).select(
@@ -1988,9 +1949,8 @@ def trade_hops(t: Tables) -> DataFrame:
     levels = [seed]
     # per-level reducer sizing: the expand/distinct/anti-join chain
     # moves edge/frontier-sized data — same scoped iterative clamp as
-    # copair_components.
-    spark = edges.sparkSession
-    with _iterative_shuffle_parts(spark, edges.count()):
+    # the CC kernel, sized by the count observed on the edge checkpoint.
+    with _iterative_shuffle_parts(edges.sparkSession, n_edges.get["n"]):
         for h in range(1, 5):
             nxt = (
                 edges.join(frontier, edges["src"] == frontier["node"])
@@ -2134,9 +2094,7 @@ def community_labels(t: Tables) -> DataFrame:
 
     Scale: messages are edge-sized, the count collapses to (node,
     distinct neighbor label) before the window, and the window
-    partitions by node — no global sort, no all-pairs anything. An
-    adaptive-round variant would re-introduce the per-round
-    localCheckpoint discipline from copair_components.
+    partitions by node — no global sort, no all-pairs anything.
     """
     nodes = (
         t["lineitem"].select(F.col("l_partkey").alias("node")).distinct()
@@ -2170,70 +2128,6 @@ def community_labels(t: Tables) -> DataFrame:
                 F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
             )
         )
-    return labels.select("node", F.col("lbl").alias("community"))
-
-
-def community_labels_adaptive(
-    t: Tables, max_rounds: int = 32
-) -> DataFrame:
-    """Adaptive variant of :func:`community_labels` (r2 verdict #10
-    polish, the LPA sibling of :func:`kcore_nodes_adaptive`): iterate
-    the SAME synchronous self-voting min-tiebreak update until no
-    label changes, instead of a fixed round count. Unlike the k-core
-    peel there is no monotone aggregate to probe (labels move both
-    ways), so the fixpoint probe is a changed-label count folded into
-    the per-round checkpoint job via observe() — still one job per
-    round. Synchronous LPA has no global convergence guarantee
-    (higher-order oscillations are possible even with the self-vote),
-    hence the max_rounds bound and the variant staying INTERNAL behind
-    the fixed-round registry contract (the registered query must be a
-    total function with a statically bounded plan — NOTES.md
-    discipline; the sf0.01 co-order graph is in fact NOT converged
-    after 3 rounds, so the two queries answer different questions
-    there, deliberately). On graphs that converge within the fixed
-    budget the two results are IDENTICAL — pinned in pytest on a
-    two-clique fixture, along with early probe termination."""
-    nodes = (
-        t["lineitem"].select(F.col("l_partkey").alias("node")).distinct()
-        .localCheckpoint()
-    )
-    edges = (
-        coorder_adjacency(t["lineitem"])
-        .unionByName(
-            nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        )
-        .localCheckpoint()
-    )
-    labels = nodes.select("node", F.col("node").alias("lbl")).localCheckpoint()
-    w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lbl").asc())
-    spark = labels.sparkSession
-    with _iterative_shuffle_parts(spark, edges.count()):
-        for i in range(max_rounds):
-            msgs = (
-                edges.join(labels, edges.src == labels.node)
-                .groupBy(F.col("dst").alias("node"), "lbl")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
-            best = (
-                msgs.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("node", F.col("lbl").alias("new_lbl"))
-            )
-            obs = Observation(f"lpa_chg_{i}")
-            labels = (
-                labels.join(best, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
-                    (F.coalesce(F.col("new_lbl"), F.col("lbl"))
-                     != F.col("lbl")).cast("long").alias("_chg"),
-                )
-                .observe(obs, F.sum("_chg").alias("chg"))
-                .select("node", "lbl")
-                .localCheckpoint()
-            )
-            if obs.get["chg"] == 0:
-                break
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -2387,33 +2281,35 @@ _KCORE_ROUNDS = 6
 
 def kcore_nodes(t: Tables) -> DataFrame:
     """A16: k-core decomposition (k={k}) of the part co-order graph by
-    iterative peeling — {r} FIXED rounds of "drop every node whose
+    iterative peeling — at most {r} rounds of "drop every node whose
     current degree < k", the dense-subgraph extraction used to find the
     stable heart of a collaboration/co-purchase network.
 
-    Fixed rounds (not loop-until-fixpoint) keep the query a TOTAL
-    function of the input — semantics are "{r} peels", which the
-    unrolled DuckDB twin reproduces exactly; on both test SFs the graph
-    converges well before round {r} (sf0.01: 2 rounds), so the result
-    IS the 2-core there, and the fixed bound is the honest contract
-    everywhere else. Per round: one degree agg + one semi-join, both
-    keyed — no all-pairs anything; survivors are localCheckpoint-ed so
-    the plan stays flat (per-round frames only shrink).
+    The round cap keeps the query a TOTAL function of the input —
+    semantics are "{r} peels", which the unrolled DuckDB twin
+    reproduces exactly. Peels run on :func:`session.fixpoint` with the
+    surviving-edge count as probe: peeling only removes edges, so an
+    unchanged count is an unchanged edge set and the remaining peels
+    are no-ops — stopping there returns the same rows as the full {r}.
+    On both test SFs the peel reaches its fixpoint within the cap
+    (sf0.01 after 3 peels, sf0.1 after 5), so the result IS the 2-core
+    there. Per round: one degree agg + one semi-join pair, both keyed —
+    no all-pairs anything.
 
     Output: (l_partkey, core_degree) for surviving nodes.
     """
-    edges = coorder_adjacency(t["lineitem"]).localCheckpoint()
-    spark = edges.sparkSession
-    with _iterative_shuffle_parts(spark, edges.count()):
-        cur = edges
-        for _ in range(_KCORE_ROUNDS):
-            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            keep = deg.filter(F.col("deg") >= _KCORE_K).select("src")
-            cur = (
-                cur.join(keep, "src", "left_semi")
-                .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-                .localCheckpoint()
-            )
+
+    def peel(cur: DataFrame) -> DataFrame:
+        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        keep = deg.filter(F.col("deg") >= _KCORE_K).select("src")
+        return cur.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
+        )
+
+    # a capped peel is the contract, so non-convergence is not an error
+    cur, _converged = fixpoint(
+        coorder_adjacency(t["lineitem"]), peel, F.count(F.lit(1)), _KCORE_ROUNDS
+    )
     return (
         cur.groupBy("src")
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -2422,52 +2318,6 @@ def kcore_nodes(t: Tables) -> DataFrame:
 
 
 kcore_nodes.__doc__ = kcore_nodes.__doc__.format(k=_KCORE_K, r=_KCORE_ROUNDS)
-
-
-def kcore_nodes_adaptive(t: Tables, k: int = _KCORE_K, max_rounds: int = 64) -> DataFrame:
-    """Adaptive variant of :func:`kcore_nodes` (r2 verdict follow-up):
-    peel until FIXPOINT instead of a fixed round count, using the same
-    monotone convergence probe discipline as connected components —
-    the surviving edge count only ever decreases, so one cheap
-    ``count()`` per round detects the fixpoint without a join-based
-    diff. On any input where the fixed-round query has converged
-    (both test SFs converge in ≤ 3 peels), the two results are
-    IDENTICAL — pinned in pytest — so this stays an internal variant
-    behind the fixed-round registry contract (the registered query
-    must be a total function of the input with a statically bounded
-    plan; NOTES.md discipline).
-
-    max_rounds bounds the pathological case (a long chain peels one
-    node per round): degeneracy order would need O(n) rounds — if a
-    real corpus hits the bound, the honest fix is the h-index/Batagelj
-    bucket algorithm, not more rounds.
-    """
-    edges = coorder_adjacency(t["lineitem"]).localCheckpoint()
-    spark = edges.sparkSession
-    prev_n = edges.count()
-    with _iterative_shuffle_parts(spark, prev_n):
-        cur = edges
-        for i in range(max_rounds):
-            deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            keep = deg.filter(F.col("deg") >= k).select("src")
-            # fixpoint probe rides the checkpoint job (observe), same
-            # one-job-per-round discipline as copair_components
-            obs = Observation(f"kcore_n_{i}")
-            cur = (
-                cur.join(keep, "src", "left_semi")
-                .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
-            )
-            n = obs.get["n"]
-            if n == prev_n:
-                break
-            prev_n = n
-    return (
-        cur.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .select(F.col("src").alias("l_partkey"), "core_degree")
-    )
 
 
 def _kcore_round_sql(r: int) -> str:

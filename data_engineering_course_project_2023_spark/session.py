@@ -19,9 +19,11 @@ Design notes for the 100 TB target (tested on local[N]):
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # local[N] is a single JVM: the "driver" heap IS the whole cluster's
@@ -156,3 +158,45 @@ def iterative_shuffle_parts(
         yield iter_parts
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", str(conf_parts))
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Column,
+    max_rounds: int,
+    size_rows: int | None = None,
+) -> tuple[DataFrame, bool]:
+    """Iterate ``state = step(state)`` until the aggregate ``probe``
+    repeats, at most ``max_rounds`` times; return (final state,
+    converged). The one checkpoint loop of the iterative graph family.
+
+    The probe must be MONOTONE over the rounds (a label sum that only
+    falls, a row count that only shrinks), so a repeated value means an
+    unchanged state and every further round would be a no-op. Each
+    round is ONE action: ``step``, then ``observe(probe)``, then
+    ``localCheckpoint()`` — the probe rides the checkpoint job, and the
+    checkpoint truncates lineage so the plan never doubles per round
+    (observe vs a second probe job: NOTES.md, round 3). The seed is
+    checkpointed and probed the same way, before the reducer scope.
+
+    Rounds run inside :func:`iterative_shuffle_parts`, sized by
+    ``size_rows`` (a count the caller observed on a checkpoint it
+    already runs) or, when None, by the seed's row count, observed on
+    the seed job — no job ever runs only to size the scope.
+    """
+    seed = Observation()
+    state = state.observe(
+        seed, probe.alias("p"), F.count(F.lit(1)).alias("n")
+    ).localCheckpoint()
+    prev = seed.get["p"]
+    n_rows = seed.get["n"] if size_rows is None else size_rows
+    with iterative_shuffle_parts(state.sparkSession, n_rows):
+        for _ in range(max_rounds):
+            obs = Observation()
+            state = step(state).observe(obs, probe.alias("p")).localCheckpoint()
+            cur = obs.get["p"]
+            if cur == prev:
+                return state, True
+            prev = cur
+    return state, False

@@ -6,6 +6,7 @@ end-to-end; these pin the *rules* on inputs built to exercise them."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_course_project_2023_spark.operators import dedup, similarity
@@ -181,26 +182,93 @@ def test_triangle_counts_enumeration(spark):
     assert got == {1: 2, 2: 1, 3: 1, 4: 2}
 
 
-def test_kcore_adaptive_matches_fixed_round(spark):
-    """r2 verdict #10: the adaptive (loop-until-fixpoint) peeling must
-    equal the registered fixed-round query wherever the fixed rounds
-    have converged — which both test SFs have (≤3 peels). Also pins
-    that the session shuffle setting is restored after the loop."""
+def test_kcore_nodes_restores_shuffle_conf(spark):
+    """kcore_nodes peels inside the scoped reducer override of
+    session.fixpoint (8 reducers at sf0.01); the session shuffle setting
+    must be restored after the loop, and the sf0.01 2-core is
+    non-empty."""
     from data_engineering_course_project_2023_spark.plans import analytics, registry
 
     sf = "/root/testdata/sf0.01"
     t = registry.load_tables(spark, sf, ("lineitem",))
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    fixed = {
-        (r["l_partkey"], r["core_degree"])
-        for r in analytics.kcore_nodes(t).collect()
-    }
-    adaptive = {
-        (r["l_partkey"], r["core_degree"])
-        for r in analytics.kcore_nodes_adaptive(t).collect()
-    }
-    assert adaptive == fixed and len(fixed) > 0
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        assert analytics.kcore_nodes(t).count() > 0
+        assert spark.conf.get(conf) == "64"
+    finally:
+        spark.conf.set(conf, before)
+
+
+def _chain(spark, n):
+    """Nodes 1..n joined as one path: n - 1 label moves, so min-label
+    propagation needs n rounds (the last one sees the probe repeat)."""
+    nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "node long")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, n)], "src long, dst long"
+    )
+    return nodes, edges
+
+
+def test_cc_raises_past_round_cap(spark):
+    """A component whose diameter outruns max_iter must not come back
+    half-propagated: the 26-node chain (26 rounds) raises the typed
+    ScaleGuard at max_iter=20, naming the star path."""
+    nodes, edges = _chain(spark, 26)
+    with pytest.raises(dedup.AlgorithmScaleLimit, match="connected_components_star"):
+        dedup.connected_components(nodes, edges, max_iter=20)
+
+
+def test_cc_runs_one_action_per_round(spark):
+    """The label-sum probe rides each round's checkpoint job via
+    observe(), so an extra round costs exactly one round's jobs. Under
+    AQE one round's checkpoint action runs 5 jobs (its query stages plus
+    the checkpoint itself) — the per-round count the pre-helper loop
+    measured too; a separate probe job per round would make it 6."""
+    sc = spark.sparkContext
+
+    def jobs(n):
+        nodes, edges = _chain(spark, n)
+        group = f"cc-rounds-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            dedup.connected_components(nodes, edges).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(16) - jobs(6) == 5 * (16 - 6)
+
+
+def test_fixpoint_restores_shuffle_conf_when_step_raises(spark):
+    """The reducer override is scoped: a step that raises mid-loop must
+    leave the session shuffle setting as it found it."""
+    from data_engineering_course_project_2023_spark.session import fixpoint
+
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    seen = []
+
+    def step(df):
+        seen.append(spark.conf.get(conf))
+        if len(seen) == 2:
+            raise RuntimeError("step failed")
+        return df.select((F.col("x") - 1).alias("x"))
+
+    spark.conf.set(conf, "64")
+    try:
+        with pytest.raises(RuntimeError, match="step failed"):
+            fixpoint(
+                spark.range(3).select(F.col("id").alias("x")),
+                step, F.sum("x"), 10, size_rows=1,
+            )
+        assert seen == ["8", "8"]
+        assert spark.conf.get(conf) == "64"
+    finally:
+        spark.conf.set(conf, before)
 
 
 def test_star_cc_matches_propagation(spark):
@@ -243,10 +311,10 @@ def test_star_cc_matches_propagation(spark):
         prop, star = labels(nodes, edges)
         assert star == prop, (n, m, es)
     # a pure long chain — worst case for propagation (diameter rounds),
-    # the case star contraction exists for. Propagation needs its round
-    # cap RAISED past the 25-hop diameter to converge (at the default
-    # max_iter=20 it silently truncates — exactly the failure mode the
-    # O(log n) star rounds are immune to); star needs no tuning.
+    # the case star contraction exists for. Propagation needs a round
+    # cap past the 25-hop diameter to converge (below it, it raises
+    # AlgorithmScaleLimit — test_cc_raises_past_round_cap); the O(log n)
+    # star rounds need no tuning.
     chain = [(i, i + 1) for i in range(1, 26)]
     nodes = spark.createDataFrame([(i,) for i in range(1, 27)], "node long")
     edges = spark.createDataFrame(chain, "src long, dst long")
@@ -272,39 +340,6 @@ def test_star_cc_matches_propagation(spark):
         for r in dedup.connected_components_star(nodes, und).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_lpa_adaptive_matches_fixed_round_at_convergence(spark):
-    """r2 verdict #10 (LPA half): the adaptive loop-until-no-change
-    label propagation equals the registered fixed-round query on a
-    graph that converges within the fixed budget (two co-order
-    triangles — every node adopts its clique's min label in one round;
-    synchronous LPA on the full sf0.01 graph is NOT converged after 3
-    rounds, which is exactly why the adaptive variant stays internal).
-    Also pins that the changed-label observe() probe terminates the
-    loop well before max_rounds and the shuffle setting is restored."""
-    from data_engineering_course_project_2023_spark.plans import analytics
-
-    rows = [
-        (o, p)
-        for parts, orders in (((1, 2, 3), (1, 2)), ((10, 11, 12), (3, 4)))
-        for o in orders
-        for p in parts
-    ]
-    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    t = {"lineitem": li}
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    fixed = {
-        (r["node"], r["community"])
-        for r in analytics.community_labels(t).collect()
-    }
-    adaptive = {
-        (r["node"], r["community"])
-        for r in analytics.community_labels_adaptive(t, max_rounds=32).collect()
-    }
-    assert adaptive == fixed
-    assert fixed == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)}
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_mmr_rerank_matches_stepwise_loop_on_random_vectors(spark):
