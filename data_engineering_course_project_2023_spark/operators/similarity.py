@@ -139,8 +139,11 @@ def cosine_exact_q(a: Column, qb: Column) -> Column:
     qa = quantize_vec(a)
     na2 = _int_dot(qa, qa)
     nb2 = _int_dot(qb, qb)
-    return _int_dot(qa, qb).cast("double") / F.sqrt(
-        na2.cast("double") * nb2.cast("double")
+    # try_divide: a zero-norm side gives NULL, as the DuckDB twin's `/`
+    # does; the ANSI `/` would raise DIVIDE_BY_ZERO instead.
+    return F.try_divide(
+        _int_dot(qa, qb).cast("double"),
+        F.sqrt(na2.cast("double") * nb2.cast("double")),
     )
 
 
@@ -266,7 +269,8 @@ def blocked_cosine_pairs(
     values are the same doubles the per-pair expression produced (same
     fold order, same ops), and dot/(na·nb) is the same
     multiply-then-divide. (A codegen-unrolled fixed-width dot was
-    measured for the per-pair kernel and REJECTED: see dot_fixed.)"""
+    measured for the per-pair kernel and REJECTED: see the round-12
+    negative-result comment above :func:`norm`.)"""
     e = spread(df).select(
         F.col(id_col),
         F.col(block_col).alias("_blk"),

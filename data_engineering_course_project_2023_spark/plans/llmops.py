@@ -9,6 +9,8 @@ the SQL text is long but mechanical.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -5173,6 +5175,24 @@ MMR_SHORTLIST = 20
 MMR_K = 5
 
 
+def _desc_key(x: float | None) -> tuple:
+    """Ascending sort key that orders doubles as Spark's (and DuckDB's)
+    DESC does: NaN above every number, NULL last."""
+    if x is None:
+        return (2, 0.0)
+    if math.isnan(x):
+        return (0, 0.0)
+    return (1, -x)
+
+
+def _sql_max(xs) -> float | None:
+    """SQL MAX over doubles: NULLs skipped, NaN above every number."""
+    vals = [x for x in xs if x is not None]
+    if not vals:
+        return None
+    return next((x for x in vals if math.isnan(x)), max(vals))
+
+
 def mmr_rerank(t: Tables) -> DataFrame:
     """X3: Maximal Marginal Relevance rerank — the diversification stage a
     production retrieval stack runs AFTER candidate generation: from the
@@ -5217,6 +5237,12 @@ def mmr_rerank(t: Tables) -> DataFrame:
     ``0.5·rel − 0.5·maxsim`` double arithmetic; ranks/tiebreaks are
     (score desc, vec_id asc). The oracle unrolls the same greedy loop
     as 5 chained CTEs over the same quantized spelling.
+
+    Totality: a shortlist of fewer than ``MMR_K`` rows (0 and 1
+    included) returns one pick per row. A zero-norm embedding has no
+    cosine, so its rel and sims are NULL in both engines; the driver's
+    pick key orders scores as the engines' DESC does (NaN first, NULL
+    last).
     """
     emb = t["embeddings"]
     q = emb.filter(F.col("vec_id") == 0).select(
@@ -5245,10 +5271,11 @@ def mmr_rerank(t: Tables) -> DataFrame:
     # cosine_exact quantizes both sides in-engine, the literal-vector
     # spelling it replaces quantized the collected side via
     # quantize_py, its exact driver twin). 380 rows collected.
+    # LEFT join: every shortlist row appears at least once (vb NULL
+    # when it has no partner), so a 1-row shortlist still seeds rel.
     a, b = cand.alias("a"), cand.alias("b")
     mat = (
-        a.crossJoin(b)
-        .filter(F.col("a.vec_id") != F.col("b.vec_id"))
+        a.join(b, F.col("a.vec_id") != F.col("b.vec_id"), "left")
         .select(
             F.col("a.vec_id").alias("va"),
             F.col("a.rel").alias("rel"),
@@ -5263,7 +5290,7 @@ def mmr_rerank(t: Tables) -> DataFrame:
         .collect()
     )
     rel = {r["va"]: r["rel"] for r in mat}
-    sim = {(r["va"], r["vb"]): r["sim"] for r in mat}
+    sim = {(r["va"], r["vb"]): r["sim"] for r in mat if r["vb"] is not None}
 
     def _round6(x: float) -> float:
         # java.math.BigDecimal.valueOf(x).setScale(6, HALF_UP), the
@@ -5286,19 +5313,23 @@ def mmr_rerank(t: Tables) -> DataFrame:
             if not selected:
                 maxsim, score = None, rel[v]
             else:
-                maxsim = max(sim[(v, s)] for s, _m in selected)
-                score = _round6(0.5 * rel[v] - 0.5 * maxsim)
-            key = (-score, v)
+                maxsim = _sql_max(sim[(v, s)] for s, _m in selected)
+                score = (
+                    None if rel[v] is None or maxsim is None
+                    else _round6(0.5 * rel[v] - 0.5 * maxsim)
+                )
+            key = (_desc_key(score), v)
             if best is None or key < best[0]:
                 best = (key, v, maxsim)
+        if best is None:
+            break  # fewer than MMR_K rows: the oracle's later steps are empty
         selected.append((best[1], best[2]))
-    rank_map = F.create_map(
-        *[
-            lit
-            for i, (vid, _m) in enumerate(selected)
-            for lit in (F.lit(vid), F.lit(i + 1))
-        ]
-    )
+    # a CASE chain, not create_map: an empty pick list must still type
+    rank_expr = F.lit(None).cast("int")
+    for i, (vid, _m) in enumerate(selected):
+        rank_expr = F.when(F.col("vec_id") == F.lit(vid), F.lit(i + 1)).otherwise(
+            rank_expr
+        )
     # mmr re-spelled in-engine per pick: rel for the first, the same
     # round(0.5·rel − 0.5·maxsim, 6) as the loop for the rest, with
     # maxsim an engine-computed rounded sim passed back as a literal
@@ -5315,7 +5346,7 @@ def mmr_rerank(t: Tables) -> DataFrame:
     return (
         cand.filter(F.col("vec_id").isin([vid for vid, _m in selected]))
         .select(
-            rank_map[F.col("vec_id")].cast("int").alias("rank"),
+            rank_expr.alias("rank"),
             "vec_id",
             "rel",
             mmr_expr.alias("mmr"),

@@ -433,3 +433,72 @@ def test_mmr_rerank_matches_stepwise_loop_on_random_vectors(spark):
         )
         want = reference_loop(cand)
         assert got == want, f"seed {seed}: {got} != {want}"
+
+
+def _mmr_vs_oracle(spark, tmp_path, rows):
+    """Run mmr_rerank over a constructed embeddings table and compare it
+    with its DuckDB oracle; returns the engine rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_course_project_2023_spark.plans import registry
+    from tests.parity import compare
+
+    schema = pa.schema(
+        [("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))]
+    )
+    pq.write_table(
+        pa.Table.from_pylist(
+            [{"vec_id": v, "embedding": e} for v, e in rows], schema=schema
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    df = registry.run_query("mmr_rerank", spark, str(tmp_path))
+    problems = compare(df, registry.REGISTRY["mmr_rerank"].oracle, str(tmp_path))
+    assert not problems, problems
+    return [(r["rank"], r["vec_id"], r["rel"], r["mmr"]) for r in df.collect()]
+
+
+@pytest.mark.parametrize("n_cand", [0, 1, 3])
+def test_mmr_rerank_short_shortlist_matches_oracle(spark, tmp_path, n_cand):
+    """A shortlist of 0, 1 or fewer than MMR_K rows returns one pick per
+    row, as the oracle's later greedy steps come out empty."""
+    rows = [(0, [1.0, 0.0, 0.0])] + [
+        (v, [1.0, 0.5 * v, -0.25 * v]) for v in range(1, n_cand + 1)
+    ]
+    got = _mmr_vs_oracle(spark, tmp_path, rows)
+    assert [r[0] for r in got] == list(range(1, n_cand + 1))
+
+
+def test_mmr_rerank_zero_norm_embedding_matches_oracle(spark, tmp_path):
+    """A zero-norm embedding has no cosine: rel and its sims are NULL, as
+    in the oracle, and NULL scores are picked last."""
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.0, 0.0, 0.0]),
+        (2, [1.0, 1.0, 0.0]),
+        (3, [0.5, -1.0, 0.25]),
+    ]
+    got = _mmr_vs_oracle(spark, tmp_path, rows)
+    assert [r[1] for r in got][-1] == 1 and got[-1][2] is None
+
+
+def test_mmr_rerank_zero_norm_query_matches_oracle(spark, tmp_path):
+    """A zero-norm query vector makes every rel NULL: picks fall back to
+    the vec_id tiebreak, as in the oracle."""
+    rows = [(0, [0.0, 0.0])] + [(v, [1.0, float(v)]) for v in range(1, 8)]
+    got = _mmr_vs_oracle(spark, tmp_path, rows)
+    assert [r[1] for r in got] == [1, 2, 3, 4, 5]
+
+
+def test_mmr_desc_key_orders_like_spark():
+    """The driver-side pick key sorts NaN above every number and NULL
+    last, as Spark's descending sort does."""
+    from data_engineering_course_project_2023_spark.plans import llmops
+
+    vals = [0.5, None, float("nan"), -1.0, 2.0]
+    got = sorted(vals, key=llmops._desc_key)
+    assert str(got) == str([float("nan"), 2.0, 0.5, -1.0, None])
+    assert str(llmops._sql_max([0.1, None, float("nan")])) == "nan"
+    assert llmops._sql_max([None, None]) is None
+    assert llmops._sql_max([0.1, None, 0.3]) == 0.3

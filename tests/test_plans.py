@@ -530,7 +530,26 @@ def test_session_scale_confs_pinned(spark):
     (SMJ nodes 132→60 registry-wide with zero added Sorts), and AQE as
     the scale-adaptive partitioner. A silent rollback of any of these
     would regress measured wins while every oracle stays green, which
-    is exactly the class of change tests must catch."""
+    is exactly the class of change tests must catch.
+
+    The tier-4 JIT thresholds (session.TIER4_JIT_OPTIONS: a cold pass's
+    CPU −26..−31 %) are read back from the live JVM through
+    HotSpotDiagnosticMXBean, not from the Spark conf: Spark applies
+    extraJavaOptions only when it launches the JVM, so only the JVM's
+    own value proves the flags took effect."""
+    jvm = spark.sparkContext._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    jit = {
+        "Tier4InvocationThreshold": "50000",
+        "Tier4MinInvocationThreshold": "6000",
+        "Tier4CompileThreshold": "150000",
+        "Tier4BackEdgeThreshold": "400000",
+    }
+    for k, v in jit.items():
+        got = hotspot.getVMOption(k).getValue()
+        assert got == v, f"JVM flag {k}={got}, measured value is {v}"
     conf = {
         "spark.io.compression.codec": "zstd",
         "spark.sql.parquet.compression.codec": "zstd",

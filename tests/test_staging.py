@@ -118,9 +118,18 @@ def test_atexit_cleanup_removes_this_runs_stages(spark, frame, tmp_path):
     dedup.stage_parquet(frame, base, _fp(tmp_path), params=("p", 1))
     staged = glob.glob(base + "-*")
     assert len(staged) == 1 and staged[0] in dedup._STAGE_LIVE
-    dedup._cleanup_live_stages()
+    # Run the hook over THIS test's stage only: stages that earlier
+    # tests registered are still in use and must survive.
+    others = dedup._STAGE_LIVE - {staged[0]}
+    alive = {p for p in others if os.path.exists(p)}
+    dedup._STAGE_LIVE.intersection_update(staged)
+    try:
+        dedup._cleanup_live_stages()
+    finally:
+        dedup._STAGE_LIVE.clear()
+        dedup._STAGE_LIVE.update(others)
     assert not os.path.exists(staged[0])
-    dedup._STAGE_LIVE.clear()  # cleaned paths are gone for this test
+    assert all(os.path.exists(p) for p in alive)
 
 
 def test_fingerprint_miss_gcs_stale_siblings(spark, frame, tmp_path):

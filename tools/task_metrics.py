@@ -9,7 +9,9 @@ this is the committed version.
 
 Runs the query in ITS OWN SparkSession with spark.eventLog enabled,
 then parses SparkListenerTaskEnd events: total shuffle read/write
-bytes, memory/disk spill, executor run/CPU time, peak memory.
+bytes, memory/disk spill, executor run/CPU time, peak memory. Also
+reports ``jit_compile_ms``, the JVM's JIT compile time across the
+measured run (CompilationMXBean), which no task metric covers.
 
 Usage:
     python -m tools.task_metrics --sf testdata/sf30z \
@@ -99,9 +101,16 @@ def main() -> None:
         finally:
             spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
 
+    # JIT compile time of the measured run: the JVM's cumulative
+    # compiler-thread time, which task metrics and spans never see
+    # (with --warmups 0 this is the cold run's compile cost).
+    jvm = spark.sparkContext._jvm
+    compiler = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    jit0 = compiler.getTotalCompilationTime()
     t0 = time.monotonic()
     n = registry.run_query(args.query, spark, args.sf).count()
     wall = round(time.monotonic() - t0, 3)
+    jit_ms = compiler.getTotalCompilationTime() - jit0
     spark.stop()  # flushes the event log
 
     tot = {
@@ -111,6 +120,7 @@ def main() -> None:
         "disk_spill_bytes": 0,
         "executor_run_ms": 0,
         "executor_cpu_ms": 0,
+        "jit_compile_ms": jit_ms,
         "input_bytes": 0,
         "input_records": 0,
         "tasks": 0,
