@@ -19,6 +19,15 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+import time
+import uuid
+from urllib.parse import urlparse
+
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -33,52 +42,19 @@ N_MINHASH = 8
 SLICES_PER_MD5 = 4
 BAND_SIZE = 2  # 4 bands of 2 → catches jaccard ≳ 0.5 with high prob
 
-# Stage paths this PROCESS has staged or reused — GC protection, not a
-# cache: the stale-sibling GC must never delete a directory another
-# registry query in this same session staged under a different params
-# fingerprint and may still re-read (round 11 regression: the full-
-# registry plan sweep interleaves two param sets on one stage_dir; the
-# old code GC'd the first set's live stage on the second's fingerprint
-# miss, then a verified-path memo served the deleted path →
-# PATH_NOT_FOUND). Unbounded by design: it holds one short string per
-# distinct (stage_dir, inputs, params) seen in a session — dozens, not
-# millions — and correctness depends on it never evicting.
-_STAGE_LIVE: set[str] = set()
-
-# Per-run stage cleanup (round 12): each run removes its own staged
-# directories at interpreter exit. Registered lazily on first stage so
-# importing this module never touches atexit.
-_CLEANUP_REGISTERED = False
-
-
-def _cleanup_live_stages() -> None:
-    import shutil
-
-    for p in list(_STAGE_LIVE):
-        shutil.rmtree(p, ignore_errors=True)
-
-# Bump when stage_parquet's staged-frame derivation changes shape or
-# content for identical inputs: the constant is folded into the
-# fingerprint so stages written by older code are never served to newer
-# code cross-process (ADVICE r10). Callers version their OWN derivation
-# through `params`; this guards the staging layer itself.
-_STAGE_FORMAT_VERSION = 1
-
-# Bounded memo size: these are per-session conveniences, not a real
-# cache layer; a runaway sweep over many inputs must not pin unbounded
-# driver memory (each Bloom bitmap is m/64 longs).
+# Memo bound: a sweep over many inputs must not pin unbounded driver
+# memory (each Bloom bitmap is m/64 longs).
 _CACHE_MAX_ENTRIES = 32
+_RUN_MEMO: dict = {}
+# A sibling run root untouched this long belongs to a run that died
+# before its exit hook.
+_DEAD_ROOT_AGE_S = 24 * 3600
 
 
 def _files_fingerprint(df: DataFrame) -> tuple:
     """Identity of a frame's file inputs: (path, mtime_ns, size) per
-    file. inputFiles alone cannot see an in-place overwrite (same path,
-    new bytes); stat'ing mtime+size catches that. Non-local paths fall
-    back to the bare URI (cluster object stores are immutable-by-
-    convention; overwrite-in-place is a local-test phenomenon)."""
-    import os
-    from urllib.parse import urlparse
-
+    file, so an in-place overwrite changes it. Non-local URIs fall back
+    to the bare URI (object stores are immutable by convention)."""
     out = []
     for uri in sorted(df.inputFiles()):
         p = urlparse(uri)
@@ -93,122 +69,92 @@ def _files_fingerprint(df: DataFrame) -> tuple:
     return tuple(out)
 
 
-def _lru_put(cache: dict, key, value) -> None:
-    """Insert with a hard size bound (evict oldest insertion — plain
-    dicts preserve insertion order, which is LRU-enough for a memo that
-    is almost always hit on the most recent key)."""
-    if key in cache:
-        del cache[key]
-    elif len(cache) >= _CACHE_MAX_ENTRIES:
-        del cache[next(iter(cache))]
-    cache[key] = value
-
-
 def _session_tag(spark) -> str:
-    """Per-RUN stage namespace: the Spark applicationId, unique per
-    SparkSession/process. Module-level so tests can monkeypatch a
-    \"different run\" without forging a second JVM."""
+    """The run's name: the Spark applicationId, unique per session.
+    Module-level so tests can monkeypatch a different run."""
     return spark.sparkContext.applicationId
 
 
-def stage_parquet(
-    frame: DataFrame, stage_dir: str, files: tuple, params: tuple
-) -> DataFrame:
-    """Stage ``frame`` to parquet once PER RUN and return a reader over
-    the stage — the shared spelling of the shingle/tf staging memo.
-
-    The stage path is ``stage_dir`` suffixed with the Spark
-    ``applicationId`` AND a fingerprint hash of (input file identities,
-    params), so (a) two sessions staging DIFFERENT inputs under the
-    same logical name write different directories — round 10 measured
-    the failure this prevents: a census process and a concurrent
-    diagnostic run at another SF shared the bare fixed path, and the
-    census's ngram rows silently scored 10× data (2478 pairs where the
-    oracle held 81) — and (b) a stage is NEVER reused across runs
-    (VERDICT r11 #1): every bench/census/driver invocation pays its own
-    staging cost exactly once, inside its own timed window. Cross-
-    process ``_SUCCESS`` reuse was deliberately removed — inheriting a
-    prior run's stage excluded the tokenize+stage cost from every
-    stage-consumer's reported time after the first-ever touch, which is
-    persisted-intermediate gaming even though the content was provably
-    identical. WITHIN one run the memo is the right 100 TB topology:
-    the shingle/tf frame is tokenized once and every consumer (several
-    registry queries share one stage) scans the cheap columnar stage.
-
-    Concurrent writers of the SAME path (threads of one session) are
-    safe (ADVICE r10): the frame is written to a unique temp sibling
-    and atomically ``os.rename``d into the fingerprint path — first
-    rename wins, the loser discards its temp and reads the winner's
-    stage (identical content by construction). No mid-``overwrite``
-    window exists because nothing ever deletes a completed stage in
-    place.
-
-    Disk hygiene under per-run isolation: a run removes its OWN staged
-    directories at interpreter exit (``atexit`` over ``_STAGE_LIVE``),
-    and a fingerprint miss additionally sweeps stale siblings of THIS
-    run only (same run tag, not in ``_STAGE_LIVE`` — the regenerated-
-    inputs-within-one-session case). Other runs' directories are never
-    touched: with per-run path keys every concurrent session's stage
-    looks "stale" to its peers, and sweeping them reintroduced exactly
-    the cross-process PATH_NOT_FOUND race the round-11 live-set was
-    built against (measured this round: a parity suite and a bench
-    running side by side GC'd each other's live stages). A run killed
-    before its atexit leaks its directories; they live under the
-    system tempdir and are bounded by one run's stage volume. The
-    live-set exclusion remains load-bearing within a run: one
-    session's registry sweep interleaves different param sets on the
-    same stage_dir and re-reads earlier fingerprints. Every call
-    re-probes ``_SUCCESS`` instead of trusting an in-memory memo, so a
-    stage deleted externally is restaged rather than served dead.
-
-    In-memory inputs (``files`` empty) have no durable identity: they
-    always restage into the bare path and never memoize."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-    import uuid
-
-    spark = frame.sparkSession
+def run_memo(df: DataFrame, params: tuple, build):
+    """``build()``, computed once per run for each (input file
+    identities, ``params``), LRU-bounded. ``params`` must name the
+    artifact and any derivation between the scan and ``df``: a filter
+    or limit leaves the file fingerprint unchanged. Frames with no file
+    inputs have no identity and always rebuild."""
+    files = _files_fingerprint(df)
     if not files:
-        frame.write.mode("overwrite").parquet(stage_dir)
-        return spark.read.parquet(stage_dir)
-    tag = hashlib.md5(_session_tag(spark).encode()).hexdigest()[:8]
-    key = (_STAGE_FORMAT_VERSION, files, params)
-    suffix = hashlib.md5(repr(key).encode()).hexdigest()[:16]
-    path = f"{stage_dir}-{tag}-{suffix}"
-    global _CLEANUP_REGISTERED
-    if not _CLEANUP_REGISTERED:
-        import atexit
+        return build()
+    key = (_session_tag(df.sparkSession), files, params)
+    value = _RUN_MEMO.pop(key, None)
+    if value is None:
+        value = build()
+        while len(_RUN_MEMO) >= _CACHE_MAX_ENTRIES:
+            _RUN_MEMO.pop(next(iter(_RUN_MEMO)), None)
+    _RUN_MEMO[key] = value
+    return value
 
-        atexit.register(_cleanup_live_stages)
-        _CLEANUP_REGISTERED = True
-    # Always re-probe _SUCCESS (a stat, not a listing — O(µs) against
-    # ~100 ms of Spark planning per stage consumer): the stage may have
-    # been removed externally since we last saw it, and serving a
-    # memoized dead path fails the whole query at analysis time.
+
+def _run_root(spark) -> str:
+    """This run's stage directory, ``gettempdir()/spark_graft_stage/
+    <run>``. Creating it sweeps sibling roots older than
+    ``_DEAD_ROOT_AGE_S`` and registers its removal at exit."""
+    parent = os.path.join(tempfile.gettempdir(), "spark_graft_stage")
+    root = os.path.join(parent, _session_tag(spark))
+    if not os.path.isdir(root):
+        for name in os.listdir(parent) if os.path.isdir(parent) else ():
+            sibling = os.path.join(parent, name)
+            try:
+                dead = time.time() - os.stat(sibling).st_mtime > _DEAD_ROOT_AGE_S
+            except OSError:
+                continue
+            if dead:
+                shutil.rmtree(sibling, ignore_errors=True)
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def stage_parquet(
+    frame: DataFrame, name: str, files: tuple, params: tuple
+) -> DataFrame:
+    """Write ``frame`` to parquet under this run's root and return a
+    reader over it. A stage is keyed by (``name``, input file
+    identities, ``params``) and reused only by the run that wrote it,
+    so every run pays its own staging once; a frame with no file inputs
+    gets a fresh stage per call. Evidence: a stage shared across runs
+    hid the tokenize cost from every later consumer (NOTES.md,
+    "Staging layer")."""
+    spark = frame.sparkSession
+    root = _run_root(spark)
+    if not files:
+        path = os.path.join(root, f"{name}-mem-{uuid.uuid4().hex}")
+        frame.write.parquet(path)
+        return spark.read.parquet(path)
+    key = hashlib.md5(repr((files, params)).encode()).hexdigest()[:16]
+    path = os.path.join(root, f"{name}-{key}")
+    # Re-probe on every call: a stage removed under a live run is
+    # rebuilt, never served dead.
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        for stale in glob.glob(f"{stage_dir}-{tag}-*"):
-            if (
-                stale != path
-                and stale not in _STAGE_LIVE
-                and not stale.endswith(".tmp")
-            ):
-                shutil.rmtree(stale, ignore_errors=True)
-        if os.path.exists(path):
-            # Partial stage from a crashed writer (dir without
-            # _SUCCESS) would make the rename below fail forever.
-            shutil.rmtree(path, ignore_errors=True)
+        # a crashed writer's partial stage would fail the rename forever
+        shutil.rmtree(path, ignore_errors=True)
         tmp = f"{path}.{uuid.uuid4().hex[:12]}.tmp"
-        frame.write.mode("overwrite").parquet(tmp)
+        frame.write.parquet(tmp)
         try:
             os.rename(tmp, path)
         except OSError:
-            # Lost the rename race — a complete identical stage
-            # already sits at `path`; drop ours and read theirs.
+            # another thread published the identical stage first
             shutil.rmtree(tmp, ignore_errors=True)
-    _STAGE_LIVE.add(path)
     return spark.read.parquet(path)
+
+
+def _staged_shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int, stage: str | None
+) -> DataFrame:
+    """``shingles(df)``, staged under ``stage`` when one is named."""
+    sh = shingles(df, text_col, id_col, n)
+    if stage is None:
+        return sh
+    return stage_parquet(sh, stage, _files_fingerprint(df), (text_col, id_col, n))
 
 
 def _md5_int60(c: Column, seed: int | None = None) -> Column:
@@ -293,7 +239,7 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = 1000,
-    stage_dir: str | None = None,
+    stage: str | None = None,
 ) -> DataFrame:
     """X2a: exact n-gram Jaccard similarity join via inverted index.
 
@@ -302,27 +248,19 @@ def ngram_jaccard_pairs(
     engine-deterministic. ``max_df`` drops ubiquitous shingles (skew +
     noise control at scale, like CountVectorizer's maxDF).
 
-    The shingle frame feeds sizes + BOTH self-join sides. With
-    ``stage_dir`` set (the 100 TB path) it is written once to parquet
-    and re-read, so every consumer scans the durable stage and no
-    executor storage is pinned. Without it, the two self-join sides
-    share one shuffle via ReusedExchange and tokenization reruns only
-    for the small ``sizes`` aggregate — the r1 ``persist()`` here
-    leaked cached partitions for the session lifetime (never
-    unpersisted, re-cached per invocation) and would be a memory cliff
-    at scale; staging is the explicit alternative, not a cache.
+    The shingle frame feeds sizes + BOTH self-join sides. With a
+    ``stage`` name (the 100 TB path) it is written once to parquet
+    under the run's stage root and re-read, so every consumer scans
+    the durable stage and no executor storage is pinned. Without it,
+    the two self-join sides share one shuffle via ReusedExchange and
+    tokenization reruns only for the small ``sizes`` aggregate — the r1
+    ``persist()`` here leaked cached partitions for the session
+    lifetime and would be a memory cliff at scale; staging is the
+    explicit alternative, not a cache.
     """
-    sh = shingles(df, text_col, id_col, n)
-    if stage_dir is not None:
-        # stage BEFORE the df-count pass: the explode/tokenize work runs
-        # exactly once; df_counts, the anti-join probe, sizes and both
-        # self-join sides all scan the cheap 2-column parquet stage.
-        # The stage is a pure function of (input file fingerprints,
-        # params) — see stage_parquet for the fingerprint-keyed path
-        # and reuse semantics.
-        sh = stage_parquet(
-            sh, stage_dir, _files_fingerprint(df), (text_col, id_col, n)
-        )
+    # staged BEFORE the df-count pass, so tokenize runs once and
+    # df_counts, the anti-join, sizes and both join sides scan the stage
+    sh = _staged_shingles(df, text_col, id_col, n, stage)
     if max_df is not None:
         df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         sh = (
@@ -359,26 +297,20 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n: int = 3,
     k: int = N_MINHASH,
-    stage_dir: str | None = None,
+    stage: str | None = None,
 ) -> DataFrame:
     """X2b: k-permutation MinHash signature per document.
 
     One shuffle (groupBy doc) with k partial mins — each hash is
     min(md5(seed|shingle)) over the doc's shingle set.
 
-    ``stage_dir`` (round 12, VERDICT r11 #6): the shingle frame is the
-    SAME derivation the ngram-Jaccard family stages (identical
-    fingerprint params), so passing the shared stage dir lets an eval
-    query's pred side — and any other minhash consumer in the same run
-    — scan the one staged tokenize instead of re-running the explode
-    chain per pipeline. Content-neutral: the stage holds exactly
+    ``stage``: the shingle frame is the SAME derivation the
+    ngram-Jaccard family stages, so naming the shared stage lets every
+    minhash consumer in the run scan the one staged tokenize instead of
+    re-running the explode chain. The stage holds exactly
     ``shingles(df)``.
     """
-    sh = shingles(df, text_col, id_col, n)
-    if stage_dir is not None:
-        sh = stage_parquet(
-            sh, stage_dir, _files_fingerprint(df), (text_col, id_col, n)
-        )
+    sh = _staged_shingles(df, text_col, id_col, n, stage)
     slices = _minhash_slices(F.col("shingle"))
     aggs = [F.min(slices[i]).alias(f"mh_{i}") for i in range(k)]
     return sh.groupBy("doc_id").agg(*aggs)
@@ -391,14 +323,14 @@ def lsh_bands(
     n: int = 3,
     k: int = N_MINHASH,
     band_size: int = BAND_SIZE,
-    stage_dir: str | None = None,
+    stage: str | None = None,
 ) -> DataFrame:
     """(doc_id, band, band_key) rows — the LSH banding of each doc's
     MinHash signature, emitted with ONE explode (a union of
     k/band_size selects would recompute the signature aggregation per
     band). Shared by the self-join pair builder and the incremental
     batch-vs-history novelty probe."""
-    sig = minhash_signatures(df, text_col, id_col, n, k, stage_dir)
+    sig = minhash_signatures(df, text_col, id_col, n, k, stage)
     band_structs = []
     for b in range(k // band_size):
         cols = [f"mh_{b * band_size + j}" for j in range(band_size)]
@@ -427,7 +359,7 @@ def minhash_lsh_pairs(
     n: int = 3,
     k: int = N_MINHASH,
     band_size: int = BAND_SIZE,
-    stage_dir: str | None = None,
+    stage: str | None = None,
 ) -> DataFrame:
     """X2b: candidate pairs via LSH banding over MinHash signatures.
 
@@ -436,7 +368,7 @@ def minhash_lsh_pairs(
     keyed by (band_idx, band_hash); no all-pairs comparison anywhere.
     Output: distinct candidate (doc_a < doc_b) pairs.
     """
-    allb = lsh_bands(df, text_col, id_col, n, k, band_size, stage_dir)
+    allb = lsh_bands(df, text_col, id_col, n, k, band_size, stage)
     a, b2 = allb.alias("a"), allb.alias("b")
     return (
         a.join(b2, ["band", "band_key"])
@@ -914,8 +846,6 @@ def neardup_clusters(
 BLOOM_M_BITS = 1 << 18
 BLOOM_K = 4
 
-_BLOOM_CACHE: dict[tuple, list[int]] = {}
-
 
 def bloom_positions(c: Column, m: int = BLOOM_M_BITS, k: int = BLOOM_K) -> list[Column]:
     """k bit positions for one key from a single md5 call (k ≤ 4): the
@@ -937,39 +867,31 @@ def bloom_build_bitmap(
 ) -> list[int]:
     """Build the filter over the historical side: one distributed pass
     (explode k positions → per-word bit_or), then collect the ≤ m/64
-    words to the driver. Memoized per (input file fingerprints, params,
-    cache_tag) so repeated plan builds in one session train once — same
-    discipline as the PQ codebook. File fingerprints carry mtime+size,
-    so overwriting an input path in place invalidates the memo; but ANY
-    transformation between the scan and this call — filter, limit,
-    sample, union, a prior dedup stage — leaves the fingerprints
-    unchanged, so callers passing a DERIVED frame (anything that is not
-    a bare scan) must supply a distinct cache_tag or they get the bare
-    scan's bitmap. The memo is LRU-bounded (each bitmap is m/64 longs
-    of driver memory)."""
-    files = _files_fingerprint(df)
-    cache_key = (files, key_col, m, k, cache_tag)
-    if files and cache_key in _BLOOM_CACHE:
-        return _BLOOM_CACHE[cache_key]
-    pos = df.select(
-        F.explode(F.array(*bloom_positions(F.col(key_col), m, k))).alias("p")
-    )
-    words = (
-        # shiftleft with a COLUMN shift count only exists in SQL form
-        # (the Python DSL pins numBits to an int literal)
-        pos.select(
-            F.expr("p DIV 64").alias("w"),
-            F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("bit"),
+    words to the driver. Memoized per run by :func:`run_memo`; a caller
+    passing a DERIVED frame (anything but a bare scan) must supply a
+    distinct ``cache_tag``, since a filter or union leaves the file
+    fingerprint unchanged."""
+
+    def build() -> list[int]:
+        pos = df.select(
+            F.explode(F.array(*bloom_positions(F.col(key_col), m, k))).alias("p")
         )
-        .groupBy("w")
-        .agg(F.bit_or("bit").alias("word"))
-    )
-    bitmap = [0] * (m // 64)
-    for r in words.collect():
-        bitmap[r["w"]] = r["word"]
-    if files:
-        _lru_put(_BLOOM_CACHE, cache_key, bitmap)
-    return bitmap
+        words = (
+            # shiftleft with a COLUMN shift count only exists in SQL form
+            # (the Python DSL pins numBits to an int literal)
+            pos.select(
+                F.expr("p DIV 64").alias("w"),
+                F.expr("shiftleft(1L, CAST(p % 64 AS INT))").alias("bit"),
+            )
+            .groupBy("w")
+            .agg(F.bit_or("bit").alias("word"))
+        )
+        bitmap = [0] * (m // 64)
+        for r in words.collect():
+            bitmap[r["w"]] = r["word"]
+        return bitmap
+
+    return run_memo(df, ("bloom", key_col, m, k, cache_tag), build)
 
 
 def bloom_novel(
@@ -1321,7 +1243,7 @@ def ngram_jaccard_capped_pairs(
     max_df: int | None = 1000,
     prefix_r: int = NGRAM_PREFIX_R,
     min_shared: int = NGRAM_MIN_SHARED,
-    stage_dir: str | None = None,
+    stage: str | None = None,
 ) -> DataFrame:
     """X2a': scale-safe twin of :func:`ngram_jaccard_pairs` — IDENTICAL
     metric (Jaccard over the df<=max_df shingle space, threshold
@@ -1339,11 +1261,7 @@ def ngram_jaccard_capped_pairs(
     length filter applied inside the join stage; scoring touches only
     |candidates|·doc_len rows, keyed by doc id — never all-pairs.
     """
-    sh = shingles(df, text_col, id_col, n)
-    if stage_dir is not None:
-        sh = stage_parquet(
-            sh, stage_dir, _files_fingerprint(df), (text_col, id_col, n)
-        )
+    sh = _staged_shingles(df, text_col, id_col, n, stage)
     if max_df is not None:
         df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
         sh = sh.join(

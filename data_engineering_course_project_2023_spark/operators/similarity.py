@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.expr import spread
+from .dedup import run_memo
 
 EMBED_DIM = 64
 # 3 planes → 8 buckets, probed multi-probe (exact bucket + every
@@ -331,27 +332,7 @@ def _argmin_expr(cent_list: list[tuple[int, list[float]]]) -> Column:
     )
 
 
-_KMEANS_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-
 def _kmeans_list(
-    df: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    files = tuple(sorted(df.inputFiles()))
-    key = (files, k, n_iter, id_col, vec_col)
-    if files and key in _KMEANS_CACHE:
-        return _KMEANS_CACHE[key]
-    out = _kmeans_list_uncached(df, k, n_iter, id_col, vec_col)
-    if files:
-        _KMEANS_CACHE[key] = out
-    return out
-
-
-def _kmeans_list_uncached(
     df: DataFrame,
     k: int = 8,
     n_iter: int = 3,
@@ -372,44 +353,51 @@ def _kmeans_list_uncached(
     Collecting k·dim means per round replaces the r1 crossJoin +
     Window.partitionBy(vec_id) plan that shuffled N·k rows per
     iteration. The cast/scan is localCheckpoint'ed once so rounds don't
-    re-read the source (the MLlib ``.cache()`` discipline)."""
-    dim_probe = df.select(F.size(vec_col).alias("d")).first()["d"]
-    init = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("centroid"))
-        .collect()
-    )
-    cent_list = [(i + 1, list(r["centroid"])) for i, r in enumerate(init)]
-    vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias("v")).localCheckpoint()
-    for _ in range(n_iter):
-        # Mean recompute in exact integer nano-units: a float sum's
-        # value depends on partial-aggregate merge order (shuffle fetch
-        # order is not deterministic), so avg() could wiggle in the
-        # last ulp between runs and move a near-tied argmin. Summing
-        # round(val*1e9) as BIGINT is order-independent and exact, so
-        # the trained centroids are bit-identical on every run — which
-        # is what lets a trained codebook be pinned as a constant.
-        rows = (
-            vecs.withColumn("centroid_id", _argmin_expr(cent_list))
-            .select("centroid_id", F.posexplode("v").alias("pos", "val"))
-            .groupBy("centroid_id", "pos")
-            .agg(
-                F.sum(F.round(F.col("val") * 1e9).cast("long")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
+    re-read the source (the MLlib ``.cache()`` discipline). Memoized per
+    run by ``run_memo`` (train once, search many)."""
+
+    def build():
+        dim_probe = df.select(F.size(vec_col).alias("d")).first()["d"]
+        init = (
+            df.orderBy(id_col)
+            .limit(k)
+            .select(F.col(vec_col).cast("array<double>").alias("centroid"))
             .collect()
         )
-        means: dict[int, dict[int, float]] = {}
-        for r in rows:
-            means.setdefault(int(r["centroid_id"]), {})[int(r["pos"])] = (
-                float(r["s"]) / (int(r["n"]) * 1e9)
+        cent_list = [(i + 1, list(r["centroid"])) for i, r in enumerate(init)]
+        vecs = df.select(
+            id_col, F.col(vec_col).cast("array<double>").alias("v")
+        ).localCheckpoint()
+        for _ in range(n_iter):
+            # Mean recompute in exact integer nano-units: a float sum's
+            # value depends on partial-aggregate merge order (shuffle fetch
+            # order is not deterministic), so avg() could wiggle in the
+            # last ulp between runs and move a near-tied argmin. Summing
+            # round(val*1e9) as BIGINT is order-independent and exact, so
+            # the trained centroids are bit-identical on every run — which
+            # is what lets a trained codebook be pinned as a constant.
+            rows = (
+                vecs.withColumn("centroid_id", _argmin_expr(cent_list))
+                .select("centroid_id", F.posexplode("v").alias("pos", "val"))
+                .groupBy("centroid_id", "pos")
+                .agg(
+                    F.sum(F.round(F.col("val") * 1e9).cast("long")).alias("s"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .collect()
             )
-        # clusters that lost every member drop out (matches r1 groupBy)
-        cent_list = sorted(
-            (cid, [vals[p] for p in range(dim_probe)]) for cid, vals in means.items()
-        )
-    return cent_list
+            means: dict[int, dict[int, float]] = {}
+            for r in rows:
+                means.setdefault(int(r["centroid_id"]), {})[int(r["pos"])] = (
+                    float(r["s"]) / (int(r["n"]) * 1e9)
+                )
+            # clusters that lost every member drop out (matches r1 groupBy)
+            cent_list = sorted(
+                (cid, [vals[p] for p in range(dim_probe)]) for cid, vals in means.items()
+            )
+        return cent_list
+
+    return run_memo(df, ("kmeans", k, n_iter, id_col, vec_col), build)
 
 
 def kmeans_centroids(
@@ -501,9 +489,6 @@ def _pq_assign_expr(cents: list[list[list[float]]], d_sub: int) -> Column:
     return F.expr("array(" + ", ".join(parts) + ")")
 
 
-_PQ_CODEBOOK_CACHE: dict[tuple, list[list[list[float]]]] = {}
-
-
 def _pq_train(
     df: DataFrame,
     m: int = PQ_M,
@@ -517,70 +502,53 @@ def _pq_train(
     (assign codes map-side, then posexplode → groupBy(sub, code,
     pos-within-sub) mean recompute, partial-aggregated). Init = the k
     lowest-id vectors' subvectors. Codes whose cell empties keep their
-    previous centroid so code ids stay dense positional.
+    previous centroid so code ids stay dense positional. Memoized per
+    run by ``run_memo`` (train once, encode and search many)."""
 
-    Training is deterministic in the input, so the codebook is
-    memoized per (input files, params) — the train-once / encode-and-
-    search-many split a real pipeline uses (file-backed inputs only;
-    in-memory test fixtures all share an empty file list and must not
-    collide)."""
-    files = tuple(sorted(df.inputFiles()))
-    cache_key = (files, m, k, n_iter, id_col, vec_col)
-    if files and cache_key in _PQ_CODEBOOK_CACHE:
-        return _PQ_CODEBOOK_CACHE[cache_key]
-    cents = _pq_train_uncached(df, m, k, n_iter, id_col, vec_col)
-    if files:
-        _PQ_CODEBOOK_CACHE[cache_key] = cents
-    return cents
-
-
-def _pq_train_uncached(
-    df: DataFrame,
-    m: int,
-    k: int,
-    n_iter: int,
-    id_col: str,
-    vec_col: str,
-) -> list[list[list[float]]]:
-    dim = df.select(F.size(vec_col).alias("d")).first()["d"]
-    assert dim % m == 0, f"dim {dim} not divisible by m {m}"
-    d_sub = dim // m
-    init = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    cents = [
-        [list(r["v"][j * d_sub:(j + 1) * d_sub]) for r in init]
-        for j in range(m)
-    ]
-    vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias("v")).localCheckpoint()
-    for _ in range(n_iter):
-        # Exact integer nano-unit sums for the same reason as
-        # :func:`_kmeans_list_uncached`: order-independent means make
-        # training bit-deterministic run-to-run, so the sf0.01-trained
-        # codebook can be embedded as constants in the DuckDB oracle.
-        rows = (
-            vecs.withColumn("codes", _pq_assign_expr(cents, d_sub))
-            .select("codes", F.posexplode("v").alias("pos", "val"))
-            .withColumn("sub", (F.col("pos") / d_sub).cast("int"))
-            .withColumn("code", F.element_at("codes", F.col("sub") + 1))
-            .groupBy("sub", "code", (F.col("pos") % d_sub).alias("p"))
-            .agg(
-                F.sum(F.round(F.col("val") * 1e9).cast("long")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
+    def build():
+        dim = df.select(F.size(vec_col).alias("d")).first()["d"]
+        assert dim % m == 0, f"dim {dim} not divisible by m {m}"
+        d_sub = dim // m
+        init = (
+            df.orderBy(id_col)
+            .limit(k)
+            .select(F.col(vec_col).cast("array<double>").alias("v"))
             .collect()
         )
-        means: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            means.setdefault((int(r["sub"]), int(r["code"])), {})[int(r["p"])] = (
-                float(r["s"]) / (int(r["n"]) * 1e9)
+        cents = [
+            [list(r["v"][j * d_sub:(j + 1) * d_sub]) for r in init]
+            for j in range(m)
+        ]
+        vecs = df.select(
+            id_col, F.col(vec_col).cast("array<double>").alias("v")
+        ).localCheckpoint()
+        for _ in range(n_iter):
+            # Exact integer nano-unit sums for the same reason as
+            # :func:`_kmeans_list`: order-independent means make
+            # training bit-deterministic run-to-run, so the sf0.01-trained
+            # codebook can be embedded as constants in the DuckDB oracle.
+            rows = (
+                vecs.withColumn("codes", _pq_assign_expr(cents, d_sub))
+                .select("codes", F.posexplode("v").alias("pos", "val"))
+                .withColumn("sub", (F.col("pos") / d_sub).cast("int"))
+                .withColumn("code", F.element_at("codes", F.col("sub") + 1))
+                .groupBy("sub", "code", (F.col("pos") % d_sub).alias("p"))
+                .agg(
+                    F.sum(F.round(F.col("val") * 1e9).cast("long")).alias("s"),
+                    F.count(F.lit(1)).alias("n"),
+                )
+                .collect()
             )
-        for (j, c), vals in means.items():
-            cents[j][c] = [vals[p] for p in range(d_sub)]
-    return cents
+            means: dict[tuple[int, int], dict[int, float]] = {}
+            for r in rows:
+                means.setdefault((int(r["sub"]), int(r["code"])), {})[int(r["p"])] = (
+                    float(r["s"]) / (int(r["n"]) * 1e9)
+                )
+            for (j, c), vals in means.items():
+                cents[j][c] = [vals[p] for p in range(d_sub)]
+        return cents
+
+    return run_memo(df, ("pq", m, k, n_iter, id_col, vec_col), build)
 
 
 def pq_codes(
@@ -805,18 +773,12 @@ def ivfpq_topk(
     ).localCheckpoint()
 
     # PQ codebook trained on residuals (the canonical IVFADC encoding);
-    # memoized on the ORIGINAL input's files — the checkpointed residual
-    # frame has no inputFiles for _pq_train's own cache to key on
-    files = tuple(sorted(df.inputFiles()))
-    pq_key = (files, "ivfpq-resid", n_clusters, m, k, id_col, vec_col)
-    if files and pq_key in _PQ_CODEBOOK_CACHE:
-        cents_pq = _PQ_CODEBOOK_CACHE[pq_key]
-    else:
-        cents_pq = _pq_train(
-            assigned.select(id_col, "resid"), m, k, 2, id_col, "resid"
-        )
-        if files:
-            _PQ_CODEBOOK_CACHE[pq_key] = cents_pq
+    # memoized on the ORIGINAL input — the checkpointed residual frame
+    # has no input files to key on
+    cents_pq = run_memo(
+        df, ("ivfpq-resid", n_clusters, m, k, id_col, vec_col),
+        lambda: _pq_train(assigned.select(id_col, "resid"), m, k, 2, id_col, "resid"),
+    )
 
     qrow = df.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).cast("array<double>").alias("v")

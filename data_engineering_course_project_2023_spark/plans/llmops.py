@@ -131,6 +131,12 @@ FROM documents GROUP BY 1
 
 
 # --- X2a: n-gram Jaccard similarity join ------------------------------------------
+# The one shingle stage every consumer of ``shingles(documents)`` names —
+# ngram Jaccard truth sides, minhash pred sides, the sig/pair queries —
+# so tokenize+explode runs once per run and all of them scan the stage.
+SHINGLE_STAGE = "ngram_shingles"
+
+
 def ngram_jaccard(t: Tables) -> DataFrame:
     """X2a: exact 3-gram Jaccard pairs ≥ 0.8 via inverted-index join.
 
@@ -139,14 +145,8 @@ def ngram_jaccard(t: Tables) -> DataFrame:
     (sizes + both self-join sides) scan the stage — the same
     write-once topology a 100 TB run needs (a cache would pin
     executor storage; r1's persist leaked it for the session)."""
-    import os
-    import tempfile
-
-    stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stage", "ngram_shingles"
-    )
     return dedup.ngram_jaccard_pairs(
-        t["documents"], threshold=0.8, max_df=1000, stage_dir=stage
+        t["documents"], threshold=0.8, max_df=1000, stage=SHINGLE_STAGE
     )
 
 
@@ -183,15 +183,9 @@ def ngram_jaccard_capped(t: Tables) -> DataFrame:
     shingle df stops discriminating and the exact operator's Σdf²
     saturates (measured: ngram_jaccard crashes at sf10 fixed-vocab;
     this one is budget-pinned there)."""
-    import os
-    import tempfile
-
-    stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stage", "ngram_shingles"
-    )
     return dedup.ngram_jaccard_capped_pairs(
         t["documents"], threshold_num=4, threshold_den=5, max_df=1000,
-        stage_dir=stage,
+        stage=SHINGLE_STAGE,
     )
 
 
@@ -245,23 +239,9 @@ WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE)
 
 
 # --- X2b: MinHash signatures + LSH candidate pairs ---------------------------------
-def _shingle_stage() -> str:
-    """The ngram-family shared shingle stage dir (round 12): every
-    consumer of the raw ``shingles(documents)`` frame — ngram Jaccard
-    truth sides, minhash pred sides, the standalone sig/pair queries —
-    passes this one dir with identical params, so the tokenize+explode
-    chain runs once per run and all of them scan the columnar stage."""
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(), "spark_graft_stage", "ngram_shingles"
-    )
-
-
 def minhash_sigs(t: Tables) -> DataFrame:
     """X2b: 8-permutation MinHash signature per document."""
-    return dedup.minhash_signatures(t["documents"], stage_dir=_shingle_stage())
+    return dedup.minhash_signatures(t["documents"], stage=SHINGLE_STAGE)
 
 
 def _mh_cols() -> str:
@@ -287,9 +267,7 @@ FROM sh GROUP BY doc_id
 
 def minhash_pairs(t: Tables) -> DataFrame:
     """X2b: LSH-banded candidate pairs (4 bands × 2 rows)."""
-    return dedup.minhash_lsh_pairs(
-        t["documents"], stage_dir=_shingle_stage()
-    )
+    return dedup.minhash_lsh_pairs(t["documents"], stage=SHINGLE_STAGE)
 
 
 def _band_union() -> str:
@@ -2282,95 +2260,80 @@ def bpe_train_merges(t: Tables) -> DataFrame:
     return _bpe_train(t)[1]
 
 
-# Trained-tokenizer memo: training is deterministic in the input, so
-# the (vocab, merge-table) frames are memoized per (session, input
-# files, rounds) — the train-once / encode-many split a real pipeline
-# uses (bpe_train_merges and bpe_encode_stats share one training pass
-# in the same session). Keys carry the applicationId so a restarted
-# session can never be served another session's checkpointed frames,
-# and the dedup file-identity fingerprint ((path, mtime_ns, size)) so
-# an in-place overwrite invalidates. In-memory fixtures (no files)
-# are never cached.
-_BPE_TRAIN_CACHE: dict = {}
-
-
 def _bpe_train(t: Tables):
     """Shared trainer core: returns (fully-merged vocab frame
     [word, n, syms], merge-table frame) — bpe_train_merges emits the
-    merge table, bpe_encode_stats applies the trained vocab."""
-    from ..operators.dedup import _files_fingerprint, _lru_put
-
+    merge table, bpe_encode_stats applies the trained vocab. Memoized
+    per run by ``dedup.run_memo``, so the train/encode registry pair
+    shares one training pass."""
     docs = t["documents"]
-    files = _files_fingerprint(docs)
-    key = (docs.sparkSession.sparkContext.applicationId, files, BPE_ROUNDS)
-    if files and key in _BPE_TRAIN_CACHE:
-        return _BPE_TRAIN_CACHE[key]
-    d = spread(t["documents"])
-    words = d.select(
-        F.explode(F.split(F.col("text"), r"\s+")).alias("word")
-    ).filter(F.col("word") != "")
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn(
-            "syms",
-            F.expr(
-                "transform(sequence(1, length(word)),"
-                " i -> substring(word, i, 1))"
-            ),
-        )
-        .localCheckpoint()
-    )
-    merges = []
-    for r in range(1, BPE_ROUNDS + 1):
-        pairs = vocab.filter(F.size("syms") >= 2).select(
-            "n",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1),"
-                    " i -> struct(element_at(syms, i) AS a,"
-                    "             element_at(syms, i + 1) AS b))"
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy(F.col("p.a").alias("ba"), F.col("p.b").alias("bb"))
-            .agg(F.sum("n").alias("c"))
-            .orderBy(F.col("c").desc(), "ba", "bb")
-            .limit(1)
-            .localCheckpoint()
-        )
-        merges.append(
-            best.select(
-                F.lit(r).alias("merge_rank"),
-                F.col("ba").alias("sym_a"),
-                F.col("bb").alias("sym_b"),
-                F.col("c").cast("long").alias("pair_count"),
-            )
-        )
+
+    def train():
+        d = spread(docs)
+        words = d.select(
+            F.explode(F.split(F.col("text"), r"\s+")).alias("word")
+        ).filter(F.col("word") != "")
         vocab = (
-            vocab.crossJoin(F.broadcast(best))
+            words.groupBy("word")
+            .agg(F.count(F.lit(1)).alias("n"))
             .withColumn(
                 "syms",
                 F.expr(
-                    "aggregate(syms, CAST(array() AS ARRAY<STRING>),"
-                    " (acc, s) -> IF(size(acc) > 0"
-                    "   AND element_at(acc, -1) = ba AND s = bb,"
-                    "   concat(slice(acc, 1, size(acc) - 1),"
-                    "          array(concat(ba, bb))),"
-                    "   concat(acc, array(s))))"
+                    "transform(sequence(1, length(word)),"
+                    " i -> substring(word, i, 1))"
                 ),
             )
-            .drop("ba", "bb", "c")
             .localCheckpoint()
         )
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.unionByName(m)
-    result = (vocab, out.orderBy("merge_rank"))
-    if files:
-        _lru_put(_BPE_TRAIN_CACHE, key, result)
-    return result
+        merges = []
+        for r in range(1, BPE_ROUNDS + 1):
+            pairs = vocab.filter(F.size("syms") >= 2).select(
+                "n",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(syms) - 1),"
+                        " i -> struct(element_at(syms, i) AS a,"
+                        "             element_at(syms, i + 1) AS b))"
+                    )
+                ).alias("p"),
+            )
+            best = (
+                pairs.groupBy(F.col("p.a").alias("ba"), F.col("p.b").alias("bb"))
+                .agg(F.sum("n").alias("c"))
+                .orderBy(F.col("c").desc(), "ba", "bb")
+                .limit(1)
+                .localCheckpoint()
+            )
+            merges.append(
+                best.select(
+                    F.lit(r).alias("merge_rank"),
+                    F.col("ba").alias("sym_a"),
+                    F.col("bb").alias("sym_b"),
+                    F.col("c").cast("long").alias("pair_count"),
+                )
+            )
+            vocab = (
+                vocab.crossJoin(F.broadcast(best))
+                .withColumn(
+                    "syms",
+                    F.expr(
+                        "aggregate(syms, CAST(array() AS ARRAY<STRING>),"
+                        " (acc, s) -> IF(size(acc) > 0"
+                        "   AND element_at(acc, -1) = ba AND s = bb,"
+                        "   concat(slice(acc, 1, size(acc) - 1),"
+                        "          array(concat(ba, bb))),"
+                        "   concat(acc, array(s))))"
+                    ),
+                )
+                .drop("ba", "bb", "c")
+                .localCheckpoint()
+            )
+        out = merges[0]
+        for m in merges[1:]:
+            out = out.unionByName(m)
+        return vocab, out.orderBy("merge_rank")
+
+    return dedup.run_memo(docs, ("bpe_train", BPE_ROUNDS), train)
 
 
 def bpe_encode_stats(t: Tables) -> DataFrame:
@@ -2702,7 +2665,7 @@ UNION ALL SELECT 3, 'decontaminated', COUNT(*) FROM c
 COSINE_DF_DIV = 5
 
 
-def doc_cosine_pairs(t: Tables, stage_dir: str | None = None) -> DataFrame:
+def doc_cosine_pairs(t: Tables) -> DataFrame:
     """Lexical cosine similarity pairs over raw term-frequency vectors
     via an inverted index — the sparse-vector sibling of ngram_jaccard
     (set overlap) and embedding_neardup (dense cosine): candidate pairs
@@ -2726,11 +2689,7 @@ def doc_cosine_pairs(t: Tables, stage_dir: str | None = None) -> DataFrame:
     all-pairs on real text. The doc total is a 1-row scalar broadcast.
 
     The tf frame feeds FOUR consumers (df counts, norms, both join
-    sides); without staging each replans the tokenize+count subtree
-    (AQE exchange reuse covers it at test SF). ``stage_dir`` is the
-    100 TB spelling — tokenize once to parquet, every consumer scans
-    the 3-column stage; same per-directory memo discipline as
-    ngram_jaccard_pairs.
+    sides), so it is materialized once and every consumer re-reads it.
     """
     tf = (
         spread(t["documents"])
@@ -2738,20 +2697,11 @@ def doc_cosine_pairs(t: Tables, stage_dir: str | None = None) -> DataFrame:
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    if stage_dir is not None:
-        tf = dedup.stage_parquet(
-            tf, stage_dir,
-            dedup._files_fingerprint(t["documents"]), ("cosine_tf",),
-        )
-    else:
-        # The tf frame feeds df counts, norms and both join sides; the
-        # unstaged registry spelling re-derived scan→tokenize→count per
-        # consumer (12 `documents` scans in plans/r11/
-        # doc_cosine_pairs_before.txt — AQE exchange reuse does NOT
-        # cover it: the shared subtree ends before any exchange).
-        # localCheckpoint is the in-session twin of the stage_dir path:
-        # tokenize once, every consumer re-reads the materialized frame.
-        tf = tf.localCheckpoint()
+    # Without the checkpoint every consumer re-derived
+    # scan→tokenize→count (12 `documents` scans in plans/r11/
+    # doc_cosine_pairs_before.txt — AQE exchange reuse does NOT cover
+    # it: the shared subtree ends before any exchange).
+    tf = tf.localCheckpoint()
     n_docs = t["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
     dfc = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     heavy = (
@@ -2842,7 +2792,7 @@ COSINE_PREFIX_R = 10
 COSINE_MIN_SHARED = 2
 
 
-def doc_cosine_pairs_capped(t: Tables, stage_dir: str | None = None) -> DataFrame:
+def doc_cosine_pairs_capped(t: Tables) -> DataFrame:
     """Scale-safe lexical TF-cosine near-dup pairs: identical metric to
     :func:`doc_cosine_pairs` (exact BIGINT dot / sqrt-norm cosine over
     the relative-df-pruned token space, threshold 0.5) but candidate
@@ -2880,17 +2830,10 @@ def doc_cosine_pairs_capped(t: Tables, stage_dir: str | None = None) -> DataFram
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    if stage_dir is not None:
-        tf = dedup.stage_parquet(
-            tf, stage_dir,
-            dedup._files_fingerprint(t["documents"]), ("cosine_tf",),
-        )
-    else:
-        # Same multi-consumer materialization as doc_cosine_pairs: the
-        # unstaged registry spelling re-derived the tokenize+count
-        # subtree per consumer (22 `documents` scans in plans/r11/
-        # doc_cosine_pairs_capped_before.txt).
-        tf = tf.localCheckpoint()
+    # Same multi-consumer materialization as doc_cosine_pairs (22
+    # `documents` scans in plans/r11/doc_cosine_pairs_capped_before.txt
+    # without it).
+    tf = tf.localCheckpoint()
     n_docs = t["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
     dfc = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     heavy = (
@@ -4792,12 +4735,6 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_N_TERMS = 3
 
-# driver-side picks memoized per input-files fingerprint (same bounded-
-# collect precedent as the Bloom bitmap / k-means centroids: the
-# collected artifact is O(n_terms) strings / O(n_anchors) ints, never
-# corpus-sized).
-_CORPUS_PICK_MEMO: dict = {}
-
 
 def corpus_query_terms(docs: DataFrame, n: int = BM25_N_TERMS) -> list[str]:
     """Deterministic corpus-derived retrieval terms: the n tokens whose
@@ -4809,30 +4746,28 @@ def corpus_query_terms(docs: DataFrame, n: int = BM25_N_TERMS) -> list[str]:
     Scale shape: df counts are one keyed agg over the token stream; the
     pick is TakeOrdered(n) (per-partition heads merged on the driver —
     no global sort shuffle); the n strings then feed a map-side literal
-    scoring plan exactly like a user-typed query would."""
-    files = dedup._files_fingerprint(docs)
-    key = (files, "query_terms", n)
-    if files and key in _CORPUS_PICK_MEMO:
-        return _CORPUS_PICK_MEMO[key]
-    n_docs = docs.count()
-    dfc = (
-        docs.select("doc_id", F.explode(textops.tokens("text")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count_distinct("doc_id").alias("df"))
-    )
-    rows = (
-        dfc.orderBy(
-            F.abs(F.col("df") * 10 - F.lit(n_docs)).asc(),
-            F.md5("tok").asc(),
-            F.col("tok").asc(),
+    scoring plan exactly like a user-typed query would. The pick is
+    memoized per run (``dedup.run_memo``)."""
+
+    def pick() -> list[str]:
+        n_docs = docs.count()
+        dfc = (
+            docs.select("doc_id", F.explode(textops.tokens("text")).alias("tok"))
+            .groupBy("tok")
+            .agg(F.count_distinct("doc_id").alias("df"))
         )
-        .limit(n)
-        .collect()
-    )
-    terms = [r["tok"] for r in rows]
-    if files:
-        dedup._lru_put(_CORPUS_PICK_MEMO, key, terms)
-    return terms
+        rows = (
+            dfc.orderBy(
+                F.abs(F.col("df") * 10 - F.lit(n_docs)).asc(),
+                F.md5("tok").asc(),
+                F.col("tok").asc(),
+            )
+            .limit(n)
+            .collect()
+        )
+        return [r["tok"] for r in rows]
+
+    return dedup.run_memo(docs, ("query_terms", n), pick)
 
 
 def hash_picked_ids(df: DataFrame, id_col: str, n: int) -> list[int]:
@@ -4840,21 +4775,18 @@ def hash_picked_ids(df: DataFrame, id_col: str, n: int) -> list[int]:
     (md5(id-as-string), id) — a content-independent but data-derived
     sample, so anchor sets exist and are non-degenerate on ANY corpus
     axis (the old `id < n` spelling silently assumed dense ids from 0).
-    TakeOrdered(n) + an n-int driver collect, memoized per fingerprint."""
-    files = dedup._files_fingerprint(df)
-    key = (files, id_col, n)
-    if files and key in _CORPUS_PICK_MEMO:
-        return _CORPUS_PICK_MEMO[key]
-    rows = (
-        df.select(id_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
-        .limit(n)
-        .collect()
-    )
-    ids = [r[0] for r in rows]
-    if files:
-        dedup._lru_put(_CORPUS_PICK_MEMO, key, ids)
-    return ids
+    TakeOrdered(n) + an n-int driver collect, memoized per run."""
+
+    def pick() -> list[int]:
+        rows = (
+            df.select(id_col)
+            .orderBy(F.md5(F.col(id_col).cast("string")).asc(), F.col(id_col).asc())
+            .limit(n)
+            .collect()
+        )
+        return [r[0] for r in rows]
+
+    return dedup.run_memo(df, ("hash_pick", id_col, n), pick)
 
 
 # SQL spelling of the two pickers (shared by every retrieval twin)
@@ -6332,25 +6264,17 @@ def neardup_eval(t: Tables) -> DataFrame:
     (staged inverted index / banded self-join); the eval adds one
     pair-keyed inner join + three 1-row aggregates broadcast together —
     negligible next to the generators. The shingle stage is SHARED with
-    ngram_jaccard via the stage memo (same dir + params → staged once
-    per session). Exactness: counts are integers; precision/recall are
+    ngram_jaccard (same stage name + params → staged once per run).
+    Exactness: counts are integers; precision/recall are
     single guarded divisions rounded once, spelled identically in the
     oracle."""
-    import os
-    import tempfile
-
     docs = t["documents"]
-    stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stage", "ngram_shingles"
-    )
     truth = dedup.ngram_jaccard_pairs(
-        docs, threshold=0.8, max_df=1000, stage_dir=stage
+        docs, threshold=0.8, max_df=1000, stage=SHINGLE_STAGE
     ).select("doc_a", "doc_b")
-    # Round 12 (VERDICT r11 #6): the pred side shares the truth side's
-    # staged shingle frame (identical derivation, identical
-    # fingerprint) instead of re-running the tokenize+explode chain in
-    # its own pipeline — the eval builds the shingle space once.
-    pred = dedup.minhash_lsh_pairs(docs, stage_dir=stage).select(
+    # the pred side scans the truth side's shingle stage: the eval
+    # tokenizes once
+    pred = dedup.minhash_lsh_pairs(docs, stage=SHINGLE_STAGE).select(
         "doc_a", "doc_b"
     )
     # Same twice-consumed-pair-frame checkpoint as neardup_eval_capped:
@@ -6440,22 +6364,15 @@ def neardup_eval_capped(t: Tables) -> DataFrame:
     the two pins compose. Truth comes from the PREFIX family and pred
     from the MINHASH family — independent candidate generators, so the
     eval is non-circular."""
-    import os
-    import tempfile
-
     docs = t["documents"]
-    stage = os.path.join(
-        tempfile.gettempdir(), "spark_graft_stage", "ngram_shingles"
-    )
     truth = dedup.ngram_jaccard_capped_pairs(
         docs, threshold_num=4, threshold_den=5, max_df=1000,
-        stage_dir=stage,
+        stage=SHINGLE_STAGE,
     ).select("doc_a", "doc_b")
-    # Round 12 (VERDICT r11 #6): pred scans the truth side's staged
-    # shingle frame — one tokenize for the whole eval, not one per
-    # pipeline (the eval's two generators stay independent ABOVE the
-    # raw shingle frame: prefix blocking vs MinHash banding).
-    pred = dedup.minhash_lsh_pairs(docs, stage_dir=stage).select(
+    # pred scans the truth side's shingle stage — one tokenize for the
+    # eval; the two generators stay independent ABOVE the raw shingle
+    # frame (prefix blocking vs MinHash banding)
+    pred = dedup.minhash_lsh_pairs(docs, stage=SHINGLE_STAGE).select(
         "doc_a", "doc_b"
     )
     # Both frames are referenced twice below (count + hit join); without
@@ -7337,8 +7254,6 @@ _UNIGRAM_PIECES_EXPR = (
     "  - element_at(starts, i)))"
 )
 
-_UNIGRAM_TRAIN_CACHE: dict = {}
-
 
 def _unigram_estep(cand_pieces: DataFrame, inv: DataFrame) -> DataFrame:
     """Viterbi E-step: min-cost segmentation per word over the
@@ -7412,8 +7327,8 @@ def _unigram_mstep(
 def _unigram_train(t: Tables):
     """Shared trainer core: returns (final inventory frame
     [piece, cnt, score_micro], final word→n_pieces segmentation frame).
-    Memoized per (session, input files) like _BPE_TRAIN_CACHE so the
-    train/encode registry pair shares one training pass.
+    Memoized per run like :func:`_bpe_train`, so the train/encode
+    registry pair shares one training pass.
 
     Scale shape: training state is the VOCAB dimension (distinct
     words ≤ 12 chars), never the corpus — the corpus collapses to
@@ -7424,102 +7339,93 @@ def _unigram_train(t: Tables):
     of rows and the fan-out is still O(vocab · 2^11) worst-case —
     SentencePiece's own max-length discipline, documented here as the
     cap rather than hidden."""
-    from ..operators.dedup import _files_fingerprint, _lru_put
-
     docs = t["documents"]
-    files = _files_fingerprint(docs)
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        files,
-        UNIGRAM_EM_ROUNDS,
-    )
-    if files and key in _UNIGRAM_TRAIN_CACHE:
-        return _UNIGRAM_TRAIN_CACHE[key]
-    d = spread(docs)
-    words = d.select(
-        F.explode(F.split(F.col("text"), r"\s+")).alias("word")
-    ).filter(F.col("word") != "")
-    vocab = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.length("word") <= UNIGRAM_MAX_WORD)
-        .localCheckpoint()
-    )
-    # seed inventory: all substrings ≤ 4 chars weighted by word freq;
-    # every single char + the top-48 multi-char candidates.
-    cands = vocab.select(
-        "n",
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(1, length(word)), i ->"
-                f" filter(transform(sequence(1, {UNIGRAM_MAX_PIECE}), l ->"
-                "   IF(i + l - 1 <= length(word), substring(word, i, l),"
-                "      NULL)), x -> x IS NOT NULL)))"
-            )
-        ).alias("piece"),
-    )
-    freq = cands.groupBy("piece").agg(F.sum("n").alias("f"))
-    multi = (
-        freq.filter(F.length("piece") >= 2)
-        .orderBy(F.col("f").desc(), "piece")
-        .limit(UNIGRAM_TOP_MULTI)
-    )
-    from pyspark.sql.window import Window
 
-    w = Window.partitionBy()
-    inv = (
-        freq.filter(F.length("piece") == 1)
-        .unionByName(multi)
-        .withColumn("tot", F.sum("f").over(w))
-        .select(
-            "piece",
-            F.col("f").cast("bigint").alias("cnt"),
-            F.round(
-                F.log(F.col("tot").cast("double") / F.col("f").cast("double"))
-                * 1e6
-            )
-            .cast("bigint")
-            .alias("score_micro"),
+    def train():
+        d = spread(docs)
+        words = d.select(
+            F.explode(F.split(F.col("text"), r"\s+")).alias("word")
+        ).filter(F.col("word") != "")
+        vocab = (
+            words.groupBy("word")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.length("word") <= UNIGRAM_MAX_WORD)
+            .localCheckpoint()
         )
-        .localCheckpoint()
-    )
-    # candidate segmentations: round-invariant, built and checkpointed
-    # ONCE — EM rounds only re-cost them.
-    masks = vocab.select(
-        "word",
-        "n",
-        F.explode(
-            F.expr("sequence(0, shiftleft(1, length(word) - 1) - 1)")
-        ).alias("mask"),
-    )
-    cand_pieces = (
-        masks.withColumn("starts", F.expr(_UNIGRAM_STARTS_EXPR))
-        .withColumn("pieces", F.expr(_UNIGRAM_PIECES_EXPR))
-        .filter(
-            F.expr(
-                "array_max(transform(pieces, p -> length(p)))"
-                f" <= {UNIGRAM_MAX_PIECE}"
-            )
+        # seed inventory: all substrings ≤ 4 chars weighted by word freq;
+        # every single char + the top-48 multi-char candidates.
+        cands = vocab.select(
+            "n",
+            F.explode(
+                F.expr(
+                    "flatten(transform(sequence(1, length(word)), i ->"
+                    f" filter(transform(sequence(1, {UNIGRAM_MAX_PIECE}), l ->"
+                    "   IF(i + l - 1 <= length(word), substring(word, i, l),"
+                    "      NULL)), x -> x IS NOT NULL)))"
+                )
+            ).alias("piece"),
         )
-        .select(
+        freq = cands.groupBy("piece").agg(F.sum("n").alias("f"))
+        multi = (
+            freq.filter(F.length("piece") >= 2)
+            .orderBy(F.col("f").desc(), "piece")
+            .limit(UNIGRAM_TOP_MULTI)
+        )
+        from pyspark.sql.window import Window
+
+        w = Window.partitionBy()
+        inv = (
+            freq.filter(F.length("piece") == 1)
+            .unionByName(multi)
+            .withColumn("tot", F.sum("f").over(w))
+            .select(
+                "piece",
+                F.col("f").cast("bigint").alias("cnt"),
+                F.round(
+                    F.log(F.col("tot").cast("double") / F.col("f").cast("double"))
+                    * 1e6
+                )
+                .cast("bigint")
+                .alias("score_micro"),
+            )
+            .localCheckpoint()
+        )
+        # candidate segmentations: round-invariant, built and checkpointed
+        # ONCE — EM rounds only re-cost them.
+        masks = vocab.select(
             "word",
             "n",
-            "mask",
-            F.size("pieces").alias("n_pieces"),
-            F.explode("pieces").alias("piece"),
+            F.explode(
+                F.expr("sequence(0, shiftleft(1, length(word) - 1) - 1)")
+            ).alias("mask"),
         )
-        .localCheckpoint()
-    )
-    for _ in range(UNIGRAM_EM_ROUNDS):
-        winners = _unigram_estep(cand_pieces, inv)
-        inv = _unigram_mstep(winners, cand_pieces, inv)
-    seg = _unigram_estep(cand_pieces, inv).select(
-        "word", F.col("n_pieces").alias("wpieces")
-    ).localCheckpoint()
-    result = (inv, seg)
-    if files:
-        _lru_put(_UNIGRAM_TRAIN_CACHE, key, result)
-    return result
+        cand_pieces = (
+            masks.withColumn("starts", F.expr(_UNIGRAM_STARTS_EXPR))
+            .withColumn("pieces", F.expr(_UNIGRAM_PIECES_EXPR))
+            .filter(
+                F.expr(
+                    "array_max(transform(pieces, p -> length(p)))"
+                    f" <= {UNIGRAM_MAX_PIECE}"
+                )
+            )
+            .select(
+                "word",
+                "n",
+                "mask",
+                F.size("pieces").alias("n_pieces"),
+                F.explode("pieces").alias("piece"),
+            )
+            .localCheckpoint()
+        )
+        for _ in range(UNIGRAM_EM_ROUNDS):
+            winners = _unigram_estep(cand_pieces, inv)
+            inv = _unigram_mstep(winners, cand_pieces, inv)
+        seg = _unigram_estep(cand_pieces, inv).select(
+            "word", F.col("n_pieces").alias("wpieces")
+        ).localCheckpoint()
+        return inv, seg
+
+    return dedup.run_memo(docs, ("unigram_train", UNIGRAM_EM_ROUNDS), train)
 
 
 def unigram_lm_train(t: Tables) -> DataFrame:

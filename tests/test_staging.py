@@ -1,41 +1,41 @@
-"""stage_parquet contract tests (ADVICE r10 items 1-4).
+"""stage_parquet contract tests.
 
-The staging layer is load-bearing for the whole capped-similarity
-family (shingle/tf stages feed every pair generator), and round 10
-showed its failure modes are cross-process and invisible to oracle
-parity (a stale or racing stage produces CONFIDENT wrong pair counts).
-These tests pin the four hardening properties added in round 11:
+Every stage a run writes lives under one run root,
+``gettempdir()/spark_graft_stage/<run>``, where ``<run>`` is
+``dedup._session_tag``. These tests pin:
 
-1. atomic publish: stages appear via temp-dir + os.rename, so a
-   completed stage is never deleted/rewritten in place and a rename
-   loser falls back to the winner's identical stage;
-2. stale-sibling GC: a fingerprint miss removes prior-RUN `{dir}-*`
-   fingerprint dirs (regenerated inputs don't leak unbounded disk) —
-   but never dirs staged by THIS process (`_STAGE_LIVE`), because one
-   session's registry sweep interleaves param sets on a shared
-   stage_dir and re-reads earlier fingerprints (the round-11 inherited
-   PATH_NOT_FOUND);
-3. format versioning: _STAGE_FORMAT_VERSION participates in the
-   fingerprint, so stages written by older staging code are not served
-   to newer code;
-4. no trust in in-memory state: every call re-probes _SUCCESS, so a
-   stage GC'd by a concurrent process is restaged, not served dead.
-
-Round 12 adds the per-RUN isolation property (VERDICT r11 #1): the
-stage path embeds the Spark applicationId, so a stage is only ever
-reused WITHIN the run that wrote it — a fresh bench/census/driver run
-always pays its own staging (no cross-run persisted intermediates),
-and sweeps the prior run's directories on first touch.
+1. reuse within a run: the same (name, input files, params) reads the
+   existing stage verbatim, and the decision comes from the on-disk
+   ``_SUCCESS`` probe; a publish leaves no temp residue;
+2. no cross-run reuse: a different run stages afresh under its own root
+   and never touches the other run's stage;
+3. interleaved params on one stage name keep every stage readable;
+4. the per-call re-probe: a stage removed under a live run is restaged,
+   and a partial stage left by a crashed writer is replaced;
+5. in-memory frames (no input files) get a fresh stage per call, so two
+   consumers of one name never delete each other's files;
+6. exit cleanup: a process that exits normally removes its run root;
+7. crash leaks stay bounded: creating a run root removes sibling roots
+   older than ``_DEAD_ROOT_AGE_S`` and leaves fresh ones alone.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import time
 
 import pytest
 
 from data_engineering_course_project_2023_spark.operators import dedup
+
+from .conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture()
@@ -45,167 +45,162 @@ def frame(spark):
     )
 
 
-@pytest.fixture(autouse=True)
-def _preserve_stage_live():
-    """These tests clear/mutate the module-global _STAGE_LIVE to
-    simulate fresh runs. Snapshot and restore it so stages registered
-    by OTHER tests in the same session (e.g. oracle parity's shingle
-    stage) keep their atexit-cleanup registration — round 12 found the
-    full suite leaking exactly those directories."""
-    saved = set(dedup._STAGE_LIVE)
-    yield
-    dedup._STAGE_LIVE |= saved
+@pytest.fixture()
+def parent(tmp_path, monkeypatch):
+    """Point gettempdir() at this test's directory, so its run roots
+    are its own."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path / "spark_graft_stage"
 
 
 def _fp(tmp_path, name="in.parquet"):
-    # A stable fake file-identity tuple (the staged frame here is
-    # in-memory; identity is what the fingerprint hashes, not reality).
+    # A stable fake file-identity tuple: identity is what the key
+    # hashes, not the frame's real inputs.
     return ((str(tmp_path / name), 123456789, 42),)
 
 
-def test_stage_reuse_and_atomic_publish(spark, frame, tmp_path):
-    base = str(tmp_path / "stage")
+def _stages(parent, name="stage"):
+    return sorted(
+        p for p in glob.glob(str(parent / "*" / f"{name}-*"))
+        if not p.endswith(".tmp")
+    )
+
+
+def test_stage_reuse_and_atomic_publish(spark, frame, tmp_path, parent):
     files = _fp(tmp_path)
-    out1 = dedup.stage_parquet(frame, base, files, params=("p", 1))
+    out1 = dedup.stage_parquet(frame, "stage", files, params=("p", 1))
     assert out1.count() == 3
-    dirs = glob.glob(base + "-*")
-    assert len(dirs) == 1 and not dirs[0].endswith(".tmp")
+    dirs = _stages(parent)
+    assert len(dirs) == 1
+    assert os.path.dirname(dirs[0]) == str(parent / dedup._session_tag(spark))
     assert os.path.exists(os.path.join(dirs[0], "_SUCCESS"))
-    # No temp residue after a successful publish.
-    assert not glob.glob(base + "-*.tmp")
+    assert not glob.glob(str(parent / "*" / "*.tmp"))
     mtime = os.stat(dirs[0]).st_mtime_ns
 
-    # Second call with the same fingerprint IN THE SAME RUN reuses the
-    # stage verbatim (no rewrite — the dir's mtime is untouched). The
-    # live set is cleared to prove the decision comes from the on-disk
-    # _SUCCESS probe, not in-memory state.
-    dedup._STAGE_LIVE.clear()
-    out2 = dedup.stage_parquet(frame, base, files, params=("p", 1))
+    # Same key in the same run: the stage is read, not rewritten.
+    out2 = dedup.stage_parquet(frame, "stage", files, params=("p", 1))
     assert out2.count() == 3
     assert os.stat(dirs[0]).st_mtime_ns == mtime
 
 
-def test_no_cross_run_reuse(spark, frame, tmp_path, monkeypatch):
-    """VERDICT r11 #1: a DIFFERENT run (new applicationId) must never
-    inherit a prior run's finished stage — it stages afresh under its
-    own path, so every bench run pays its own staging cost inside its
-    own timed window. It must also never DELETE the other run's
-    directory (the two runs may be concurrent — measured this round:
-    a parity suite and a bench GC'ing each other's live stages)."""
-    base = str(tmp_path / "stage")
+def test_no_cross_run_reuse(spark, frame, tmp_path, parent, monkeypatch):
+    """A different run never inherits a finished stage: it pays its own
+    staging under its own root, and leaves the first run's alone (the
+    two runs may be live at once)."""
     files = _fp(tmp_path)
-    dedup.stage_parquet(frame, base, files, params=("p", 1))
-    run1 = glob.glob(base + "-*")
+    dedup.stage_parquet(frame, "stage", files, params=("p", 1))
+    run1 = _stages(parent)
     assert len(run1) == 1
     mtime1 = os.stat(run1[0]).st_mtime_ns
 
-    # Same inputs, same params, new run → fresh stage under a new
-    # path; the first run's stage is left for ITS atexit cleanup.
     monkeypatch.setattr(dedup, "_session_tag", lambda _s: "other-run-42")
-    dedup._STAGE_LIVE.clear()
-    out = dedup.stage_parquet(frame, base, files, params=("p", 1))
+    out = dedup.stage_parquet(frame, "stage", files, params=("p", 1))
     assert out.count() == 3
-    run2 = sorted(glob.glob(base + "-*"))
+    run2 = _stages(parent)
     assert len(run2) == 2 and run1[0] in run2
-    assert os.stat(run1[0]).st_mtime_ns == mtime1  # untouched
+    assert any(p.startswith(str(parent / "other-run-42")) for p in run2)
+    assert os.stat(run1[0]).st_mtime_ns == mtime1
 
 
-def test_atexit_cleanup_removes_this_runs_stages(spark, frame, tmp_path):
-    """Each run removes its own staged directories at interpreter exit
-    (the cleanup hook over _STAGE_LIVE) — per-run isolation without
-    unbounded /tmp growth across bench/census invocations."""
-    base = str(tmp_path / "stage")
-    dedup.stage_parquet(frame, base, _fp(tmp_path), params=("p", 1))
-    staged = glob.glob(base + "-*")
-    assert len(staged) == 1 and staged[0] in dedup._STAGE_LIVE
-    # Run the hook over THIS test's stage only: stages that earlier
-    # tests registered are still in use and must survive.
-    others = dedup._STAGE_LIVE - {staged[0]}
-    alive = {p for p in others if os.path.exists(p)}
-    dedup._STAGE_LIVE.intersection_update(staged)
-    try:
-        dedup._cleanup_live_stages()
-    finally:
-        dedup._STAGE_LIVE.clear()
-        dedup._STAGE_LIVE.update(others)
-    assert not os.path.exists(staged[0])
-    assert all(os.path.exists(p) for p in alive)
+def test_atexit_cleanup_removes_this_runs_stages(tmp_path):
+    """A process that stages a frame and exits normally leaves no run
+    root behind: the real exit hook, not a hand call."""
+    script = f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from pyspark.sql import SparkSession
+from data_engineering_course_project_2023_spark.operators import dedup
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+frame = spark.createDataFrame([(1, "a")], "id int, txt string")
+fp = (("/nonexistent/in.parquet", 1, 1),)
+assert dedup.stage_parquet(frame, "stage", fp, ("p", 1)).count() == 1
+assert dedup.stage_parquet(frame, "mem", (), ("p", 1)).count() == 1
+print("ROOT", dedup._run_root(spark))
+"""
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True,
+        env=env, timeout=300,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    root = out.stdout.split("ROOT ", 1)[1].split()[0]
+    assert root.startswith(str(tmp_path / "spark_graft_stage"))
+    assert os.path.isdir(tmp_path / "spark_graft_stage")
+    assert not os.path.exists(root)
 
 
-def test_fingerprint_miss_gcs_stale_siblings(spark, frame, tmp_path):
-    base = str(tmp_path / "stage")
-    dedup.stage_parquet(frame, base, _fp(tmp_path), params=("p", 1))
-    old = glob.glob(base + "-*")
-    assert len(old) == 1
-    # A LATER RUN (fresh process → empty live set) with new params →
-    # new fingerprint → the prior run's stale dir is removed.
-    dedup._STAGE_LIVE.clear()
-    dedup.stage_parquet(frame, base, _fp(tmp_path), params=("p", 2))
-    now = glob.glob(base + "-*")
-    assert len(now) == 1 and now[0] != old[0]
+def test_dead_sibling_roots_are_swept(spark, frame, tmp_path, parent):
+    """Creating a run root removes sibling roots older than the fixed
+    age (runs killed before their exit hook) and keeps fresh ones (runs
+    that may still be live)."""
+    dead, live = parent / "dead-run", parent / "live-run"
+    for d in (dead, live):
+        (d / "ngram_shingles-0").mkdir(parents=True)
+    old = time.time() - dedup._DEAD_ROOT_AGE_S - 60
+    os.utime(dead, (old, old))
+    dedup.stage_parquet(frame, "stage", _fp(tmp_path), params=("p", 1))
+    assert not dead.exists()
+    assert (live / "ngram_shingles-0").is_dir()
+    assert len(_stages(parent)) == 1
 
 
-def test_in_process_siblings_survive_and_stay_readable(spark, frame, tmp_path):
-    """The round-11 inherited regression: two param sets interleaved on
-    one stage_dir within one process (the registry sweep shape). The
-    first set's stage must NOT be GC'd by the second's fingerprint
-    miss, and a third call re-using the first fingerprint must read it
-    verbatim instead of dying on a deleted path."""
-    base = str(tmp_path / "stage")
+def test_in_process_siblings_survive_and_stay_readable(
+    spark, frame, tmp_path, parent
+):
+    """Two param sets interleaved on one stage name within one run (the
+    registry sweep shape): the first set's stage stays, and a third
+    call with the first key reads it verbatim."""
     files = _fp(tmp_path)
-    dedup.stage_parquet(frame, base, files, params=("p", 1))
-    p1 = glob.glob(base + "-*")[0]
-    dedup.stage_parquet(frame, base, files, params=("p", 2))
-    assert os.path.exists(os.path.join(p1, "_SUCCESS"))  # not GC'd
-    assert len(glob.glob(base + "-*")) == 2
+    dedup.stage_parquet(frame, "stage", files, params=("p", 1))
+    p1 = _stages(parent)[0]
+    dedup.stage_parquet(frame, "stage", files, params=("p", 2))
+    assert os.path.exists(os.path.join(p1, "_SUCCESS"))
+    assert len(_stages(parent)) == 2
     mtime = os.stat(p1).st_mtime_ns
-    out = dedup.stage_parquet(frame, base, files, params=("p", 1))
+    out = dedup.stage_parquet(frame, "stage", files, params=("p", 1))
     assert out.count() == 3
-    assert os.stat(p1).st_mtime_ns == mtime  # reused, not rewritten
+    assert os.stat(p1).st_mtime_ns == mtime
 
 
-def test_concurrently_gcd_stage_is_restaged(spark, frame, tmp_path):
-    """Property 4: a stage this process already staged but that a
-    concurrent process's GC deleted is detected by the per-call
-    _SUCCESS probe and rebuilt — never served as a dead path."""
-    import shutil
-
-    base = str(tmp_path / "stage")
+def test_concurrently_gcd_stage_is_restaged(spark, frame, tmp_path, parent):
+    """A stage removed under a live run — or its whole run root — is
+    detected by the per-call _SUCCESS probe and rebuilt, never served
+    as a dead path."""
     files = _fp(tmp_path)
-    dedup.stage_parquet(frame, base, files, params=("p", 1))
-    p1 = glob.glob(base + "-*")[0]
-    shutil.rmtree(p1)  # concurrent process GC'd it
-    out = dedup.stage_parquet(frame, base, files, params=("p", 1))
-    assert out.count() == 3
+    dedup.stage_parquet(frame, "stage", files, params=("p", 1))
+    p1 = _stages(parent)[0]
+    shutil.rmtree(p1)
+    assert dedup.stage_parquet(frame, "stage", files, params=("p", 1)).count() == 3
+    assert os.path.exists(os.path.join(p1, "_SUCCESS"))
+    shutil.rmtree(os.path.dirname(p1))
+    assert dedup.stage_parquet(frame, "stage", files, params=("p", 1)).count() == 3
     assert os.path.exists(os.path.join(p1, "_SUCCESS"))
 
 
-def test_partial_stage_is_replaced(spark, frame, tmp_path):
-    base = str(tmp_path / "stage")
+def test_partial_stage_is_replaced(spark, frame, tmp_path, parent):
     files = _fp(tmp_path)
-    done_count = dedup.stage_parquet(frame, base, files, params=("p", 1)).count()
-    path = glob.glob(base + "-*")[0]
-    # Simulate a crashed writer: strip _SUCCESS → partial dir at the
-    # exact fingerprint path. The next call must rebuild, not fail the
-    # rename forever or read the partial.
+    done = dedup.stage_parquet(frame, "stage", files, params=("p", 1)).count()
+    path = _stages(parent)[0]
+    # A crashed writer leaves the directory without _SUCCESS: the next
+    # call must rebuild, not read the partial or fail the rename forever.
     os.remove(os.path.join(path, "_SUCCESS"))
-    dedup._STAGE_LIVE.clear()
-    out = dedup.stage_parquet(frame, base, files, params=("p", 1))
-    assert out.count() == done_count == 3
+    out = dedup.stage_parquet(frame, "stage", files, params=("p", 1))
+    assert out.count() == done == 3
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def test_format_version_in_fingerprint(spark, frame, tmp_path, monkeypatch):
-    base = str(tmp_path / "stage")
-    files = _fp(tmp_path)
-    dedup.stage_parquet(frame, base, files, params=("p", 1))
-    v1 = glob.glob(base + "-*")
-    # A format-version bump ships as new code → new process: model it
-    # with a cleared live set so the old-version dir is GC-eligible.
-    monkeypatch.setattr(dedup, "_STAGE_FORMAT_VERSION", 999)
-    dedup._STAGE_LIVE.clear()
-    dedup.stage_parquet(frame, base, files, params=("p", 1))
-    v2 = glob.glob(base + "-*")
-    # Same inputs+params, bumped version → different path (and the old
-    # one was GC'd as stale).
-    assert len(v2) == 1 and v2 != v1
+@pytest.mark.parametrize("query", ["neardup_eval", "neardup_eval_capped"])
+def test_neardup_eval_on_in_memory_documents_matches_oracle(spark, query):
+    """Both eval queries stage the truth and the pred side under one
+    shingle stage name. On in-memory documents each stage must be its
+    own, or the second write deletes the files the first reader holds."""
+    from data_engineering_course_project_2023_spark.plans import llmops, registry
+    from tests.parity import compare
+
+    on_disk = spark.read.parquet(os.path.join(SF_SMOKE, "documents.parquet"))
+    docs = spark.createDataFrame(on_disk.collect(), on_disk.schema)
+    assert docs.inputFiles() == []
+    out = getattr(llmops, query)({"documents": docs})
+    problems = compare(out, registry.REGISTRY[query].oracle, SF_SMOKE)
+    assert not problems, problems

@@ -225,7 +225,7 @@ def test_pq_codebook_pinned_sf001(spark):
     from data_engineering_course_project_2023_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    cents = similarity._pq_train_uncached(
+    cents = similarity._pq_train(
         emb, similarity.PQ_M, similarity.PQ_K, 2, "vec_id", "embedding"
     )
     assert cents == pq_fixture.PQ_CODEBOOK_SF001
@@ -474,7 +474,7 @@ def test_ivf_centroids_pinned_sf001(spark):
     from data_engineering_course_project_2023_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    cents = similarity._kmeans_list_uncached(emb, k=8, n_iter=3)
+    cents = similarity._kmeans_list(emb, k=8, n_iter=3)
     assert cents == ivf_fixture.IVF_CENTROIDS_SF001
 
 
@@ -508,7 +508,7 @@ def test_ivfpq_residual_codebook_pinned_sf001(spark):
             " s -> s.cid = centroid_id)[0].c, (a, b) -> a - b)"
         ),
     )
-    cents_pq = similarity._pq_train_uncached(
+    cents_pq = similarity._pq_train(
         assigned.select("vec_id", "resid"), 8, 16, 2, "vec_id", "resid"
     )
     assert cents_pq == ivf_fixture.IVFPQ_RESID_CODEBOOK_SF001

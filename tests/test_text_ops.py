@@ -172,12 +172,11 @@ def test_ngram_jaccard_staged_matches_default(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    stage = str(tmp_path / "shingle_stage")
     default = {
         (r["doc_a"], r["doc_b"], r["jaccard"])
         for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
-    staged_df = ngram_jaccard_pairs(docs, threshold=0.5, stage_dir=stage)
+    staged_df = ngram_jaccard_pairs(docs, threshold=0.5, stage="shingle_stage")
     staged = {
         (r["doc_a"], r["doc_b"], r["jaccard"]) for r in staged_df.collect()
     }
@@ -469,89 +468,71 @@ def test_sentence_split_udtf_matches_builtin_spelling(spark):
 
 
 def test_stage_and_bloom_memos_see_inplace_overwrite(spark, tmp_path):
-    """r2 defect: both memos keyed on inputFiles (paths) only, so
-    overwriting an input file in place — or pointing a second input at
-    the same stage_dir — silently served the previous input's stage or
-    bitmap. Keys now carry (mtime_ns, size) fingerprints and the stage
-    memo is keyed per directory, so both rewrites re-derive."""
+    """r2 defect: the memos keyed on inputFiles (paths) only, so
+    overwriting an input file in place — or feeding a second input to
+    the same stage name — silently served the previous input's stage,
+    bitmap or centroids. Keys now carry (mtime_ns, size) fingerprints,
+    so every rewrite re-derives."""
     import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from data_engineering_course_project_2023_spark.operators import dedup
+    from data_engineering_course_project_2023_spark.operators import (
+        dedup,
+        similarity,
+    )
 
     p = str(tmp_path / "docs.parquet")
-    stage = str(tmp_path / "stage")
+    e = str(tmp_path / "emb.parquet")
 
-    def write(texts):
+    def write(texts, vecs):
         pq.write_table(
             pa.table(
                 {"doc_id": list(range(len(texts))), "text": texts}
             ),
             p,
         )
+        pq.write_table(
+            pa.table({"vec_id": list(range(len(vecs))), "embedding": vecs}), e
+        )
 
     near_a = [
         "the quick brown fox jumps over the lazy dog",
         "the quick brown fox jumps over the lazy cat",
     ]
-    write(near_a)
+    write(near_a, [[0.0, 0.0], [1.0, 1.0], [4.0, 4.0]])
     df = spark.read.parquet(p)
-    pairs_a = dedup.ngram_jaccard_pairs(
-        df, threshold=0.5, stage_dir=stage
-    ).count()
+    pairs_a = dedup.ngram_jaccard_pairs(df, threshold=0.5, stage="stage").count()
     bitmap_a = dedup.bloom_build_bitmap(df, "text")
+    cents_a = similarity._kmeans_list(spark.read.parquet(e), k=2, n_iter=1)
     assert pairs_a == 1
 
-    # in-place overwrite: same path, disjoint content (sleep covers
-    # filesystems with coarse mtime granularity; size also differs)
+    # in-place overwrite: same paths, disjoint content (sleep covers
+    # filesystems with coarse mtime granularity; sizes also differ)
     time.sleep(0.05)
-    write(["alpha bravo charlie delta echo", "foxtrot golf hotel india juliet"])
+    write(
+        ["alpha bravo charlie delta echo", "foxtrot golf hotel india juliet"],
+        [[10.0, 10.0], [20.0, 20.0], [30.0, 30.0], [40.0, 40.0]],
+    )
     df2 = spark.read.parquet(p)
-    pairs_b = dedup.ngram_jaccard_pairs(
-        df2, threshold=0.5, stage_dir=stage
-    ).count()
+    pairs_b = dedup.ngram_jaccard_pairs(df2, threshold=0.5, stage="stage").count()
     bitmap_b = dedup.bloom_build_bitmap(df2, "text")
+    cents_b = similarity._kmeans_list(spark.read.parquet(e), k=2, n_iter=1)
     assert pairs_b == 0  # re-staged: B has no near-dup pair
     assert bitmap_b != bitmap_a  # bloom memo invalidated too
+    assert cents_b == [(1, [10.0, 10.0]), (2, [30.0, 30.0])]
+    assert cents_b != cents_a
 
-    # same stage_dir fed from a different input path: must re-stage
+    # same stage name fed from a different input path: must re-stage
     p2 = str(tmp_path / "docs2.parquet")
     pq.write_table(
         pa.table({"doc_id": [0, 1], "text": near_a}), p2
     )
     pairs_c = dedup.ngram_jaccard_pairs(
-        spark.read.parquet(p2), threshold=0.5, stage_dir=stage
+        spark.read.parquet(p2), threshold=0.5, stage="stage"
     ).count()
     assert pairs_c == 1
-
-
-def test_doc_cosine_staged_matches_default(spark, tmp_path):
-    """doc_cosine_pairs with stage_dir (the tokenize-once 100 TB path)
-    must return identical pairs and scan the staged parquet."""
-    from data_engineering_course_project_2023_spark.plans import llmops
-    from data_engineering_course_project_2023_spark.plans.registry import (
-        load_tables,
-    )
-
-    t = load_tables(spark, "/root/testdata/sf0.001", ("documents",))
-    stage = str(tmp_path / "cosine_tf_stage")
-    default = {
-        (r["doc_a"], r["doc_b"], r["dot"], r["cosine"])
-        for r in llmops.doc_cosine_pairs(t).collect()
-    }
-    staged_df = llmops.doc_cosine_pairs(t, stage_dir=stage)
-    staged = {
-        (r["doc_a"], r["doc_b"], r["dot"], r["cosine"])
-        for r in staged_df.collect()
-    }
-    assert staged == default and len(staged) > 0
-    jvm = spark._jvm
-    plan = staged_df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "cosine_tf_stage" in plan
 
 
 def test_prefix_jaccard_complete_and_prunes(spark):

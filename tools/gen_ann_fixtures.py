@@ -30,7 +30,7 @@ OUT = os.path.join(
 HEADER = '''"""Per-SF ANN oracle constants — GENERATED by tools/gen_ann_fixtures.py.
 
 Each entry replays the bit-deterministic training paths (see
-operators/similarity._kmeans_list_uncached / _pq_train_uncached and the
+operators/similarity._kmeans_list / _pq_train and the
 residual chain in tests/test_temporal.py) at that SF's embeddings
 table, so tools/sf_parity.py can build value-exact IVF/PQ/IVFADC
 oracles instead of recording pinned_skip rows. Regenerate after any
@@ -49,8 +49,8 @@ def train_for(spark, sf_dir: str) -> dict:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    ivf = similarity._kmeans_list_uncached(emb, k=8, n_iter=3)
-    pq = similarity._pq_train_uncached(
+    ivf = similarity._kmeans_list(emb, k=8, n_iter=3)
+    pq = similarity._pq_train(
         emb, similarity.PQ_M, similarity.PQ_K, 2, "vec_id", "embedding"
     )
     # residual codebook: pinned-IVF assignment -> residuals -> PQ train
@@ -73,7 +73,7 @@ def train_for(spark, sf_dir: str) -> dict:
             " s -> s.cid = centroid_id)[0].c, (a, b) -> a - b)"
         ),
     )
-    ivfpq = similarity._pq_train_uncached(
+    ivfpq = similarity._pq_train(
         assigned.select("vec_id", "resid"), 8, 16, 2, "vec_id", "resid"
     )
     return {"ivf": ivf, "pq": pq, "ivfpq": ivfpq}
