@@ -15,8 +15,8 @@ checking engine-representation-free invariants.
 
 Determinism contract: every top-k has a strict total order (metric
 DESC, key ASC) so the selected SET is unique cross-engine; PageRank
-holds rank mass in integer micro-units (the ``pagerank_trade``
-discipline, ``plans/analytics.py:1179``) so iterative sums are
+holds rank mass in integer micro-units (the
+``analytics.pagerank_trade`` discipline) so iterative sums are
 bit-identical under any partitioning; community checks compare only
 label-free structure (component count / sizes), never label values,
 because min-label canonicalization differs between the engine's
@@ -29,10 +29,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_star
+from .analytics import PR_ITERS, PR_SCALE
 from .arxiv_clean import general_category_expr
-
-PR_SCALE = 10**12
-PR_ITERS = 3
 
 
 def _general_topics(enriched: DataFrame) -> F.Column:
@@ -169,12 +167,12 @@ def citation_pagerank(
     PageRank over the S2 citation graph restricted to enriched papers
     (edge = citer → cited paper, both in-corpus, deduplicated).
 
-    Same integer-exact discipline as ``pagerank_trade``
-    (``plans/analytics.py:1179``): mass in units of 1e-12, ``DIV``
-    contributions, damping 85/100 in integer arithmetic — bit-identical
-    under any partitioning, so the unrolled DuckDB twin matches
-    exactly. PR_ITERS is fixed and small: the rounds unroll into one
-    statically-bounded plan; only the shared inputs are checkpointed.
+    Same integer-exact discipline as ``analytics.pagerank_trade``: mass
+    in units of 1e-12, ``DIV`` contributions, damping 85/100 in integer
+    arithmetic — bit-identical under any partitioning, so the unrolled
+    DuckDB twin matches exactly. PR_ITERS is fixed and small: the
+    rounds unroll into one statically-bounded plan; only the shared
+    inputs are checkpointed.
     Citation in-degree is Pareto-skewed (the generator concentrates
     citations on early papers), so the per-round contribution agg is
     the AQE skew case the trade-graph twin already pinned."""

@@ -24,6 +24,15 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session")
+def registry_sweep(spark):
+    """{check: {query: offenders}} from one build of every registry query
+    at SF_CORRECT; the whole-registry hygiene tests each assert one check."""
+    from .registry_sweep import sweep
+
+    return sweep(spark, SF_CORRECT)
+
+
 # Self-generated Zipf axis (Heaps-law vocab growth + injected
 # near-dups) — the axis every capped-similarity recall pin was measured
 # on. It does NOT persist between rounds (only /root/testdata does), and

@@ -41,23 +41,15 @@ def test_entry_smoke(spark):
     assert set(e.queries()) >= set(e.oracle_sql())
 
 
-def test_no_registry_query_emits_complex_typed_columns(spark):
+def test_no_registry_query_emits_complex_typed_columns(registry_sweep):
     """Permanent guard for the r2 driver-err class: the driver's pandas
     canonicalizer (sorted-column sort_values + row hash) cannot hash
     array/map/struct cells, so EVERY registry output — oracled or
     rows-only — must be primitive-typed. Flatten to csv strings or
     exploded rows instead (embedding_quantize / vocab_encode precedent).
+    Output schemas do not depend on the scale factor (all 237 are
+    identical at sf0.001 and sf0.01), so the shared SF_CORRECT build
+    serves.
     """
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders = {}
-    for name in registry.REGISTRY:
-        df = registry.run_query(name, spark, "/root/testdata/sf0.001")
-        bad = [
-            f"{f.name}: {f.dataType.simpleString()}"
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        if bad:
-            offenders[name] = bad
+    offenders = registry_sweep["complex_typed_columns"]
     assert not offenders, offenders

@@ -5,25 +5,21 @@ scale bug even while results stay correct."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
+import re
 
 from data_engineering_course_project_2023_spark.plans import arxiv_clean, registry
 
 from .conftest import SF_CORRECT
-
-
-def plan_of(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from .registry_sweep import expensive_in_lambda, plan_of
 
 
 def test_star_join_broadcasts_all_dims(spark):
     plan = plan_of(registry.run_query("star_revenue_by_region_year", spark, SF_CORRECT))
     assert "SortMergeJoin" not in plan  # every dim must broadcast
-    assert plan.count("BroadcastHashJoin") >= 4
+    # "(n) Name" counts each node once (the formatted output repeats node
+    # names in its detail section); == 4 also rules out a shuffled-hash
+    # join standing in for one of the four dim joins
+    assert len(re.findall(r"\(\d+\) BroadcastHashJoin\b", plan)) == 4
     # scan must not read unused columns (column pruning through 4 joins)
     assert "l_tax" not in plan and "o_orderpriority" not in plan
 
@@ -48,83 +44,13 @@ def test_enrichment_join_broadcasts_lookup(spark):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-def test_no_query_plans_nested_loop_or_cartesian(spark):
+def test_no_query_plans_nested_loop_or_cartesian(registry_sweep):
     """Global plan hygiene: no registry query may plan a
     BroadcastNestedLoopJoin or CartesianProduct — at 100 TB either is a
     query that never finishes. (The range join exists precisely to avoid
-    this; this sweep catches regressions anywhere.)"""
-    # cosine_topk / ivf_topk crossJoin a tiny broadcast frame (1 query
-    # row / k centroids) — broadcast NLJ over O(1) rows is the standard
-    # scalar-attach pattern, O(N·k), fine at any scale. copair_components
-    # builds its plan per iteration (checkpointed) — covered by its own
-    # oracle test. idle_rich_customers / nation_revenue_share broadcast
-    # a ONE-ROW global aggregate (the scalar-subquery pattern — the same
-    # plan Spark produces for an uncorrelated scalar subquery): O(N·1).
-    allowed = {
-        "cosine_topk",
-        "ivf_topk",
-        "copair_components",
-        "idle_rich_customers",
-        "nation_revenue_share",
-        "heavy_hitter_tokens",
-        # one-row n_docs scalar broadcast (same pattern as the above)
-        "tfidf_top_terms",
-        # one-row n_tokens scalar broadcast
-        "token_pmi",
-        # 5/10-row anchor set broadcast (O(N·|anchors|); label / self
-        # exclusion is a non-equi predicate so the NLJ is the honest plan)
-        "hard_negatives",
-        "retrieval_metrics",
-        # iterative: plan built per checkpointed round; pair graph only
-        "neardup_clusters",
-        # one-row n_docs scalar broadcast feeding the relative df cut
-        "doc_cosine_pairs",
-        # same scalar broadcast, twice (heavy cut + prefix seed cut)
-        "doc_cosine_pairs_capped",
-        # composes doc_cosine_pairs_capped -> inherits its scalar NLJ
-        "curation_funnel_neardup",
-        # one-row corpus-total scalar broadcast for the heavy-hitter cut
-        "cms_token_counts",
-        # one-row (N1, N2) totals broadcast for the exact-TVD division
-        "corpus_drift",
-        # one-row n_docs scalar broadcast feeding the relative df cut
-        "containment_pairs",
-        # same one-row n_docs broadcast inside the capped twin's df cut
-        "containment_pairs_capped",
-        # three 1-row metric aggregates broadcast-joined into the report
-        # (the capped-truth variant of neardup_eval below)
-        "neardup_eval_capped",
-        # one-row corpus-total scalar broadcast for the surprisal table
-        "unigram_surprisal",
-        # one-row (Σ√n, Σn) denominator broadcast over the source frame
-        "mixture_temperature_weights",
-        # one-row corpus-stats broadcast (idf/avgdl) for map-side BM25
-        "bm25_topk",
-        # same stats row + the 1-row query-vector broadcast
-        "hybrid_rrf",
-        # three 1-row metric aggregates broadcast-joined into the report
-        "neardup_eval",
-        # one-row n_users basket-count broadcast for support/lift (the
-        # windowed alternative would single-partition the user frame)
-        "event_type_lift",
-        # |types|² pair enumeration over the DISTINCT event-type dim
-        # (a handful of rows both sides; every corpus-sized frame after
-        # it moves through keyed equi-joins only)
-        "kmv_set_similarity",
-    }
-    offenders = {}
-    for name in registry.REGISTRY:
-        if name in allowed:
-            continue
-        df = registry.run_query(name, spark, SF_CORRECT)
-        plan = plan_of(df)
-        bad = [
-            kw
-            for kw in ("BroadcastNestedLoopJoin", "CartesianProduct")
-            if kw in plan
-        ]
-        if bad:
-            offenders[name] = bad
+    this; this sweep catches regressions anywhere.) Allow-list:
+    `registry_sweep.NLJ_ALLOWED`."""
+    offenders = registry_sweep["nested_loop_or_cartesian"]
     assert not offenders, offenders
 
 
@@ -291,8 +217,6 @@ def test_bm25_plan_is_map_side_plus_takeordered(spark):
     TakeOrderedAndProject, never a global Sort."""
     from data_engineering_course_project_2023_spark.plans import registry
 
-    import re
-
     df = registry.run_query("bm25_topk", spark, SF_CORRECT)
     plan = plan_of(df)
     assert "TakeOrderedAndProject" in plan
@@ -322,8 +246,6 @@ def test_sliding_window_plan_single_aggregation(spark):
     the expand operator inside the scan stage); ONE shuffle feeds the
     final aggregation."""
     from data_engineering_course_project_2023_spark.plans import registry
-
-    import re
 
     df = registry.run_query("sliding_event_counts", spark, SF_CORRECT)
     plan = plan_of(df)
@@ -432,56 +354,6 @@ def test_es_sample_window_is_distributed(spark):
     assert "hashpartitioning(source" in plan, plan
 
 
-# ---------------------------------------------------------------------------
-# Lambda-CSE rule (VERDICT_r10 #8). Codegen does not common-
-# subexpression-eliminate across a LambdaFunction boundary, so a
-# string-scanning expression (split / regexp_* / sentences) captured
-# INSIDE a higher-order-function lambda re-evaluates per element —
-# O(len²) per document. Round 8 shipped exactly this in shingles()
-# (green oracles, 12× slower: 42.5 s vs 3.4 s at sf1z) and it was only
-# caught by cross-box reproduction in round 10. This sweep would have
-# caught it at ship time: it walks every registry query's OPTIMIZED
-# plan (CollapseProject runs there, so an aliased-but-single-reference
-# spelling that Catalyst inlines back into the lambda is still
-# flagged) and fails on any expensive call inside a lambdafunction
-# body whose argument is not the lambda's own variable (per-element
-# strings are short; scanning them is linear and fine).
-# ---------------------------------------------------------------------------
-
-_LAMBDA_EXPENSIVE = __import__("re").compile(
-    r"(?<![a-z_])(split|regexp_replace|regexp_extract|regexp_extract_all|sentences)\("
-)
-
-
-def _lambda_bodies(plan: str) -> list[str]:
-    """Balanced-paren extraction of every lambdafunction(...) body."""
-    out, i, key = [], 0, "lambdafunction("
-    while True:
-        j = plan.find(key, i)
-        if j < 0:
-            return out
-        depth, k = 0, j + len(key) - 1
-        while k < len(plan):
-            if plan[k] == "(":
-                depth += 1
-            elif plan[k] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            k += 1
-        out.append(plan[j + len(key): k])
-        i = j + len(key)
-
-
-def _expensive_in_lambda(plan: str) -> list[str]:
-    hits = []
-    for body in _lambda_bodies(plan):
-        for m in _LAMBDA_EXPENSIVE.finditer(body):
-            if not body[m.end(): m.end() + 30].startswith("lambda "):
-                hits.append(m.group(1))
-    return hits
-
-
 def test_lambda_detector_fires_on_deliberate_violation(spark):
     """The detector must actually fire on the r8 bug shape — an inline
     element_at(split(text), i+1) captured in a transform lambda — and
@@ -498,7 +370,7 @@ def test_lambda_detector_fires_on_deliberate_violation(spark):
         ).alias("x")
     )
     plan = bad._jdf.queryExecution().optimizedPlan().toString()
-    assert _expensive_in_lambda(plan), plan
+    assert expensive_in_lambda(plan), plan
 
     # per-element split over the lambda variable itself is linear — the
     # detector must NOT flag it.
@@ -506,20 +378,15 @@ def test_lambda_detector_fires_on_deliberate_violation(spark):
         F.transform(F.array("t"), lambda s: F.split(s, " ")).alias("x")
     )
     plan_ok = ok._jdf.queryExecution().optimizedPlan().toString()
-    assert not _expensive_in_lambda(plan_ok), plan_ok
+    assert not expensive_in_lambda(plan_ok), plan_ok
 
 
-def test_no_expensive_expr_in_lambda(spark):
+def test_no_expensive_expr_in_lambda(registry_sweep):
     """Global sweep: no registry query's optimized plan may capture a
     string-scanning expression inside a HOF lambda (the O(len²)
-    shape). 237/237 measured clean at round 11."""
-    offenders = {}
-    for name in registry.REGISTRY:
-        df = registry.run_query(name, spark, SF_CORRECT)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        hits = _expensive_in_lambda(plan)
-        if hits:
-            offenders[name] = hits
+    shape; the rule is documented in `registry_sweep`). 237/237
+    measured clean at round 11."""
+    offenders = registry_sweep["expensive_expr_in_lambda"]
     assert not offenders, offenders
 
 

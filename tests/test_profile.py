@@ -1,0 +1,88 @@
+"""tools/profile.py: event-log attribution and an end-to-end run."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+from tools.profile import WARMUP, attribute
+
+from .conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _job(job_id, group, stages):
+    props = {} if group is None else {"spark.jobGroup.id": group}
+    return {"Event": "SparkListenerJobStart", "Job ID": job_id,
+            "Stage IDs": stages, "Properties": props}
+
+
+def _task(stage, records):
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": stage,
+            "Task Metrics": {"Input Metrics": {"Records Read": records,
+                                               "Bytes Read": 1},
+                             "Executor CPU Time": 2_000_000}}
+
+
+def test_attribute_assigns_each_task_to_one_group_and_drops_warmups():
+    """Each TaskEnd reads a distinct power of two, so a group's
+    input_records is the exact set of tasks it received."""
+    q, warm = "q", "q" + WARMUP
+    tasks = {  # stage -> task count
+        0: 2, 1: 1,   # warm-up run of q
+        2: 1, 3: 2,   # measured q, job 1
+        4: 1,         # measured q, job 2 (re-lists stage 3 as skipped)
+        5: 2,         # query r
+        6: 1,         # a job outside any group
+    }
+    events = [
+        _job(0, warm, [0, 1]), _job(1, q, [2, 3]), _job(2, q, [3, 4]),
+        _job(3, "r", [5]), _job(4, None, [6]),
+    ]
+    owner = {0: warm, 1: warm, 2: q, 3: q, 4: q, 5: "r", 6: None}
+    expect = {warm: 0, q: 0, "r": 0}
+    bit = 0
+    for stage, n in tasks.items():
+        for _ in range(n):
+            events.append(_task(stage, 1 << bit))
+            if owner[stage] is not None:
+                expect[owner[stage]] |= 1 << bit
+            bit += 1
+    events.append({"Event": "SparkListenerTaskEnd", "Stage ID": 2})  # no metrics
+
+    got = attribute(events)
+
+    assert {g: got[g]["input_records"] for g in expect} == expect
+    assert sum(got[g]["tasks"] for g in got) == sum(tasks.values()) - tasks[6]
+    assert got[q]["jobs"] == 2 and got[q]["stages"] == 3 and got[q]["tasks"] == 4
+    assert got[q]["executor_cpu_ms"] == 8
+    assert {s["stage"] for s in got[q]["top_stages"]} == {2, 3, 4}
+    assert got[warm]["tasks"] == 3
+
+
+def test_profile_cli_smoke(tmp_path):
+    out = tmp_path / "profile.json"
+    queries = ["star_revenue_by_region_year", "copair_components"]
+    proc = subprocess.run(
+        [sys.executable, "-m", "tools.profile", "--sf", SF_SMOKE,
+         "--queries", ",".join(queries), "--warmups", "1",
+         "--plans", str(tmp_path / "plans"), "--out", str(out)],
+        cwd=REPO, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    doc = json.loads(out.read_text())
+    assert set(doc) == {"git_sha", "cores", "sf_dir", "conf", "warmups", "queries"}
+    assert doc["warmups"] == 1 and list(doc["queries"]) == queries
+    for name in queries:
+        q = doc["queries"][name]
+        assert "error" not in q, q
+        assert q["tasks"] > 0 and q["jobs"] > 0 and q["result_rows"] > 0
+        assert (tmp_path / "plans" / f"{name}.txt").exists()
+    star = doc["queries"]["star_revenue_by_region_year"]["initial"]
+    assert star["nodes"]["BroadcastHashJoin"] == 4
+    assert star["nodes"]["BroadcastExchange"] == 4
+    assert star["nodes"]["Exchange"] == 1
+    assert star["scans"]["lineitem"] == 1

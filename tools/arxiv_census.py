@@ -184,8 +184,8 @@ def _ana_topics_cte() -> str:
 
 
 def _ana_pagerank_cte(iters: int, scale: int) -> str:
-    """Unrolled integer-exact PageRank rounds — the PAGERANK_SQL
-    discipline (plans/analytics.py:1243) over string paper ids."""
+    """Unrolled integer-exact PageRank rounds — the
+    ``analytics.PAGERANK_SQL`` discipline over string paper ids."""
     rounds = []
     for k in range(1, iters + 1):
         rounds.append(f""", pc{k} AS (
