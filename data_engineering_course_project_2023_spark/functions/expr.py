@@ -36,8 +36,6 @@ def spread(df: DataFrame, multiple: int = 1) -> DataFrame:
 # downcast that drops scale would round, and Spark (HALF_UP) and DuckDB
 # disagree on rounding ties.
 MONEY = DecimalType(18, 2)
-MONEY4 = DecimalType(18, 4)
-MONEY6 = DecimalType(18, 6)
 
 
 def money(c: Column | str) -> Column:

@@ -28,23 +28,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("content", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
 )
 
 FEATURE_SCHEMA = StructType(

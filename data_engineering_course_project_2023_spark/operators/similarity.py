@@ -400,21 +400,6 @@ def _kmeans_list(
     return run_memo(df, ("kmeans", k, n_iter, id_col, vec_col), build)
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 8,
-    n_iter: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """DataFrame view of :func:`_kmeans_list` — (centroid_id, centroid)."""
-    cent_list = _kmeans_list(df, k, n_iter, id_col, vec_col)
-    return df.sparkSession.createDataFrame(
-        [(cid, c) for cid, c in cent_list],
-        "centroid_id INT, centroid ARRAY<DOUBLE>",
-    )
-
-
 def ivf_topk(
     df: DataFrame,
     query_vec_id: int = 0,

@@ -75,17 +75,6 @@ def quality_score(c: Column | str, toks: Column | None = None) -> Column:
     return length_ok + stopword_ratio(c, toks) + alpha_ratio(c)
 
 
-def lang_scores(c: Column | str, toks: Column | None = None) -> list[Column]:
-    """Per-language marker-hit counts."""
-    if toks is None:
-        toks = tokens(c)
-    out = []
-    for lang, markers in LANG_MARKERS.items():
-        hits = F.size(F.filter(toks, lambda x: F.lower(x).isin(*markers)))
-        out.append(hits.alias(f"score_{lang}"))
-    return out
-
-
 def predict_lang(c: Column | str, toks: Column | None = None) -> Column:
     """Argmax over marker counts with deterministic tie-break (language
     name order); 'und' when nothing matches."""

@@ -1,6 +1,7 @@
 """Silver-2/3 enrichment: the reference's CrossRef + Semantic Scholar
 HTTP stages re-expressed as deterministic joins against lookup tables
-(SURVEY §7 step 3; §2.3 J5–J7, J9; §2.2 P10, P12, P13).
+(SURVEY §7 step 3; §2.3 J5–J7, J9; §2.2 P10, P13). The reference's P12
+id formatting is the registry query ``relational.conditional_id``.
 
 The reference fetches per-row over HTTP (api.py:5-88 CrossRef;
 api.py:189-241 S2 batch with arxiv→doi fallback; api.py:243-288 per-paper
@@ -15,15 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def format_paper_id(arxiv: F.Column, doi: F.Column) -> F.Column:
-    """P12 (api.py:182-187): 'ARXIV:{id}' | 'DOI:{doi}' | null."""
-    return (
-        F.when(arxiv.isNotNull(), F.concat(F.lit("ARXIV:"), arxiv))
-        .when(doi.isNotNull(), F.concat(F.lit("DOI:"), doi))
-        .otherwise(F.lit(None).cast("string"))
-    )
 
 
 def enrich_crossref(silver: DataFrame, crossref: DataFrame) -> DataFrame:

@@ -20,8 +20,7 @@ from . import pq_fixture
 
 Tables = dict[str, DataFrame]
 
-# DuckDB spelling of _md5_int60 / the 16-bit token hash
-_D_INT60 = "CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
+# DuckDB spelling of the 16-bit token hash
 _D_INT16 = "CAST(('0x' || substr(md5({expr}), 1, 4)) AS INTEGER)"
 
 # sh carries a MATERIALIZED hint: DuckDB inlines plain CTEs per
@@ -3297,7 +3296,6 @@ GROUP BY 1
 # --- X4: deterministic epoch shuffle → training batch assembly ---------------
 EPOCH_SEED = 1
 BATCH_SIZE_DOCS = 64
-_RANK_BUCKETS = 256
 
 
 def epoch_batches(t: Tables) -> DataFrame:
@@ -4724,13 +4722,9 @@ FROM comp GROUP BY 1
 
 
 # --- X3/X4: BM25 ranking (classic lexical retrieval) -------------------------
-# Historical fixed query ("spark", "join", "stream") — kept only as the
-# unit-test spelling. The REGISTERED queries derive their terms from
-# the corpus (see corpus_query_terms): the r7 sf1z census showed the
-# fixed literals return 0 rows on any corpus whose vocabulary doesn't
-# contain them (a Zipf corpus), silently de-fanging the whole retrieval
-# family on exactly the corpus shape that matters (VERDICT_r7 #2).
-BM25_QUERY = ("spark", "join", "stream")
+# The registered queries derive their terms from the corpus (see
+# corpus_query_terms): fixed literals return 0 rows on any corpus whose
+# vocabulary lacks them (a Zipf corpus, sf1z census).
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_N_TERMS = 3

@@ -11,10 +11,17 @@ table. Conventions that keep the driver's exact hash-compare green:
 
 Queries whose semantics aren't SQL-expressible register oracle=None and
 get the driver's rows-only check.
+
+Order: the registry is its declaration order. The driver checks only the
+first 50 entries, so ``star_revenue_by_region_year`` (the query
+``__spark_entry__.entry`` runs) is declared first and the rows-only
+queries are declared last, after every oracled one
+(``tests/test_oracle_parity.py::test_registry_order_rule``).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -459,25 +466,6 @@ REGISTRY: dict[str, Query] = {
         llmops.ANN_LSH_SQL,
         ("embeddings",),
         "X3 LSH-bucketed approximate top-k",
-    ),
-    # --- sketch variants: rows-only checks (engine-specific internals) ---
-    "approx_distinct_users": Query(
-        approx.approx_distinct_users,
-        None,
-        ("events",),
-        "X5 HLL++ approx distinct (scale path; exact twin is oracled)",
-    ),
-    "approx_value_quantiles": Query(
-        approx.approx_value_quantiles,
-        None,
-        ("events",),
-        "X5 percentile_approx sketch (scale path)",
-    ),
-    "minhash_ml": Query(
-        llmops.minhash_ml,
-        None,
-        ("documents",),
-        "X2 library path: pyspark.ml MinHashLSH approxSimilarityJoin",
     ),
     "ivf_topk": Query(
         llmops.ivf_topk_query,
@@ -1506,294 +1494,45 @@ REGISTRY: dict[str, Query] = {
         "TS funnel latency: nearest-click range join -> exact disc "
         "p25/p50/p90",
     ),
+    # --- rows-only checks (engine-specific sketches); they stay last ---
+    "approx_distinct_users": Query(
+        approx.approx_distinct_users,
+        None,
+        ("events",),
+        "X5 HLL++ approx distinct (scale path; exact twin is oracled)",
+    ),
+    "approx_value_quantiles": Query(
+        approx.approx_value_quantiles,
+        None,
+        ("events",),
+        "X5 percentile_approx sketch (scale path)",
+    ),
+    "minhash_ml": Query(
+        llmops.minhash_ml,
+        None,
+        ("documents",),
+        "X2 library path: pyspark.ml MinHashLSH approxSimilarityJoin",
+    ),
 }
-
-
-# --- driver-cap ordering -----------------------------------------------------
-# The driver CORRECTNESS snapshot records exactly the first 50 registry
-# entries (insertion order) per round and stops. Hedge against the cap:
-# every query that ALREADY holds a green driver row (r1 or r2) moves to
-# the back, so the front of the registry is exactly the set still
-# awaiting a driver verdict. After r2 that front is 50 queries: the 44
-# never-checked ones, embedding_quantize / vocab_encode (whose r2 rows
-# ERRORED in the driver harness — array<int> outputs, now flattened to
-# csv strings — and therefore need a fresh green row), and 4 of the
-# queries new in r3 (doc_cosine_pairs, oov_rate, node_jaccard,
-# variant_props_profile). Exactly the 50-row cap, so r1 ∪ r2 ∪ r3
-# covers the whole r2 registry. All OTHER r3 additions (strict-local
-# green) are explicitly DEFERRED behind the original gap so they
-# cannot displace a promised r3 slot; they rotate into the r4 window.
-# Mapping documented in NOTES.md.
-_R2_DRIVER_VERIFIED = [
-    "ann_lsh_topk", "arxiv_clean_silver", "attribution_join",
-    "brand_bulk_revenue", "bulk_red_suppliers", "chunk_dedup_spans",
-    "chunk_for_rag", "conversion_funnel", "cosine_topk",
-    "curate_documents", "decontaminate_docs", "decontaminate_exact",
-    "dedup_keep_first", "discount_forecast", "doc_fingerprints",
-    "doc_repetition", "dq_documents", "embedding_neardup",
-    "exact_dedup", "gopher_quality", "hash_sample_orders",
-    "heavy_hitter_tokens", "knn_graph", "lang_id", "market_share",
-    "minhash_pairs", "minhash_sigs", "mixture_resample_docs",
-    "multimodal_features", "nation_profit", "neardup_clusters",
-    "ngram_jaccard", "pack_documents", "pagerank_trade",
-    "paragraph_dedup", "paragraph_profile", "part_supplier_breadth",
-    "promo_revenue_pct", "quality_top_half", "returned_item_losses",
-    "semdedup_keep", "simhash_buckets", "text_quality",
-    "tfidf_top_terms", "top_quarter_supplier", "train_test_split",
-    "triangle_counts", "value_quantiles",
-]
-_R1_DRIVER_VERIFIED = [
-    "star_revenue_by_region_year", "copair_counts", "copair_counts_salted",
-    "top_parts_by_revenue", "orders_per_year", "prolific_customers",
-    "segment_top_customers", "popular_segments", "year_priority_cube",
-    "customer_spend_percentile", "nation_trade_pairs", "pricing_summary",
-    "rollup_year_status", "shipping_priority", "order_priority_check",
-    "large_volume_customers", "small_quantity_revenue", "nation_set_ops",
-    "sql_revenue_by_status", "pivot_year_priority", "late_sole_suppliers",
-    "idle_rich_customers", "cheapest_supplier_per_nation",
-    "nation_revenue_share", "order_count_distribution", "scan_offset_limit",
-    "null_drop_any", "split_names", "remap_tokens", "date_reformat",
-    "normalize_text", "null_defaulting", "conditional_id", "table_counts",
-    "explode_tokens", "distinct_entities", "collect_renest",
-    "enrichment_join", "fallback_join", "semi_anti_customers",
-    "running_order_totals", "customer_order_features", "copair_components",
-    "daily_event_counts", "hourly_user_activity", "sessionize",
-    "session_window_counts", "asof_purchase_click", "range_join_events",
-    "json_props_stats",
-]
-# r3 window: 47 green rows in CORRECTNESS_r03 (the other 3 sampled rows
-# were the engine-internal sketches, parked below in _NO_ORACLE_PARK).
-_R3_DRIVER_VERIFIED = [
-    "ivf_topk", "ivfpq_topk", "embedding_quantize", "pq_codes", "pq_topk",
-    "vocab_encode", "daily_gapfill", "stratified_sample",
-    "value_outliers_mad", "token_pmi", "label_centroids",
-    "incremental_agg_merge", "zorder_keys", "cohort_retention",
-    "event_transitions", "rolling_avg_value", "regr_value_trend",
-    "corr_quantity_discount", "fuzzy_part_pairs", "value_histogram",
-    "first_digit_profile", "referential_audit", "trade_hops",
-    "grouping_sets_revenue", "customer_ltv_deciles", "novel_docs",
-    "novel_docs_bloom", "source_overlap", "source_cap",
-    "dup_ratio_by_source", "embedding_covariance", "snapshot_diff",
-    "bpe_merge_pairs", "corpus_stats", "community_labels",
-    "unpivot_measures", "value_winsorized", "brand_frontier",
-    "curation_funnel", "kcore_nodes", "rolling_active_users",
-    "customer_rfm", "nation_supplier_hhi", "doc_cosine_pairs", "oov_rate",
-    "node_jaccard", "variant_props_profile",
-]
-_DRIVER_VERIFIED_PRE_R4 = (
-    _R1_DRIVER_VERIFIED + _R2_DRIVER_VERIFIED + _R3_DRIVER_VERIFIED
-)
-# The three engine-internal sketch queries (HLL, percentile_approx,
-# pyspark.ml MinHashLSH) structurally cannot be value-matched against
-# DuckDB — they burned 3 of r3's 50 sample slots as `err: no_oracle`
-# rows (VERDICT_r3 "What's wrong" #1). Park them at the ABSOLUTE back
-# so no future 50-row window is ever spent on a row that cannot go
-# green. Their capabilities are covered by the exact twins
-# (`table_counts`, `value_quantiles`, `minhash_pairs` — driver-green
-# r1/r2/r3 — and `kmv_distinct_users`/`cms_token_counts`, driver-green
-# in CORRECTNESS_r04).
-_NO_ORACLE_PARK = [
-    "approx_distinct_users", "approx_value_quantiles", "minhash_ml",
-]
-# CORRECTNESS_r04: the r4 window sampled exactly this list — 50/50
-# green, zero err rows (VERDICT_r4 headline) — so it folds into the
-# verified block above.
-_R4_DRIVER_VERIFIED = [
-    "epoch_batches", "weighted_doc_sample",
-    "kmv_distinct_users", "cms_token_counts",
-    "concurrent_users_peak", "impute_lang_eval", "quality_classifier",
-    "prefix_jaccard", "embedding_outliers", "value_equidepth_hist",
-    "ngram_diversity", "source_dup_matrix", "corpus_drift",
-    "regional_sales", "bilateral_trade", "skyline_parts",
-    "containment_pairs", "affix_overlap", "unigram_surprisal",
-    "zipf_slope", "k_anonymity_audit",
-    "mixture_temperature_weights", "embedding_dim_stats",
-    "sliding_event_counts", "bm25_topk", "hybrid_rrf", "ab_test_chi2",
-    "gdpr_erasure_audit", "funnel_by_variant", "mmr_rerank",
-    "neardup_keep_best", "novel_neardup", "badword_filter",
-    # round-3 additions: behind the original gap for the same reason
-    "simhash_hamming_pairs", "pii_scrub", "corpus_embedding_reconcile",
-    "boilerplate_strip", "hard_negatives", "encoding_quality",
-    "retrieval_metrics", "script_profile", "classifier_calibration",
-    "part_golden_records", "jl_projection", "neardup_eval", "skew_profile",
-    "daily_anomaly_flags", "incremental_daily_merge", "multimodal_resize",
-    "part_recommendations",
-]
-# CORRECTNESS_r05: the r5 window landed 50/50 green (flagship + arxiv
-# re-checks, the 4 first-row queries, 44 r1 re-verifications) — fold it
-# in. Every oracled query now holds a green driver row (r1 ∪ … ∪ r5).
-_R5_DRIVER_VERIFIED = [
-    "table_manifest", "bigram_lm_top", "doc_bigram_surprisal",
-    "supplier_scorecard",
-]
-_DRIVER_VERIFIED = (
-    _DRIVER_VERIFIED_PRE_R4 + _R4_DRIVER_VERIFIED + _R5_DRIVER_VERIFIED
-)
-# r6 window — the saturated-era standing order (VERDICT_r5 #5): the
-# flagship + an arxiv-family re-check lead, queries NEW in round 6 go
-# oracled-first right behind them, then the remainder backfills with
-# the OLDEST green rows (r1 vintage) so re-verification rotates rather
-# than repeats. The list is padded programmatically to exactly the
-# driver's 50-row cap.
-_R6_NEW = [
-    "hdr_value_quantiles", "hdr_sketch_merge",  # X5e sketch, first rows
-    "bpe_train_merges",  # full iterative BPE trainer (VERDICT_r5 #2)
-    "bpe_encode_stats",  # its inference path (trained-vocab encode)
-    "nation_supplier_hhi",  # re-check: overflow-hardened (VERDICT_r5 #3)
-    "dsir_importance_weights",  # X4 DSIR data-selection scoring pass
-    "adamic_adar",  # A19b degree-discounted link prediction
-    "kmv_sketch_merge",  # X5d KMV mergeability, driver-certified
-    "ppr_trade",  # A10b personalized PageRank
-    "es_weighted_sample",  # X4 exact-size weighted sampling (A-ES)
-    "dsir_quota_sample",  # X4 score->weight->sample composition
-    "user_event_sequences",  # TS sequence-model input shape
-    "hdr_daily_quantiles",  # X5e' sketch-per-time-bucket rollup
-    "recency_engagement",  # TS exact half-life decay scoring
-    "split_assignment_audit",  # X4 holdout split audit
-    "node_features",  # A11b graph-ML feature assembly
-    "skipgram_pairs",  # X4 embedding-training pair generator
-    "event_type_lift",  # TS association-rule mining
-    "negative_sampling_table",  # X4 word2vec sampler artifact
-]
-# CORRECTNESS_r06: the r6 window landed 50/50 green (judge recomputed:
-# zero errs, zero mismatches) — fold the genuinely-new r6 queries in
-# (the rest of the window were re-verifications of names already held
-# above; nation_supplier_hhi already sits in the r3 block).
-_R6_DRIVER_VERIFIED = [n for n in _R6_NEW if n != "nation_supplier_hhi"]
-_DRIVER_VERIFIED = _DRIVER_VERIFIED + _R6_DRIVER_VERIFIED
-# r7 window — same standing order: flagship + arxiv re-check lead,
-# round-7-new queries right behind, then backfill rotates to the
-# OLDEST rows not re-verified since their vintage (r6 re-ran the r1
-# list; r7 therefore re-runs the r2 vintage), padded to the 50 cap.
-_R7_NEW = [
-    "scd2_dim_apply",  # G1 gold-layer SCD-2 maintenance, first row
-    "unigram_lm_train",  # X4n SentencePiece-style unigram-LM trainer
-    "unigram_lm_encode",  # X4n' its inference path
-    "variant_shred_tags",  # VARIANT nested-array shredding
-    "scd2_as_of",  # G1b SCD-2 time-travel read
-    "hits_scores",  # A10c HITS hubs/authorities
-    "attribution_join_outer",  # S13+ outer attribution (funnel denominators)
-    "cdc_apply",  # G2 CDC changelog apply (MERGE twin)
-    "event_paths",  # TS top-k user journeys
-    "cusum_shift_flags",  # TS CUSUM change-point recursion
-    "kmv_set_similarity",  # X5f cross-sketch Jaccard
-    "conversion_latency",  # TS funnel latency disc-quantiles
-]
-# CORRECTNESS_r07: the r7 window landed 50/50 green (judge recomputed:
-# zero errs, zero mismatches) — fold the genuinely-new r7 queries in.
-_DRIVER_VERIFIED = _DRIVER_VERIFIED + _R7_NEW
-# r8 window — same standing order: flagship + arxiv re-check lead,
-# round-8-new queries right behind, then backfill rotates to the
-# OLDEST rows not re-verified since their vintage (r7 re-ran the r2
-# vintage; r8 therefore re-runs the r3 vintage), padded to the 50 cap.
-_R8_NEW = [
-    "doc_cosine_pairs_capped",  # X2/X3 scale-safe cosine (VERDICT_r7 #1)
-    "curation_funnel_neardup",  # X4k' its composition into the funnel
-    # VERDICT_r7 #2 — semantics changed (corpus-derived query terms /
-    # hash-picked anchors), so their r4-vintage green rows no longer
-    # certify current code; re-verify in the r8 window:
-    "bm25_topk",
-    "hybrid_rrf",
-    "retrieval_metrics",
-    "hard_negatives",
-]
-_R8_WINDOW = ["star_revenue_by_region_year", "arxiv_clean_silver"] + _R8_NEW
-_R8_WINDOW += [
-    n for n in _R3_DRIVER_VERIFIED if n not in _R8_WINDOW
-][: 50 - len(_R8_WINDOW)]
-assert len(_R8_WINDOW) == 50, len(_R8_WINDOW)
-# CORRECTNESS_r08: the r8 window landed 50/50 green (judge recomputed:
-# zero errs, zero mismatches) — fold the genuinely-new r8 queries in.
-_DRIVER_VERIFIED = _DRIVER_VERIFIED + [
-    n for n in _R8_NEW if n not in _DRIVER_VERIFIED
-]
-# r9 window — same standing order: flagship + arxiv re-check lead,
-# round-9-new queries right behind, then backfill rotates to the
-# OLDEST rows not re-verified since their vintage (r8 re-ran the r3
-# vintage; r9 therefore re-runs the r4 vintage), padded to the 50 cap.
-_R9_NEW = [
-    "ngram_jaccard_capped",  # X2a' scale-safe shingle Jaccard (VERDICT_r8 #1)
-    "containment_pairs_capped",  # X2' scale-safe containment twin
-    "neardup_eval_capped",  # X2g' the eval re-pointed at the capped truth
-]
-_R9_WINDOW = ["star_revenue_by_region_year", "arxiv_clean_silver"] + _R9_NEW
-_R9_WINDOW += [
-    n for n in _R4_DRIVER_VERIFIED if n not in _R9_WINDOW
-][: 50 - len(_R9_WINDOW)]
-assert len(_R9_WINDOW) == 50, len(_R9_WINDOW)
-assert set(_DRIVER_VERIFIED) <= set(REGISTRY)
-assert set(_R9_WINDOW) <= set(REGISTRY)
-assert set(_NO_ORACLE_PARK) <= set(REGISTRY)
-# Every registry query must be placed in exactly one rotation bucket:
-# a query in none of them would land in the catch-all front section
-# ahead of the window, displacing a promised row — the assert below
-# fails LOUDLY at import time instead (listing the unplaced names), so
-# a new query cannot ship without an explicit _R9_NEW/_R9_WINDOW slot.
-assert set(REGISTRY) == (
-    set(_DRIVER_VERIFIED)
-    | set(_R9_WINDOW)
-    | set(_NO_ORACLE_PARK)
-), sorted(
-    set(REGISTRY)
-    - set(_DRIVER_VERIFIED)
-    - set(_R9_WINDOW)
-    - set(_NO_ORACLE_PARK)
-)
-# Within the still-awaiting front section, oracled queries outrank
-# rows-only ones (oracle=None gets only a weak row-count check from the
-# driver, so losing its row to the cap costs the least).
-_BACK = (
-    set(_DRIVER_VERIFIED) | set(_R9_WINDOW) | set(_NO_ORACLE_PARK)
-)
-_R9 = set(_R9_WINDOW)
-REGISTRY = {
-    **{
-        n: q
-        for n, q in REGISTRY.items()
-        if n not in _BACK and q.oracle is not None
-    },
-    **{
-        n: q
-        for n, q in REGISTRY.items()
-        if n not in _BACK and q.oracle is None
-    },
-    **{n: REGISTRY[n] for n in _R9_WINDOW},
-    **{n: REGISTRY[n] for n in _DRIVER_VERIFIED if n not in _R9},
-    **{n: REGISTRY[n] for n in _NO_ORACLE_PARK},
-}
-
-
-_PARTITIONS_CACHE: dict[tuple[str, tuple[str, ...]], int] = {}
 
 
 def _sized_shuffle_partitions(sf_dir: str, tables: tuple[str, ...]) -> int:
-    """Right-size the pre-AQE reducer count from the query's actual
-    input bytes instead of a global constant: ceil(bytes / 16 MB) of
-    compressed input per reduce partition (the local stand-in for the
-    128 MB advisory size at cluster scale), floored at the session's
-    defaultParallelism — an A/B sweep at sf0.1 showed fewer reducers
-    than cores costs 30% on the shuffle-heavy queries (ngram_jaccard
-    3.1 s @ 8 vs 2.3 s @ 16/32 on local[32]) — and capped at 8× cores
-    to bound task-scheduling overhead (AQE coalesces below the cap at
-    runtime; multi-wave execution handles genuinely huge inputs). The
-    policy is cached per (sf_dir, tables) and derives from file sizes,
-    so the same formula pointed at 100 TB yields cluster-scale counts
-    with no code change. ``cores`` is passed in so the cache key stays
-    pure."""
-    key = (sf_dir, tables)
-    if key not in _PARTITIONS_CACHE:
-        import os
-
-        total = 0
-        for t in tables:
-            p = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-            elif os.path.exists(p):
-                total += os.path.getsize(p)
-        _PARTITIONS_CACHE[key] = -(-total // (16 << 20))
-    return _PARTITIONS_CACHE[key]
+    """Pre-AQE reducer count from the query's input bytes: ceil(bytes /
+    16 MB) of compressed parquet per reduce partition, the local stand-in
+    for the 128 MB advisory size at cluster scale. ``run_query`` floors
+    it at defaultParallelism (an sf0.1 sweep on local[32]: ngram_jaccard
+    3.1 s at 8 reducers vs 2.3 s at 16/32) and caps it at 8x cores (AQE
+    coalesces below the cap). The files are walked on every call, so a
+    path whose contents change is sized from its current bytes."""
+    total = 0
+    for t in tables:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isdir(p):
+            for root, _dirs, files in os.walk(p):
+                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+        elif os.path.exists(p):
+            total += os.path.getsize(p)
+    return -(-total // (16 << 20))
 
 
 def run_query(name: str, spark: SparkSession, sf_dir: str) -> DataFrame:

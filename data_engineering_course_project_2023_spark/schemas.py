@@ -6,15 +6,15 @@ explicit ``StructType`` so scans never pay inference and plans are stable
 (SURVEY.md §1.2). Two schema families:
 
 1. Driver-provided benchmark tables (TESTDATA.md / FIXTURES.md §A).
-2. Reference-shaped arXiv layers (FIXTURES.md §B) — bronze raw JSONL,
-   silver cleaned, enrichment lookups, gold star schema.
+2. The reference-shaped arXiv bronze input (FIXTURES.md §B), the raw
+   JSONL ``pipeline.py`` reads. Later layers are parquet and are read
+   with parquet's own schema.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -23,7 +23,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampNTZType,
-    TimestampType,
 )
 
 # The driver parquet files store timestamps with isAdjustedToUTC=false,
@@ -154,7 +153,7 @@ DRIVER_TABLES: dict[str, StructType] = {
 }
 
 # ---------------------------------------------------------------------------
-# 2. arXiv reference-shaped layers (FIXTURES.md §B; reference citations in
+# 2. arXiv reference-shaped bronze input (FIXTURES.md §B; reference citations in
 #    each comment point at /root/reference).
 # ---------------------------------------------------------------------------
 
@@ -187,177 +186,5 @@ ARXIV_RAW = StructType(
         StructField("update_date", StringType()),
         # [last, first, suffix] triples (src/utils/databases.py:125-127)
         StructField("authors_parsed", ArrayType(ArrayType(StringType()))),
-    ]
-)
-
-AUTHOR_STRUCT = StructType([StructField("name", StringType())])
-
-# Silver-1: output of the cleaning suite (SURVEY §2.2 P1-P9, P11).
-ARXIV_SILVER = StructType(
-    [
-        StructField("id", StringType()),  # deterministic surrogate (P2)
-        StructField("arxiv", StringType()),  # natural key, renamed (P1)
-        StructField("submitter", StringType()),
-        StructField("authors", ArrayType(AUTHOR_STRUCT)),  # P4
-        StructField("title", StringType()),
-        StructField("comments", StringType()),  # P8-normalized
-        StructField("journal_ref", StringType()),
-        StructField("doi", StringType()),
-        StructField("report_no", StringType()),
-        StructField("categories", StringType()),  # P5 dedup+sort
-        StructField("general_categories", StringType()),  # P6 remap
-        StructField("license", StringType()),
-        StructField("abstract", StringType()),
-        StructField(
-            "versions",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("created", StringType()),
-                        StructField("version", StringType()),
-                    ]
-                )
-            ),
-        ),
-        StructField("update_date", StringType()),  # ISO-8601 or original (P7)
-        StructField(
-            "authors_parsed",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("first_name", StringType()),
-                        StructField("last_name", StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-# CrossRef enrichment lookup (J5; src/utils/api.py:21-48,66-73).
-CROSSREF_WORKS = StructType(
-    [
-        StructField("doi", StringType()),
-        StructField("type", StringType()),
-        StructField("score", IntegerType()),
-        StructField("references_count", IntegerType()),
-        StructField("publisher", StringType()),
-        StructField("issue", StringType()),
-        StructField(
-            "references",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("DOI", StringType()),
-                        StructField("key", StringType()),
-                        StructField("doi_asserted_by", StringType()),
-                    ]
-                )
-            ),
-        ),
-        StructField("license_start", TimestampType()),
-        StructField("license_url", StringType()),
-        StructField("license_content_version", StringType()),
-        StructField("license_delay", IntegerType()),
-        StructField("short_container_title", StringType()),
-        StructField("container_title", StringType()),
-        StructField("is_referenced_by_count", IntegerType()),
-        StructField(
-            "cr_authors",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("given", StringType()),
-                        StructField("family", StringType()),
-                        StructField("sequence", StringType()),
-                    ]
-                )
-            ),
-        ),
-        StructField("language", StringType()),
-        StructField("deposited", TimestampType()),
-        StructField("ISSN", ArrayType(StringType())),
-        StructField(
-            "ISSN_type",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("value", StringType()),
-                        StructField("type", StringType()),
-                    ]
-                )
-            ),
-        ),
-        StructField("article_number", StringType()),
-        StructField("subject", ArrayType(StringType())),
-        StructField("journal_name", StringType()),
-        StructField("journal_pages", StringType()),
-        StructField("journal_volume", StringType()),
-    ]
-)
-
-# Semantic Scholar batch lookup (J6; src/utils/api.py:96-101).
-S2_PAPERS = StructType(
-    [
-        StructField("paperId", StringType()),
-        StructField("arxiv_id", StringType()),
-        StructField("s2_doi", StringType()),
-        StructField("url", StringType()),
-        StructField("s2_title", StringType()),
-        StructField("venue", StringType()),
-        StructField("year", IntegerType()),
-        StructField("s2_abstract", StringType()),
-        StructField("referenceCount", IntegerType()),
-        StructField("citationCount", IntegerType()),
-        StructField("influentialCitationCount", IntegerType()),
-        StructField("isOpenAccess", BooleanType()),
-        StructField("fieldsOfStudy", ArrayType(StringType())),
-        StructField("publicationDate", StringType()),
-        StructField(
-            "journal",
-            StructType(
-                [
-                    StructField("name", StringType()),
-                    StructField("volume", StringType()),
-                    StructField("pages", StringType()),
-                ]
-            ),
-        ),
-        StructField("publicationTypes", ArrayType(StringType())),
-    ]
-)
-
-# Per-paper fan-out tables (J7; src/utils/api.py:103-118,252-262).
-S2_AUTHORS = StructType(
-    [
-        StructField("paperId", StringType()),
-        StructField("authorId", StringType()),
-        StructField("name", StringType()),
-        StructField("affiliations", ArrayType(StringType())),
-        StructField("paperCount", IntegerType()),
-        StructField("citationCount", IntegerType()),
-        StructField("hIndex", IntegerType()),
-    ]
-)
-
-S2_CITATIONS = StructType(
-    [
-        StructField("paperId", StringType()),
-        StructField("citingPaperId", StringType()),
-        StructField("citationCount", IntegerType()),
-        StructField("influentialCitationCount", IntegerType()),
-        StructField("isOpenAccess", BooleanType()),
-        StructField("publicationDate", StringType()),
-    ]
-)
-
-S2_REFERENCES = StructType(
-    [
-        StructField("paperId", StringType()),
-        StructField("citedPaperId", StringType()),
-        StructField("citationCount", IntegerType()),
-        StructField("influentialCitationCount", IntegerType()),
-        StructField("isOpenAccess", BooleanType()),
-        StructField("publicationDate", StringType()),
     ]
 )

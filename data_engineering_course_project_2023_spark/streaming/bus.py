@@ -33,18 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-ENVELOPE_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.BinaryType()),
-        T.StructField("value", T.StringType()),
-        T.StructField("topic", T.StringType()),
-        T.StructField("partition", T.IntegerType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("timestamp", T.TimestampType()),
-    ]
-)
-
-
 def kafka_envelopes(
     spark: SparkSession,
     bootstrap_servers: str,

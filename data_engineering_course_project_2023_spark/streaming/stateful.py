@@ -95,65 +95,3 @@ def running_user_totals_batch(events: DataFrame) -> DataFrame:
             ).alias("total_value"),
         )
     )
-
-
-# --- State API v2: transformWithStateInPandas --------------------------------
-#
-# Spark 4's successor to applyInPandasWithState: typed state handles
-# (value/list/map), timers, and a RocksDB-backed store. The same
-# per-user running totals are spelled here with a ValueState so the
-# suite pins v1 == v2 == batch — three independent codepaths, one
-# semantics.
-try:  # the processor API lives in pyspark.sql.streaming on 4.x
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-except ImportError:  # pragma: no cover — older runtime, seam stays importable
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment,misc]
-
-
-class RunningTotalsProcessor(StatefulProcessor):
-    """ValueState-backed running (n_events, total_cents) per user."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        if self._totals.exists():
-            n, total = self._totals.get()
-        else:
-            n, total = 0, 0.0
-        for pdf in rows:
-            n += len(pdf)
-            cents = pdf["value"].mul(100)
-            total += int(
-                np.copysign(np.floor(cents.abs() + 0.5), cents).sum()
-            )
-        self._totals.update((int(n), float(total)))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [total / 100.0],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_stream_v2(events_stream: DataFrame) -> DataFrame:
-    """Streaming: same running totals through the v2 state API. The
-    caller's session must use the RocksDB state store provider (the v2
-    operator requires it):
-    spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider
-    Runtime dependency: the v2 state protocol runs over protobuf —
-    environments without ``google.protobuf`` fall back to the v1
-    ``running_user_totals_stream`` path (its pytest twin skips there)."""
-    return events_stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -4,6 +4,8 @@ scale the driver uses."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from data_engineering_course_project_2023_spark.plans import registry
@@ -53,3 +55,26 @@ def test_no_registry_query_emits_complex_typed_columns(registry_sweep):
     """
     offenders = registry_sweep["complex_typed_columns"]
     assert not offenders, offenders
+
+
+def test_registry_order_rule():
+    """The driver checks only the first 50 registry entries: the query
+    ``__spark_entry__.entry`` runs comes first, and no rows-only query
+    (oracle=None) precedes an oracled one."""
+    names = list(registry.REGISTRY)
+    assert names[0] == "star_revenue_by_region_year"
+    oracled = [registry.REGISTRY[n].oracle is not None for n in names]
+    assert oracled == sorted(oracled, reverse=True), [
+        n for n, o in zip(names, oracled) if not o
+    ]
+
+
+def test_sized_shuffle_partitions_reads_current_bytes(tmp_path):
+    """The reducer count follows the files as they are now, not as they
+    were at the first call for the same path."""
+    part = tmp_path / "lineitem.parquet" / "part-0"
+    part.parent.mkdir()
+    part.write_bytes(b"x")
+    assert registry._sized_shuffle_partitions(str(tmp_path), ("lineitem",)) == 1
+    os.truncate(part, 40 << 20)  # sparse: 40 MiB → ceil(40 / 16) = 3
+    assert registry._sized_shuffle_partitions(str(tmp_path), ("lineitem",)) == 3

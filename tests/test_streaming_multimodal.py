@@ -307,71 +307,6 @@ def test_bus_decode_dead_letters_bad_json(spark, tmp_path):
     assert good == [1, 3] and len(dead) == 1
 
 
-def test_running_totals_state_v2_matches_batch_and_v1(spark, tmp_path):
-    """State API v2 (transformWithStateInPandas + RocksDB store) yields
-    the same final per-user state as the batch twin — and therefore as
-    the v1 applyInPandasWithState path pinned above.
-
-    The v2 runtime ships its state protocol over protobuf; containers
-    without google.protobuf can't run the operator (the v1 path above
-    carries the stateful coverage there), so this pins the parity only
-    where the dependency exists."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas needs protobuf for its state protocol",
-    )
-    import shutil
-
-    from data_engineering_course_project_2023_spark.sources.readers import load_table
-    from data_engineering_course_project_2023_spark.streaming import stateful
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events")
-    src = str(tmp_path / "ev_src_v2")
-    events.repartition(2).write.parquet(src)
-    batch = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in stateful.running_user_totals_batch(events).collect()
-    }
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream_in = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        ckpt = str(tmp_path / "ck_v2")
-        q = (
-            stateful.running_user_totals_stream_v2(stream_in)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("user_totals_v2")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {}
-        for r in spark.sql("SELECT * FROM user_totals_v2").collect():
-            cur = got.get(r["user_id"])
-            if cur is None or r["n_events"] > cur[0]:
-                got[r["user_id"]] = (r["n_events"], r["total_value"])
-        assert got == batch
-        shutil.rmtree(ckpt, ignore_errors=True)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-
 def test_map_in_arrow_matches_pandas_path(spark):
     """extract_features_arrow (mapInArrow) is bit-identical to the
     mapInPandas path on the same media frame."""

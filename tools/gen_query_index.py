@@ -21,8 +21,9 @@ def main() -> None:
         "registered query — the driver-facing surface",
         "(`__spark_entry__.queries()`); oracle = exact DuckDB twin checked",
         "in `tests/test_oracle_parity.py` and the driver's t2 gate.",
-        "Ordering mirrors the registry (driver-cap rotation:",
-        "still-unverified queries first).",
+        "Ordering is the registry's declaration order: the flagship",
+        "`star_revenue_by_region_year` first, every oracled query before",
+        "the rows-only ones (the driver checks only the first 50).",
         "",
         f"{len(registry.REGISTRY)} queries, "
         f"{sum(1 for q in registry.REGISTRY.values() if q.oracle)} oracled, "
