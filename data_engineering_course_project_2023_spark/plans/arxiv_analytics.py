@@ -171,11 +171,11 @@ def citation_pagerank(
     in units of 1e-12, ``DIV`` contributions, damping 85/100 in integer
     arithmetic — bit-identical under any partitioning, so the unrolled
     DuckDB twin matches exactly. PR_ITERS is fixed and small: the
-    rounds unroll into one statically-bounded plan; only the shared
+    iterations unroll into one statically-bounded plan; only the shared
     inputs are checkpointed.
     Citation in-degree is Pareto-skewed (the generator concentrates
-    citations on early papers), so the per-round contribution agg is
-    the AQE skew case the trade-graph twin already pinned."""
+    citations on early papers), so each iteration's contribution agg
+    is the AQE skew case the trade-graph twin already pinned."""
     pids = enriched.select(F.col("paperId").alias("pid")).distinct()
     edges = (
         s2_citations
@@ -221,7 +221,7 @@ def collab_communities(collab: DataFrame, min_weight: int = 2) -> DataFrame:
     shared mega-collaboration paper is not a cluster signal).
 
     Star-contraction CC (``operators/dedup.connected_components_star``)
-    — O(log n) synchronization rounds regardless of component diameter,
+    — O(log n) synchronization steps regardless of component diameter,
     the right variant here because prolific-author cliques chain into
     one giant component whose diameter grows with the corpus. Returns
     (author_id, component); census invariants compare component-size

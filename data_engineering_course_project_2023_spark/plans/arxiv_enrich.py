@@ -24,13 +24,11 @@ def enrich_crossref(silver: DataFrame, crossref: DataFrame) -> DataFrame:
     license[0].start, deposited, ISSN_type[].value/type —
     api.py:21-48).
 
-    Join strategy is left to AQE: the CrossRef works table is NOT
-    dimension-sized — it carries ~one row per published paper, so at
-    corpus scale it is as big as the fact side (round-9 census: a
-    forced broadcast of the 2 M-row works table made this stage 66% of
-    the whole chain's runtime, and at 100 TB it would exceed the 8 GiB
-    broadcast ceiling outright). AQE broadcasts it when it is actually
-    small and shuffles on doi otherwise."""
+    Join strategy is left to AQE: the CrossRef works table carries
+    about one row per published paper, so it is as big as the fact
+    side and a forced broadcast stops fitting as the corpus grows
+    (2.5 M-paper census: a forced broadcast made this stage 66 % of the
+    chain). AQE broadcasts it when it is small, else shuffles on doi."""
     joined = silver.join(crossref, "doi", "left")
     return joined.withColumn(
         "issn_values",
@@ -50,11 +48,9 @@ def enrich_s2_with_fallback(
     Two left joins + coalesce, then the drop — the relational spelling
     of the reference's no_response_indices retry loop. The S2 lookup
     is one row per covered paper — fact-sized, not a dimension — so
-    the join strategy is AQE's call (round-9 census: forcing these two
-    broadcasts serialized a 2.25 M-row struct table twice per run and
-    dominated the chain; at 100 TB a forced broadcast here is simply
-    wrong). When a deployment's S2 slice IS small, AQE still
-    broadcasts it dynamically.
+    the join strategy is AQE's call, and AQE still broadcasts a small
+    S2 slice (2.5 M-paper census: two forced broadcasts serialized a
+    2.25 M-row struct table twice per run and dominated the chain).
     """
     by_arxiv = s2_papers.select(
         F.col("arxiv_id").alias("_k1"), F.struct("*").alias("_hit1")

@@ -179,10 +179,3 @@ def build_star(enriched: DataFrame) -> dict[str, DataFrame]:
         "dim_references": dim_references,
         "dim_pub_version": dim_pub_version,
     }
-
-
-def save_star(star: dict[str, DataFrame], base_path: str) -> None:
-    """S9/S10: persist the gold layer. Parquet dirs locally; in a
-    metastore deployment this is saveAsTable into the gold schema."""
-    for name, df in star.items():
-        df.write.mode("overwrite").parquet(f"{base_path}/{name}")

@@ -1,75 +1,58 @@
-"""End-to-end pipeline composition (SURVEY §3.1): the reference's
-six Airflow DAG stages as ordinary function composition over lazy
-DataFrames.
+"""The reference pipeline (SURVEY §3.1) as one stage list: the one
+definition of the census chain silver → enriched → star_fact,
+dim_authors → authored_by → collab.
 
-Reference chain (download_dataset_stage_1 → clean_and_validate_stage_2 →
-enrich_sem_general_stage_3 → insert_sem_general_neo4j_stage_4 →
-enrich_sem_additional_stage_5 → insert_sem_additional_neo4j_stage_6):
-every inter-DAG TriggerDagRunOperator becomes a function call; every
-file-materialization boundary becomes an *optional* checkpoint —
-Spark's lineage makes intermediate files an operational choice
-(restartability), not a structural requirement.
+Each reference Airflow DAG boundary is a :class:`orchestrate.Stage`,
+and :func:`orchestrate.run_stages` materializes every stage to parquet
+under a run root, so a later stage reads its upstreams' files, never
+their lazy plans. Callers run
+``orchestrate.run_stages(spark, stages(), root, sources)`` with one
+frame per name in ``SOURCES``.
 
 Stage 1 (Kaggle download/unzip) is out-of-engine (SURVEY §2.1 S8):
-ingestion ends at a JSONL path; the pipeline starts at the scan.
+the chain starts at the ``arxiv_raw`` scan.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import ARXIV_RAW
-from ..sources.readers import read_jsonl
 from . import arxiv_clean, arxiv_enrich, arxiv_graph, arxiv_star
+from .orchestrate import Stage
+
+SOURCES = (
+    "arxiv_raw", "crossref", "s2_papers", "s2_authors",
+    "s2_citations", "s2_references",
+)
 
 
-@dataclass
-class PipelineResult:
-    silver: DataFrame
-    enriched: DataFrame
-    star: dict[str, DataFrame]
-    nodes: dict[str, DataFrame]
-    edges: dict[str, DataFrame]
-    collaboration: DataFrame
+def stages() -> list[Stage]:
+    """The six census stages in topological order."""
 
+    def silver(up):
+        return arxiv_clean.clean_publications(up["arxiv_raw"])
 
-def run_pipeline(
-    raw: DataFrame,
-    crossref: DataFrame,
-    s2_papers: DataFrame,
-    s2_authors: DataFrame,
-    s2_citations: DataFrame,
-    s2_references: DataFrame,
-) -> PipelineResult:
-    """bronze → silver-1 → silver-2/3 → gold (star + graph), all lazy.
+    def enriched(up):
+        return arxiv_enrich.full_enrichment(
+            up["silver"], up["crossref"], up["s2_papers"],
+            up["s2_authors"], up["s2_citations"], up["s2_references"],
+        )
 
-    Nothing materializes until a sink is asked for; Catalyst sees the
-    whole lineage and can pushdown/prune across stage boundaries the
-    reference could not (each of its stages re-read JSON from disk)."""
-    silver = arxiv_clean.clean_publications(raw)
-    enriched = arxiv_enrich.full_enrichment(
-        silver, crossref, s2_papers, s2_authors, s2_citations, s2_references
-    )
-    star = arxiv_star.build_star(enriched)
-    nodes = arxiv_graph.build_nodes(enriched)
-    edges = arxiv_graph.build_edges(enriched, nodes)
-    collab = arxiv_graph.collaboration_graph(edges["AUTHORED_BY"])
-    return PipelineResult(silver, enriched, star, nodes, edges, collab)
+    def star_fact(up):
+        return arxiv_star.build_star(up["enriched"])["publication_fact"]
 
+    def dim_authors(up):
+        return arxiv_star.build_star(up["enriched"])["dim_authors"]
 
-def run_pipeline_from_jsonl(
-    spark: SparkSession, raw_path: str, lookups: dict[str, DataFrame]
-) -> PipelineResult:
-    """Scan-rooted variant: stage-2 entry exactly like the reference
-    (scan + scan-time predicate on doi/id — utils.py:27)."""
-    raw = read_jsonl(spark, raw_path, ARXIV_RAW, required_non_null=["doi", "id"])
-    return run_pipeline(
-        raw,
-        lookups["crossref"],
-        lookups["s2_papers"],
-        lookups["s2_authors"],
-        lookups["s2_citations"],
-        lookups["s2_references"],
-    )
+    def authored_by(up):
+        return arxiv_graph.authored_by(up["enriched"])
+
+    def collab(up):
+        return arxiv_graph.collaboration_graph(up["authored_by"])
+
+    return [
+        Stage("silver", silver, inputs=("arxiv_raw",)),
+        Stage("enriched", enriched, inputs=("silver",) + SOURCES[1:]),
+        Stage("star_fact", star_fact, inputs=("enriched",)),
+        Stage("dim_authors", dim_authors, inputs=("enriched",)),
+        Stage("authored_by", authored_by, inputs=("enriched",)),
+        Stage("collab", collab, inputs=("authored_by",)),
+    ]

@@ -16,10 +16,9 @@ import os
 
 import pytest
 
+from data_engineering_course_project_2023_spark.plans import pipeline
 from tools.arxiv_census import (
-    TABLES,
     analytics_leg,
-    build_stages,
     duckdb_analytics,
     _union_find_stats,
 )
@@ -44,9 +43,9 @@ def run_root(spark, axis_dir, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("arxiv_ana_run"))
     sources = {
         t: spark.read.parquet(os.path.join(axis_dir, f"{t}.parquet"))
-        for t in TABLES
+        for t in pipeline.SOURCES
     }
-    orchestrate.run_stages(spark, build_stages(), root, sources)
+    orchestrate.run_stages(spark, pipeline.stages(), root, sources)
     return root
 
 

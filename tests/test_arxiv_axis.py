@@ -15,7 +15,8 @@ import os
 import duckdb
 import pytest
 
-from tools.arxiv_census import _HITS_CTE, TABLES
+from data_engineering_course_project_2023_spark.plans.pipeline import SOURCES
+from tools.arxiv_census import _HITS_CTE
 from tools.gen_arxiv import generate_arxiv
 
 N = 4000
@@ -31,7 +32,7 @@ def axis_dir(tmp_path_factory):
 @pytest.fixture(scope="module")
 def duck(axis_dir):
     con = duckdb.connect()
-    for t in TABLES:
+    for t in SOURCES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"'{os.path.join(axis_dir, t + '.parquet')}'"
@@ -65,31 +66,35 @@ def test_generator_edge_rows(duck):
     assert n_fb > 0
 
 
-def test_chain_invariants_vs_duckdb(spark, axis_dir, duck):
+def test_chain_invariants_vs_duckdb(spark, axis_dir, duck, tmp_path):
     """silver survivorship + enrichment fallback + pair multiset: the
     same three twins the at-scale census checks, end-to-end through
-    run_pipeline's lazy lineage."""
+    the stage parquet run_stages materializes."""
     from pyspark.sql import functions as F
 
-    from data_engineering_course_project_2023_spark.plans import pipeline
+    from data_engineering_course_project_2023_spark.plans import (
+        orchestrate,
+        pipeline,
+    )
 
-    rd = lambda t: spark.read.parquet(  # noqa: E731
-        os.path.join(axis_dir, f"{t}.parquet")
-    )
-    r = pipeline.run_pipeline(
-        rd("arxiv_raw"), rd("crossref"), rd("s2_papers"),
-        rd("s2_authors"), rd("s2_citations"), rd("s2_references"),
-    )
+    sources = {
+        t: spark.read.parquet(os.path.join(axis_dir, f"{t}.parquet"))
+        for t in SOURCES
+    }
+    root = str(tmp_path)
+    orchestrate.run_stages(spark, pipeline.stages(), root, sources)
+    rd = lambda st: spark.read.parquet(os.path.join(root, st))  # noqa: E731
+
     exp_silver = duck.execute(
         "SELECT count(*) FROM arxiv_raw"
         " WHERE doi IS NOT NULL AND id IS NOT NULL"
     ).fetchone()[0]
-    assert r.silver.count() == exp_silver
+    assert rd("silver").count() == exp_silver
 
     exp_enriched = duck.execute(
         _HITS_CTE + "SELECT count(*) FROM hits"
     ).fetchone()[0]
-    assert r.enriched.count() == exp_enriched
+    assert rd("enriched").count() == exp_enriched
 
     cnt, wsum, wmax = duck.execute(
         _HITS_CTE + """, pairs AS (
@@ -98,7 +103,7 @@ def test_chain_invariants_vs_duckdb(spark, axis_dir, duck):
           GROUP BY 1, 2)
         SELECT count(*), sum(c), max(c) FROM pairs"""
     ).fetchone()
-    agg = r.collaboration.agg(
+    agg = rd("collab").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("collab_count").alias("s"),
         F.max("collab_count").alias("mx"),

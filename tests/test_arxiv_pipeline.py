@@ -114,11 +114,16 @@ def test_enrichment_fallback_and_fanout(spark):
 
 
 def test_full_pipeline_composition(spark, tmp_path):
-    """Stage 2→6 composition from a JSONL file on disk — the whole
-    reference chain in one lineage."""
+    """Stage 2→6 from a JSONL file on disk: the package's stage list
+    materialized by run_stages, bronze scan included."""
     from pyspark.sql import functions as F
 
-    from data_engineering_course_project_2023_spark.plans import pipeline
+    from data_engineering_course_project_2023_spark.plans import (
+        orchestrate,
+        pipeline,
+    )
+    from data_engineering_course_project_2023_spark.schemas import ARXIV_RAW
+    from data_engineering_course_project_2023_spark.sources.readers import read_jsonl
     from data_engineering_course_project_2023_spark.sources.writers import write_jsonl
 
     raw = fixtures.arxiv_raw(spark)
@@ -157,16 +162,30 @@ def test_full_pipeline_composition(spark, tmp_path):
     empty_rel = spark.createDataFrame(
         [], "paperId string, otherPaperId string"
     )
-    result = pipeline.run_pipeline_from_jsonl(
-        spark, path,
-        {
-            "crossref": crossref, "s2_papers": s2, "s2_authors": s2a,
-            "s2_citations": empty_rel, "s2_references": empty_rel,
-        },
-    )
+    sources = {
+        # stage-2 entry like the reference: scan + scan-time predicate
+        # on doi/id (utils.py:27)
+        "arxiv_raw": read_jsonl(
+            spark, path, ARXIV_RAW, required_non_null=["doi", "id"]
+        ),
+        "crossref": crossref, "s2_papers": s2, "s2_authors": s2a,
+        "s2_citations": empty_rel, "s2_references": empty_rel,
+    }
+    root = str(tmp_path / "run")
+    orchestrate.run_stages(spark, pipeline.stages(), root, sources)
+
+    def rd(stage):
+        return spark.read.parquet(f"{root}/{stage}")
+
     # bronze had 3 rows; 1 dropped by scan predicate → 2 silver rows
-    assert result.silver.count() == 2
+    assert rd("silver").count() == 2
     # both silver rows enrich (arxiv ids match)
-    assert result.enriched.count() == 2
-    assert result.star["publication_fact"].count() == 2
-    assert result.collaboration.count() >= 1
+    assert rd("enriched").count() == 2
+    fact = rd("star_fact")
+    assert fact.count() == 2
+    assert set(fact.columns) == {
+        "id", "reference_count", "score", "doi", "start_date",
+    }
+    # S2 authors: (Alice, Bob) on P1 and (Alice, Dana) on P2 — one
+    # canonical pair per paper
+    assert rd("collab").count() == 2

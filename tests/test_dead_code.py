@@ -1,4 +1,5 @@
-"""No package-level definition may sit unreferenced.
+"""No package-level definition may sit unreferenced, and the set of
+definitions only tests reach may only shrink.
 
 Every module-level function, class and assigned name in the package
 must be named somewhere in the repo's ``.py`` files outside its own
@@ -23,6 +24,20 @@ _WORD = re.compile(r"\w+")
 # Definitions kept on purpose although nothing names them. Empty: delete
 # dead code instead of listing it here.
 ALLOWED: set[str] = set()
+
+# Definitions named only under tests/. Wire an entry in or delete it
+# with its tests, then remove it here; never add to this set.
+TEST_ONLY: set[str] = {
+    "ARXIV_RAW", "CDC_LOG_SCHEMA", "cdc_materialize_stream",
+    "cdc_state_view", "dedup_events_batch", "dsir_model_snapshot_stream",
+    "enrich_by_key", "export_training_shards", "extract_features_arrow",
+    "fetch_extract_cleanup", "finalize_funnel", "frame_sample",
+    "label_top_eigvec", "novelty_ingest_batch", "read_binary_dir",
+    "read_csv", "read_orc", "run_checks_observed",
+    "running_user_totals_stream", "sentence_split_udtf", "stream_log_dir",
+    "write_csv", "write_orc", "write_zordered",
+}
+TESTS = os.path.join(ROOT, "tests") + os.sep
 
 
 def _repo_py_files() -> list[str]:
@@ -53,15 +68,18 @@ def _module_definitions(tree: ast.Module) -> list[tuple[str, int, int]]:
     return out
 
 
-def test_no_unreferenced_package_definitions():
+def _package_definitions():
+    """(location, name, whole-word uses outside its own definition in
+    non-test files, uses in tests) of each package definition."""
     sources = {}
     for path in _repo_py_files():
         with open(path, encoding="utf-8") as f:
             sources[path] = f.read()
     # a whole-word grep for an identifier is a lookup of its \w+ token
-    repo_words = Counter(w for src in sources.values() for w in _WORD.findall(src))
+    words = {True: Counter(), False: Counter()}
+    for path, src in sources.items():
+        words[path.startswith(TESTS)].update(_WORD.findall(src))
 
-    dead = []
     for path, src in sources.items():
         if not path.startswith(PKG + os.sep):
             continue
@@ -71,8 +89,26 @@ def test_no_unreferenced_package_definitions():
                 continue
             span = "\n".join(lines[first - 1:last])
             own = sum(1 for w in _WORD.findall(span) if w == name)
-            if repo_words[name] == own:
-                dead.append(f"{os.path.relpath(path, ROOT)}:{first} {name}")
+            where = f"{os.path.relpath(path, ROOT)}:{first} {name}"
+            yield where, name, words[False][name] - own, words[True][name]
+
+
+def test_no_unreferenced_package_definitions():
+    dead = [
+        where for where, _name, outside, in_tests in _package_definitions()
+        if outside == 0 and in_tests == 0
+    ]
     assert not dead, "referenced nowhere but their own definition:\n" + "\n".join(
         sorted(dead)
     )
+
+
+def test_test_only_definitions_only_shrink():
+    found = {
+        name: where for where, name, outside, in_tests in _package_definitions()
+        if outside == 0 and in_tests > 0
+    }
+    new = sorted(where for name, where in found.items() if name not in TEST_ONLY)
+    assert not new, "named only under tests/ (wire in or delete):\n" + "\n".join(new)
+    stale = sorted(TEST_ONLY - set(found))
+    assert not stale, f"no longer test-only, remove from TEST_ONLY: {stale}"

@@ -39,6 +39,26 @@ def test_clean_is_shuffle_free(spark):
     assert "Exchange" not in plan
 
 
+def test_authored_by_keys_authors_without_a_join(spark):
+    """AUTHORED_BY computes the author key on the exploded row: the
+    executed plan has no join (against the Author node table) and one
+    aggregation — the distinct, as one Exchange between its partial and
+    final HashAggregate."""
+    from data_engineering_course_project_2023_spark.plans import arxiv_graph
+
+    from . import fixtures
+
+    df = arxiv_graph.authored_by(fixtures.enriched(spark))
+    df.collect()
+    final = (
+        df._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert "Join" not in final, final
+    assert final.count("HashAggregate(") == 2, final
+    assert final.count("Exchange ") == 1, final
+
+
 def test_enrichment_join_broadcasts_lookup(spark):
     plan = plan_of(registry.run_query("enrichment_join", spark, SF_CORRECT))
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan

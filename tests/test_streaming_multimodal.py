@@ -142,23 +142,6 @@ def test_events_stream_twin_matches_oracle_transform(spark, tmp_path):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_save_star_gold_layer(spark, tmp_path):
-    """S9/S10: persist + rescan the gold layer (parquet spelling of
-    saveAsTable)."""
-    from data_engineering_course_project_2023_spark.plans import arxiv_star
-
-    from . import fixtures
-
-    star = arxiv_star.build_star(fixtures.enriched(spark))
-    base = str(tmp_path / "gold")
-    arxiv_star.save_star(star, base)
-    back = spark.read.parquet(f"{base}/publication_fact")
-    assert back.count() == 2
-    assert set(back.columns) == {
-        "id", "reference_count", "score", "doi", "start_date",
-    }
-
-
 def test_stateful_stream_equals_batch(spark, tmp_path):
     """applyInPandasWithState running totals == batch groupBy on the
     same input (update-mode: take each user's LAST emitted row)."""

@@ -1,29 +1,22 @@
-"""At-scale census for the reference-parity arXiv chain (VERDICT_r8 #2).
+"""At-scale census of the reference-parity arXiv chain: runs the
+stages of ``plans/pipeline.py`` on a generated arXiv axis
+(tools/gen_arxiv.py: Zipf author/category skew and mega-collaboration
+papers) through ``orchestrate`` and checks the result against DuckDB.
 
-The clean→enrich→star→graph chain (SURVEY §3.1) has driver-green
-oracle rows and pytest semantics coverage, but until round 9 it only
-ever *executed* on a 5-row inline fixture. This census runs it
-end-to-end on the generated arXiv axis (tools/gen_arxiv.py, ~2.5 M
-papers with Zipf author/category skew and real mega-collaboration
-papers), through the repo's own orchestration layer:
-
-- **per-stage timing** via incremental :func:`orchestrate.run_stages`
-  calls — each call builds exactly one new stage (earlier stages skip
-  on their atomic _SUCCESS markers), so the deltas are honest stage
-  wall-times including the parquet materialization the reference's
-  Airflow DAG boundaries imply;
-- **scheduler-leg timing** via :func:`orchestrate.run_scheduled` — a
-  second logical run date builds the whole DAG cold under its own
-  ``run=<date>`` subtree (chain end-to-end, one number), then the same
-  trigger re-fires to pin the idempotent skip path;
-- **cross-engine value checks**: chain invariants recomputed by DuckDB
-  twins on the SAME parquet — silver survivorship (scan predicate,
-  utils.py:27), malformed-GMT passthrough (databases.py:62-64),
-  category dedup (utils.py:45-46), enrichment fallback survivorship
-  (api.py:199-241), AUTHORED_BY edge cardinality, and the
-  co-authorship pair-weight multiset (count / Σweight / max weight /
-  heavy-pair count) under the mega-collab skew — the J4 self-join's
-  canonical-pair semantics checked at 20 M+ pairs, not 2.
+- **per-stage timing**: incremental :func:`orchestrate.run_stages`
+  calls, each building exactly one new stage (earlier stages skip on
+  their atomic _SUCCESS markers), so each delta is one stage's wall
+  time including its parquet materialization;
+- **scheduler leg**: :func:`orchestrate.run_scheduled` builds a second
+  logical run date cold under its own ``run=<date>`` subtree, then the
+  same trigger re-fires to pin the idempotent skip path;
+- **cross-engine value checks**: DuckDB twins recompute the chain
+  invariants from the same parquet — silver survivorship (scan
+  predicate, utils.py:27), malformed-GMT passthrough
+  (databases.py:62-64), category dedup (utils.py:45-46), enrichment
+  fallback survivorship (api.py:199-241), AUTHORED_BY edge cardinality
+  and the co-authorship pair-weight multiset (count / Σweight / max
+  weight / heavy-pair count) under the mega-collab skew.
 
 Artifacts: BENCH_ARXIV.json (stage + scheduler timings, rows, skew
 witnesses) and CORRECTNESS_ARXIV.json (named check → match).
@@ -45,12 +38,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-ANCHOR = "2023-01-02"  # weekly anchor, mirrors download_dataset_stage_1.py:24
-
-TABLES = (
-    "arxiv_raw", "crossref", "s2_papers", "s2_authors",
-    "s2_citations", "s2_references",
+from data_engineering_course_project_2023_spark.plans.pipeline import (  # noqa: E402
+    SOURCES as TABLES,
+    stages as build_stages,
 )
+
+ANCHOR = "2023-01-02"  # weekly anchor, mirrors download_dataset_stage_1.py:24
 
 # ---------------------------------------------------------------------------
 # DuckDB twins. `hits` replays the fallback-join survivorship
@@ -137,11 +130,10 @@ SELECT count(*), sum(c), max(c),
 
 
 # ---------------------------------------------------------------------------
-# Analytics leg (VERDICT_r10 #3): the reference's declared analytical
-# workload (docs/neo4j_analytical_ideas.md:1-21) executed against the
-# materialized chain at corpus scale, each query value-checked through
-# engine-representation-free integer invariants recomputed by DuckDB
-# twins on the SAME parquet (PageRank: unrolled integer-exact rounds;
+# Analytics leg: the reference's declared analytical workload
+# (docs/neo4j_analytical_ideas.md:1-21) run on the materialized chain,
+# each query reduced to integer invariants that DuckDB twins recompute
+# from the same parquet (PageRank: unrolled integer-exact iterations;
 # communities: python union-find over the twin's heavy-pair edge list,
 # comparing component-size structure only).
 # ---------------------------------------------------------------------------
@@ -184,11 +176,11 @@ def _ana_topics_cte() -> str:
 
 
 def _ana_pagerank_cte(iters: int, scale: int) -> str:
-    """Unrolled integer-exact PageRank rounds — the
+    """Unrolled integer-exact PageRank iterations — the
     ``analytics.PAGERANK_SQL`` discipline over string paper ids."""
-    rounds = []
+    steps = []
     for k in range(1, iters + 1):
-        rounds.append(f""", pc{k} AS (
+        steps.append(f""", pc{k} AS (
   SELECT e.dst, SUM(p.pr // d.deg) AS s
   FROM pedges e JOIN pdeg d USING (src) JOIN ppr{k - 1} p ON p.node = e.src
   GROUP BY 1
@@ -215,7 +207,7 @@ def _ana_pagerank_cte(iters: int, scale: int) -> str:
   FROM pnodes
 ), ppr0 AS (
   SELECT node, CAST((SELECT init FROM pconsts) AS BIGINT) AS pr FROM pnodes
-){"".join(rounds)}"""
+){"".join(steps)}"""
 
 
 def _union_find_stats(pairs) -> dict[str, int]:
@@ -481,66 +473,19 @@ def analytics_leg(spark, run_root: str, data: str):
     return got, secs
 
 
-def build_stages():
-    from pyspark.sql import functions as F
-
-    from data_engineering_course_project_2023_spark.plans import (
-        arxiv_clean,
-        arxiv_enrich,
-        arxiv_graph,
-        arxiv_star,
-    )
-    from data_engineering_course_project_2023_spark.plans.orchestrate import Stage
-
-    def silver(up):
-        return arxiv_clean.clean_publications(up["arxiv_raw"])
-
-    def enriched(up):
-        return arxiv_enrich.full_enrichment(
-            up["silver"], up["crossref"], up["s2_papers"],
-            up["s2_authors"], up["s2_citations"], up["s2_references"],
-        )
-
-    def star_fact(up):
-        return arxiv_star.build_star(up["enriched"])["publication_fact"]
-
-    def dim_authors(up):
-        return arxiv_star.build_star(up["enriched"])["dim_authors"]
-
-    def authored_by(up):
-        e = up["enriched"]
-        nodes = arxiv_graph.build_nodes(e)
-        return arxiv_graph.build_edges(e, nodes)["AUTHORED_BY"]
-
-    def collab(up):
-        return arxiv_graph.collaboration_graph(up["authored_by"])
-
-    lookups = ("crossref", "s2_papers", "s2_authors",
-               "s2_citations", "s2_references")
-    return [
-        Stage("silver", silver, inputs=("arxiv_raw",)),
-        Stage("enriched", enriched, inputs=("silver",) + lookups),
-        Stage("star_fact", star_fact, inputs=("enriched",)),
-        Stage("dim_authors", dim_authors, inputs=("enriched",)),
-        Stage("authored_by", authored_by, inputs=("enriched",)),
-        Stage("collab", collab, inputs=("authored_by",)),
-    ]
-
-
 def dwh_load(spark, run_root: str, derby_dir: str,
              land: bool = True) -> dict:
-    """VERDICT_r9 #2: land the gold layer in the serving sink AT SCALE.
+    """Land the gold layer in the serving sink and audit what landed.
 
     The reference exists to populate a DWH + graph DB
     (populate_DWH.py:25-51 — one INSERT loop per star table;
-    databases.py:148-333 — MERGE nodes then CREATE relationships); the
-    repo's frames were value-checked at 2.5 M papers in round 9 but the
-    JDBC leg had only ever seen pytest fixtures. This leg pushes the
-    FULL star schema (fact + 8 dims), the AUTHORED_BY edge frame, and
-    its two endpoint node tables through ``writers.write_jdbc`` into
-    embedded Derby (the in-container stand-in for Postgres/Neo4j — the
-    same JDBC writer path, a real transactional store, durable on
-    disk), then audits the LANDED tables read back over JDBC:
+    databases.py:148-333 — MERGE nodes then CREATE relationships). This
+    leg pushes the full star schema (fact + 8 dims), the AUTHORED_BY
+    edge frame, and its two endpoint node tables through
+    ``writers.write_jdbc`` into embedded Derby (a local stand-in for
+    Postgres/Neo4j — the same JDBC writer path, a real transactional
+    store, durable on disk), then audits the LANDED tables read back
+    over JDBC:
 
     - row-count parity (written == read back) per table;
     - zero-orphan referential audit on the landed data: every
@@ -664,14 +609,14 @@ def main() -> None:
     ap.add_argument("--keep-root", action="store_true")
     ap.add_argument(
         "--dwh", action="store_true",
-        help="VERDICT_r9 #2: after the chain census, land fact + 8 "
+        help="after the chain census, land fact + 8 "
         "dims + AUTHORED_BY (+ endpoint node tables) through the JDBC "
         "sink into embedded Derby and run the zero-orphan audit "
         "against the landed tables",
     )
     ap.add_argument(
         "--analytics", action="store_true",
-        help="VERDICT_r10 #3: run the reference's declared analytical "
+        help="run the reference's declared analytical "
         "workload (neo4j_analytical_ideas.md — most-cited, trends, "
         "prolific, specialization, topics, evolution, citation "
         "PageRank, collab communities, institutional collab) against "
