@@ -180,59 +180,3 @@ def frame_sample(media: DataFrame, every_nth: int = 2) -> DataFrame:
         )
         .select("media_id", "kind", "frame_idx")
     )
-
-
-def extract_features_arrow(media: DataFrame, strict: bool = False) -> DataFrame:
-    """mapInArrow variant of extract_features: the same per-batch
-    contract against raw ``pyarrow.RecordBatch``es — no pandas
-    round-trip, and the METADATA outputs (n_bytes via the offsets
-    buffer, sha via a zero-copy memoryview of the value buffer) never
-    materialize Python ``bytes``. The blob is copied into Python
-    exactly once, at the decode call, which genuinely needs it — so a
-    metadata-only variant of this operator (drop the decode) would be
-    fully zero-copy, while the pandas path copies every payload into
-    object cells regardless. Output is bit-identical to the pandas
-    path (pinned in pytest)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    decode = decode_media if strict else fake_decode
-
-    def run(batches):
-        for batch in batches:
-            content = batch.column("content")
-            kinds = batch.column("kind").to_pylist()
-            n_bytes = pc.fill_null(
-                pc.binary_length(content).cast(pa.int64()), 0
-            )
-            shas: list[str] = []
-            widths: list[int] = []
-            heights: list[int] = []
-            feats: list[list[float]] = []
-            for i in range(batch.num_rows):
-                scalar = content[i]
-                view = (
-                    memoryview(scalar.as_buffer())
-                    if scalar.is_valid
-                    else memoryview(b"")
-                )
-                shas.append(hashlib.sha256(view).hexdigest())
-                d = decode(
-                    view.tobytes() if scalar.is_valid else None, kinds[i]
-                )
-                widths.append(d["width"])
-                heights.append(d["height"])
-                feats.append(d["features"])
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "media_id": batch.column("media_id"),
-                    "kind": batch.column("kind"),
-                    "n_bytes": n_bytes,
-                    "sha_hex": pa.array(shas),
-                    "width": pa.array(widths, type=pa.int32()),
-                    "height": pa.array(heights, type=pa.int32()),
-                    "features": pa.array(feats, type=pa.list_(pa.float32())),
-                }
-            )
-
-    return media.mapInArrow(run, schema=FEATURE_SCHEMA)

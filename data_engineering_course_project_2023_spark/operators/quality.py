@@ -55,25 +55,3 @@ def document_checks() -> dict[str, Column]:
         "n_chars_consistent": F.col("n_chars") != F.length("text"),
         "source_not_blank": F.trim(F.col("source")) == "",
     }
-
-
-def run_checks_observed(df: DataFrame, checks: dict[str, Column]):
-    """The ZERO-COST spelling of run_checks for pipelines that are
-    already materializing ``df`` for another reason: Spark's observe()
-    attaches the conditional counts as query metrics collected DURING
-    that action — no second scan at all. Returns (instrumented_df,
-    observation); read ``observation.get`` after any action on the
-    returned frame.
-
-    run_checks stays the oracle-checkable surface (observe metrics
-    aren't a DataFrame); this is the production seam for piggybacking
-    DQ on a write."""
-    from pyspark.sql import Observation
-
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for name, pred in checks.items():
-        aggs.append(
-            F.sum(F.when(F.coalesce(pred, F.lit(True)), 1).otherwise(0)).alias(name)
-        )
-    obs = Observation()
-    return df.observe(obs, *aggs), obs

@@ -20,7 +20,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1135,29 +1135,121 @@ GROUP BY 1
 """
 
 
-# --- A10: fixed-point PageRank over the trade graph ---------------------------
+# --- A10: integer PageRank over the trade graph ------------------------------
 PR_SCALE = 10**12
 PR_ITERS = 3
 _SUPP_OFFSET = 10**9
 
 
-def pagerank_trade(t: Tables) -> DataFrame:
-    """A10: PageRank over the customer→supplier trade graph (edge =
-    customer ordered from supplier at least once), 3 fixed rounds,
-    damping 0.85.
+def integer_pagerank(
+    edges: DataFrame, seeds: DataFrame | None = None
+) -> DataFrame:
+    """PageRank with restart on ``seeds``, in integer units: distinct
+    ``edges`` (src, dst) → (node, pr). ``seeds`` is a frame of distinct
+    ``node`` ids; without it every node is a seed, which is global
+    PageRank.
 
-    Rank mass is held in integer micro-units (pr * 1e12) and every
-    update is integer arithmetic — ``pr DIV deg`` contributions, exact
-    BIGINT sums, ``(85*s) DIV 100`` damping — so the result is
-    bit-identical under ANY partitioning and the iterative algorithm is
-    exact-checked against an unrolled DuckDB twin (float PageRank sums
-    would be partition-order dependent and uncheckable). Suppliers are
-    sinks; their mass exits (standard simplified PageRank). Per-round
-    localCheckpoint truncates lineage; the node-count probe is a
-    dimension-sized driver action like the CC convergence probe."""
+    Rule: each seed starts at ``init = PR_SCALE // |seeds|``; each of
+    the ``PR_ITERS`` rounds sets ``pr = restart + (85 * Σ pr DIV deg)
+    DIV 100``, where ``restart = (15 * init) DIV 100`` on seeds and 0
+    elsewhere. Nodes without out-edges are sinks and their mass leaves.
+    Integer sums make the answer the same under any partitioning, so it
+    is checked exactly against :func:`pagerank_ctes`. Zero seeds give
+    an empty frame (the SQL's ``// 0`` is NULL). The two checkpoints are
+    the only build-time actions: the seed count is observed on the node
+    checkpoint, and the rounds unroll into the returned plan. Evidence:
+    building pagerank_trade on its test fixture runs 9 jobs, with no
+    ``count()`` job (NOTES.md "One PageRank kernel").
+    """
+    # Measured negative: a count window over src instead of this
+    # agg + join saves one job but shuffles every edge unaggregated
+    # (sf0.1, 4 cores: 2.4 → 4.6 MB shuffle write, +1 s executor CPU).
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    edges = edges.join(deg, "src").localCheckpoint()
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    if seeds is None:
+        nodes = nodes.withColumn("seed", F.lit(True))
+    else:
+        nodes = nodes.join(
+            seeds.select("node", F.lit(True).alias("seed")), "node", "left"
+        )
+    n_seeds = Observation()
+    nodes = nodes.observe(
+        n_seeds, F.count(F.when(F.col("seed"), 1)).alias("n")
+    ).localCheckpoint()
+    s = n_seeds.get["n"]
+    if s == 0:
+        return nodes.select("node", F.lit(0).cast("long").alias("pr")).limit(0)
+
+    def on_seeds(v: int) -> Column:
+        return F.when(F.col("seed"), F.lit(v)).otherwise(F.lit(0)).cast("long")
+
+    init = PR_SCALE // s
+    pr = nodes.select("node", on_seeds(init).alias("pr"))
+    nodes = nodes.select("node", on_seeds((15 * init) // 100).alias("restart"))
+    for _ in range(PR_ITERS):
+        insum = (
+            edges.join(pr, edges["src"] == pr["node"])
+            .groupBy("dst")
+            .agg(F.sum(F.expr("pr DIV deg")).alias("s"))
+        )
+        pr = nodes.join(insum, nodes["node"] == insum["dst"], "left").select(
+            "node",
+            (
+                F.col("restart")
+                + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100")
+            ).cast("long").alias("pr"),
+        )
+    return pr
+
+
+def pagerank_ctes(edges: str, seeds: str | None = None) -> str:
+    """The DuckDB twin of :func:`integer_pagerank`, as the body of a
+    WITH list: ``pr0`` … ``pr{PR_ITERS}`` are the (node, pr) rounds
+    over the query ``edges`` (distinct src, dst). ``seeds`` is a query
+    of seed node ids; without it every node is a seed."""
+    seed = "TRUE" if seeds is None else f"node IN ({seeds})"
+    rounds = "".join(
+        f""", c{k} AS (
+  SELECT e.dst, SUM(r.pr // e.deg) AS s
+  FROM edges e JOIN pr{k - 1} r ON r.node = e.src
+  GROUP BY 1
+), pr{k} AS (
+  SELECT nd.node,
+         CAST(CASE WHEN nd.seed THEN (SELECT restart FROM consts) ELSE 0 END
+              + (85 * COALESCE(c.s, 0)) // 100 AS BIGINT) AS pr
+  FROM nodes nd LEFT JOIN c{k} c ON c.dst = nd.node
+)"""
+        for k in range(1, PR_ITERS + 1)
+    )
+    return f"""edges AS (
+  SELECT src, dst, COUNT(*) OVER (PARTITION BY src) AS deg FROM ({edges})
+), nodes AS (
+  SELECT node, {seed} AS seed
+  FROM (SELECT src AS node FROM edges UNION SELECT dst FROM edges)
+), consts AS (
+  SELECT {PR_SCALE} // COUNT(*) AS init,
+         (15 * ({PR_SCALE} // COUNT(*))) // 100 AS restart
+  FROM nodes WHERE seed
+), pr0 AS (
+  SELECT node,
+         CAST(CASE WHEN seed THEN (SELECT init FROM consts) ELSE 0 END
+              AS BIGINT) AS pr
+  FROM nodes
+){rounds}"""
+
+
+def _trade_edges(t: Tables) -> DataFrame:
+    """Distinct customer → supplier edges: the customer ordered from the
+    supplier at least once. Supplier ids are offset by _SUPP_OFFSET so
+    both kinds share one node id space."""
     li = t["lineitem"].select("l_orderkey", "l_suppkey")
     o = t["orders"].select("o_orderkey", "o_custkey")
-    edges = (
+    return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .select(
             F.col("o_custkey").alias("src"),
@@ -1165,77 +1257,36 @@ def pagerank_trade(t: Tables) -> DataFrame:
         )
         .distinct()
     )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint()
-    n = nodes.count()
-    init = PR_SCALE // n
-    base = (15 * init) // 100
-    pr = nodes.select("node", F.lit(init).cast("long").alias("pr"))
-    # PR_ITERS is a small fixed constant, so the rounds UNROLL into one
-    # statically-bounded plan (2 joins + 1 agg per round) and run as a
-    # single job — no per-round checkpoint/materialization barriers.
-    # Only the shared inputs (nodes, edges_deg) are checkpointed, since
-    # every round re-reads them. An adaptive/convergence-driven variant
-    # would need the per-round checkpoint discipline back.
-    for _ in range(PR_ITERS):
-        contrib = edges_deg.join(
-            pr, edges_deg["src"] == pr["node"]
-        ).select("dst", F.expr("pr DIV deg").alias("c"))
-        insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        pr = nodes.join(insum, nodes["node"] == insum["dst"], "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100")
-            ).cast("long").alias("pr"),
-        )
-    return pr.select(
-        "node",
+
+
+def _trade_node_type() -> Column:
+    return (
         F.when(F.col("node") >= _SUPP_OFFSET, F.lit("supplier"))
         .otherwise(F.lit("customer"))
-        .alias("node_type"),
-        F.col("pr").alias("pr_units"),
+        .alias("node_type")
     )
 
 
-def _pagerank_round(k: int) -> str:
-    return f"""c{k} AS (
-  SELECT e.dst, SUM(p.pr // d.deg) AS s
-  FROM edges e JOIN deg d USING (src) JOIN pr{k - 1} p ON p.node = e.src
-  GROUP BY 1
-), pr{k} AS (
-  SELECT nd.node,
-         CAST((SELECT base FROM consts)
-              + (85 * COALESCE(c{k}.s, 0)) // 100 AS BIGINT) AS pr
-  FROM nodes nd LEFT JOIN c{k} ON c{k}.dst = nd.node
-)"""
+_TRADE_EDGES_SQL = f"""
+  SELECT DISTINCT o.o_custkey AS src, l.l_suppkey + {_SUPP_OFFSET} AS dst
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"""
+_TRADE_NODE_TYPE_SQL = (
+    f"CASE WHEN node >= {_SUPP_OFFSET} THEN 'supplier' ELSE 'customer' END"
+    " AS node_type"
+)
+
+
+def pagerank_trade(t: Tables) -> DataFrame:
+    """A10: global :func:`integer_pagerank` over the customer→supplier
+    trade graph; suppliers are sinks."""
+    return integer_pagerank(_trade_edges(t)).select(
+        "node", _trade_node_type(), F.col("pr").alias("pr_units")
+    )
 
 
 PAGERANK_SQL = f"""
-WITH edges AS (
-  SELECT DISTINCT o.o_custkey AS src, l.l_suppkey + {_SUPP_OFFSET} AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), deg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1
-), consts AS (
-  SELECT ({PR_SCALE} // COUNT(*)) AS init,
-         (15 * ({PR_SCALE} // COUNT(*))) // 100 AS base
-  FROM nodes
-), pr0 AS (
-  SELECT node, CAST((SELECT init FROM consts) AS BIGINT) AS pr FROM nodes
-), {", ".join(_pagerank_round(k) for k in range(1, PR_ITERS + 1))}
-SELECT node,
-       CASE WHEN node >= {_SUPP_OFFSET} THEN 'supplier' ELSE 'customer' END
-         AS node_type,
-       pr AS pr_units
+WITH {pagerank_ctes(_TRADE_EDGES_SQL)}
+SELECT node, {_TRADE_NODE_TYPE_SQL}, pr AS pr_units
 FROM pr{PR_ITERS}
 """
 
@@ -1245,155 +1296,29 @@ PPR_SEED_NATION = 7
 
 
 def ppr_trade(t: Tables) -> DataFrame:
-    """A10b: PERSONALIZED PageRank over the same customer→supplier
-    trade graph — restart mass concentrated on a seed set (customers of
-    nation PPR_SEED_NATION) instead of spread uniformly, so rank
-    measures proximity TO THE SEEDS: the recommendation / trust-
-    propagation shape (suppliers ranked by how strongly nation-7 custom
-    flows to them) rather than global importance.
-
-    Same exactness contract as pagerank_trade: mass in integer units
-    (PR_SCALE // |seeds| on each seed), every update pure integer
-    arithmetic (DIV contributions, exact BIGINT sums, 85/100 damping,
-    seed-conditional restart), 3 unrolled rounds — bit-identical under
-    any partitioning, exact-checked against the unrolled DuckDB twin.
-
-    Scale shape: identical to pagerank_trade (2 joins + 1 agg per
-    round over edge-sized frames, shared inputs checkpointed once);
-    the seed frame is dimension-sized and its count is the same
-    driver-side probe as the node count there. The seed flag is folded
-    into the ONE checkpointed node frame (serving the seed count, the
-    init vector, and every round's restart) — the first spelling
-    joined seeds per unrolled round and checkpointed twice, measuring
-    5.3 s vs pagerank_trade's 3.3 s at sf0.1; this one lands within
-    noise of it (4.09 vs 3.92 s same-session) for the same answer.
-    Zero-mass nodes are dropped at the end — with a localized restart
-    most of the graph is untouched, and emitting it would just ship
-    zeros."""
-    li = t["lineitem"].select("l_orderkey", "l_suppkey")
-    o = t["orders"].select("o_orderkey", "o_custkey")
-    edges = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + _SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
+    """A10b: personalized PageRank over the same trade graph, restarting
+    on the customers of nation PPR_SEED_NATION, so rank measures
+    proximity to the seeds rather than global importance. Nodes without
+    mass are dropped: with a localized restart most of the graph holds
+    none."""
+    seeds = (
+        t["customer"]
+        .filter(F.col("c_nationkey") == PPR_SEED_NATION)
+        .select(F.col("c_custkey").alias("node"))
     )
-    # unlike pagerank_trade, the bare node frame is consumed exactly
-    # once (to build the flagged frame below), so it is NOT
-    # checkpointed — nodes_f is this query's node materialization
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint()
-    # seed flag folded into the node frame ONCE (a single checkpoint
-    # serves the seed count, the init vector, and every round's
-    # restart), so each unrolled round is the same 2-join shape as
-    # pagerank_trade — a per-round seed join or a second checkpoint
-    # both measurably slow the unrolled plan
-    nodes_f = (
-        nodes.join(
-            t["customer"]
-            .filter(F.col("c_nationkey") == PPR_SEED_NATION)
-            .select(
-                F.col("c_custkey").alias("node"),
-                F.lit(1).alias("is_seed"),
-            ),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
-        .localCheckpoint()
-    )
-    s = nodes_f.filter(F.col("is_seed") == 1).count()
-    init = PR_SCALE // s
-    base = (15 * init) // 100
-    nodes_r = nodes_f.select(
-        "node",
-        F.when(F.col("is_seed") == 1, F.lit(base))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("restart"),
-    )
-    pr = nodes_f.select(
-        "node",
-        F.when(F.col("is_seed") == 1, F.lit(init))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("pr"),
-    )
-    for _ in range(PR_ITERS):
-        contrib = edges_deg.join(
-            pr, edges_deg["src"] == pr["node"]
-        ).select("dst", F.expr("pr DIV deg").alias("c"))
-        insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        pr = nodes_r.join(
-            insum, nodes_r["node"] == insum["dst"], "left"
-        ).select(
-            "node",
-            (
-                F.col("restart")
-                + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100")
-            ).cast("long").alias("pr"),
-        )
     return (
-        pr.filter(F.col("pr") > 0)
-        .select(
-            "node",
-            F.when(F.col("node") >= _SUPP_OFFSET, F.lit("supplier"))
-            .otherwise(F.lit("customer"))
-            .alias("node_type"),
-            F.col("pr").alias("ppr_units"),
-        )
+        integer_pagerank(_trade_edges(t), seeds)
+        .filter(F.col("pr") > 0)
+        .select("node", _trade_node_type(), F.col("pr").alias("ppr_units"))
     )
 
 
-def _ppr_round(k: int) -> str:
-    return f"""c{k} AS (
-  SELECT e.dst, SUM(p.pr // d.deg) AS s
-  FROM edges e JOIN deg d USING (src) JOIN pr{k - 1} p ON p.node = e.src
-  GROUP BY 1
-), pr{k} AS (
-  SELECT nd.node,
-         CAST(CASE WHEN sd.node IS NOT NULL
-                   THEN (SELECT base FROM consts) ELSE 0 END
-              + (85 * COALESCE(c{k}.s, 0)) // 100 AS BIGINT) AS pr
-  FROM nodes nd
-  LEFT JOIN seeds sd ON sd.node = nd.node
-  LEFT JOIN c{k} ON c{k}.dst = nd.node
-)"""
-
-
+_PPR_SEEDS_SQL = (
+    f"SELECT c_custkey FROM customer WHERE c_nationkey = {PPR_SEED_NATION}"
+)
 PPR_SQL = f"""
-WITH edges AS (
-  SELECT DISTINCT o.o_custkey AS src, l.l_suppkey + {_SUPP_OFFSET} AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-), nodes AS (
-  SELECT src AS node FROM edges UNION SELECT dst FROM edges
-), deg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1
-), seeds AS (
-  SELECT node FROM nodes
-  JOIN customer ON c_custkey = node AND c_nationkey = {PPR_SEED_NATION}
-), consts AS (
-  SELECT ({PR_SCALE} // COUNT(*)) AS init,
-         (15 * ({PR_SCALE} // COUNT(*))) // 100 AS base
-  FROM seeds
-), pr0 AS (
-  SELECT nd.node,
-         CAST(CASE WHEN sd.node IS NOT NULL
-                   THEN (SELECT init FROM consts) ELSE 0 END AS BIGINT)
-           AS pr
-  FROM nodes nd LEFT JOIN seeds sd ON sd.node = nd.node
-), {", ".join(_ppr_round(k) for k in range(1, PR_ITERS + 1))}
-SELECT node,
-       CASE WHEN node >= {_SUPP_OFFSET} THEN 'supplier' ELSE 'customer' END
-         AS node_type,
-       pr AS ppr_units
+WITH {pagerank_ctes(_TRADE_EDGES_SQL, _PPR_SEEDS_SQL)}
+SELECT node, {_TRADE_NODE_TYPE_SQL}, pr AS ppr_units
 FROM pr{PR_ITERS}
 WHERE pr > 0
 """
@@ -1911,21 +1836,11 @@ def trade_hops(t: Tables) -> DataFrame:
     anti-join against the visited set — the standard scalable BFS;
     the frontier is localCheckpoint-ed so lineage stays flat. Levels
     are fixed (4), so the plan is statically bounded."""
-    li = t["lineitem"].select("l_orderkey", "l_suppkey")
-    o = t["orders"].select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("a"),
-            (F.col("l_suppkey") + _SUPP_OFFSET).alias("b"),
-        )
-        .distinct()
-    )
+    pairs = _trade_edges(t)
     n_edges = Observation()
     edges = (
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        pairs.unionByName(
+            pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .observe(n_edges, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()

@@ -15,9 +15,8 @@ checking engine-representation-free invariants.
 
 Determinism contract: every top-k has a strict total order (metric
 DESC, key ASC) so the selected SET is unique cross-engine; PageRank
-holds rank mass in integer micro-units (the
-``analytics.pagerank_trade`` discipline) so iterative sums are
-bit-identical under any partitioning; community checks compare only
+holds rank mass in integer units (``analytics.integer_pagerank``) so
+iterative sums are bit-identical under any partitioning; community checks compare only
 label-free structure (component count / sizes), never label values,
 because min-label canonicalization differs between the engine's
 surrogate keys and the oracle's author names.
@@ -29,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_star
-from .analytics import PR_ITERS, PR_SCALE
+from .analytics import integer_pagerank
 from .arxiv_clean import general_category_expr
 
 
@@ -164,18 +163,11 @@ def citation_pagerank(
     enriched: DataFrame, s2_citations: DataFrame
 ) -> DataFrame:
     """Citation Networks / Impact of Publications (ideas doc §5):
-    PageRank over the S2 citation graph restricted to enriched papers
-    (edge = citer → cited paper, both in-corpus, deduplicated).
-
-    Same integer-exact discipline as ``analytics.pagerank_trade``: mass
-    in units of 1e-12, ``DIV`` contributions, damping 85/100 in integer
-    arithmetic — bit-identical under any partitioning, so the unrolled
-    DuckDB twin matches exactly. PR_ITERS is fixed and small: the
-    iterations unroll into one statically-bounded plan; only the shared
-    inputs are checkpointed.
-    Citation in-degree is Pareto-skewed (the generator concentrates
-    citations on early papers), so each iteration's contribution agg
-    is the AQE skew case the trade-graph twin already pinned."""
+    global :func:`analytics.integer_pagerank` over the S2 citation graph
+    restricted to enriched papers (edge = citer → cited paper, both
+    in-corpus, deduplicated). Citation in-degree is Pareto-skewed (the
+    generator concentrates citations on early papers), so each round's
+    contribution agg is an AQE skew case."""
     pids = enriched.select(F.col("paperId").alias("pid")).distinct()
     edges = (
         s2_citations
@@ -187,31 +179,9 @@ def citation_pagerank(
         .join(pids.select(F.col("pid").alias("dst")), "dst")
         .distinct()
     )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+    return integer_pagerank(edges).select(
+        F.col("node").alias("paper_id"), F.col("pr").alias("pr_units")
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint()
-    n = nodes.count()
-    init = PR_SCALE // n
-    base = (15 * init) // 100
-    pr = nodes.select("node", F.lit(init).cast("long").alias("pr"))
-    for _ in range(PR_ITERS):
-        contrib = edges_deg.join(
-            pr, edges_deg["src"] == pr["node"]
-        ).select("dst", F.expr("pr DIV deg").alias("c"))
-        insum = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        pr = nodes.join(insum, nodes["node"] == insum["dst"], "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) DIV 100")
-            ).cast("long").alias("pr"),
-        )
-    return pr.select(F.col("node").alias("paper_id"), F.col("pr").alias("pr_units"))
 
 
 def collab_communities(collab: DataFrame, min_weight: int = 2) -> DataFrame:

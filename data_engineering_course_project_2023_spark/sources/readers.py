@@ -108,35 +108,6 @@ def scan_subset(df: DataFrame, order_by: str, start_row: int, rows: int) -> Data
     return df.orderBy(order_by).offset(start_row).limit(rows)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """S1-analog for delimited text: schema-pinned CSV scan.
-
-    The schema is required, never inferred — inference is a full extra
-    pass over the data (prohibitive at 100 TB) and non-deterministic
-    under sampling. Quoted fields handle embedded delimiters/newlines
-    per RFC 4180 (Spark's multiLine stays off: one-record-per-line keeps
-    the input splittable, which multiline CSV is not)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", header)
-        .option("sep", delimiter)
-        .csv(path)
-    )
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """S1-analog for ORC: like parquet, a columnar self-describing
-    format — predicate pushdown and column pruning reach the stripe
-    level, so the same declarative plans stay scan-efficient."""
-    return spark.read.orc(path)
-
-
 def read_binary_dir(
     spark: SparkSession,
     path: str,

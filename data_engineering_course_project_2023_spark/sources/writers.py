@@ -80,19 +80,6 @@ def write_jdbc(
     )
 
 
-def write_csv(
-    df: DataFrame, path: str, header: bool = True, mode: str = "overwrite"
-) -> None:
-    """S5-analog: delimited-text sink (RFC 4180 quoting, UTF-8)."""
-    df.write.mode(mode).option("header", header).csv(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S6-analog: columnar ORC sink (zlib by default; stripe-level
-    stats make the output pushdown-scannable like parquet)."""
-    df.write.mode(mode).orc(path)
-
-
 def compact_parquet(
     spark,
     src_dir: str,

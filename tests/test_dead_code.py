@@ -30,12 +30,11 @@ ALLOWED: set[str] = set()
 TEST_ONLY: set[str] = {
     "ARXIV_RAW", "CDC_LOG_SCHEMA", "cdc_materialize_stream",
     "cdc_state_view", "dedup_events_batch", "dsir_model_snapshot_stream",
-    "enrich_by_key", "export_training_shards", "extract_features_arrow",
-    "fetch_extract_cleanup", "finalize_funnel", "frame_sample",
-    "label_top_eigvec", "novelty_ingest_batch", "read_binary_dir",
-    "read_csv", "read_orc", "run_checks_observed",
+    "enrich_by_key", "export_training_shards", "fetch_extract_cleanup",
+    "finalize_funnel", "frame_sample", "label_top_eigvec",
+    "novelty_ingest_batch", "read_binary_dir",
     "running_user_totals_stream", "sentence_split_udtf", "stream_log_dir",
-    "write_csv", "write_orc", "write_zordered",
+    "write_zordered",
 }
 TESTS = os.path.join(ROOT, "tests") + os.sep
 

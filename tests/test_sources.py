@@ -114,45 +114,6 @@ def test_write_jdbc_roundtrip_embedded_derby(spark):
     assert back.count() == 6
 
 
-def test_csv_roundtrip_schema_pinned(spark, tmp_path):
-    """CSV sink → schema-pinned scan roundtrips values exactly,
-    including quoted embedded delimiters; no inference pass."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from data_engineering_course_project_2023_spark.sources.readers import read_csv
-    from data_engineering_course_project_2023_spark.sources.writers import write_csv
-
-    rows = [(1, "plain"), (2, 'with,comma'), (3, 'with "quotes" too'), (4, None)]
-    schema = StructType(
-        [StructField("id", LongType()), StructField("text", StringType())]
-    )
-    df = spark.createDataFrame(rows, schema)
-    path = str(tmp_path / "csv")
-    write_csv(df, path)
-    back = read_csv(spark, path, schema)
-    assert sorted((r["id"], r["text"]) for r in back.collect()) == sorted(rows)
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC sink → scan roundtrips and the filter reaches the scan
-    (PushedFilters), matching the parquet discipline."""
-    from data_engineering_course_project_2023_spark.sources.readers import read_orc
-    from data_engineering_course_project_2023_spark.sources.writers import write_orc
-
-    df = spark.range(100).withColumn("bucket", (F.col("id") % 5).cast("int"))
-    path = str(tmp_path / "orc")
-    write_orc(df, path)
-    back = read_orc(spark, path).filter(F.col("bucket") == 3).select("id")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "bucket" in plan
-    assert back.count() == 20
-
-
 def test_compact_parquet_merges_small_files(spark, tmp_path):
     """20 micro-batch files compact to the byte-sized part count (1
     here) with identical data."""

@@ -290,38 +290,6 @@ def test_bus_decode_dead_letters_bad_json(spark, tmp_path):
     assert good == [1, 3] and len(dead) == 1
 
 
-def test_map_in_arrow_matches_pandas_path(spark):
-    """extract_features_arrow (mapInArrow) is bit-identical to the
-    mapInPandas path on the same media frame."""
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "another doc"), (3, "")],
-        "doc_id long, text string",
-    )
-    media = multimodal.documents_as_media(docs)
-    a = sorted(map(str, multimodal.extract_features(media).collect()))
-    b = sorted(map(str, multimodal.extract_features_arrow(media).collect()))
-    assert a == b
-
-
-def test_observed_checks_match_run_checks(spark):
-    """observe()-based DQ counters piggyback on an action and agree
-    with the oracle-checkable run_checks aggregation."""
-    from data_engineering_course_project_2023_spark.operators import quality
-    from data_engineering_course_project_2023_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    checks = quality.document_checks()
-    expected = {
-        r["check"]: (r["n_evaluated"], r["n_violations"])
-        for r in quality.run_checks(docs, checks).collect()
-    }
-    instrumented, obs = quality.run_checks_observed(docs, checks)
-    n = instrumented.count()  # the "already happening" action
-    got = obs.get
-    assert got["n_rows"] == n
-    assert {k: (n, got[k]) for k in checks} == expected
-
-
 def test_session_window_stream_matches_batch(spark, tmp_path):
     """Streaming session_window (watermarked, APPEND mode — the only
     mode Spark allows for streaming session aggregation) == the

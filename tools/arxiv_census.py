@@ -38,6 +38,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_engineering_course_project_2023_spark.plans.analytics import (  # noqa: E402
+    PR_ITERS,
+    pagerank_ctes,
+)
 from data_engineering_course_project_2023_spark.plans.pipeline import (  # noqa: E402
     SOURCES as TABLES,
     stages as build_stages,
@@ -175,39 +179,15 @@ def _ana_topics_cte() -> str:
 )"""
 
 
-def _ana_pagerank_cte(iters: int, scale: int) -> str:
-    """Unrolled integer-exact PageRank iterations — the
-    ``analytics.PAGERANK_SQL`` discipline over string paper ids."""
-    steps = []
-    for k in range(1, iters + 1):
-        steps.append(f""", pc{k} AS (
-  SELECT e.dst, SUM(p.pr // d.deg) AS s
-  FROM pedges e JOIN pdeg d USING (src) JOIN ppr{k - 1} p ON p.node = e.src
-  GROUP BY 1
-), ppr{k} AS (
-  SELECT nd.node,
-         CAST((SELECT base FROM pconsts)
-              + (85 * COALESCE(pc{k}.s, 0)) // 100 AS BIGINT) AS pr
-  FROM pnodes nd LEFT JOIN pc{k} ON pc{k}.dst = nd.node
-)""")
-    return f""", pids AS (
+# citation PageRank over in-corpus papers: the analytics.pagerank_ctes
+# twin of arxiv_analytics.citation_pagerank
+_ANA_PAGERANK = """, pids AS (
   SELECT DISTINCT pid FROM hits
-), pedges AS (
+), """ + pagerank_ctes("""
   SELECT DISTINCT c.otherPaperId AS src, c.paperId AS dst
   FROM s2_citations c
   JOIN pids a ON c.otherPaperId = a.pid
-  JOIN pids b ON c.paperId = b.pid
-), pnodes AS (
-  SELECT src AS node FROM pedges UNION SELECT dst FROM pedges
-), pdeg AS (
-  SELECT src, COUNT(*) AS deg FROM pedges GROUP BY 1
-), pconsts AS (
-  SELECT ({scale} // COUNT(*)) AS init,
-         (15 * ({scale} // COUNT(*))) // 100 AS base
-  FROM pnodes
-), ppr0 AS (
-  SELECT node, CAST((SELECT init FROM pconsts) AS BIGINT) AS pr FROM pnodes
-){"".join(steps)}"""
+  JOIN pids b ON c.paperId = b.pid""")
 
 
 def _union_find_stats(pairs) -> dict[str, int]:
@@ -243,11 +223,6 @@ def _union_find_stats(pairs) -> dict[str, int]:
 
 def duckdb_analytics(data: str) -> dict[str, int]:
     import duckdb
-
-    from data_engineering_course_project_2023_spark.plans.arxiv_analytics import (
-        PR_ITERS,
-        PR_SCALE,
-    )
 
     con = duckdb.connect()
     for t in TABLES:
@@ -313,11 +288,11 @@ SELECT COUNT(*), SUM(n * n)
 FROM (SELECT year, topic, COUNT(*) AS n FROM topics GROUP BY 1, 2)""")
     out["ana_evo_pairs"], out["ana_evo_sumsq"] = p, sq
 
-    pr_cte = _ANA_BASE + _ana_pagerank_cte(PR_ITERS, PR_SCALE)
-    t, mx = q(pr_cte + f"SELECT SUM(pr), MAX(pr) FROM ppr{PR_ITERS}")
+    pr_cte = _ANA_BASE + _ANA_PAGERANK
+    t, mx = q(pr_cte + f"SELECT SUM(pr), MAX(pr) FROM pr{PR_ITERS}")
     (d,) = q(pr_cte + f"""
 SELECT SUM(CAST(substr(node, 3) AS BIGINT))
-FROM (SELECT node FROM ppr{PR_ITERS}
+FROM (SELECT node FROM pr{PR_ITERS}
       ORDER BY pr DESC, node ASC LIMIT 20)""")
     out["ana_pr_total_units"], out["ana_pr_max_units"] = t, mx
     out["ana_pr_top20_digest"] = d
