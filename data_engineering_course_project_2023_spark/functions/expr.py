@@ -47,15 +47,20 @@ def revenue(price: str = "l_extendedprice", discount: str = "l_discount") -> Col
     return money(price) * (F.lit(1).cast(MONEY) - money(discount))
 
 
-def surrogate_key(*cols: str) -> Column:
-    """Deterministic surrogate key (P2).
+def surrogate_key(*cols: str | Column) -> Column:
+    """Deterministic 128-bit surrogate key (P2):
+    ``unhex(md5(concat_ws('|', cols)))``, a 16-byte BINARY.
 
     The reference assigns ``uuid4()`` per row (ref: src/utils/utils.py:71),
-    which is nondeterministic across retries/runs — unusable for oracle
-    checks or idempotent re-loads. ``sha2`` over the natural key is stable,
-    collision-safe at 256 bits, and computable map-side with no shuffle.
+    which is nondeterministic across retries/runs and so unusable for
+    oracle checks or idempotent re-loads. md5 over the natural key is
+    stable, computable map-side with no shuffle, and has the uuid4's
+    width; a key column may itself be a key (binary → string keeps the
+    bytes). Evidence: the six 10k-paper arxiv stages store 1.02 bytes
+    per input byte with these keys, 1.37 with 64-character sha2 hex
+    (NOTES.md "Surrogate keys").
     """
-    return F.sha2(F.concat_ws("|", *cols), 256)
+    return F.unhex(F.md5(F.concat_ws("|", *cols)))
 
 
 def clean_text(c: Column | str) -> Column:

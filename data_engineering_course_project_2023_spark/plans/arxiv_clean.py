@@ -8,7 +8,7 @@ Exact reference semantics preserved (SURVEY §7 hard part a):
 - rows kept only when doi AND id present at scan (utils.py:27), then
   dropna(how='all') on (arxiv, doi) (utils.py:39);
 - `id` → `arxiv`, new deterministic surrogate `id` (utils.py:70-71;
-  sha2 instead of uuid4 per SURVEY §1.2);
+  128-bit md5 key instead of uuid4 per SURVEY §1.2);
 - authors string → array<struct<name>>, trimmed, empties dropped,
   null → [] (utils.py:73-88);
 - categories: unique tokens, sorted, space-joined (utils.py:45-46,60);
@@ -212,7 +212,7 @@ def arxiv_clean_query(t: dict[str, DataFrame]) -> DataFrame:
         )
     )
     return cleaned.select(
-        "id",
+        F.lower(F.hex("id")).alias("id"),
         "arxiv",
         "submitter",
         F.concat_ws("; ", F.transform("authors", lambda a: a.getField("name")))
@@ -262,7 +262,7 @@ c AS (
                 x -> x <> '') AS author_names
   FROM kept
 )
-SELECT sha256(id || '|' || doi) AS id,
+SELECT md5(id || '|' || doi) AS id,
        id AS arxiv,
        submitter,
        COALESCE(array_to_string(COALESCE(author_names, []), '; '), '') AS authors_csv,

@@ -29,7 +29,7 @@ def build_nodes(enriched: DataFrame) -> dict[str, DataFrame]:
         .select(F.col("a.name").alias("name"))
         .filter(F.col("name").isNotNull())
         .distinct()
-        # N5: first-seen UUID per name → deterministic sha2 key
+        # N5: first-seen UUID per name → deterministic md5 key
         .select(surrogate_key("name").alias("author_id"), "name")
     )
     journals = (

@@ -4,11 +4,11 @@ dimensions, mirroring the reference DWH DDL column-for-column
 types instead of VARCHAR-everything, and deterministic surrogate keys
 instead of SERIAL (SURVEY §1.2).
 
-Scale design: every dim is built explode → distinct → sha2 key — all
+Scale design: every dim is built explode → distinct → md5 key — all
 partial-aggregatable; the fact and bridge tables join back on natural
 keys that are already co-partitioned by the explode, and dims are
 broadcast on the way back. No driver-side loops, no SERIAL sequence
-bottleneck (sha2 keys assign map-side).
+bottleneck (md5 keys assign map-side).
 """
 
 from __future__ import annotations

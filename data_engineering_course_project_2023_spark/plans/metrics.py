@@ -67,6 +67,9 @@ def plan_summary(plan) -> dict:
         ch = node.children()
         for i in range(ch.size()):
             walk(ch.apply(i))
+        # a write's query sits behind an AdaptiveSparkPlan leaf
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan())
         # AQE materializes exchanges inside query-stage wrappers
         if "QueryStage" in name:
             try:

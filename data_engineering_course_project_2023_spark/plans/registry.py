@@ -265,7 +265,7 @@ REGISTRY: dict[str, Query] = {
         relational.distinct_entities,
         relational.DISTINCT_ENTITIES_SQL,
         ("documents",),
-        "N5 entity dedup + P2 sha2 surrogate keys",
+        "N5 entity dedup + P2 md5 surrogate keys",
     ),
     "collect_renest": Query(
         relational.collect_renest,

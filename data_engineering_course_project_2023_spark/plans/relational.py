@@ -16,7 +16,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.expr import clean_text, iso_or_original, null_default, revenue
+from ..functions.expr import (
+    clean_text,
+    iso_or_original,
+    null_default,
+    revenue,
+    surrogate_key,
+)
 
 Tables = dict[str, DataFrame]
 
@@ -310,18 +316,19 @@ GROUP BY 1 HAVING length(u) > 3
 # --- N5 + P2: distinct entities with deterministic surrogate keys -------------
 def distinct_entities(t: Tables) -> DataFrame:
     """N5 entity dedup (ref: src/utils/databases.py:51,91-93 — first-seen
-    UUID per author name) + P2 surrogate keys. uuid4 → sha2(natural key)
-    so keys are stable across runs/retries (SURVEY §1.2)."""
+    UUID per author name) + P2 surrogate keys. uuid4 → ``surrogate_key``
+    of the natural key, so keys are stable across runs/retries (SURVEY
+    §1.2); projected as lower-case hex for the oracle compare."""
     return (
         t["documents"]
         .select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .distinct()
-        .select("word", F.sha2(F.col("word"), 256).alias("word_key"))
+        .select("word", F.lower(F.hex(surrogate_key("word"))).alias("word_key"))
     )
 
 
 DISTINCT_ENTITIES_SQL = """
-SELECT u AS word, sha256(u) AS word_key
+SELECT u AS word, md5(u) AS word_key
 FROM (SELECT DISTINCT unnest(string_split(text, ' ')) AS u FROM documents)
 """
 

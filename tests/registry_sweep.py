@@ -14,7 +14,8 @@ The checks and their reasons:
   O(len²) shape, see `expensive_in_lambda`).
 - ``complex_typed_columns``: every output column is primitive-typed,
   because the driver's pandas canonicalizer cannot hash
-  array/map/struct cells.
+  array/map/struct cells, nor the ``bytearray`` cells of a binary
+  column.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import io
 import re
 from contextlib import redirect_stdout
 
-from pyspark.sql.types import ArrayType, MapType, StructType
+from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
 
 from data_engineering_course_project_2023_spark.plans import registry
 
@@ -162,7 +163,7 @@ def complex_typed_columns(name: str, df) -> list[str]:
     return [
         f"{f.name}: {f.dataType.simpleString()}"
         for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        if isinstance(f.dataType, (ArrayType, BinaryType, MapType, StructType))
     ]
 
 

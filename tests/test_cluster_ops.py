@@ -271,6 +271,43 @@ def test_fixpoint_restores_shuffle_conf_when_step_raises(spark):
         spark.conf.set(conf, before)
 
 
+class _Conf(dict):
+    def get(self, key):
+        return self[key]
+
+    def set(self, key, value):
+        self[key] = value
+
+
+class _Session:
+    """Just the ``conf`` a reducer-sizing scope reads and writes: no
+    Spark job runs."""
+
+    def __init__(self, parts: int):
+        self.conf = _Conf({"spark.sql.shuffle.partitions": str(parts)})
+
+
+@pytest.mark.parametrize("conf_parts, n_rows, want", [
+    (4, 10, 4),            # never above the caller's width
+    (32, 10, 8),           # floor 8 on a tiny frame
+    (32, 10_000_000, 20),  # ~500k rows per reducer
+])
+def test_iterative_shuffle_parts_sizing(conf_parts, n_rows, want):
+    """The scoped width, and the caller's width back after a round
+    raises."""
+    from data_engineering_course_project_2023_spark.session import (
+        iterative_shuffle_parts,
+    )
+
+    s = _Session(conf_parts)
+    with pytest.raises(RuntimeError, match="round failed"):
+        with iterative_shuffle_parts(s, n_rows) as parts:
+            assert parts == want
+            assert s.conf.get("spark.sql.shuffle.partitions") == str(want)
+            raise RuntimeError("round failed")
+    assert s.conf.get("spark.sql.shuffle.partitions") == str(conf_parts)
+
+
 def test_star_cc_matches_propagation(spark):
     """connected_components_star (alternating large/small star — the
     O(log n)-round scale path) must produce IDENTICAL labels to the

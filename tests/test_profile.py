@@ -7,7 +7,7 @@ import os
 import subprocess
 import sys
 
-from tools.profile import WARMUP, attribute
+from tools.profile import WARMUP, attribute, noop_write
 
 from .conftest import SF_SMOKE
 
@@ -86,3 +86,30 @@ def test_profile_cli_smoke(tmp_path):
     assert star["nodes"]["BroadcastExchange"] == 4
     assert star["nodes"]["Exchange"] == 1
     assert star["scans"]["lineitem"] == 1
+
+
+def test_noop_write_runs_what_a_count_prunes(spark):
+    """The profiled action reads every column. ``pagerank_trade``'s
+    last round left-joins its node frame to a per-``dst`` aggregate
+    whose columns a ``count()`` never reads, so Catalyst prunes the
+    rounds from a count; the ``noop`` write runs them and observes the
+    same row count."""
+    from data_engineering_course_project_2023_spark.plans import registry
+
+    sc = spark.sparkContext
+    df = registry.run_query("pagerank_trade", spark, SF_SMOKE)
+
+    def jobs(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            out = action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    counted, count_jobs = jobs("profile-count", df.count)
+    written, write_jobs = jobs("profile-noop", lambda: noop_write(df))
+    assert written == counted > 0
+    assert write_jobs > count_jobs

@@ -58,8 +58,59 @@ def test_surrogate_keys_deterministic_and_injective_on_distinct(spark, keys):
     for r in out:
         # same key always same surrogate
         assert by_key.setdefault(r["k"], r["sk"]) == r["sk"]
-    # distinct keys → distinct surrogates (sha2 collision ≈ impossible)
+    # distinct keys → distinct surrogates (a collision among n keys of
+    # 128 bits has probability ≈ n²/2¹²⁹)
     assert len({r["sk"] for r in out}) == len({r["k"] for r in out})
+
+
+# rows of 1-3 nullable unicode strings (the alphabet holds NUL and the
+# separator "|"), every row the same width
+KEY_ROWS = st.integers(1, 3).flatmap(
+    lambda w: st.lists(
+        st.tuples(*[st.one_of(st.none(), st.text(max_size=12))] * w),
+        min_size=1,
+        max_size=30,
+    )
+)
+
+
+@given(rows=KEY_ROWS)
+@SLOW_OK
+def test_surrogate_key_matches_duckdb_twin(spark, rows):
+    """``surrogate_key`` is ``unhex(md5(concat_ws('|', …)))`` byte for
+    byte in both engines (the DuckDB spelling the oracles use), every
+    key is 16 bytes, and a key over a key column (the star schema's
+    ``pid = surrogate_key(id, title)``, ``id`` itself a key) is
+    deterministic and injective on distinct (key, text) pairs."""
+    import duckdb
+
+    cols = [f"c{i}" for i in range(len(rows[0]))]
+    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+    out = df.select(
+        surrogate_key(*cols).alias("k"),
+        surrogate_key(surrogate_key(*cols), cols[-1]).alias("pid"),
+    ).collect()
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE TABLE t ({', '.join(f'{c} VARCHAR' for c in cols)})")
+        con.executemany(
+            f"INSERT INTO t VALUES ({', '.join('?' * len(cols))})", rows
+        )
+        twin = con.execute(
+            f"SELECT unhex(md5(concat_ws('|', {', '.join(cols)}))) FROM t"
+            " ORDER BY rowid"
+        ).fetchall()
+    finally:
+        con.close()
+
+    assert [bytes(r["k"]) for r in out] == [bytes(r[0]) for r in twin]
+    assert all(len(r["k"]) == 16 and len(r["pid"]) == 16 for r in out)
+    by_pair: dict = {}
+    for row, r in zip(rows, out):
+        pair = (bytes(r["k"]), row[-1])
+        assert by_pair.setdefault(pair, bytes(r["pid"])) == bytes(r["pid"])
+    assert len(set(by_pair.values())) == len(by_pair)
 
 
 @given(

@@ -193,7 +193,7 @@ _ANA_PAGERANK = """, pids AS (
 def _union_find_stats(pairs) -> dict[str, int]:
     """Oracle-side communities: union-find over an edge list, comparing
     STRUCTURE only (labels are representation-dependent: the engine
-    canonicalizes by min surrogate sha, the twin by min author name)."""
+    canonicalizes by min surrogate key, the twin by min author name)."""
     parent: dict = {}
 
     def find(x):
@@ -476,6 +476,9 @@ def dwh_load(spark, run_root: str, derby_dir: str,
     scalars)."""
     from pyspark.sql import functions as F
 
+    from data_engineering_course_project_2023_spark.functions.expr import (
+        surrogate_key,
+    )
     from data_engineering_course_project_2023_spark.plans import (
         arxiv_graph,
         arxiv_star,
@@ -540,7 +543,7 @@ def dwh_load(spark, run_root: str, derby_dir: str,
     ab = rb("authored_by")
     fact = rb("publication_fact")
     dpub = rb("dim_publication")
-    empty_hash = F.sha2(F.lit(""), 256)
+    empty_hash = surrogate_key(F.lit(""))
     orphans = {
         "authored_by_paper": ab.join(
             rb("graph_paper").select(F.col("id").alias("paper_id")),
@@ -558,7 +561,7 @@ def dwh_load(spark, run_root: str, derby_dir: str,
             dpub.select("id"), "id", "left_anti").count(),
         "dim_publication_vs_fact": dpub.select("id").join(
             fact.select("id"), "id", "left_anti").count(),
-        # null affiliation hashes to sha2('') by construction — not a
+        # null affiliation keys as surrogate_key('') by construction — not a
         # dim row; audit only real affiliation keys
         "authors_affiliation": rb("dim_authors")
         .filter(F.col("aff_id") != empty_hash)

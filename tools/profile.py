@@ -6,15 +6,18 @@
 
 One ``get_spark`` session with the event log on runs every query in
 turn: ``--warmups`` runs under job group ``<query>#warmup``, then one
-measured ``count()`` under job group ``<query>``, so the jobs a builder
-runs while constructing its frame belong to its query too. Per query
-the document holds:
+measured run under job group ``<query>``, so the jobs a query runs
+while constructing its frame belong to it too. A run builds the
+frame and writes it to the ``noop`` sink, an action that reads every
+column, so Catalyst cannot prune work whose columns a ``count()``
+would not read (a ``count()`` of ``pagerank_trade`` skips all its
+rounds); an ``Observation`` on the written frame counts its rows. Per
+query the document holds:
 
-- ``wall_s`` (build + count), ``build_s``, ``result_rows`` and
+- ``wall_s`` (build + write), ``build_s``, ``result_rows`` and
   ``jit_compile_ms`` (JVM JIT compile time across the measured run);
 - ``initial`` / ``final``: `metrics.plan_summary` of the frame's
-  initial physical plan and of the count's executed final plan (which
-  carries the count's own one-row Exchange);
+  initial physical plan and of the write's executed final plan;
 - from the event log, parsed once after ``spark.stop()``: jobs,
   stages, TaskEnd totals and the top 8 stages by (spill, shuffle
   write) of the measured group; warm-up stages are excluded;
@@ -132,9 +135,42 @@ def attribute(events: Iterable[dict]) -> dict[str, dict]:
     return groups
 
 
-def profile_query(spark, name: str, sf: str, warmups: int, plans: str | None) -> dict:
-    """Warm-ups, then one measured build + count of ``name`` under its
-    own job group; wall time, rows, JIT time and both plan summaries."""
+class LastPlan:
+    """A ``QueryExecutionListener`` (a py4j callback) keeping the
+    executed plan of the session's last successful action: a write's
+    ``QueryExecution`` is built inside the writer and is not reachable
+    from the frame."""
+
+    plan = None
+
+    def onSuccess(self, func, qe, duration_ns):  # noqa: N802 (JVM name)
+        self.plan = qe.executedPlan()
+
+    def onFailure(self, func, qe, exc):  # noqa: N802
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def noop_write(df) -> int:
+    """Write ``df`` to the ``noop`` sink (every column is computed) and
+    return its row count, observed during the write."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    rows = Observation("profile")
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return rows.get["n"]
+
+
+def profile_query(spark, name: str, sf: str, warmups: int, plans: str | None,
+                  last: LastPlan) -> dict:
+    """Warm-ups, then one measured build + noop write of ``name`` under
+    its own job group; wall time, rows, JIT time and both plan
+    summaries."""
     from data_engineering_course_project_2023_spark.plans import metrics, registry
 
     sc = spark.sparkContext
@@ -142,22 +178,22 @@ def profile_query(spark, name: str, sf: str, warmups: int, plans: str | None) ->
     try:
         for _ in range(warmups):
             sc.setJobGroup(name + WARMUP, f"profile: {name} warm-up")
-            registry.run_query(name, spark, sf).count()
+            noop_write(registry.run_query(name, spark, sf))
         sc.setJobGroup(name, f"profile: {name}")
         jit0 = compiler.getTotalCompilationTime()
         t0 = time.perf_counter()
         df = registry.run_query(name, spark, sf)
         t1 = time.perf_counter()
-        counted = df.groupBy().count()
-        rows = counted.collect()[0][0]
+        rows = noop_write(df)
         t2 = time.perf_counter()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # delivers onSuccess
         out = {
             "wall_s": round(t2 - t0, 3),
             "build_s": round(t1 - t0, 3),
             "result_rows": rows,
             "jit_compile_ms": compiler.getTotalCompilationTime() - jit0,
             "initial": metrics.plan_summary(metrics.physical_plan(df)),
-            "final": metrics.plan_summary(metrics.physical_plan(counted)),
+            "final": metrics.plan_summary(last.plan),
         }
         if plans:
             mode = sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -196,6 +232,8 @@ def main() -> None:
     ap.add_argument("--out", default=None, help="also write the document here")
     args = ap.parse_args()
 
+    from pyspark.java_gateway import ensure_callback_server_started
+
     from data_engineering_course_project_2023_spark.plans import registry
     from data_engineering_course_project_2023_spark.session import get_spark
 
@@ -217,8 +255,12 @@ def main() -> None:
     })
     spark.sparkContext.setLogLevel("ERROR")
     cores = spark.sparkContext.defaultParallelism
+    ensure_callback_server_started(spark.sparkContext._gateway)
+    last = LastPlan()
+    spark._jsparkSession.listenerManager().register(last)
     queries = {
-        n: profile_query(spark, n, args.sf, args.warmups, args.plans) for n in names
+        n: profile_query(spark, n, args.sf, args.warmups, args.plans, last)
+        for n in names
     }
     spark.stop()  # flushes the event log
     try:
