@@ -14,8 +14,9 @@ Scale notes (100 TB):
 - All dim joins (region/nation/customer/supplier/part) are broadcastable
   at real TPC-H proportions; ``F.broadcast`` hints the small sides so
   plans never sort-merge a dimension.
-- The fact-fact self-join (``copair_counts``) shuffles on the order key —
-  the natural co-partition key — and AQE's skew-join splits hot keys.
+- The co-order pairs (``copair_counts`` and its graph consumers) come
+  from one pair kernel, :func:`pair_stream`: one shuffle of the fact on
+  the order key into per-order sets, pairs expanded map-side.
 """
 
 from __future__ import annotations
@@ -72,49 +73,47 @@ GROUP BY 1, 2
 """
 
 
-# --- A1/J4: co-occurrence pair counts (collaboration-graph analog) -------
+# --- A1/J4: the pair kernel (co-occurrence pairs within a set) -------------
+def set_pairs(
+    sets: DataFrame, keys: list[str], ps: str, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """The one within-set pair enumerator: for each row of ``sets``
+    (key columns plus ``ps``, an ascending array of distinct non-null
+    items) one row ``(keys…, src, dst)`` per unordered pair src < dst.
+    ``posexplode`` emits each item with its position and ``explode``
+    pairs it with the tail of the set after it, so a row holds one set
+    and one item, never the set's square. Fan-out is quadratic in the
+    set size. Callers that already hold a sorted set (basket
+    marginals, a checkpointed prefix index) pass it here directly."""
+    return sets.select(*keys, ps, F.posexplode(ps).alias("_i", src)).select(
+        *keys, src, F.explode(F.slice(ps, F.col("_i") + 2, F.size(ps))).alias(dst)
+    )
+
+
+def pair_stream(
+    rows: DataFrame, keys: list[str], item: str, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """Co-occurrence pairs: one ``(keys…, src, dst)`` row per unordered
+    pair src < dst of the distinct non-null ``item`` values under each
+    non-null key. Equal to the equi-join ``x JOIN y USING (keys) WHERE
+    x.item < y.item`` over the distinct (keys, item) frame, built with
+    one shuffle of ``rows`` (the sorted set per key) and
+    :func:`set_pairs` map-side."""
+    sets = (
+        rows.dropna(subset=keys)
+        .groupBy(*keys)
+        .agg(F.sort_array(F.collect_set(item)).alias("_ps"))
+    )
+    return set_pairs(sets, keys, "_ps", src, dst)
+
 
 # --- shared co-order pair/edge builds (J4 family) --------------------------
-def coorder_pair_stream(li: DataFrame) -> DataFrame:
-    """Exploded canonical co-order pair stream ``(l_orderkey, src,
-    dst)``, src < dst: per-order part sets collected in ONE shuffle of
-    the fact, pairs expanded MAP-SIDE from the sorted set (array
-    combinatorics inside codegen). vs the previous items⋈items
-    spelling (whose two join inputs shared one reused exchange):
-    ~25% fewer shuffled records on the census (1.80M → 1.35M at
-    sf0.1, the distinct's pre-aggregated duplicates), one less
-    exchange consumer, a flatter plan, and 1.37 s vs 1.65 s warm for
-    the full pair count. Per-order fan-out is quadratic in order size
-    either way; order size is bounded (≤ 7 lines in TPC-H shape at
-    every SF), and a set-size cap on ``ps`` would bound pathological
-    inputs."""
-    sets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    return sets.select(
-        "l_orderkey",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ps"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ps"), i + 2, F.size("ps")),
-                        lambda y: F.struct(x.alias("src"), y.alias("dst")),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).select(
-        "l_orderkey", F.col("p.src").alias("src"), F.col("p.dst").alias("dst")
-    )
-
-
 def coorder_edges(li: DataFrame) -> DataFrame:
     """Canonical co-order edge list (src < dst, co-order weight ≥ 2) —
     the ONE graph build shared by copair_components, triangle_counts,
     community_labels, kcore_nodes, and node_jaccard."""
     return (
-        coorder_pair_stream(li)
+        pair_stream(li, ["l_orderkey"], "l_partkey")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
@@ -146,19 +145,17 @@ def copair_counts(t: Tables) -> DataFrame:
     The reference's co-authorship graph (create_collaboration_graph.cql:
     1-5): authors sharing a publication → parts sharing an order. Cypher
     MERGE produces both edge directions over iterations; we define the
-    engine semantics as the canonical pair via least/greatest (SURVEY
+    engine semantics as the canonical pair part_a < part_b (SURVEY
     §4.4). Self-pairs excluded as in the Cypher (`a1 <> a2`).
 
-    Scale: the pair stream is built map-side from per-order sets (see
-    :func:`coorder_pair_stream` — one fact shuffle, half the self-join
-    spelling's volume); hot PAIRS remain the aggregation-skew risk —
-    the salted twin below handles that, bit-equal.
+    Scale: the pairs come from the pair kernel (:func:`pair_stream`:
+    one fact shuffle into per-order sets, pairs expanded map-side);
+    hot PAIRS remain the aggregation-skew risk — the salted twin below
+    handles that, bit-equal.
     """
     return (
-        coorder_pair_stream(t["lineitem"])
-        .groupBy(
-            F.col("src").alias("part_a"), F.col("dst").alias("part_b")
-        )
+        pair_stream(t["lineitem"], ["l_orderkey"], "l_partkey", "part_a", "part_b")
+        .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .filter(F.col("n_orders") >= 2)
     )
@@ -484,9 +481,11 @@ def copair_counts_salted(t: Tables, n_salts: int = 8) -> DataFrame:
     key, percentile_approx over a hot key), where the single reducer
     really does receive every raw row.
     """
-    pairs = coorder_pair_stream(t["lineitem"]).select(
-        F.col("src").alias("part_a"),
-        F.col("dst").alias("part_b"),
+    pairs = pair_stream(
+        t["lineitem"], ["l_orderkey"], "l_partkey", "part_a", "part_b"
+    ).select(
+        "part_a",
+        "part_b",
         # deterministic salt: spreads each hot key over n_salts buckets
         (F.col("l_orderkey") % n_salts).alias("salt"),
     )
@@ -1577,7 +1576,8 @@ def fuzzy_part_pairs(t: Tables) -> DataFrame:
     cardinality is bounded, so this stage's cost stops growing with
     corpus size once blocks saturate their name space), then expand
     record pairs MAP-SIDE from the two key arrays. Same-name record
-    pairs (edit 0) expand combinatorially from each group's own array.
+    pairs (edit 0) come from each group's own sorted key array through
+    the pair kernel (:func:`set_pairs`).
     Output rows are identical to the naive spelling (the oracle is
     unchanged — parity is the losslessness proof); the output itself is
     inherently per-block-quadratic, but it is now produced by pure
@@ -1627,26 +1627,13 @@ def fuzzy_part_pairs(t: Tables) -> DataFrame:
             "edit_dist",
         )
     )
-    same = (
-        g.filter(F.size("keys") >= 2)
-        .select(
-            F.col("p_brand").alias("brand"),
-            F.explode(
-                F.expr(
-                    "flatten(transform(sequence(1, size(keys) - 1), i ->"
-                    " transform(slice(keys, i + 1, size(keys) - i), k2 ->"
-                    "  struct(least(element_at(keys, i), k2) AS key_a,"
-                    "         greatest(element_at(keys, i), k2) AS key_b))))"
-                )
-            ).alias("pr"),
-        )
-        .select(
-            F.col("pr.key_a").alias("key_a"),
-            F.col("pr.key_b").alias("key_b"),
-            "brand",
-            F.lit(0).alias("edit_dist"),
-        )
-    )
+    same = set_pairs(
+        g.select(F.col("p_brand").alias("brand"), F.sort_array("keys").alias("keys")),
+        ["brand"],
+        "keys",
+        "key_a",
+        "key_b",
+    ).select("key_a", "key_b", "brand", F.lit(0).alias("edit_dist"))
     return cross.unionByName(same)
 
 
@@ -2491,7 +2478,7 @@ def node_jaccard(t: Tables) -> DataFrame:
     int counts + one correctly-rounded division, so the 0.5 threshold
     is bit-stable cross-engine.
 
-    The edge build (fact self-join + agg) feeds FIVE consumers (adj
+    The edge build (pair kernel + agg) feeds FIVE consumers (adj
     twice, deg, both inter sides); without materialization Catalyst
     replans it per consumer — 32 parquet scans / 39 exchanges, zero
     reuse, measured 4.1 s warm at sf0.1. localCheckpoint of the
@@ -2788,7 +2775,7 @@ def part_recommendations(t: Tables) -> DataFrame:
     every part, the top-3 co-ordered partners by co-order count
     (count desc, partner-key asc total-order tie-break). Classic
     "customers also bought", built on the shared map-side co-order
-    pair stream (coorder_pair_stream): symmetrize the canonical pairs
+    pair stream (:func:`pair_stream`): symmetrize the canonical pairs
     with one union, one keyed count, one bounded per-key window.
 
     Scale shape: the pair stream shuffles once into the (part, rec)
@@ -2801,7 +2788,7 @@ def part_recommendations(t: Tables) -> DataFrame:
     # the union runs over the aggregated pair table (near-dup-sized),
     # not the raw per-order pair stream, so the corpus shuffles once
     canon = (
-        coorder_pair_stream(t["lineitem"])
+        pair_stream(t["lineitem"], ["l_orderkey"], "l_partkey")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )
@@ -2920,7 +2907,7 @@ def node_features(t: Tables) -> DataFrame:
     degree agg and all three triangle-join sides; per-node features
     are keyed aggs + one left join — no all-pairs anywhere."""
     ew = (
-        coorder_pair_stream(t["lineitem"])
+        pair_stream(t["lineitem"], ["l_orderkey"], "l_partkey")
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)

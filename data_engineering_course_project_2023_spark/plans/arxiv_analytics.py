@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import connected_components_star
-from .analytics import integer_pagerank
+from .analytics import integer_pagerank, pair_stream
 from .arxiv_clean import general_category_expr
 
 
@@ -212,25 +212,18 @@ def collab_communities(collab: DataFrame, min_weight: int = 2) -> DataFrame:
 
 def institutional_collab_pairs(enriched: DataFrame) -> DataFrame:
     """Institutional Collaboration (ideas doc §1): canonical
-    affiliation pairs weighted by co-publication count. Same
-    one-shuffle canonical-pair self-join as the author collab graph
-    (``arxiv_graph.collaboration_graph``) over distinct
-    (paper, affiliation) slots; the mega-collaboration papers are the
-    quadratic hot spot (~600 distinct institutions → ~1.8e5 pairs per
-    paper) and arrive pre-diversified across partitions by the
-    paper_id shuffle key."""
-    pa = (
-        enriched.select("id", F.explode("s2_authors_data").alias("a"))
-        .select("id", F.explode("a.affiliations").alias("uni"))
-        .distinct()
+    affiliation pairs (uni_a < uni_b) weighted by co-publication count.
+    The pair kernel (``analytics.pair_stream``, as in the author collab
+    graph) collects each paper's distinct affiliations in one shuffle
+    on the paper id and expands the pairs map-side; the
+    mega-collaboration papers are the quadratic hot spot (~600
+    distinct institutions → ~1.8e5 pairs per paper)."""
+    pa = enriched.select("id", F.explode("s2_authors_data").alias("a")).select(
+        "id", F.explode("a.affiliations").alias("uni")
     )
-    x, y = pa.alias("x"), pa.alias("y")
     return (
-        x.join(y, "id")
-        .filter(F.col("x.uni") < F.col("y.uni"))
-        .groupBy(
-            F.col("x.uni").alias("uni_a"), F.col("y.uni").alias("uni_b")
-        )
+        pair_stream(pa, ["id"], "uni", "uni_a", "uni_b")
+        .groupBy("uni_a", "uni_b")
         .agg(F.count(F.lit(1)).alias("n_papers"))
     )
 

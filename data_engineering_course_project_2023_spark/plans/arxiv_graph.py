@@ -5,9 +5,10 @@ DataFrames, and the analytical queries that layer served
 
 Graph-as-frames: each node label is a DataFrame keyed by a deterministic
 id; each relationship is an edge frame (src, dst, props). Cypher MATCH +
-CREATE pairs (J1–J3) are equi-joins; the collaboration graph (J4) is the
-canonical-pair self-join. At scale this is the GraphFrames layout — no
-graph database, no Bolt bottleneck, partition-parallel bulk load.
+CREATE pairs (J1–J3) are equi-joins; the collaboration graph (J4) comes
+from the pair kernel (``analytics.pair_stream``). At scale this is the
+GraphFrames layout — no graph database, no Bolt bottleneck,
+partition-parallel bulk load.
 """
 
 from __future__ import annotations
@@ -16,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.expr import surrogate_key
+from .analytics import pair_stream
 
 
 def build_nodes(enriched: DataFrame) -> dict[str, DataFrame]:
@@ -92,25 +94,19 @@ def build_edges(enriched: DataFrame, nodes: dict[str, DataFrame]) -> dict[str, D
     }
 
 
-def collaboration_graph(authored_by: DataFrame, min_count: int = 1) -> DataFrame:
+def collaboration_graph(authored_by: DataFrame) -> DataFrame:
     """J4 (create_collaboration_graph.cql:1-5): co-authorship pair
     weights. Cypher MERGE accumulates directed edges both ways; the
     engine's defined semantics is the canonical undirected pair
     (author_a < author_b — SURVEY §4.4), self-pairs excluded.
 
-    Scale: one shuffle on paper_id (both sides co-partitioned);
-    quadratic fan-out per paper is the skew point — AQE skew-join plus,
-    for pathological >1k-author papers, an upstream per-paper cap would
-    bound it.
+    Scale: the pair kernel shuffles AUTHORED_BY once into per-paper
+    author sets and expands the pairs map-side, one row per pair and
+    never an array of a paper's pairs (a 1,200-author paper has 7.2e5);
+    the quadratic fan-out per paper stays the skew point.
     """
-    a, b = authored_by.alias("a"), authored_by.alias("b")
     return (
-        a.join(b, "paper_id")
-        .filter(F.col("a.author_id") < F.col("b.author_id"))
-        .groupBy(
-            F.col("a.author_id").alias("author_a"),
-            F.col("b.author_id").alias("author_b"),
-        )
+        pair_stream(authored_by, ["paper_id"], "author_id", "author_a", "author_b")
+        .groupBy("author_a", "author_b")
         .agg(F.count(F.lit(1)).alias("collab_count"))
-        .filter(F.col("collab_count") >= min_count)
     )

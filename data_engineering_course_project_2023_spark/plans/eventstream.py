@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .analytics import set_pairs
+
 Tables = dict[str, DataFrame]
 
 
@@ -1853,10 +1855,10 @@ def event_type_lift(t: Tables) -> DataFrame:
     support/confidence/lift are IEEE quotients and products of those
     exact ints (lift spelled (n_ab·N)/(n_a·n_b) as ONE division so no
     intermediate rounds). Scale shape: baskets collect in one
-    user-keyed distinct agg; the pair stream expands MAP-SIDE from
-    each sorted basket (the coorder_pair_stream combinatorics — the
-    type domain is tiny so per-basket fan-out is bounded); marginals
-    broadcast onto the pair counts."""
+    user-keyed distinct agg that also feeds the marginals; the pair
+    kernel (``analytics.set_pairs``) expands each sorted basket
+    map-side (the type domain is tiny so per-basket fan-out is
+    bounded); marginals broadcast onto the pair counts."""
     baskets = (
         t["events"]
         .groupBy("user_id")
@@ -1867,18 +1869,7 @@ def event_type_lift(t: Tables) -> DataFrame:
         F.explode("ts_").alias("event_type")
     ).groupBy("event_type").agg(F.count(F.lit(1)).alias("n_t"))
     pairs = (
-        baskets.select(
-            F.explode(
-                F.flatten(
-                    F.expr(
-                        "transform(ts_, (x, i) -> "
-                        "transform(slice(ts_, i + 2, size(ts_)), "
-                        "y -> struct(x AS type_a, y AS type_b)))"
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.type_a", "p.type_b")
+        set_pairs(baskets, [], "ts_", "type_a", "type_b")
         .groupBy("type_a", "type_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
     )

@@ -54,7 +54,7 @@ REGISTRY: dict[str, Query] = {
         analytics.copair_counts,
         analytics.COPAIR_SQL,
         ("lineitem",),
-        "J4/A1 self-join canonical pair counts (collaboration graph)",
+        "J4/A1 canonical pair counts from the pair kernel (collaboration graph)",
     ),
     "copair_counts_salted": Query(
         analytics.copair_counts_salted,

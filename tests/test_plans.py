@@ -59,6 +59,26 @@ def test_authored_by_keys_authors_without_a_join(spark):
     assert final.count("Exchange ") == 1, final
 
 
+def test_collaboration_graph_pairs_authors_without_a_join(spark):
+    """The collab stage enumerates author pairs with the pair kernel
+    (per-paper author sets, pairs generated map-side): the executed
+    plan of the stage's build has no join."""
+    from data_engineering_course_project_2023_spark.plans import arxiv_graph
+
+    from . import fixtures
+
+    df = arxiv_graph.collaboration_graph(
+        arxiv_graph.authored_by(fixtures.enriched(spark))
+    )
+    df.collect()
+    final = (
+        df._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    assert "Join" not in final, final
+    assert "Generate" in final, final
+
+
 def test_enrichment_join_broadcasts_lookup(spark):
     plan = plan_of(registry.run_query("enrichment_join", spark, SF_CORRECT))
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan

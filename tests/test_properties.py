@@ -4,7 +4,7 @@ test runs a handful of Spark jobs, not hundreds."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -199,42 +199,47 @@ def test_bloom_never_false_negative(spark, hist, fresh):
 
 @given(
     rows=st.lists(
-        st.tuples(st.integers(1, 8), st.integers(1, 12)),
+        st.tuples(
+            st.none() | st.integers(1, 4),
+            st.none() | st.integers(1, 3),
+            st.none() | st.integers(1, 12),
+        ),
         min_size=1, max_size=60,
     ),
 )
+@example(rows=[(None, 1, 1), (None, 1, 2), (1, 1, 3), (1, 1, 4)])
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_coorder_pair_stream_equals_self_join(spark, rows):
-    """PROPERTY: the map-side array pair build is EXACTLY the distinct
-    items self-join it replaced — same (src, dst, count) multiset for
-    any (order, part) multiset, duplicates and singleton orders
-    included. Guards the graph-family refactor forever."""
-    from pyspark.sql import functions as F
-
+def test_pair_stream_equals_self_join(spark, rows):
+    """PROPERTY: the pair kernel is EXACTLY the equi-join it replaced,
+    ``x JOIN y USING (keys) WHERE x.item < y.item`` over the distinct
+    (keys, item) frame — same rows for any multiset, duplicates,
+    singleton sets, NULL keys and NULL items included (both drop
+    them). Cases: one key and two keys over long items, and two keys
+    over 16-byte ``surrogate_key`` items, which pins that the kernel's
+    ``sort_array`` orders binary keys as ``<`` does (the collab graph's
+    author_a < author_b)."""
     from data_engineering_course_project_2023_spark.plans.analytics import (
-        coorder_pair_stream,
+        pair_stream,
     )
 
-    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    got = {
-        (r["src"], r["dst"], r["n"])
-        for r in coorder_pair_stream(li)
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    want = {
-        (r["src"], r["dst"], r["n"])
-        for r in a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
+    df = spark.createDataFrame(rows, "k1 long, k2 long, item long").withColumn(
+        "bkey",
+        F.when(F.col("item").isNotNull(), surrogate_key(F.col("item").cast("string"))),
+    )
+
+    def rowset(frame, cols):
+        return sorted(
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+            for r in frame.select(*cols).collect()
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
+
+    for keys, item in ((["k1"], "item"), (["k1", "k2"], "item"), (["k1", "k2"], "bkey")):
+        got = rowset(pair_stream(df, keys, item), [*keys, "src", "dst"])
+        items = df.select(*keys, item).distinct()
+        a, b = items.alias("a"), items.alias("b")
+        want = rowset(
+            a.join(b, keys).filter(F.col(f"a.{item}") < F.col(f"b.{item}")),
+            [*keys, F.col(f"a.{item}"), F.col(f"b.{item}")],
+        )
+        assert got == want, (keys, item)
