@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.expr import spread
 from ..session import fixpoint, iterative_shuffle_parts
+from .text import ngrams, tokens
 
 # MinHash: k hash functions derived by slicing md5 digests — md5(seed|s)
 # yields four independent 32-bit slices, so k=8 costs only two md5 calls
@@ -199,36 +200,17 @@ def shingles(
     id_col: str = "doc_id",
     n: int = 3,
 ) -> DataFrame:
-    """Distinct word n-gram shingles, one row per (doc, shingle).
-
-    Built with a transform over token indices — stays in codegen; the
-    explode happens once, after distinct-ing within the array.
-
-    The token array is MATERIALIZED into a column before the
-    higher-order transform: codegen does not common-subexpression-
-    eliminate across a LambdaFunction boundary, so an inline
-    ``element_at(split(text), i+k)`` re-evaluates the whole split per
-    element access — O(len²) per document. Measured at sf1z (50 k
-    docs): inline split 42.5 s, materialized column 3.4 s for the
-    identical 2,649,473-row shingle frame (round 10; this was the
-    family's dominant hidden cost at every SF).
-    """
+    """Distinct word n-gram shingles, one row per (doc, shingle): the
+    :func:`~.text.ngrams` kernel over ``split(text, ' ')`` (single-space
+    split, the oracle's ``string_split(text, ' ')``), distinct within
+    the array, then one explode."""
     toked = spread(df).select(
         F.col(id_col).alias("doc_id"),
         F.split(F.col(text_col), " ").alias("__w"),
     )
-    tk = F.col("__w")
-    # sequence(0, -1) would count DOWN in Spark; guard docs shorter than n
-    idx = F.when(
-        F.size(tk) >= n, F.sequence(F.lit(0), F.size(tk) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(tk, i + k + 1) for k in range(n)]),
-    )
     return toked.select(
         "doc_id",
-        F.explode(F.array_distinct(grams)).alias("shingle"),
+        F.explode(F.array_distinct(ngrams("__w", n))).alias("shingle"),
     )
 
 
@@ -380,32 +362,32 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash16(c: Column) -> Column:
-    """X2c: 16-bit SimHash over whitespace tokens with md5-derived
-    per-token 16-bit hashes. Bit j of the result is set when the sum of
-    (±1 per token, sign = token's bit j) is positive.
-
-    16 bits keeps the oracle SQL tractable while demonstrating the
-    operator; widening to 64 bits is the same expression with a longer
-    hex slice.
-    """
-    toks = F.filter(F.split(F.trim(c), r"\s+"), lambda x: x != "")
-    h = F.transform(
-        toks, lambda x: F.conv(F.substring(F.md5(x), 1, 4), 16, 10).cast("int")
+def _simhash_frame(
+    df: DataFrame, text_col: str, id_col: str, bits: int, tok_hash
+) -> DataFrame:
+    """(doc_id, simhash): a ``bits``-wide SimHash over whitespace tokens.
+    Bit j is set when more of the doc's tokens have bit j set in
+    ``tok_hash(token)`` than not. Each token is hashed once and the bit
+    votes are ``bits`` conditional sums in ONE groupBy, so partial
+    aggregation does the voting map-side."""
+    tok = spread(df).select(
+        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("w")
     )
-    bit_terms = []
-    for j in range(16):
-        vote = F.aggregate(
-            h,
-            F.lit(0),
-            lambda acc, x: acc
-            + F.when(F.shiftright(x, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-        bit_terms.append(F.when(vote > 0, F.lit(1 << j)).otherwise(F.lit(0)))
-    out = bit_terms[0]
-    for t in bit_terms[1:]:
-        out = out + t
-    return out.cast("int")
+    th = tok.select("doc_id", tok_hash(F.col("w")).alias("h"))
+    votes = [
+        F.sum(
+            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1)
+            .otherwise(-1)
+        ).alias(f"v_{j}")
+        for j in range(bits)
+    ]
+    per_doc = th.groupBy("doc_id").agg(*votes)
+    acc = F.lit(0).cast("long")
+    for j in range(bits):
+        acc = acc + F.when(
+            F.col(f"v_{j}") > 0, F.lit(1 << j).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+    return per_doc.select("doc_id", acc.alias("simhash"))
 
 
 def simhash_groups(
@@ -413,33 +395,12 @@ def simhash_groups(
 ) -> DataFrame:
     """SimHash-identical groups (hamming distance 0 buckets): the
     constant-time near-dup bucketing pass. Output one row per doc with
-    its simhash and the bucket's size.
-
-    Computed explode → hash once → 16 conditional sums in ONE groupBy
-    (the array-fold spelling in :func:`simhash16` re-evaluates the md5
-    transform per bit — 16× the hashing; this form hashes each token
-    once and lets partial aggregation do the bit votes map-side).
-    """
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-    tok = spread(df).select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("w"))
-    th = tok.select(
-        "doc_id", F.conv(F.substring(F.md5("w"), 1, 4), 16, 10).cast("int").alias("h")
-    )
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"v_{j}")
-        for j in range(16)
-    ]
-    per_doc = th.groupBy("doc_id").agg(*votes)
-    bits = [
-        F.when(F.col(f"v_{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        for j in range(16)
-    ]
-    acc = bits[0]
-    for b in bits[1:]:
-        acc = acc + b
-    sh = per_doc.select("doc_id", acc.cast("int").alias("simhash"))
+    its 16-bit simhash (per-token hash: the first 4 md5 hex digits) and
+    the bucket's size."""
+    sh = _simhash_frame(
+        df, text_col, id_col, 16,
+        lambda w: F.conv(F.substring(F.md5(w), 1, 4), 16, 10).cast("int"),
+    ).select("doc_id", F.col("simhash").cast("int").alias("simhash"))
     sizes = sh.groupBy("simhash").agg(F.count(F.lit(1)).alias("bucket_size"))
     return sh.join(sizes, "simhash").select("doc_id", "simhash", "bucket_size")
 
@@ -453,29 +414,12 @@ SIMHASH_MAX_HAMMING = SIMHASH_BANDS - 1  # pigeonhole-complete for ≤ 3
 def simhash60_frame(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, simhash) with a 60-bit SimHash — wide enough that
-    15-bit band values (32k distinct) block the corpus instead of
-    pairing it (the 16-bit variant above is a hamming-0 bucketer; its
-    4-bit bands would collide every doc with 1/16 of the corpus).
-    Same one-groupBy shape: hash each token once, 60 conditional
-    bit-vote sums aggregate map-side."""
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-    tok = spread(df).select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("w"))
-    th = tok.select("doc_id", _md5_int60(F.col("w")).alias("h"))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"v_{j}")
-        for j in range(SIMHASH60_BITS)
-    ]
-    per_doc = th.groupBy("doc_id").agg(*votes)
-    acc = F.lit(0).cast("long")
-    for j in range(SIMHASH60_BITS):
-        acc = acc + F.when(
-            F.col(f"v_{j}") > 0, F.lit(1 << j).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return per_doc.select("doc_id", acc.alias("simhash"))
+    """(doc_id, simhash) with a 60-bit SimHash (per-token hash:
+    ``_md5_int60``) — wide enough that 15-bit band values (32k
+    distinct) block the corpus instead of pairing it (the 16-bit
+    :func:`simhash_groups` is a hamming-0 bucketer; its 4-bit bands
+    would collide every doc with 1/16 of the corpus)."""
+    return _simhash_frame(df, text_col, id_col, SIMHASH60_BITS, _md5_int60)
 
 
 def simhash_hamming_pairs(

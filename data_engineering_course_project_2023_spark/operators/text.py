@@ -5,6 +5,9 @@ counting, fingerprinting.
 All pure Column expressions — JVM-side, codegen-friendly, no UDFs; they
 run at scan speed on 100 TB of documents. Each has a matching DuckDB
 oracle in plans/llmops.py.
+
+Two kernels serve the whole text family: :func:`tokens` is the only
+whitespace tokenizer, and :func:`ngrams` the only word-n-gram builder.
 """
 
 from __future__ import annotations
@@ -123,39 +126,41 @@ def rolling_fingerprint(c: Column | str) -> Column:
     )
 
 
-def trigrams(c: Column | str, toks: Column | None = None) -> Column:
-    """Word 3-grams as space-joined strings; [] for docs under 3 tokens
-    (guarded — a negative slice length would error).
+def ngrams(toks: str, n: int) -> Column:
+    """Word n-grams of the token array in column ``toks``, space-joined
+    in order; ``[]`` when it holds fewer than ``n`` tokens. The only
+    word-n-gram builder in the package.
 
-    Built by zipping three shifted slices instead of indexing with
-    ``element_at`` inside a transform lambda: codegen does not CSE
-    across a lambda boundary, so the indexed spelling re-evaluated the
-    whole tokenization per element access — O(len²) per document (the
-    shingles() defect, found round 10). The slices reference the token
-    array as plain arguments, evaluated a constant number of times.
-    Pass a pre-tokenized ``toks`` column to avoid even those."""
-    if toks is None:
-        toks = tokens(c)
-    n = F.size(toks)
-    make = F.zip_with(
-        F.slice(toks, 1, n - 2),
-        F.zip_with(
-            F.slice(toks, 2, n - 2),
-            F.slice(toks, 3, n - 2),
-            lambda b, g: F.concat_ws(" ", b, g),
-        ),
-        lambda a, bg: F.concat_ws(" ", a, bg),
+    Takes the NAME of a token column the caller has already
+    materialized: codegen does not common-subexpression-eliminate across
+    a lambda boundary, so a tokenizing expression inside the window
+    lambda would be re-evaluated per window, O(len²) per document.
+
+    Each window is ``n`` ``element_at`` calls. One ``slice`` per window
+    lost: ``ngram_diversity`` (n = 1, 2, 3) took 3.12 s of executor CPU
+    against 2.64 s for ``element_at``, and its one win, at n = 32 in
+    ``decontaminate_exact``, was inside the run-to-run spread (sf0.1,
+    4 cores, warm medians of 8; NOTES.md "One n-gram kernel")."""
+    w = F.col(toks)
+    # sequence(1, 0) would count DOWN in Spark, so arrays shorter than n
+    # get an empty index array. Guard the indexes, not the result: an
+    # empty-array literal branch makes the elements nullable, Catalyst
+    # then adds isnotnull(shingle) to one side of a shingle join only,
+    # and the two sides stop sharing one shuffle.
+    starts = F.when(
+        F.size(w) >= n, F.sequence(F.lit(1), F.size(w) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+    return F.transform(
+        starts,
+        lambda i: F.concat_ws(" ", *[F.element_at(w, i + k) for k in range(n)]),
     )
-    return F.when(n >= 3, make).otherwise(F.array().cast("array<string>"))
 
 
-def dup_trigram_ratio(c: Column | str, tri: Column | None = None) -> Column:
-    """Gopher-style repetition signal: fraction of word trigrams that
-    are repeats of an earlier trigram in the same document. int/int
-    division → bit-deterministic double. Pass a pre-built ``tri``
-    column to avoid re-deriving the trigram array per sub-expression."""
-    if tri is None:
-        tri = trigrams(c)
+def dup_trigram_ratio(tri: Column) -> Column:
+    """Gopher-style repetition signal: fraction of the word trigrams in
+    ``tri`` (an ``ngrams(toks, 3)`` column) that repeat an earlier
+    trigram of the same document. int/int division → bit-deterministic
+    double."""
     n_tri = F.size(tri)
     n_uniq = F.size(F.array_distinct(tri))
     return F.when(

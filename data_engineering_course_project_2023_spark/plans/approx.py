@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.text import tokens
+
 Tables = dict[str, DataFrame]
 
 
@@ -213,11 +215,7 @@ def cms_token_counts(t: Tables) -> DataFrame:
     (mergeability = partial aggregation); the probe is a broadcast
     join of the heavy-hitter dim against the counter frame. At 100 TB
     the counter frame is still depth·width rows."""
-    toks = t["documents"].select(
-        F.explode(
-            F.filter(F.split(F.trim("text"), r"\s+"), lambda x: x != "")
-        ).alias("tok")
-    )
+    toks = t["documents"].select(F.explode(tokens("text")).alias("tok"))
     digest = F.md5(F.col("tok"))
     buckets = F.array(
         *[

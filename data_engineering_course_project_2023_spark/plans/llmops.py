@@ -934,18 +934,19 @@ def doc_repetition(t: Tables) -> DataFrame:
     """Repetition quality signal per document: total vs distinct word
     trigrams and the duplicate fraction (the Gopher/C4-family gate for
     boilerplate and looped text). All array expressions — no explode, no
-    shuffle; at scale this is a pure map over the scan. The trigram
-    array is materialized once and shared by all three outputs (CSE
-    skips HOF subtrees — the shingles() lesson)."""
+    shuffle; at scale this is a pure map over the scan. The token and
+    trigram arrays are each materialized once (CSE skips HOF subtrees)
+    and the trigram array is shared by all three outputs."""
     tri = F.col("__tri")
     return (
         spread(t["documents"])
-        .select("doc_id", textops.trigrams("text").alias("__tri"))
+        .select("doc_id", textops.tokens("text").alias("__w"))
+        .select("doc_id", textops.ngrams("__w", 3).alias("__tri"))
         .select(
             "doc_id",
             F.size(tri).cast("bigint").alias("n_trigrams"),
             F.size(F.array_distinct(tri)).cast("bigint").alias("n_distinct"),
-            textops.dup_trigram_ratio("text", tri).alias("dup_ratio"),
+            textops.dup_trigram_ratio(tri).alias("dup_ratio"),
         )
     )
 
@@ -1221,24 +1222,16 @@ def decontaminate_exact_substring(t: Tables) -> DataFrame:
     hash exactly. Same guarantee shape as suffix-array dedup's
     minimum-match-length, at a fraction of the cost.
 
-    The token array is materialized into a column on each side before
-    the window/chunk transforms (the shingles() lesson: no CSE across
-    a lambda boundary — an inline tokens(text) would re-tokenize per
-    stride-1 window, O(len²) on the eval side)."""
+    The eval windows are ``ngrams(__w, CHUNK_TOKENS)``. The token array
+    is materialized into a column on each side before the window/chunk
+    transforms (no CSE across a lambda boundary)."""
     docs = spread(t["documents"])
     k = CHUNK_TOKENS
     tk = F.col("__w")
-    win = F.when(
-        F.size(tk) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tk) - k),
-            lambda i: F.concat_ws(" ", F.slice(tk, i + 1, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     eval_wins = (
         docs.filter(F.col("source") == "src0")
         .select(textops.tokens("text").alias("__w"))
-        .select(F.explode(win).alias("w"))
+        .select(F.explode(textops.ngrams("__w", k)).alias("w"))
         .select(F.md5("w").alias("chunk_hash"))
         .distinct()
     )
@@ -1429,7 +1422,6 @@ FROM embeddings emb ANTI JOIN dup ON emb.vec_id = dup.vec_id
 
 
 # --- X4g: RAG chunking --------------------------------------------------------
-CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24
 
 
@@ -3804,22 +3796,13 @@ def ngram_diversity(t: Tables) -> DataFrame:
     toks = t["documents"].select(
         "source", F.col("doc_id"), textops.tokens("text").alias("w")
     )
-    rows = []
-    for n in (1, 2, 3):
-        idx = F.when(
-            F.size("w") >= n, F.sequence(F.lit(0), F.size("w") - n)
-        ).otherwise(F.array().cast("array<int>"))
-        grams = F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at("w", i + k + 1) for k in range(n)]
-            ),
+    rows = [
+        toks.select(
+            "source", F.lit(n).alias("n"),
+            F.explode(textops.ngrams("w", n)).alias("g"),
         )
-        rows.append(
-            toks.select(
-                "source", F.lit(n).alias("n"), F.explode(grams).alias("g")
-            )
-        )
+        for n in (1, 2, 3)
+    ]
     allg = rows[0].unionByName(rows[1]).unionByName(rows[2])
     return (
         allg.groupBy("source", "n")
@@ -3995,6 +3978,29 @@ CONTAIN_POST_DIV = 4
 CONTAIN_RESCUE_DF = 8
 
 
+def _containment_kept(t: Tables) -> DataFrame:
+    """(doc_id, s): each doc's distinct word 3-gram shingles minus the
+    ubiquitous ones (df · CONTAIN_DF_DIV > n_docs), the shingle space
+    both containment queries score on. Checkpointed, so every consumer
+    (sizes, df, ranks, both join sides) rereads it instead of Catalyst
+    re-deriving scan→tokenize→shingle→distinct→df-prune per consumer."""
+    sh = (
+        spread(t["documents"])
+        .select("doc_id", textops.tokens("text").alias("w"))
+        .select("doc_id", F.explode(textops.ngrams("w", 3)).alias("s"))
+        .distinct()
+    )
+    n_docs = t["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
+    heavy = (
+        sh.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .crossJoin(F.broadcast(n_docs))
+        .filter(F.col("df") * CONTAIN_DF_DIV > F.col("n_docs"))
+        .select("s")
+    )
+    return sh.join(F.broadcast(heavy), "s", "left_anti").localCheckpoint()
+
+
 def containment_pairs(t: Tables) -> DataFrame:
     """X2: directed shingle-containment pairs — |S(a) ∩ S(b)| / |S(a)|
     over distinct 3-token shingles. Jaccard misses the case where a
@@ -4009,40 +4015,7 @@ def containment_pairs(t: Tables) -> DataFrame:
     pruned set (self-consistent metric); candidates come only from
     shared sub-ubiquitous shingles, never an all-pairs product. The
     containment test is exact int·2 ≥ int — no float in the filter."""
-    sh = (
-        spread(t["documents"])
-        .select(
-            "doc_id", textops.tokens("text").alias("w")
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("w") - 3),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at("w", i + 1),
-                        F.element_at("w", i + 2),
-                        F.element_at("w", i + 3),
-                    ),
-                )
-            ).alias("s"),
-        )
-        .distinct()
-    )
-    n_docs = t["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
-    heavy = (
-        sh.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") * CONTAIN_DF_DIV > F.col("n_docs"))
-        .select("s")
-    )
-    # kept feeds sizes + both self-join sides; without materialization
-    # each consumer re-derives scan→shingle→distinct→df-prune (9
-    # `documents` scans in plans/r11/containment_pairs_before.txt) —
-    # the same multi-consumer shape the capped twin checkpoints.
-    kept = sh.join(F.broadcast(heavy), "s", "left_anti").localCheckpoint()
+    kept = _containment_kept(t)
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = kept.alias("a"), kept.alias("b")
     inter = (
@@ -4123,43 +4096,7 @@ def containment_pairs_capped(t: Tables) -> DataFrame:
     sf10 fixed-vocab; this one is budget-pinned there)."""
     from pyspark.sql.window import Window
 
-    kept = (
-        spread(t["documents"])
-        .select("doc_id", textops.tokens("text").alias("w"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("w") - 3),
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at("w", i + 1),
-                        F.element_at("w", i + 2),
-                        F.element_at("w", i + 3),
-                    ),
-                )
-            ).alias("s"),
-        )
-        .distinct()
-    )
-    n_docs = t["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
-    heavy = (
-        kept.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") * CONTAIN_DF_DIV > F.col("n_docs"))
-        .select("s")
-    )
-    # The pruned shingle frame feeds SIX consumers (dfk, ranked, sizes,
-    # and both exact-rescore sides) and the ranked frame three more
-    # (pref, nrk, post); without materialization Catalyst re-derives
-    # the whole scan→tokenize→shingle→distinct→df-prune pipeline per
-    # consumer — the before-plan holds 39 separate `documents` scans
-    # (plans/r11/containment_pairs_capped_before.txt), the exact
-    # Spark-side twin of the DuckDB MATERIALIZED-hint fix below.
-    # localCheckpoint is the node_jaccard/copair_components discipline:
-    # one build, in-memory rereads (guide §5 lineage truncation).
-    kept = kept.join(F.broadcast(heavy), "s", "left_anti").localCheckpoint()
+    kept = _containment_kept(t)
     dfk = kept.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     # df-1 shingles cannot witness a pair — see dedup.
     # _capped_shingle_candidates; on the Zipf axis the injected-rewrite

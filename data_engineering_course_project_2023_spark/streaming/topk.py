@@ -31,14 +31,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.text import tokens
+
 
 def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Shared stream/batch transform: running count per token."""
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
     return (
-        docs.select(F.explode(toks).alias("token"))
+        docs.select(F.explode(tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )

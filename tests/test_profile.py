@@ -1,4 +1,5 @@
-"""tools/profile.py: event-log attribution and an end-to-end run."""
+"""tools/query_profile.py: event-log attribution and an end-to-end run,
+and no tool module shadowing a standard-library module."""
 
 from __future__ import annotations
 
@@ -7,11 +8,23 @@ import os
 import subprocess
 import sys
 
-from tools.profile import WARMUP, attribute, noop_write
+from tools.query_profile import WARMUP, attribute, noop_write
 
 from .conftest import SF_SMOKE
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_no_tool_module_shadows_the_stdlib():
+    """A script run by path puts ``tools/`` first on ``sys.path``, so a
+    tool named like a standard-library module would shadow it for
+    everything the script imports (``profile`` is imported by pyspark)."""
+    names = {
+        os.path.splitext(f)[0]
+        for f in os.listdir(os.path.join(REPO, "tools"))
+        if f.endswith(".py")
+    }
+    assert not names & sys.stdlib_module_names, names & sys.stdlib_module_names
 
 
 def _job(job_id, group, stages):
@@ -67,7 +80,7 @@ def test_profile_cli_smoke(tmp_path):
     out = tmp_path / "profile.json"
     queries = ["star_revenue_by_region_year", "copair_components"]
     proc = subprocess.run(
-        [sys.executable, "-m", "tools.profile", "--sf", SF_SMOKE,
+        [sys.executable, "-m", "tools.query_profile", "--sf", SF_SMOKE,
          "--queries", ",".join(queries), "--warmups", "1",
          "--plans", str(tmp_path / "plans"), "--out", str(out)],
         cwd=REPO, capture_output=True, text=True, timeout=600,

@@ -69,35 +69,87 @@ def test_rolling_fingerprint_order_sensitive_and_empty_safe(spark):
 
 
 def test_dup_trigram_ratio_bounds(spark):
+    """dup_trigram_ratio over ``ngrams(toks, 3)``, and the n-gram kernel
+    itself for n = 1, 3, 8, 32 against a Python reference on empty
+    token arrays, arrays shorter than n, arrays of exactly n and longer
+    ones."""
     from data_engineering_course_project_2023_spark.operators.text import (
         dup_trigram_ratio,
-        trigrams,
+        ngrams,
+        tokens,
     )
     from pyspark.sql import functions as F
 
+    words = lambda k, m: " ".join(f"t{i % m}" for i in range(k))  # noqa: E731
+    texts = {
+        1: "a b c a b c a b c",  # heavy repetition
+        2: "one two three four five",  # all distinct
+        3: "too short",  # < 3 tokens → no trigrams
+        4: "",
+        5: "   ",
+        6: "  lone  ",
+        7: words(8, 8),  # exactly 8
+        8: words(32, 5),  # exactly 32, repeating
+        9: words(31, 31),  # one short of 32
+        10: words(40, 40),
+    }
+    ns = (1, 3, 8, 32)
     df = spark.createDataFrame(
-        [
-            (1, "a b c a b c a b c"),  # heavy repetition
-            (2, "one two three four five"),  # all distinct
-            (3, "too short"),  # < 3 tokens → no trigrams
-            (4, ""),
-        ],
-        "doc_id long, text string",
-    )
+        sorted(texts.items()), "doc_id long, text string"
+    ).select("doc_id", tokens("text").alias("w"))
     rows = {
         r["doc_id"]: r
         for r in df.select(
             "doc_id",
-            F.size(trigrams("text")).alias("n_tri"),
-            dup_trigram_ratio("text").alias("ratio"),
+            *[ngrams("w", n).alias(f"g{n}") for n in ns],
+            dup_trigram_ratio(ngrams("w", 3)).alias("ratio"),
         ).collect()
     }
+    for doc_id, text in texts.items():
+        w = text.split()
+        for n in ns:
+            want = [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
+            assert rows[doc_id][f"g{n}"] == want, (doc_id, n)
     # 9 tokens → 7 trigrams, only 3 distinct ("a b c","b c a","c a b")
-    assert rows[1]["n_tri"] == 7
+    assert len(rows[1]["g3"]) == 7
     assert abs(rows[1]["ratio"] - 4 / 7) < 1e-12
     assert rows[2]["ratio"] == 0.0
-    assert rows[3]["n_tri"] == 0 and rows[3]["ratio"] == 0.0
-    assert rows[4]["n_tri"] == 0 and rows[4]["ratio"] == 0.0
+    for doc_id in (3, 4, 5, 6):
+        assert rows[doc_id]["g3"] == [] and rows[doc_id]["ratio"] == 0.0
+    assert len(rows[8]["g32"]) == 1 and rows[9]["g32"] == []
+
+
+def test_containment_short_docs_match_oracles(spark, tmp_path):
+    """Documents of 0, 1 and 2 tokens yield no shingles; both
+    containment queries must skip them, not fail on them, and still
+    match their DuckDB oracles on the longer docs, enough of which
+    share shingles that pairs survive the relative-df cut."""
+    import pandas as pd
+
+    from data_engineering_course_project_2023_spark.plans import llmops
+    from tests.parity import compare
+
+    docs = [(1, ""), (2, "   "), (3, "solo"), (4, "one two"), (5, "x  y")]
+    docs += [
+        (10, "alpha beta gamma delta epsilon"),
+        (11, "alpha beta gamma delta epsilon zeta eta theta"),
+        (12, "iota kappa lambda mu nu xi"),
+        (13, "omicron iota kappa lambda mu nu"),
+    ]
+    docs += [
+        (100 + i, " ".join(f"f{i}w{j}" for j in range(6))) for i in range(16)
+    ]
+    path = str(tmp_path / "documents.parquet")
+    pd.DataFrame(docs, columns=["doc_id", "text"]).to_parquet(path)
+    t = {"documents": spark.read.parquet(path)}
+    for build, sql in (
+        (llmops.containment_pairs, llmops.CONTAINMENT_PAIRS_SQL),
+        (llmops.containment_pairs_capped, llmops.CONTAINMENT_PAIRS_CAPPED_SQL),
+    ):
+        out = build(t)
+        pairs = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+        assert {(10, 11), (12, 13), (13, 12)} <= pairs, (build.__name__, pairs)
+        assert not compare(out, sql, str(tmp_path)), build.__name__
 
 
 def test_chunk_dedup_detects_verbatim_block_only(spark):

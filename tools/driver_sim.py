@@ -30,13 +30,7 @@ import sys
 
 import pandas as pd
 
-# Run as a script, this directory heads sys.path and tools/profile.py
-# would shadow the stdlib ``profile`` module that pyspark imports, so the
-# repository root takes its place.
-_HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path = [os.path.dirname(_HERE)] + [
-    p for p in sys.path if os.path.abspath(p) != _HERE
-]
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tests.parity import duck_con  # noqa: E402
 

@@ -1,6 +1,6 @@
 """Profile registry queries: plan shape, engine metrics and wall time.
 
-    python -m tools.profile --sf testdata/sf0.1 \
+    python -m tools.query_profile --sf testdata/sf0.1 \
         [--queries a,b] [--conf k=v ...] [--warmups N] [--plans DIR] \
         [--out PROFILE.json]
 
