@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.expr import MONEY, money, revenue
-from ..operators.dedup import connected_components
+from ..operators.dedup import connected_components, run_memo
 from ..session import fixpoint, iterative_shuffle_parts as _iterative_shuffle_parts
 
 Tables = dict[str, DataFrame]
@@ -109,9 +109,9 @@ def pair_stream(
 
 # --- shared co-order pair/edge builds (J4 family) --------------------------
 def coorder_edges(li: DataFrame) -> DataFrame:
-    """Canonical co-order edge list (src < dst, co-order weight ≥ 2) —
-    the ONE graph build shared by copair_components, triangle_counts,
-    community_labels, kcore_nodes, and node_jaccard."""
+    """Canonical co-order edge list (src < dst, co-order weight ≥ 2),
+    lazy: the pair aggregation over ``li``. Its one caller is
+    :func:`coorder_graph`."""
     return (
         pair_stream(li, ["l_orderkey"], "l_partkey")
         .groupBy("src", "dst")
@@ -121,19 +121,32 @@ def coorder_edges(li: DataFrame) -> DataFrame:
     )
 
 
+def coorder_graph(li: DataFrame) -> DataFrame:
+    """:func:`coorder_edges`, built once per run: an in-memory
+    checkpoint memoized by :func:`operators.dedup.run_memo` on
+    ``li``'s file identity, so overwriting lineitem rebuilds it and a
+    new session never sees it. The edge frame is graph-sized (3.5k rows
+    at sf0.1, KB not GB). ``li`` must be the unfiltered lineitem scan.
+    Consumers: copair_components, triangle_counts and, through
+    :func:`coorder_adjacency`, community_labels, kcore_nodes,
+    node_jaccard and adamic_adar. In memory rather than
+    ``stage_parquet``: a parquet stage would add stored bytes and buy
+    nothing within one run (NOTES.md, "Local finish and one co-order
+    graph per run")."""
+    return run_memo(
+        li, ("coorder_edges",), lambda: coorder_edges(li).localCheckpoint()
+    )
+
+
 def coorder_adjacency(li: DataFrame) -> DataFrame:
     """Directed adjacency (both directions of every weight-≥2 edge):
-    the CANONICAL edge list is aggregated once from the map-side pair
-    stream, materialized (it is graph-sized — 3.5k rows at sf0.1, KB
-    not GB), and the reverse direction is a projection of that
+    :func:`coorder_graph` plus its reverse, a projection of the
     in-memory frame. The naive und ∪ flip(und) spelling re-computed
     the whole pair aggregation per union branch (6.0 s cold at sf0.1);
-    aggregating a doubled (x,y)+(y,x) pair stream avoids that but
-    pushes 2× the rows through the aggregate — strictly worse than
-    flipping the aggregated result. Materializing here also means
-    every iterative caller's own localCheckpoint starts from an
-    in-memory frame."""
-    und = coorder_edges(li).localCheckpoint()
+    aggregating a doubled (x,y)+(y,x) pair stream pushes 2× the rows
+    through the aggregate. Consumers: community_labels, kcore_nodes,
+    node_jaccard and adamic_adar."""
+    und = coorder_graph(li)
     return und.unionByName(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -786,18 +799,17 @@ FROM spend
 # --- iterative algorithm: connected components of the co-order graph -------
 def copair_components(t: Tables, max_iter: int = 40) -> DataFrame:
     """Connected components over the part co-order graph (edges =
-    copair_counts pairs, weight ≥ 2): the engine's one min-label
-    propagation kernel, :func:`operators.dedup.connected_components`,
-    over every part that appears in an order. Data never leaves the
-    cluster; rounds ≤ component diameter + 1, and a graph past the
-    round cap raises a typed ScaleGuard instead of a partial answer.
-    Oracle: a DuckDB recursive CTE computing min-reachable-label — so
-    even the iterative path is exact-checked.
+    copair_counts pairs, weight ≥ 2): the engine's one CC kernel,
+    :func:`operators.dedup.connected_components`, over every part that
+    appears in an order. The edges are the run's
+    one :func:`coorder_graph`; a graph at or under the kernel's bound
+    is collected and finished on the driver, a larger one runs the
+    distributed loop, whose round cap raises a typed ScaleGuard instead
+    of a partial answer. Oracle: a DuckDB recursive CTE computing
+    min-reachable-label — so both branches are exact-checked.
     """
     li = t["lineitem"]
-    # materialized, so the pair aggregation runs once for the kernel's
-    # symmetrized edge frame
-    edges = coorder_edges(li).localCheckpoint()
+    edges = coorder_graph(li)
     nodes = li.select(F.col("l_partkey").alias("node")).distinct()
     return connected_components(nodes, edges, max_iter).select(
         F.col("node").alias("l_partkey"), F.col("lbl").alias("component")
@@ -1332,7 +1344,7 @@ def triangle_counts(t: Tables) -> DataFrame:
     wedge count — the standard distributed triangle algorithm (no
     per-node adjacency materialization). The edge list is orders of
     magnitude smaller than lineitem; the joins shuffle only edges."""
-    edges = coorder_edges(t["lineitem"]).localCheckpoint()
+    edges = coorder_graph(t["lineitem"])
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.dst") == F.col("e2.src"))
@@ -2210,7 +2222,8 @@ def kcore_nodes(t: Tables) -> DataFrame:
 
     # a capped peel is the contract, so non-convergence is not an error
     cur, _converged = fixpoint(
-        coorder_adjacency(t["lineitem"]), peel, F.count(F.lit(1)), _KCORE_ROUNDS
+        coorder_adjacency(t["lineitem"]), peel, F.count(F.lit(1)), _KCORE_ROUNDS,
+        label="kcore_nodes",
     )
     return (
         cur.groupBy("src")

@@ -181,12 +181,27 @@ def iterative_shuffle_parts(
         spark.conf.set("spark.sql.shuffle.partitions", str(conf_parts))
 
 
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Run the enclosed jobs under ``spark.job.description`` = ``text``,
+    the per-job label the event log records and a query profile lists;
+    the caller's description (or none) is restored on exit."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    try:
+        sc.setJobDescription(text)
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+
+
 def fixpoint(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
     probe: Column,
     max_rounds: int,
     size_rows: int | None = None,
+    label: str = "fixpoint",
 ) -> tuple[DataFrame, bool]:
     """Iterate ``state = step(state)`` until the aggregate ``probe``
     repeats, at most ``max_rounds`` times; return (final state,
@@ -205,17 +220,23 @@ def fixpoint(
     ``size_rows`` (a count the caller observed on a checkpoint it
     already runs) or, when None, by the seed's row count, observed on
     the seed job — no job ever runs only to size the scope.
+
+    Round k's jobs run under the description ``"{label}: round {k}"``
+    (the seed is round 0).
     """
+    spark = state.sparkSession
     seed = Observation()
-    state = state.observe(
-        seed, probe.alias("p"), F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
+    with job_description(spark, f"{label}: round 0"):
+        state = state.observe(
+            seed, probe.alias("p"), F.count(F.lit(1)).alias("n")
+        ).localCheckpoint()
     prev = seed.get["p"]
     n_rows = seed.get["n"] if size_rows is None else size_rows
-    with iterative_shuffle_parts(state.sparkSession, n_rows):
-        for _ in range(max_rounds):
+    with iterative_shuffle_parts(spark, n_rows):
+        for k in range(1, max_rounds + 1):
             obs = Observation()
-            state = step(state).observe(obs, probe.alias("p")).localCheckpoint()
+            with job_description(spark, f"{label}: round {k}"):
+                state = step(state).observe(obs, probe.alias("p")).localCheckpoint()
             cur = obs.get["p"]
             if cur == prev:
                 return state, True

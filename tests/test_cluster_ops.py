@@ -6,6 +6,8 @@ end-to-end; these pin the *rules* on inputs built to exercise them."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -211,21 +213,25 @@ def _chain(spark, n):
     return nodes, edges
 
 
-def test_cc_raises_past_round_cap(spark):
+def test_cc_raises_past_round_cap(spark, monkeypatch):
     """A component whose diameter outruns max_iter must not come back
-    half-propagated: the 26-node chain (26 rounds) raises the typed
-    ScaleGuard at max_iter=20, naming the star path."""
+    half-propagated from the distributed loop (bound 0): the 26-node
+    chain (26 rounds) raises the typed ScaleGuard at max_iter=20,
+    naming the star path."""
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", 0)
     nodes, edges = _chain(spark, 26)
     with pytest.raises(dedup.AlgorithmScaleLimit, match="connected_components_star"):
         dedup.connected_components(nodes, edges, max_iter=20)
 
 
-def test_cc_runs_one_action_per_round(spark):
+def test_cc_runs_one_action_per_round(spark, monkeypatch):
     """The label-sum probe rides each round's checkpoint job via
-    observe(), so an extra round costs exactly one round's jobs. Under
-    AQE one round's checkpoint action runs 5 jobs (its query stages plus
-    the checkpoint itself) — the per-round count the pre-helper loop
-    measured too; a separate probe job per round would make it 6."""
+    observe(), so an extra round of the distributed loop (bound 0)
+    costs exactly one round's jobs. Under AQE one round's checkpoint
+    action runs 5 jobs (its query stages plus the checkpoint itself) —
+    the per-round count the pre-helper loop measured too; a separate
+    probe job per round would make it 6."""
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", 0)
     sc = spark.sparkContext
 
     def jobs(n):
@@ -241,6 +247,56 @@ def test_cc_runs_one_action_per_round(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     assert jobs(16) - jobs(6) == 5 * (16 - 6)
+
+
+def test_cc_local_finish_has_no_round_cap(spark):
+    """The round cap guards only the loop: under the default bound the
+    26-node chain that raises at max_iter=20 above comes back exact
+    from the driver finish."""
+    nodes, edges = _chain(spark, 26)
+    got = dedup.connected_components(nodes, edges, max_iter=20).collect()
+    assert {(r["node"], r["lbl"]) for r in got} == {(i, 1) for i in range(1, 27)}
+
+
+def _job_descriptions(sc, group):
+    """The ``spark.job.description`` of each job of ``group``, in job
+    order (None for a job run without one)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    out = []
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        d = store.job(jid).description()
+        out.append(d.get() if d.isDefined() else None)
+    return out
+
+
+@pytest.mark.parametrize("bound, branch", [
+    (0, "connected_components: round "),
+    (float("inf"), "connected_components: local-finish (n=6)"),
+])
+def test_cc_jobs_name_their_branch(spark, monkeypatch, bound, branch):
+    """Every kernel job carries a description naming its phase and
+    branch, and the caller's description is back afterwards: the
+    result's own jobs run under it."""
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", bound)
+    sc = spark.sparkContext
+    group = f"cc-branch-{bound}"
+    nodes, edges = _chain(spark, 4)
+    sc.setJobGroup(group, "caller")
+    try:
+        labels = dedup.connected_components(nodes, edges)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        labels.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    got = _job_descriptions(sc, group)
+    assert got[0] == "connected_components: edges"
+    assert got[-1] == "caller"
+    kernel = [d for d in got if d != "caller"]
+    assert all(d.startswith(branch) for d in kernel[1:]), got
+    other = "local-finish" if bound == 0 else ": round "
+    assert not any(other in d for d in kernel), got
 
 
 def test_fixpoint_restores_shuffle_conf_when_step_raises(spark):
@@ -308,10 +364,27 @@ def test_iterative_shuffle_parts_sizing(conf_parts, n_rows, want):
     assert s.conf.get("spark.sql.shuffle.partitions") == str(conf_parts)
 
 
-def test_star_cc_matches_propagation(spark):
+def _assert_branches_match_star(monkeypatch, nodes, edges, max_iter=40):
+    """connected_components with the local-finish bound at 0 (the
+    distributed loop) and at ∞ (the driver finish) returns the same
+    rows and schema as connected_components_star; returns the rows."""
+
+    def rows(df):
+        key = lambda r: (r["node"] is None, r["node"])  # noqa: E731
+        return sorted(df.collect(), key=key), df.schema
+
+    star = rows(dedup.connected_components_star(nodes, edges))
+    for bound in (0, float("inf")):
+        monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", bound)
+        got = rows(dedup.connected_components(nodes, edges, max_iter))
+        assert got == star, (bound, got, star)
+    return {(r["node"], r["lbl"]) for r in star[0]}
+
+
+def test_star_cc_matches_propagation(spark, monkeypatch):
     """connected_components_star (alternating large/small star — the
-    O(log n)-round scale path) must produce IDENTICAL labels to the
-    registered min-label propagation on: a chain + isolated nodes, a
+    O(log n)-round scale path) must produce IDENTICAL labels to both
+    branches of the registered kernel on: a chain + isolated nodes, a
     batch of seeded random graphs (varied density incl. long chains),
     and the real co-order graph at sf0.01."""
     import random
@@ -321,21 +394,10 @@ def test_star_cc_matches_propagation(spark):
         registry,
     )
 
-    def labels(nodes, edges):
-        prop = {
-            r["node"]: r["lbl"]
-            for r in dedup.connected_components(nodes, edges).collect()
-        }
-        star = {
-            r["node"]: r["lbl"]
-            for r in dedup.connected_components_star(nodes, edges).collect()
-        }
-        return prop, star
-
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "node long")
     edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
-    prop, star = labels(nodes, edges)
-    assert star == prop == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
+    got = _assert_branches_match_star(monkeypatch, nodes, edges)
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5)}
 
     rng = random.Random(42)
     for n, m in [(12, 6), (20, 25), (30, 15)]:
@@ -345,38 +407,45 @@ def test_star_cc_matches_propagation(spark):
         es = [(a, b) for a, b in es if a != b] or [(1, 2)]
         nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "node long")
         edges = spark.createDataFrame(es, "src long, dst long")
-        prop, star = labels(nodes, edges)
-        assert star == prop, (n, m, es)
+        _assert_branches_match_star(monkeypatch, nodes, edges)
     # a pure long chain — worst case for propagation (diameter rounds),
-    # the case star contraction exists for. Propagation needs a round
-    # cap past the 25-hop diameter to converge (below it, it raises
+    # the case star contraction exists for. The loop needs a round cap
+    # past the 25-hop diameter to converge (below it, it raises
     # AlgorithmScaleLimit — test_cc_raises_past_round_cap); the O(log n)
     # star rounds need no tuning.
-    chain = [(i, i + 1) for i in range(1, 26)]
-    nodes = spark.createDataFrame([(i,) for i in range(1, 27)], "node long")
-    edges = spark.createDataFrame(chain, "src long, dst long")
-    prop = {
-        r["node"]: r["lbl"]
-        for r in dedup.connected_components(nodes, edges, max_iter=40).collect()
-    }
-    star = {
-        r["node"]: r["lbl"]
-        for r in dedup.connected_components_star(nodes, edges).collect()
-    }
-    assert star == prop and set(star.values()) == {1}
+    nodes, edges = _chain(spark, 26)
+    got = _assert_branches_match_star(monkeypatch, nodes, edges)
+    assert {lbl for _, lbl in got} == {1}
 
     t = registry.load_tables(spark, "/root/testdata/sf0.01", ("lineitem",))
     want = {
         (r["l_partkey"], r["component"])
         for r in analytics.copair_components(t).collect()
     }
-    und = analytics.coorder_edges(t["lineitem"])
     nodes = t["lineitem"].select(F.col("l_partkey").alias("node")).distinct()
-    got = {
-        (r["node"], r["lbl"])
-        for r in dedup.connected_components_star(nodes, und).collect()
-    }
+    got = _assert_branches_match_star(
+        monkeypatch, nodes, analytics.coorder_graph(t["lineitem"])
+    )
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize("node_type", ["int", "long"])
+@pytest.mark.parametrize("node_ids, edge_rows", [
+    pytest.param(range(1, 4), [], id="empty-edges"),
+    pytest.param([], [(1, 2)], id="empty-nodes"),
+    pytest.param(range(1, 6), [(1, None), (None, 3), (2, 3), (4, 4)],
+                 id="null-endpoints-and-self-loop"),
+    pytest.param(range(1, 6), [(1, 2), (2, 1), (1, 2), (4, 3), (3, 4)],
+                 id="duplicate-and-reversed"),
+])
+def test_cc_branches_on_edge_inputs(spark, monkeypatch, node_type, node_ids,
+                                    edge_rows):
+    """Both branches equal the star kernel, schema included, on the
+    inputs the co-order graph never produces."""
+    nodes = spark.createDataFrame([(i,) for i in node_ids], f"node {node_type}")
+    edges = spark.createDataFrame(edge_rows, f"src {node_type}, dst {node_type}")
+    got = _assert_branches_match_star(monkeypatch, nodes, edges)
+    assert {n for n, _ in got} == set(node_ids)
 
 
 def test_mmr_rerank_matches_stepwise_loop_on_random_vectors(spark):
@@ -539,3 +608,61 @@ def test_mmr_desc_key_orders_like_spark():
     assert str(llmops._sql_max([0.1, None, float("nan")])) == "nan"
     assert llmops._sql_max([None, None]) is None
     assert llmops._sql_max([0.1, None, 0.3]) == 0.3
+
+
+def test_coorder_graph_builds_once_per_run(spark, tmp_path, monkeypatch):
+    """copair_components then node_jaccard through run_query on one
+    directory build the co-order edge frame once: node_jaccard runs
+    fewer jobs than it does in a new run, which rebuilds the frame.
+    Overwriting lineitem rebuilds it too, and the answer follows the
+    new file."""
+    import shutil
+
+    import duckdb
+
+    from data_engineering_course_project_2023_spark.plans import (
+        analytics,
+        registry,
+    )
+
+    from .conftest import SF_CORRECT
+    from .parity import compare
+
+    d = str(tmp_path)
+    li = os.path.join(d, "lineitem.parquet")
+    shutil.copy(os.path.join(SF_CORRECT, "lineitem.parquet"), li)
+    builds = []
+    build = analytics.coorder_edges
+    monkeypatch.setattr(
+        analytics, "coorder_edges", lambda li: builds.append(1) or build(li)
+    )
+    sc = spark.sparkContext
+
+    def jobs(name, group):
+        sc.setJobGroup(group, group)
+        try:
+            registry.run_query(name, spark, d).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs("copair_components", "memo-copair")
+    warm = jobs("node_jaccard", "memo-jaccard")
+    assert len(builds) == 1
+
+    monkeypatch.setattr(dedup, "_session_tag", lambda s: "another-run")
+    cold = jobs("node_jaccard", "memo-jaccard-new-run")
+    assert len(builds) == 2 and cold > warm
+
+    os.remove(li)
+    con = duckdb.connect()
+    con.execute(
+        f"COPY (SELECT * FROM read_parquet('{SF_CORRECT}/lineitem.parquet') "
+        f"WHERE l_orderkey % 2 = 0) TO '{li}' (FORMAT parquet)"
+    )
+    con.close()
+    df = registry.run_query("copair_components", spark, d)
+    assert len(builds) == 3
+    assert compare(df, registry.REGISTRY["copair_components"].oracle, d) == []

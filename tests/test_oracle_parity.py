@@ -78,3 +78,18 @@ def test_sized_shuffle_partitions_reads_current_bytes(tmp_path):
     assert registry._sized_shuffle_partitions(str(tmp_path), ("lineitem",)) == 1
     os.truncate(part, 40 << 20)  # sparse: 40 MiB → ceil(40 / 16) = 3
     assert registry._sized_shuffle_partitions(str(tmp_path), ("lineitem",)) == 3
+
+
+@pytest.mark.parametrize("bound", [0, float("inf")], ids=["loop", "local"])
+@pytest.mark.parametrize(
+    "name", ["copair_components", "neardup_clusters", "part_golden_records"]
+)
+def test_cc_consumers_match_oracle_at_both_bounds(spark, monkeypatch, name, bound):
+    """Each connected_components consumer matches its oracle through the
+    distributed loop (bound 0) and through the driver finish (bound ∞)."""
+    from data_engineering_course_project_2023_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", bound)
+    df = registry.run_query(name, spark, SF_CORRECT)
+    problems = compare(df, registry.REGISTRY[name].oracle, SF_CORRECT)
+    assert not problems, f"{name}: " + "; ".join(problems)

@@ -27,8 +27,10 @@ def test_no_tool_module_shadows_the_stdlib():
     assert not names & sys.stdlib_module_names, names & sys.stdlib_module_names
 
 
-def _job(job_id, group, stages):
+def _job(job_id, group, stages, desc=None):
     props = {} if group is None else {"spark.jobGroup.id": group}
+    if desc is not None:
+        props["spark.job.description"] = desc
     return {"Event": "SparkListenerJobStart", "Job ID": job_id,
             "Stage IDs": stages, "Properties": props}
 
@@ -76,6 +78,29 @@ def test_attribute_assigns_each_task_to_one_group_and_drops_warmups():
     assert got[warm]["tasks"] == 3
 
 
+def test_attribute_lists_job_descriptions_per_group():
+    """A group's document counts its jobs per description, in the order
+    first seen, so a profile names the phases and branch a kernel ran."""
+    events = [
+        _job(0, "q", [0], "profile: q"),
+        _job(1, "q", [1], "connected_components: edges"),
+        _job(2, "q", [2], "connected_components: round 0"),
+        _job(3, "q", [3], "connected_components: round 1"),
+        _job(4, "q", [4], "profile: q"),
+        _job(5, "r", [5], "connected_components: local-finish (n=6)"),
+        _job(6, "r", [6]),
+    ]
+    got = attribute(events)
+    assert list(got["q"]["job_descriptions"].items()) == [
+        ("profile: q", 2), ("connected_components: edges", 1),
+        ("connected_components: round 0", 1),
+        ("connected_components: round 1", 1),
+    ]
+    assert got["r"]["job_descriptions"] == {
+        "connected_components: local-finish (n=6)": 1, "": 1,
+    }
+
+
 def test_profile_cli_smoke(tmp_path):
     out = tmp_path / "profile.json"
     queries = ["star_revenue_by_region_year", "copair_components"]
@@ -94,6 +119,11 @@ def test_profile_cli_smoke(tmp_path):
         assert "error" not in q, q
         assert q["tasks"] > 0 and q["jobs"] > 0 and q["result_rows"] > 0
         assert (tmp_path / "plans" / f"{name}.txt").exists()
+    # the warm-up built the run's co-order graph, so the measured run
+    # reads it from memory and finishes its small graph on the driver
+    cc = doc["queries"]["copair_components"]["job_descriptions"]
+    assert any(d.startswith("connected_components: local-finish") for d in cc), cc
+    assert not any(": round " in d for d in cc), cc
     star = doc["queries"]["star_revenue_by_region_year"]["initial"]
     assert star["nodes"]["BroadcastHashJoin"] == 4
     assert star["nodes"]["BroadcastExchange"] == 4

@@ -19,8 +19,10 @@ query the document holds:
 - ``initial`` / ``final``: `metrics.plan_summary` of the frame's
   initial physical plan and of the write's executed final plan;
 - from the event log, parsed once after ``spark.stop()``: jobs,
-  stages, TaskEnd totals and the top 8 stages by (spill, shuffle
-  write) of the measured group; warm-up stages are excluded;
+  ``job_descriptions`` (job count per ``spark.job.description``, in
+  first-seen order, so a kernel that labels its phases shows which
+  branch ran), stages, TaskEnd totals and the top 8 stages by (spill,
+  shuffle write) of the measured group; warm-up stages are excluded;
 - ``error`` instead of the above when the query raises.
 
 ``--plans DIR`` also writes each frame's formatted explain to
@@ -73,9 +75,10 @@ def attribute(events: Iterable[dict]) -> dict[str, dict]:
     """Fold events into per-job-group engine totals. A stage belongs to
     the group of the first job that lists it (a later job lists it again
     only as skipped); TaskEnds of stages no grouped job listed are
-    dropped. Each group gets ``jobs``, ``stages`` (stages that ran
-    tasks), the ``TASK_TOTALS`` sums and ``top_stages`` (the same sums
-    per stage, for the top 8 by memory spill, then shuffle write)."""
+    dropped. Each group gets ``jobs``, ``job_descriptions`` (job count
+    per job description), ``stages`` (stages that ran tasks), the
+    ``TASK_TOTALS`` sums and ``top_stages`` (the same sums per stage,
+    for the top 8 by memory spill, then shuffle write)."""
     stage_group: dict[int, str] = {}
     stage_names: dict[int, str] = {}
     groups: dict[str, dict] = {}
@@ -83,11 +86,16 @@ def attribute(events: Iterable[dict]) -> dict[str, dict]:
     for ev in events:
         kind = ev.get("Event")
         if kind == "SparkListenerJobStart":
-            g = (ev.get("Properties") or {}).get("spark.jobGroup.id")
+            props = ev.get("Properties") or {}
+            g = props.get("spark.jobGroup.id")
             if g is None:
                 continue
-            groups.setdefault(g, {"jobs": 0, **dict.fromkeys(TASK_TOTALS, 0)})
+            groups.setdefault(g, {"jobs": 0, "job_descriptions": {},
+                                  **dict.fromkeys(TASK_TOTALS, 0)})
             groups[g]["jobs"] += 1
+            descs = groups[g]["job_descriptions"]
+            desc = props.get("spark.job.description", "")
+            descs[desc] = descs.get(desc, 0) + 1
             per_stage.setdefault(g, {})
             for sid in ev.get("Stage IDs") or []:
                 stage_group.setdefault(sid, g)
