@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..functions.expr import spread
-from ..session import fixpoint, iterative_shuffle_parts, job_description
+from ..session import fixpoint, job_description
 from .text import ngrams, tokens
 
 # MinHash: k hash functions derived by slicing md5 digests — md5(seed|s)
@@ -236,10 +236,10 @@ def ngram_jaccard_pairs(
     under the run's stage root and re-read, so every consumer scans
     the durable stage and no executor storage is pinned. Without it,
     the two self-join sides share one shuffle via ReusedExchange and
-    tokenization reruns only for the small ``sizes`` aggregate — the r1
-    ``persist()`` here leaked cached partitions for the session
-    lifetime and would be a memory cliff at scale; staging is the
-    explicit alternative, not a cache.
+    tokenization reruns only for the small ``sizes`` aggregate. No
+    ``persist()``: cached partitions here stay pinned for the session
+    lifetime, a memory cliff at scale; staging is the explicit
+    alternative, not a cache.
     """
     # staged BEFORE the df-count pass, so tokenize runs once and
     # df_counts, the anti-join, sizes and both join sides scan the stage
@@ -497,7 +497,7 @@ class ScaleGuard(RuntimeError):
     regime exceeds its documented scale contract, and names the scale
     path to use instead. Census runners record any ScaleGuard as an
     explicit ``skipped_scale_guard`` row instead of a silent budget
-    death or an unhandled Py4JJavaError (VERDICT_r8 #4, r10 #2)."""
+    death or an unhandled Py4JJavaError."""
 
 
 class LibraryScaleLimit(ScaleGuard):
@@ -565,8 +565,8 @@ def minhash_ml_pairs(
     )
     # Materialize the featurized frame ONCE: it feeds three scans (the
     # LSH fit plus BOTH approxSimilarityJoin sides), and without
-    # truncation each rescan re-runs tokenize+explode+collect_list —
-    # the r2 bench showed the retokenization as a +20% drift. Bounded:
+    # truncation each rescan re-runs tokenize+explode+collect_list
+    # (measured as a +20% bench drift without it). Bounded:
     # one sparse vector per doc.
     feats = tf.transform(sh).localCheckpoint()
     lsh = MinHashLSH(
@@ -621,10 +621,11 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over ``nodes('node')`` / ``edges('src',
     'dst')``, the engine's one CC kernel. Returns (node, lbl) per node
-    with lbl = the min node id of its component. ``nodes`` is distinct
-    and covers every edge endpoint; edges are symmetrized here (pass
-    each undirected edge once), and self-loops and edges with a null
-    endpoint are dropped.
+    with lbl = the min node id of its component, under the node type's
+    own ordering (int, long, or BINARY compared as unsigned bytes).
+    ``nodes`` is distinct and covers every edge endpoint; edges are
+    symmetrized here (pass each undirected edge once), and self-loops
+    and edges with a null endpoint are dropped.
 
     Rule: the symmetrized edges are checkpointed with their count n
     observed on the same job. When n ≤ :data:`LOCAL_FINISH_EDGES` the
@@ -632,12 +633,13 @@ def connected_components(
     ``src < dst`` edges, smaller root winning, then ``nodes`` LEFT JOIN
     the broadcast labels. Above it, min-label propagation: each round
     every node takes the min label over itself and its neighbors, one
-    :func:`session.fixpoint` round (one action). Labels only ever fall,
-    so the label sum is a monotone probe that repeats exactly at the
-    fixpoint. Rounds ≤ component diameter + 1, and only the loop has a
-    round cap: a graph that has not converged by ``max_iter`` raises
-    :class:`AlgorithmScaleLimit` rather than return half-propagated
-    labels. Both branches give the same rows (pinned in
+    :func:`session.fixpoint` round (one action). The probe is the sum
+    of a per-node count of label moves, so it needs no arithmetic on
+    the node type: it only rises, and it repeats exactly in the round
+    where no label moved. Rounds ≤ component diameter + 1, and only the
+    loop has a round cap: a graph that has not converged by
+    ``max_iter`` raises :class:`AlgorithmScaleLimit` rather than return
+    half-propagated labels. Both branches give the same rows (pinned in
     tests/test_cluster_ops.py). Jobs run under the descriptions
     ``connected_components: edges``, then ``…: local-finish (n=…)`` or
     ``…: round k``.
@@ -677,14 +679,23 @@ def connected_components(
         msgs = edges.join(labels, edges.src == labels.node).select(
             F.col("dst").alias("node"), "lbl"
         )
-        return labels.unionByName(msgs).groupBy("node").agg(
-            F.min("lbl").alias("lbl")
+        lbl = F.min("lbl")
+        return (
+            labels.withColumn("own", F.col("lbl"))
+            .unionByName(msgs, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(
+                lbl.alias("lbl"),
+                (F.max("moves") + (lbl < F.max("own")).cast("long")).alias("moves"),
+            )
         )
 
     labels, converged = fixpoint(
-        nodes.select("node", F.col("node").alias("lbl")),
+        nodes.select(
+            "node", F.col("node").alias("lbl"), F.lit(0).cast("long").alias("moves")
+        ),
         step,
-        F.sum("lbl"),
+        F.sum("moves"),
         max_iter,
         n,
         label="connected_components",
@@ -694,100 +705,9 @@ def connected_components(
             f"connected_components: labels still changing after "
             f"{max_iter} rounds of the distributed loop (n={n} "
             f"symmetrized edges > LOCAL_FINISH_EDGES; component diameter "
-            f"> {max_iter - 1}); use connected_components_star, whose "
-            "round count is O(log n) regardless of diameter"
+            f"> {max_iter - 1}); raise max_iter past the diameter"
         )
-    return labels
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """One large-star round: every node u connects its LARGER neighbors
-    to m(u) = min(Γ(u) ∪ {u}). Keyed agg + keyed join only."""
-    b = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    mn = b.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
-    )
-    return (
-        b.filter(F.col("dst") > F.col("src"))
-        .join(mn, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """One small-star round: orient every edge big→small; every node u
-    connects its smaller neighbors AND itself to m(u) = min of them."""
-    o = e.select(
-        F.greatest("src", "dst").alias("src"),
-        F.least("src", "dst").alias("dst"),
-    )
-    mn = o.groupBy("src").agg(F.min("dst").alias("m"))
-    out = (
-        o.join(mn, "src")
-        .select(F.col("dst").alias("v"), "m")
-        .unionByName(mn.select(F.col("src").alias("v"), "m"))
-    )
-    return (
-        out.filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    nodes: DataFrame, edges: DataFrame, max_rounds: int = 30
-) -> DataFrame:
-    """Alternating large-star / small-star connected components — the
-    O(log n)-ROUND scale path next to :func:`connected_components`
-    (whose round count is the component DIAMETER). On a 1000-executor
-    cluster every round is a full synchronization barrier, so a
-    long-chain graph (diameter ≫ log n) pays for it under label
-    propagation; star contraction converges in O(log n) rounds
-    regardless of diameter (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14 — public algorithm). Per round:
-    two keyed aggregations + two keyed joins, nothing all-pairs; hub
-    nodes make the min-neighbor agg skew-prone, which partial
-    aggregation (map-side combine on the groupBy) absorbs.
-
-    Kept as an internal variant behind the registered propagation
-    queries: results are IDENTICAL — pinned in pytest on both the
-    co-order graph and randomized small graphs — so the registered
-    oracle semantics stay the simple spelling.
-
-    Convergence: the star-edge set is a fixpoint of large∘small; exact
-    set-equality is checked per round via ``exceptAll`` on the two
-    materialized edge frames (edge-sized, keyed — the per-round cost
-    the O(log n) round count amortizes).
-    """
-    n_edges = Observation()
-    cur = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .observe(n_edges, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    with iterative_shuffle_parts(cur.sparkSession, n_edges.get["n"]):
-        for _ in range(max_rounds):
-            nxt = _small_star(_large_star(cur)).localCheckpoint()
-            changed = (
-                nxt.exceptAll(cur).unionByName(cur.exceptAll(nxt))
-                .limit(1)
-                .count()
-            )
-            cur = nxt
-            if changed == 0:
-                break
-    # cur is now a star forest: (member, root). Labels: members point to
-    # their root, roots and isolated nodes to themselves.
-    return nodes.join(
-        cur.select(F.col("src").alias("node"), F.col("dst").alias("root")),
-        "node",
-        "left",
-    ).select("node", F.coalesce("root", "node").alias("lbl"))
+    return labels.select("node", "lbl")
 
 
 def neardup_clusters(
@@ -931,7 +851,7 @@ def bloom_novel(
 
 
 # prefix_jaccard_pairs' candidate join generates exactly Σ (prefix-df)²
-# slots. Measured (round 11): sf0.01 6.0e3, sf0.1 3.0e5, sf1z (50 k
+# slots. Measured: sf0.01 6.0e3, sf0.1 3.0e5, sf1z (50 k
 # Zipf docs) 5.6e5 — all green in seconds — vs the sf10 fixed-vocab
 # axis where the full-index Σ df² ≈ 2e10 and the census row died at
 # budget_exceeded(1800 s). 5e8 sits three decades above every measured
@@ -978,17 +898,17 @@ def prefix_jaccard_pairs(
     the ARRAY frame at sf0.1 — materializing array payloads costs more
     than the reuse saves). The narrow PRE-AGGREGATION frame
     (doc_id, (df, shingle)), by contrast, IS localCheckpointed when
-    the scale guard is on (round 12): the guard's probe is a separate
-    eager action, and materializing the highest array-free point of
-    the chain lets the probe and the main job share the tokenize+df
-    derivation instead of running it twice (the r11 regression). At
+    the scale guard is on: the guard's probe is a separate eager
+    action, and materializing the highest array-free point of the
+    chain lets the probe and the main job share the tokenize+df
+    derivation instead of running it twice. At
     sf0.1 the naive inverted index is still faster (2.1 s):
     prefix filtering's candidate savings pay at corpus sizes where
     Σdf² over common shingles dominates — this is the at-scale
     spelling, and the crossover is the point of keeping BOTH
     operators.
 
-    Scale guard (``max_candidate_slots``, VERDICT_r10 #2): the exact
+    Scale guard (``max_candidate_slots``): the exact
     prefix is lossless but structurally unbounded on saturated-vocab
     corpora — when the vocabulary stops growing (template/fixed-vocab
     strata), even the rarest shingles' df scales with the corpus and
@@ -1008,30 +928,12 @@ def prefix_jaccard_pairs(
         "doc_id", F.struct(F.col("df"), F.col("shingle")).alias("ks")
     )
     if max_candidate_slots is not None:
-        # Round 12 (VERDICT r11 #2): the slot-probe guard below is a
-        # separate eager action, and OSS Spark never reuses exchanges
-        # ACROSS jobs — in round 11 the probe's chain (checkpointing
-        # only the exploded prefix INDEX) re-ran the whole
-        # tokenize→df→join derivation a second time inside the main
-        # job's verify sides (driver-confirmed 2.35→5.46 s at sf0.1).
-        # Materializing HERE — the narrow (doc_id, (df, shingle)) frame
-        # BEFORE the per-doc aggregation — is the highest point both
-        # the probe and the main job can share without paying array-
-        # payload materialization (checkpointing `docs` measured
-        # 12.6 s wall in the r11 three-way A/B): the probe's
-        # collect_list pass and the main job's docs/idx subtrees all
-        # scan this checkpoint, so tokenize+freq runs exactly once per
-        # query. Measured same-box A/B (task_metrics --warmups 1,
-        # sf0.1): executor run 39.9→22.7 s, CPU 23.8→15.2 s, tasks
-        # 153→84, wall 6.77→5.80 s; the final frame's plan drops from
-        # 8 documents scans / 28 Exchanges to 0 / 14
-        # (plans/r12/prefix_jaccard_{before,after}.txt — the one
-        # remaining scan happens inside the checkpoint job).
-        # localCheckpoint (not stage_parquet) is deliberate: the frame
-        # is consumed by this one query only, within one job tree —
-        # see the localCheckpoint disposition table in
-        # OPTIMIZATION_r12.md for the fault-tolerance tradeoff at
-        # cluster scale.
+        # Checkpoint the narrow (doc_id, (df, shingle)) frame: it is the
+        # highest array-free point that both the eager slot probe below
+        # and the main job derive from, and OSS Spark never reuses an
+        # exchange across jobs, so tokenize+df then runs once per query
+        # (sf0.1 A/B: executor CPU 23.8 → 15.2 s, wall 6.77 → 5.80 s).
+        # One query consumes it, so localCheckpoint, not stage_parquet.
         keyed = keyed.localCheckpoint()
     docs = keyed.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("ks")).alias("arr")
@@ -1052,23 +954,13 @@ def prefix_jaccard_pairs(
         "doc_id", F.explode("prefix").alias("shingle")
     )
     if max_candidate_slots is not None:
-        # Typed scale guard (VERDICT_r10 #2): the candidate join below
-        # generates exactly Σ (prefix-df)² slots, so measure that sum
-        # BEFORE running the join — one linear aggregation over the
-        # prefix index. The probe necessarily pays one collect_list
-        # pass of its own (it is a separate eager action), but it and
-        # the main job both derive from the `keyed` localCheckpoint
-        # above, so the expensive tokenize→df derivation runs once.
-        # The index itself is NOT checkpointed (round 12): inside the
-        # main job the candidate sides and the verify sides share the
-        # groupBy(doc_id) exchange via ReusedExchange (the pre-guard
-        # r10 shape, measured 2.8 s vs 5.0 s with an array
-        # checkpoint), and a second checkpoint here only added
-        # serialization. Two r11 alternatives remain rejected:
-        # checkpointing `docs` (array payloads through the block
-        # store, 12.6 s wall) and rebuilding the index via row_number
-        # (global shuffle-sort of the full shingle stream, CPU
-        # 31.1 s vs 20.6 s).
+        # Typed scale guard: the candidate join below generates exactly
+        # Σ (prefix-df)² slots, so measure that sum BEFORE running the
+        # join — one linear aggregation over the prefix index, derived
+        # from the `keyed` checkpoint above. The index itself is not
+        # checkpointed: the candidate and verify sides share the
+        # groupBy(doc_id) exchange via ReusedExchange (2.8 s vs 5.0 s
+        # with an array checkpoint at sf0.1).
         slots = (
             idx.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("dfp"))
@@ -1164,13 +1056,11 @@ def _capped_shingle_candidates(
     # injected/organic unique n-grams they would monopolize the rarest-R
     # ranks (measured: containment recall 32/46 → 46/46 at sf0.1z once
     # excluded). Dropping them is lossless for the candidate set.
-    # Deliberately NOT checkpointed (round 11): the plan audit showed
-    # 122 Exchange nodes from this chain's replication, but a measured
-    # A/B (pref + post-cut sh checkpoints) read +33% executor CPU and
-    # +29% shuffle at sf0.1 — runtime exchange/broadcast reuse already
-    # shares the replicated subtrees, and materialization only adds
-    # serialization. The formatted plan overstates real execution here
-    # (same lesson as token_pmi).
+    # Deliberately NOT checkpointed: runtime exchange/broadcast reuse
+    # already shares this chain's replicated subtrees, so checkpoints
+    # only add serialization (pref + post-cut sh checkpoints measured
+    # +33% executor CPU and +29% shuffle at sf0.1), whatever the
+    # formatted plan's Exchange count suggests.
     pref = (
         kept.join(dfc.filter(F.col("df") >= 2), "shingle")
         .withColumn(

@@ -207,9 +207,12 @@ def fixpoint(
     repeats, at most ``max_rounds`` times; return (final state,
     converged). The one checkpoint loop of the iterative graph family.
 
-    The probe must be MONOTONE over the rounds (a label sum that only
-    falls, a row count that only shrinks), so a repeated value means an
-    unchanged state and every further round would be a no-op. Each
+    The probe must be MONOTONE over the rounds and repeat only when the
+    state is unchanged, so a repeated value means every further round
+    would be a no-op: a cumulative count of label moves that only rises
+    (``connected_components``), or a surviving-edge count that only
+    shrinks (``kcore_nodes``). A sum of the labels themselves is not
+    type-agnostic: it fails analysis on BINARY node ids. Each
     round is ONE action: ``step``, then ``observe(probe)``, then
     ``localCheckpoint()`` — the probe rides the checkpoint job, and the
     checkpoint truncates lineage so the plan never doubles per round

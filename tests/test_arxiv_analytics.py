@@ -71,6 +71,33 @@ def test_analytics_invariants_vs_duckdb(spark, axis_dir, run_root):
     }
 
 
+@pytest.mark.parametrize("bound", [0, float("inf")])
+def test_collab_communities_at_both_bounds(spark, axis_dir, run_root,
+                                           monkeypatch, bound):
+    """collab_communities on the distributed loop (bound 0) and on the
+    driver finish (bound ∞) over the BINARY author keys: each has the
+    census twin's component-size structure."""
+    from collections import Counter
+
+    from data_engineering_course_project_2023_spark.operators import dedup
+    from data_engineering_course_project_2023_spark.plans import (
+        arxiv_analytics as A,
+    )
+
+    monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", bound)
+    collab = spark.read.parquet(os.path.join(run_root, "collab"))
+    rows = A.collab_communities(collab).collect()
+    sizes = Counter(r["component"] for r in rows).values()
+    got = {
+        "ana_comm_n": len(sizes),
+        "ana_comm_max_size": max(sizes),
+        "ana_comm_sizesq_sum": sum(s * s for s in sizes),
+    }
+    exp = duckdb_analytics(axis_dir)
+    assert got == {k: exp[k] for k in got}
+    assert got["ana_comm_n"] > 0
+
+
 def test_union_find_structure():
     """The communities oracle itself: two triangles + an isolated edge
     + a chain — component structure independent of edge order."""

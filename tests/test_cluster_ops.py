@@ -216,16 +216,16 @@ def _chain(spark, n):
 def test_cc_raises_past_round_cap(spark, monkeypatch):
     """A component whose diameter outruns max_iter must not come back
     half-propagated from the distributed loop (bound 0): the 26-node
-    chain (26 rounds) raises the typed ScaleGuard at max_iter=20,
-    naming the star path."""
+    chain (26 rounds) raises the typed ScaleGuard at max_iter=20."""
     monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", 0)
     nodes, edges = _chain(spark, 26)
-    with pytest.raises(dedup.AlgorithmScaleLimit, match="connected_components_star"):
+    with pytest.raises(dedup.AlgorithmScaleLimit,
+                       match="labels still changing after 20 rounds"):
         dedup.connected_components(nodes, edges, max_iter=20)
 
 
 def test_cc_runs_one_action_per_round(spark, monkeypatch):
-    """The label-sum probe rides each round's checkpoint job via
+    """The label-move probe rides each round's checkpoint job via
     observe(), so an extra round of the distributed loop (bound 0)
     costs exactly one round's jobs. Under AQE one round's checkpoint
     action runs 5 jobs (its query stages plus the checkpoint itself) —
@@ -364,29 +364,62 @@ def test_iterative_shuffle_parts_sizing(conf_parts, n_rows, want):
     assert s.conf.get("spark.sql.shuffle.partitions") == str(conf_parts)
 
 
-def _assert_branches_match_star(monkeypatch, nodes, edges, max_iter=40):
+def _bfs_labels(node_ids, edge_rows):
+    """Reference CC in plain Python: breadth-first search over the edges
+    whose endpoints are both set; every node's label is the min node of
+    its component, under Python's ordering (bytes compare unsigned)."""
+    adj: dict = {}
+    for a, b in edge_rows:
+        if a is not None and b is not None:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    label: dict = {}
+    for v in node_ids:
+        if v in label:
+            continue
+        comp = [v]
+        seen = {v}
+        for u in comp:
+            for w in adj.get(u, ()):
+                if w not in seen:
+                    seen.add(w)
+                    comp.append(w)
+        root = min(comp)
+        label.update((u, root) for u in comp)
+    return {(v, label[v]) for v in node_ids}
+
+
+def _assert_branches_match_bfs(monkeypatch, nodes, edges, max_iter=40):
     """connected_components with the local-finish bound at 0 (the
     distributed loop) and at ∞ (the driver finish) returns the same
-    rows and schema as connected_components_star; returns the rows."""
+    rows and schema, with ``lbl`` of the node type, and both equal the
+    BFS reference; returns the (node, lbl) set."""
 
     def rows(df):
         key = lambda r: (r["node"] is None, r["node"])  # noqa: E731
         return sorted(df.collect(), key=key), df.schema
 
-    star = rows(dedup.connected_components_star(nodes, edges))
+    got = {}
     for bound in (0, float("inf")):
         monkeypatch.setattr(dedup, "LOCAL_FINISH_EDGES", bound)
-        got = rows(dedup.connected_components(nodes, edges, max_iter))
-        assert got == star, (bound, got, star)
-    return {(r["node"], r["lbl"]) for r in star[0]}
+        got[bound] = rows(dedup.connected_components(nodes, edges, max_iter))
+    assert got[0] == got[float("inf")], got
+    out, schema = got[0]
+    assert schema["lbl"].dataType == nodes.schema["node"].dataType
+    want = _bfs_labels(
+        [r["node"] for r in nodes.collect()],
+        [(r["src"], r["dst"]) for r in edges.collect()],
+    )
+    labels = {(r["node"], r["lbl"]) for r in out}
+    assert labels == want
+    return labels
 
 
-def test_star_cc_matches_propagation(spark, monkeypatch):
-    """connected_components_star (alternating large/small star — the
-    O(log n)-round scale path) must produce IDENTICAL labels to both
-    branches of the registered kernel on: a chain + isolated nodes, a
-    batch of seeded random graphs (varied density incl. long chains),
-    and the real co-order graph at sf0.01."""
+def test_cc_branches_match_bfs(spark, monkeypatch):
+    """Both branches of the CC kernel equal a plain-Python BFS on: a
+    chain + isolated nodes, a batch of seeded random graphs (varied
+    density incl. long chains), a 26-node chain and the real co-order
+    graph at sf0.01."""
     import random
 
     from data_engineering_course_project_2023_spark.plans import (
@@ -396,7 +429,7 @@ def test_star_cc_matches_propagation(spark, monkeypatch):
 
     nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "node long")
     edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "src long, dst long")
-    got = _assert_branches_match_star(monkeypatch, nodes, edges)
+    got = _assert_branches_match_bfs(monkeypatch, nodes, edges)
     assert got == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5)}
 
     rng = random.Random(42)
@@ -407,14 +440,13 @@ def test_star_cc_matches_propagation(spark, monkeypatch):
         es = [(a, b) for a, b in es if a != b] or [(1, 2)]
         nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "node long")
         edges = spark.createDataFrame(es, "src long, dst long")
-        _assert_branches_match_star(monkeypatch, nodes, edges)
-    # a pure long chain — worst case for propagation (diameter rounds),
-    # the case star contraction exists for. The loop needs a round cap
-    # past the 25-hop diameter to converge (below it, it raises
-    # AlgorithmScaleLimit — test_cc_raises_past_round_cap); the O(log n)
-    # star rounds need no tuning.
+        _assert_branches_match_bfs(monkeypatch, nodes, edges)
+    # a pure long chain — worst case for propagation (diameter rounds).
+    # The loop needs a round cap past the 25-hop diameter to converge
+    # (below it, it raises AlgorithmScaleLimit —
+    # test_cc_raises_past_round_cap).
     nodes, edges = _chain(spark, 26)
-    got = _assert_branches_match_star(monkeypatch, nodes, edges)
+    got = _assert_branches_match_bfs(monkeypatch, nodes, edges)
     assert {lbl for _, lbl in got} == {1}
 
     t = registry.load_tables(spark, "/root/testdata/sf0.01", ("lineitem",))
@@ -423,13 +455,20 @@ def test_star_cc_matches_propagation(spark, monkeypatch):
         for r in analytics.copair_components(t).collect()
     }
     nodes = t["lineitem"].select(F.col("l_partkey").alias("node")).distinct()
-    got = _assert_branches_match_star(
+    got = _assert_branches_match_bfs(
         monkeypatch, nodes, analytics.coorder_graph(t["lineitem"])
     )
     assert got == want and len(got) > 0
 
 
-@pytest.mark.parametrize("node_type", ["int", "long"])
+def _binary_key(i):
+    """A 16-byte BINARY node id for ``i`` < 128. Odd ids get a first
+    byte ≥ 0x80, so signed and unsigned byte orders disagree on which
+    of two neighbouring ids is smaller."""
+    return bytes([i | (i % 2) << 7]) + bytes(15)
+
+
+@pytest.mark.parametrize("node_type", ["int", "long", "binary"])
 @pytest.mark.parametrize("node_ids, edge_rows", [
     pytest.param(range(1, 4), [], id="empty-edges"),
     pytest.param([], [(1, 2)], id="empty-nodes"),
@@ -437,14 +476,24 @@ def test_star_cc_matches_propagation(spark, monkeypatch):
                  id="null-endpoints-and-self-loop"),
     pytest.param(range(1, 6), [(1, 2), (2, 1), (1, 2), (4, 3), (3, 4)],
                  id="duplicate-and-reversed"),
+    # node 3 still moves in round 2 while the count of distinct labels
+    # stays at 2: the probe must not stop there.
+    pytest.param([1, 3, 4, 5], [(5, 1), (3, 5), (3, 4)],
+                 id="late-move"),
 ])
 def test_cc_branches_on_edge_inputs(spark, monkeypatch, node_type, node_ids,
                                     edge_rows):
-    """Both branches equal the star kernel, schema included, on the
-    inputs the co-order graph never produces."""
+    """Both branches equal the BFS reference, schema included, on the
+    inputs the co-order graph never produces and on 16-byte BINARY ids
+    (the surrogate keys of collab_communities)."""
+    key = _binary_key if node_type == "binary" else int
+    node_ids = [key(i) for i in node_ids]
+    edge_rows = [
+        tuple(None if v is None else key(v) for v in row) for row in edge_rows
+    ]
     nodes = spark.createDataFrame([(i,) for i in node_ids], f"node {node_type}")
     edges = spark.createDataFrame(edge_rows, f"src {node_type}, dst {node_type}")
-    got = _assert_branches_match_star(monkeypatch, nodes, edges)
+    got = _assert_branches_match_bfs(monkeypatch, nodes, edges)
     assert {n for n, _ in got} == set(node_ids)
 
 
