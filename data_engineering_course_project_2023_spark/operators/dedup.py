@@ -31,6 +31,7 @@ from urllib.parse import urlparse
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+from pyspark.sql.window import Window
 
 from ..functions.expr import spread
 from ..session import fixpoint, job_description
@@ -215,6 +216,65 @@ def shingles(
     )
 
 
+def _df_capped(sh: DataFrame, max_df: int | None) -> DataFrame:
+    """``sh`` minus the shingles more than ``max_df`` documents hold
+    (skew and noise control, like CountVectorizer's maxDF); ``None``
+    keeps every shingle."""
+    if max_df is None:
+        return sh
+    heavy = (
+        sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+    )
+    return sh.join(F.broadcast(heavy), "shingle", "left_anti")
+
+
+def overlap_counts(kept: DataFrame, cands: DataFrame | None = None) -> DataFrame:
+    """The near-dup family's one verify step: ``(doc_a, doc_b,
+    n_inter, n_a, n_b)`` over a kept ``(doc_id, shingle)`` frame, with
+    ``n_inter`` = |S(a) ∩ S(b)| and ``n_a``, ``n_b`` the set sizes.
+
+    With no ``cands`` it counts every pair ``doc_a < doc_b`` that
+    shares a shingle: the full inverted index, Σ df² join slots. With
+    ``cands`` it verifies exactly the distinct ``(doc_a, doc_b)`` rows
+    given, in their orientation; a row that shares no shingle is
+    dropped, which no candidate rule emits."""
+    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    ka = kept.select(F.col("doc_id").alias("doc_a"), "shingle")
+    kb = kept.select(F.col("doc_id").alias("doc_b"), "shingle")
+    if cands is None:
+        slots = ka.join(kb, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
+    else:
+        slots = cands.join(ka, "doc_a").join(kb, ["doc_b", "shingle"])
+    # Every pair's docs have a size, so left joins change no row; but
+    # a caller that never reads n_b (containment) lets the optimizer
+    # drop that join, and joining the unrenamed size frame lets one
+    # broadcast serve both sides and any candidate rule that joins the
+    # same sizes (sf0.1: containment_pairs_capped runs 22 jobs, 26 with
+    # inner joins on renamed size frames).
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    return (
+        slots.groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+        .join(sa, F.col("doc_a") == F.col("sa.doc_id"), "left")
+        .join(sb, F.col("doc_b") == F.col("sb.doc_id"), "left")
+        .select("doc_a", "doc_b", "n_inter",
+                F.col("sa.n_sh").alias("n_a"), F.col("sb.n_sh").alias("n_b"))
+    )
+
+
+def _jaccard_at_least(counts: DataFrame, tau: Column | float) -> DataFrame:
+    """``(doc_a, doc_b, jaccard)`` of the :func:`overlap_counts` rows
+    with jaccard = n_inter / (n_a + n_b − n_inter) >= ``tau``, divided
+    in doubles as the oracles spell it."""
+    jac = F.col("n_inter").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    ).cast("double")
+    return counts.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= tau
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -224,54 +284,16 @@ def ngram_jaccard_pairs(
     max_df: int | None = 1000,
     stage: str | None = None,
 ) -> DataFrame:
-    """X2a: exact n-gram Jaccard similarity join via inverted index.
+    """X2a: exact n-gram Jaccard pairs. Candidates: every pair sharing
+    a shingle of the ``max_df``-capped space (the full inverted index).
+    Metric: Jaccard >= ``threshold`` on that space.
 
-    intersection from the shingle equi-join, union by inclusion-
-    exclusion; jaccard = |A∩B| / (|A|+|B|-|A∩B|) — int/int division,
-    engine-deterministic. ``max_df`` drops ubiquitous shingles (skew +
-    noise control at scale, like CountVectorizer's maxDF).
-
-    The shingle frame feeds sizes + BOTH self-join sides. With a
-    ``stage`` name (the 100 TB path) it is written once to parquet
-    under the run's stage root and re-read, so every consumer scans
-    the durable stage and no executor storage is pinned. Without it,
-    the two self-join sides share one shuffle via ReusedExchange and
-    tokenization reruns only for the small ``sizes`` aggregate. No
-    ``persist()``: cached partitions here stay pinned for the session
-    lifetime, a memory cliff at scale; staging is the explicit
-    alternative, not a cache.
-    """
-    # staged BEFORE the df-count pass, so tokenize runs once and
-    # df_counts, the anti-join, sizes and both join sides scan the stage
-    sh = _staged_shingles(df, text_col, id_col, n, stage)
-    if max_df is not None:
-        df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh = (
-            sh.join(F.broadcast(df_counts.filter(F.col("df") > max_df)),
-                    "shingle", "left_anti")
-        )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    With a ``stage`` name the shingle frame is written once to parquet
+    under the run's stage root, so tokenize runs once and the df cut,
+    the sizes and both join sides scan the stage; no ``persist()``,
+    which would pin executor storage for the session."""
+    sh = _df_capped(_staged_shingles(df, text_col, id_col, n, stage), max_df)
+    return _jaccard_at_least(overlap_counts(sh), threshold)
 
 
 def minhash_signatures(
@@ -870,58 +892,19 @@ def prefix_jaccard_pairs(
     threshold_den: int = 5,
     max_candidate_slots: int | None = PREFIX_JACCARD_MAX_SLOTS,
 ) -> DataFrame:
-    """X2 at-scale variant: PPJoin-style PREFIX-FILTERED set-similarity
-    join. The inverted-index join (ngram_jaccard_pairs) indexes every
-    shingle; prefix filtering indexes only each document's
-    ``|x| − ⌈τ|x|⌉ + 1`` RAREST shingles (global-frequency-ascending
-    order), which is lossless for Jaccard ≥ τ — J(x,y) ≥ τ implies
-    |x∩y| ≥ τ|x|, so two qualifying sets must collide inside those
-    prefixes — while ubiquitous shingles sort LAST and never enter any
-    prefix: the skew/noise cut falls out of the algorithm instead of a
-    max_df knob, and candidate volume drops from Σ df² over all
-    shingles to Σ df² over rare ones.
+    """X2: PPJoin prefix-filtered Jaccard pairs. Candidates: pairs whose
+    prefixes collide, a document's prefix being its |x| − ⌈τ|x|⌉ + 1
+    rarest shingles in global (df, shingle) order. That is lossless for
+    Jaccard >= τ, because J(x, y) >= τ implies |x ∩ y| >= τ|x|; the
+    DuckDB oracle is the full inverted index. Metric: Jaccard >= τ =
+    ``threshold_num`` / ``threshold_den`` over every shingle. τ is
+    rational so ⌈τn⌉ is exact integer arithmetic: a float ceil(0.8·n)
+    under-computes at n = 5k.
 
-    τ is a RATIONAL (threshold_num/threshold_den) so the prefix length
-    uses exact integer arithmetic — ⌈τn⌉ via (num·n + den − 1) div den;
-    a float ceil(0.8·n) under-computes at n=5k (0.8 is not binary) and
-    would silently break the completeness guarantee.
-
-    Verification is exact per candidate: sorted distinct-shingle arrays
-    join back by doc id and intersect (array_intersect — doc-bounded
-    work), so the result EQUALS the naive algorithm's; the DuckDB
-    oracle runs the naive full inverted index, making the optimization
-    itself the thing under test.
-
-    The doc-array frame feeds its consumers (prefix index + both
-    verify sides) UNMATERIALIZED: they share the groupBy exchange via
-    ReusedExchange (measured 2.8 s vs 5.0 s with a localCheckpoint of
-    the ARRAY frame at sf0.1 — materializing array payloads costs more
-    than the reuse saves). The narrow PRE-AGGREGATION frame
-    (doc_id, (df, shingle)), by contrast, IS localCheckpointed when
-    the scale guard is on: the guard's probe is a separate eager
-    action, and materializing the highest array-free point of the
-    chain lets the probe and the main job share the tokenize+df
-    derivation instead of running it twice. At
-    sf0.1 the naive inverted index is still faster (2.1 s):
-    prefix filtering's candidate savings pay at corpus sizes where
-    Σdf² over common shingles dominates — this is the at-scale
-    spelling, and the crossover is the point of keeping BOTH
-    operators.
-
-    Scale guard (``max_candidate_slots``): the exact
-    prefix is lossless but structurally unbounded on saturated-vocab
-    corpora — when the vocabulary stops growing (template/fixed-vocab
-    strata), even the rarest shingles' df scales with the corpus and
-    Σ(prefix-df)² goes quadratic (measured: census budget death at
-    sf10 fixed-vocab, Σdf² ≈ 2e10). The probe measures the exact slot
-    count with one linear aggregation and refuses past the guard with
-    a typed :class:`AlgorithmScaleLimit` naming ngram_jaccard_capped
-    as the scale path — no census row is ever a silent 30-minute
-    budget death. ``None`` disables (the oracle twins never probe).
-    """
-    from pyspark.sql.window import Window  # noqa: F401  (doc parity)
-
-    tau = F.lit(threshold_num) / F.lit(threshold_den)
+    ``max_candidate_slots`` bounds Σ (prefix-df)², the candidate join's
+    slot count, measured by one linear probe; past it the query raises
+    :class:`AlgorithmScaleLimit` naming ngram_jaccard_capped, the scale
+    path. ``None`` skips the probe."""
     sh = shingles(df, text_col, id_col, n)
     freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     keyed = sh.join(freq, "shingle").select(
@@ -929,38 +912,29 @@ def prefix_jaccard_pairs(
     )
     if max_candidate_slots is not None:
         # Checkpoint the narrow (doc_id, (df, shingle)) frame: it is the
-        # highest array-free point that both the eager slot probe below
-        # and the main job derive from, and OSS Spark never reuses an
-        # exchange across jobs, so tokenize+df then runs once per query
-        # (sf0.1 A/B: executor CPU 23.8 → 15.2 s, wall 6.77 → 5.80 s).
-        # One query consumes it, so localCheckpoint, not stage_parquet.
+        # highest array-free point that the eager slot probe, the prefix
+        # index and the verify step all derive from, and OSS Spark never
+        # reuses an exchange across jobs, so tokenize+df then runs once
+        # per query (sf0.1 A/B: executor CPU 23.8 → 15.2 s, wall
+        # 6.77 → 5.80 s). The sorted-array frame stays unmaterialized:
+        # checkpointing it measured 5.0 s against 2.8 s at sf0.1.
         keyed = keyed.localCheckpoint()
-    docs = keyed.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("ks")).alias("arr")
-    ).select(
-        "doc_id",
-        F.transform("arr", lambda s: s.getField("shingle")).alias("shs"),
-        F.size("arr").alias("n_sh"),
-    )
-    # ⌈τ·n⌉ in exact integers; prefix = n − ⌈τn⌉ + 1
-    ceil_tau_n = F.expr(
-        f"(n_sh * {threshold_num} + {threshold_den} - 1)"
-        f" div {threshold_den}"
-    )
-    docs = docs.withColumn(
-        "prefix", F.slice("shs", 1, (F.col("n_sh") - ceil_tau_n + 1).cast("int"))
-    )
-    idx = docs.select(
-        "doc_id", F.explode("prefix").alias("shingle")
+    # prefix length n − ⌈τn⌉ + 1, ⌈τn⌉ in exact integers
+    plen = F.expr(
+        f"size(arr) - (size(arr) * {threshold_num} + {threshold_den} - 1)"
+        f" div {threshold_den} + 1"
+    ).cast("int")
+    idx = (
+        keyed.groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("ks")).alias("arr"))
+        .select(
+            "doc_id",
+            F.explode(F.slice("arr", 1, plen).getField("shingle")).alias("shingle"),
+        )
     )
     if max_candidate_slots is not None:
-        # Typed scale guard: the candidate join below generates exactly
-        # Σ (prefix-df)² slots, so measure that sum BEFORE running the
-        # join — one linear aggregation over the prefix index, derived
-        # from the `keyed` checkpoint above. The index itself is not
-        # checkpointed: the candidate and verify sides share the
-        # groupBy(doc_id) exchange via ReusedExchange (2.8 s vs 5.0 s
-        # with an array checkpoint at sf0.1).
+        # The candidate join below generates exactly Σ (prefix-df)²
+        # slots: measure that sum before running it.
         slots = (
             idx.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("dfp"))
@@ -976,35 +950,16 @@ def prefix_jaccard_pairs(
                 "≈ 2e10); use ngram_jaccard_capped (rarest-R prefix, "
                 "bounded slots) at this scale"
             )
-    a, b = idx.alias("a"), idx.alias("b")
     cands = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
+        idx.select(F.col("doc_id").alias("doc_a"), "shingle")
+        .join(idx.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    da = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shs").alias("shs_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    db = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shs").alias("shs_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("shs_a", "shs_b"))
-    jac = inter.cast("double") / (
-        F.col("n_a") + F.col("n_b") - inter
-    ).cast("double")
-    return (
-        cands.join(da, "doc_a")
-        .join(db, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= tau)
+    kept = keyed.select("doc_id", F.col("ks.shingle").alias("shingle"))
+    return _jaccard_at_least(
+        overlap_counts(kept, cands), F.lit(threshold_num) / F.lit(threshold_den)
     )
 
 
@@ -1018,7 +973,7 @@ def prefix_jaccard_pairs(
 # bounds the index at exactly R rows per document — its RAREST R kept
 # shingles under the global (df asc, shingle asc) total order — so
 # candidate volume is Σ (prefix-df)² over the rare tail only, and every
-# surviving pair is rescored EXACTLY on the full kept shingle space:
+# surviving pair is verified by overlap_counts on the full kept space:
 # capped ⊆ exact structurally; the policy can only MISS pairs, never
 # mis-score one. Both knobs are deterministic integer ranks, so the
 # DuckDB twins apply the identical policy and the parity rows certify
@@ -1027,67 +982,62 @@ NGRAM_PREFIX_R = 10
 NGRAM_MIN_SHARED = 2
 
 
+def rarest_ranks(kept: DataFrame) -> DataFrame:
+    """``(shingle, doc_id, df, rk)``: the ``kept`` rows whose shingle at
+    least two documents hold, ranked per document by (df asc, shingle
+    asc), the order both capped candidate rules draw prefixes from.
+
+    A df-1 shingle can never witness a pair, and on corpora with
+    injected or organic unique n-grams such shingles would monopolize
+    the rarest ranks (containment recall 32/46 → 46/46 at sf0.1z once
+    excluded), so dropping them is lossless and pays."""
+    dfc = kept.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    return kept.join(dfc.filter(F.col("df") >= 2), "shingle").withColumn(
+        "rk",
+        F.row_number().over(
+            Window.partitionBy("doc_id").orderBy(
+                F.col("df").asc(), F.col("shingle").asc()
+            )
+        ),
+    )
+
+
 def _capped_shingle_candidates(
     kept: DataFrame,
+    length_num: int,
+    length_den: int,
     prefix_r: int = NGRAM_PREFIX_R,
     min_shared: int = NGRAM_MIN_SHARED,
-    length_num: int | None = None,
-    length_den: int | None = None,
 ) -> DataFrame:
     """Candidate (doc_a < doc_b) pairs from rarest-R prefix collisions.
 
-    ``kept`` is the (doc_id, shingle) frame AFTER whatever df-space cut
-    the caller's metric uses (max_df for Jaccard, relative-df for
-    containment) — the prefix is drawn from, and the metric later
-    scored on, the SAME space, keeping the operator self-consistent.
-
     A pair must share >= min(min_shared, |prefix_a|, |prefix_b|)
     prefix shingles (the adaptive floor keeps single-kept-shingle docs
-    reachable — the same guard doc_cosine_pairs_capped ships). With
-    ``length_num/length_den`` set (Jaccard τ = num/den), the PPJoin
-    length filter ``den·min(n) >= num·max(n)`` — lossless for J >= τ —
-    drops candidates BEFORE the pair aggregate, inside the join stage.
-    """
-    from pyspark.sql.window import Window
-
-    dfc = kept.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    # df-1 shingles can never witness a pair (nobody else holds them) —
-    # spending a prefix slot on one is pure loss, and on corpora with
-    # injected/organic unique n-grams they would monopolize the rarest-R
-    # ranks (measured: containment recall 32/46 → 46/46 at sf0.1z once
-    # excluded). Dropping them is lossless for the candidate set.
+    reachable, as in doc_cosine_pairs_capped) and pass the PPJoin
+    length filter ``den·min(n) >= num·max(n)``, lossless for Jaccard
+    >= num/den, which drops candidates inside the join stage, before
+    the pair aggregate."""
     # Deliberately NOT checkpointed: runtime exchange/broadcast reuse
     # already shares this chain's replicated subtrees, so checkpoints
     # only add serialization (pref + post-cut sh checkpoints measured
     # +33% executor CPU and +29% shuffle at sf0.1), whatever the
     # formatted plan's Exchange count suggests.
+    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     pref = (
-        kept.join(dfc.filter(F.col("df") >= 2), "shingle")
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy(
-                    F.col("df").asc(), F.col("shingle").asc()
-                )
-            ),
-        )
+        rarest_ranks(kept)
         .filter(F.col("rk") <= prefix_r)
         .select("doc_id", "shingle")
+        .join(sizes, "doc_id")
     )
-    use_len = length_num is not None and length_den is not None
-    if use_len:
-        sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        pref = pref.join(sizes, "doc_id")
     pn = pref.groupBy("doc_id").agg(F.count(F.lit(1)).alias("pn"))
     pa, pb = pref.alias("pa"), pref.alias("pb")
     joined = pa.join(pb, "shingle").filter(
-        F.col("pa.doc_id") < F.col("pb.doc_id")
-    )
-    if use_len:
-        joined = joined.filter(
+        (F.col("pa.doc_id") < F.col("pb.doc_id"))
+        & (
             (F.least("pa.n_sh", "pb.n_sh") * length_den)
             >= (F.greatest("pa.n_sh", "pb.n_sh") * length_num)
         )
+    )
     # The pair aggregate stays HERE (unlike doc_cosine_pairs_capped,
     # which emits each pair exactly once from its smallest shared
     # prefix token with zero aggregation state): the shingle regime's
@@ -1137,51 +1087,17 @@ def ngram_jaccard_capped_pairs(
     min_shared: int = NGRAM_MIN_SHARED,
     stage: str | None = None,
 ) -> DataFrame:
-    """X2a': scale-safe twin of :func:`ngram_jaccard_pairs` — IDENTICAL
-    metric (Jaccard over the df<=max_df shingle space, threshold
-    num/den) but candidates come from rarest-R prefix collisions plus
-    the lossless PPJoin length filter instead of the full inverted
-    index. Emitted pairs' jaccard is the EXACT kept-space value
-    (candidates re-join the complete kept frame for scoring), so
-    results are a subset of the exact operator's — recall is pinned in
-    pytest (1.0 on injected dups everywhere; >=0.97 vs exact on the
-    Zipf axis where organic near-misses exist).
-
-    Scale shape: the prefix index holds exactly R rows per doc; the
-    generation join carries Σ(prefix-df)² slots over the rare tail
-    (48x fewer than Σdf² on the fixed-vocab axis at sf10) with the
-    length filter applied inside the join stage; scoring touches only
-    |candidates|·doc_len rows, keyed by doc id — never all-pairs.
-    """
-    sh = _staged_shingles(df, text_col, id_col, n, stage)
-    if max_df is not None:
-        df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-        sh = sh.join(
-            F.broadcast(df_counts.filter(F.col("df") > max_df)),
-            "shingle", "left_anti",
-        )
+    """X2a': scale-safe twin of :func:`ngram_jaccard_pairs`.
+    Candidates: rarest-``prefix_r`` prefix collisions sharing
+    >= ``min_shared`` prefix shingles, behind the PPJoin length filter
+    (:func:`_capped_shingle_candidates`). Metric: the same exact
+    Jaccard >= num/den over the ``max_df``-capped space, so the rows
+    are a subset of the exact operator's; its recall is pinned in
+    pytest."""
+    sh = _df_capped(_staged_shingles(df, text_col, id_col, n, stage), max_df)
     cand = _capped_shingle_candidates(
-        sh, prefix_r, min_shared,
-        length_num=threshold_num, length_den=threshold_den,
+        sh, threshold_num, threshold_den, prefix_r, min_shared
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    ka = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    kb = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        cand.join(ka, "doc_a")
-        .join(kb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    ).cast("double")
-    tau = F.lit(threshold_num) / F.lit(threshold_den)
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= tau)
+    return _jaccard_at_least(
+        overlap_counts(sh, cand), F.lit(threshold_num) / F.lit(threshold_den)
     )

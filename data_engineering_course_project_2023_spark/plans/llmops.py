@@ -138,13 +138,11 @@ SHINGLE_STAGE = "ngram_shingles"
 
 
 def ngram_jaccard(t: Tables) -> DataFrame:
-    """X2a: exact 3-gram Jaccard pairs ≥ 0.8 via inverted-index join.
-
-    The filtered shingle frame is staged to parquet and re-read, so
-    the explode/tokenize pass runs ONCE and the three consumers
-    (sizes + both self-join sides) scan the stage — the same
-    write-once topology a 100 TB run needs (a cache would pin
-    executor storage; r1's persist leaked it for the session)."""
+    """X2a: exact 3-gram Jaccard pairs. Candidates: every pair sharing a
+    shingle with df <= 1000 (the full inverted index). Metric: Jaccard
+    >= 0.8 on that space. The shingle frame is staged, so tokenize runs
+    once per run; a cache would pin executor storage for the session
+    (a persisted shingle frame once leaked it)."""
     return dedup.ngram_jaccard_pairs(
         t["documents"], threshold=0.8, max_df=1000, stage=SHINGLE_STAGE
     )
@@ -170,19 +168,14 @@ WHERE CAST(n_inter AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - n_inter AS DOUBLE) >= 0
 """
 
 
-# --- X2a': capped (rarest-R prefix) shingle Jaccard (VERDICT_r8 #1) ----------
+# --- X2a': capped (rarest-R prefix) shingle Jaccard --------------------------
 def ngram_jaccard_capped(t: Tables) -> DataFrame:
-    """X2a': scale-safe twin of :func:`ngram_jaccard` — the
-    doc_cosine_pairs_capped recipe applied to the shingle family.
-    IDENTICAL metric (exact Jaccard over the df<=1000 shingle space,
-    threshold 0.8) but candidates come from rarest-R prefix collisions
-    (R=10, >=2 shared with the adaptive short-doc floor) plus the
-    lossless PPJoin length filter, then are rescored EXACTLY on the
-    full kept space — capped ⊆ exact structurally. This is the variant
-    to compose on template-heavy / fixed-vocabulary strata where
-    shingle df stops discriminating and the exact operator's Σdf²
-    saturates (measured: ngram_jaccard crashes at sf10 fixed-vocab;
-    this one is budget-pinned there)."""
+    """X2a': scale-safe twin of :func:`ngram_jaccard`. Candidates:
+    rarest-10 prefix collisions sharing >= 2 prefix shingles (fewer for
+    shorter prefixes) behind the lossless PPJoin length filter. Metric:
+    the same Jaccard >= 0.8 over the df <= 1000 space, so capped ⊆
+    exact. The exact operator crashes at sf10 fixed-vocab; this one is
+    budget-pinned there."""
     return dedup.ngram_jaccard_capped_pairs(
         t["documents"], threshold_num=4, threshold_den=5, max_df=1000,
         stage=SHINGLE_STAGE,
@@ -3662,12 +3655,11 @@ FROM f
 
 # --- X2: prefix-filtered (PPJoin-style) similarity join ----------------------
 def prefix_jaccard(t: Tables) -> DataFrame:
-    """X2: PPJoin-style prefix-filtered Jaccard ≥ 0.8 — indexes only
-    each doc's rarest |x|−⌈0.8|x|⌉+1 shingles (lossless for the
-    threshold; ubiquitous shingles never enter a prefix, so skew
-    control falls out of the algorithm). The ORACLE is the naive full
-    inverted index (no df cap): the optimization's completeness is the
-    thing the parity gate checks."""
+    """X2: PPJoin prefix-filtered Jaccard pairs. Candidates: collisions
+    of each doc's rarest |x| − ⌈0.8|x|⌉ + 1 shingles, lossless for the
+    threshold. Metric: Jaccard >= 0.8 over every shingle (no df cap).
+    The oracle is the full inverted index, so parity checks the
+    prefix's completeness."""
     return dedup.prefix_jaccard_pairs(t["documents"])
 
 
@@ -3938,35 +3930,33 @@ GROUP BY N1, N2
 
 # --- X2: asymmetric containment pairs ----------------------------------------
 CONTAIN_DF_DIV = 5  # shingles in more than 1/5 of docs are cut (skew/noise)
-# Postings-side cap for the DIRECTED containment block (round 9): the
-# contained side's rarest-10 prefix joins b's rarest-R postings instead
-# of b's FULL posting list. Restricting postings to df>=2 first is
-# LOSSLESS (a prefix shingle has df>=2, so a df=1 posting can never
+# Postings-side cap for the DIRECTED containment block: the contained
+# side's rarest-10 prefix joins b's rarest-CONTAIN_POST_R postings
+# instead of b's FULL posting list. Restricting postings to df>=2 first
+# is LOSSLESS (a prefix shingle has df>=2, so a df=1 posting can never
 # collide), and the rank cap is recall-measured: 50/50 (sf0.01 fixed)
 # and 46/46 (sf0.1z Zipf) at every R in {16,24,32,48,64} — 24 carries
 # 50% margin over the smallest full-recall cap. Without it the blocking
 # join enumerates prefix x full-postings slots, which saturates at
 # fixed vocab (sf10: budget_exceeded at 420 s).
 #
-# Round 10 (ADVICE r9): a FIXED absolute rank cap is structurally
-# blind to the large-superset shape the query exists to find — a big
-# doc b with more than R df>=2 shingles globally rarer than a contained
-# doc a's prefix pushes every witness out of b's kept postings. The cap
-# therefore gains a SIZE-AWARE RESCUE BAND: b additionally keeps ranks
-# up to ceil(n_df2_b / CONTAIN_POST_DIV) — but ONLY for shingles with
-# df <= CONTAIN_RESCUE_DF. The df bound is what makes the band
-# scale-safe: every rescue posting's list is <= RESCUE_DF long, so the
-# added block cost is <= PREFIX_R·RESCUE_DF per rescue shingle —
-# LINEAR in corpus size, never df-quadratic. On realistic (Zipf/Heaps)
-# corpora a contained doc's rarest-10 prefix has df≈2–3, squarely
-# inside the band, so a superset doc whose own rare content would push
-# those witnesses past rank 24 still keeps them (pinned fixture:
+# A fixed absolute rank cap alone is blind to the large-superset shape
+# the query exists to find: a big doc b with more than R df>=2 shingles
+# globally rarer than a contained doc a's prefix pushes every witness
+# out of b's kept postings. The cap therefore has a SIZE-AWARE RESCUE
+# BAND: b also keeps ranks up to ceil(n_df2_b / CONTAIN_POST_DIV), but
+# ONLY for shingles with df <= CONTAIN_RESCUE_DF. The df bound is what
+# makes the band scale-safe: every rescue posting's list is <= RESCUE_DF
+# long, so the added block cost is <= PREFIX_R·RESCUE_DF per rescue
+# shingle — LINEAR in corpus size, never df-quadratic. On realistic
+# (Zipf/Heaps) corpora a contained doc's rarest-10 prefix has df≈2–3,
+# squarely inside the band (pinned fixture:
 # tests/test_text_ops.py::test_containment_capped_large_superset). On
-# the saturated fixed-vocab axis no shingle has df<=8 and the band is
-# empty — cost identical to the round-9 measurement (a first r10
-# attempt WITHOUT the df bound blew a 1300 s budget with 27 GB of
-# block-join spill at sf10: rank-only size-awareness adds high-df
-# postings exactly where df stops discriminating).
+# the saturated fixed-vocab axis no shingle has df<=8, so the band is
+# empty and the cost is the fixed cap's. Without the df bound the band
+# blew a 1300 s budget with 27 GB of block-join spill at sf10: rank-only
+# size-awareness adds high-df postings exactly where df stops
+# discriminating.
 # The residual out-of-contract shape — b's noise shingles ALL strictly
 # rarer than every one of a's, pushing a's witnesses into the last
 # (1-1/DIV) tail — is demonstrated by the companion adversarial pin;
@@ -3979,67 +3969,55 @@ CONTAIN_RESCUE_DF = 8
 
 
 def _containment_kept(t: Tables) -> DataFrame:
-    """(doc_id, s): each doc's distinct word 3-gram shingles minus the
-    ubiquitous ones (df · CONTAIN_DF_DIV > n_docs), the shingle space
-    both containment queries score on. Checkpointed, so every consumer
-    (sizes, df, ranks, both join sides) rereads it instead of Catalyst
-    re-deriving scan→tokenize→shingle→distinct→df-prune per consumer."""
+    """(doc_id, shingle): each doc's distinct word 3-gram shingles minus
+    the ubiquitous ones (df · CONTAIN_DF_DIV > n_docs), the shingle
+    space both containment queries score on. Checkpointed, so every
+    consumer (sizes, df, ranks, both join sides) rereads it instead of
+    Catalyst re-deriving scan→tokenize→shingle→distinct→df-prune per
+    consumer."""
     sh = (
         spread(t["documents"])
         .select("doc_id", textops.tokens("text").alias("w"))
-        .select("doc_id", F.explode(textops.ngrams("w", 3)).alias("s"))
+        .select("doc_id", F.explode(textops.ngrams("w", 3)).alias("shingle"))
         .distinct()
     )
     n_docs = t["documents"].agg(F.count(F.lit(1)).alias("n_docs"))
     heavy = (
-        sh.groupBy("s")
+        sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .crossJoin(F.broadcast(n_docs))
         .filter(F.col("df") * CONTAIN_DF_DIV > F.col("n_docs"))
-        .select("s")
+        .select("shingle")
     )
-    return sh.join(F.broadcast(heavy), "s", "left_anti").localCheckpoint()
+    return sh.join(F.broadcast(heavy), "shingle", "left_anti").localCheckpoint()
+
+
+def _contained(counts: DataFrame) -> DataFrame:
+    """``(doc_a, doc_b, n_common, n_a, containment)`` of the
+    :func:`dedup.overlap_counts` rows where doc_a lies at least half
+    inside doc_b: the exact integer test 2·n_inter >= n_a."""
+    return counts.filter(F.col("n_inter") * 2 >= F.col("n_a")).select(
+        "doc_a", "doc_b", F.col("n_inter").alias("n_common"), "n_a",
+        (F.col("n_inter").cast("double")
+         / F.col("n_a").cast("double")).alias("containment"),
+    )
 
 
 def containment_pairs(t: Tables) -> DataFrame:
-    """X2: directed shingle-containment pairs — |S(a) ∩ S(b)| / |S(a)|
-    over distinct 3-token shingles. Jaccard misses the case where a
-    SHORT document is wholly contained in a long one (the union term
-    swamps it); containment is the asymmetric metric snippet-extraction
-    and quote dedup need. Emits ordered pairs: (doc_a contained-in
-    doc_b) and (b in a) are different rows.
-
-    Scale shape: identical inverted-index discipline as
-    doc_cosine_pairs — ubiquitous shingles (df · 5 > n_docs) are cut
-    BEFORE the self-join and per-doc sizes are computed from the same
-    pruned set (self-consistent metric); candidates come only from
-    shared sub-ubiquitous shingles, never an all-pairs product. The
-    containment test is exact int·2 ≥ int — no float in the filter."""
-    kept = _containment_kept(t)
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = kept.alias("a"), kept.alias("b")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"),
-                         F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .filter(F.col("n_common") * 2 >= F.col("n_a"))
-        .select(
-            "doc_a", "doc_b", "n_common", "n_a",
-            (F.col("n_common").cast("double")
-             / F.col("n_a").cast("double")).alias("containment"),
-        )
-    )
+    """X2: directed shingle-containment pairs. Candidates: every pair
+    sharing a shingle of the relative-df-cut space (the full inverted
+    index). Metric: containment |S(a) ∩ S(b)| / |S(a)| >= 0.5 as the
+    integer test 2·n_inter >= n_a; (a in b) and (b in a) are separate
+    rows. Containment finds a short doc wholly inside a long one, which
+    Jaccard's union term hides."""
+    counts = dedup.overlap_counts(_containment_kept(t))
+    # each doc_a < doc_b row tests both directions: one pass, no union
+    directed = F.inline(F.array(
+        F.struct("doc_a", "doc_b", "n_a"),
+        F.struct(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"),
+                 F.col("n_b").alias("n_a")),
+    ))
+    return _contained(counts.select("n_inter", directed))
 
 
 CONTAINMENT_PAIRS_SQL = f"""
@@ -4072,46 +4050,20 @@ WHERE n_common * 2 >= sizes.n_sh
 
 
 def containment_pairs_capped(t: Tables) -> DataFrame:
-    """X2': scale-safe twin of :func:`containment_pairs` — IDENTICAL
-    metric (containment over the relative-df-pruned distinct-shingle
-    space, int-exact >= 0.5 test) with DIRECTED rarest-R prefix
-    blocking: a candidate (a contained-in b) must share
-    >= min(2, |prefix_a|) shingles between a's rarest-NGRAM_PREFIX_R
-    prefix and b's df>=2, rarest-CONTAIN_POST_R postings (round 9: the
-    df>=2 cut is lossless — a prefix shingle has df>=2 by construction
-    — and the rank cap is recall-swept; see CONTAIN_POST_R). The
-    asymmetry matters — containment's witness lives on the CONTAINED
-    side only (>=50% of a's shingles are in b, so a's rare prefix
-    tends to land in b's rare ranks, while b's own prefix is b's rare
-    shingles, which a need not hold; a symmetric prefix×prefix block
-    measured 32/46 recall at sf0.1z, the directed block 46/46). The
-    rank cap is NOT structurally lossless: a large superset doc b with
-    more than CONTAIN_POST_R df>=2 shingles globally rarer than a's
-    prefix pushes a's witnesses out of b's kept postings — see the
-    size-aware floor at CONTAIN_POST_R and its pinned adversarial
-    fixture in tests. Surviving candidates are rescored
-    EXACTLY on the full kept space — capped ⊆ exact structurally; the
-    recall pin lives in pytest. This is the composable variant for
-    strata where shingle df saturates (the exact operator crashes at
-    sf10 fixed-vocab; this one is budget-pinned there)."""
-    from pyspark.sql.window import Window
-
+    """X2': scale-safe twin of :func:`containment_pairs`. Candidates:
+    directed blocks (a in b) sharing >= min(2, |prefix_a|) shingles
+    between a's rarest-NGRAM_PREFIX_R prefix and b's df>=2 postings
+    capped at CONTAIN_POST_R ranks plus the rescue band, behind the
+    lossless length filter 2·n_b >= n_a. The block is directed because
+    containment's witness lives on the contained side (a symmetric
+    prefix×prefix block measured 32/46 recall at sf0.1z, the directed
+    one 46/46). Metric: the same integer test 2·n_inter >= n_a on the
+    same space, so capped ⊆ exact; recall is pinned in pytest."""
     kept = _containment_kept(t)
-    dfk = kept.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    # df-1 shingles cannot witness a pair — see dedup.
-    # _capped_shingle_candidates; on the Zipf axis the injected-rewrite
-    # uniques would otherwise monopolize the contained side's prefix.
-    ranked = kept.join(dfk.filter(F.col("df") >= 2), "s").withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("doc_id").orderBy(
-                F.col("df").asc(), F.col("s").asc()
-            )
-        ),
-    ).localCheckpoint()
+    ranked = dedup.rarest_ranks(kept).localCheckpoint()
     pref = ranked.filter(
         F.col("rk") <= dedup.NGRAM_PREFIX_R
-    ).select("doc_id", "s")
+    ).select("doc_id", "shingle")
     # b's side of the block: df>=2 postings, rarest-CONTAIN_POST_R
     # ranks, PLUS the df-bounded size-aware rescue band (ranks up to
     # n_rk/CONTAIN_POST_DIV for df<=CONTAIN_RESCUE_DF shingles — see
@@ -4132,24 +4084,24 @@ def containment_pairs_capped(t: Tables) -> DataFrame:
                 )
             )
         )
-        .select("doc_id", "s")
+        .select("doc_id", "shingle")
     )
     pn = pref.groupBy("doc_id").agg(F.count(F.lit(1)).alias("pn"))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     # Lossless length filter INSIDE the block join: containment >= 0.5
     # forces n_common >= n_a/2 and n_common <= n_b, so 2·n_b >= n_a —
-    # a candidate violating it can never survive the exact rescore.
+    # a candidate violating it can never pass the verify step.
     # Applied at shingle level so the pair aggregate never sees it.
     cand = (
         pref.join(sizes, "doc_id")
-        .select(F.col("doc_id").alias("doc_a"), "s",
+        .select(F.col("doc_id").alias("doc_a"), "shingle",
                 F.col("n_sh").alias("lf_a"))
         .join(
             post.join(sizes, "doc_id").select(
-                F.col("doc_id").alias("doc_b"), "s",
+                F.col("doc_id").alias("doc_b"), "shingle",
                 F.col("n_sh").alias("lf_b"),
             ),
-            "s",
+            "shingle",
         )
         .filter(
             (F.col("doc_a") != F.col("doc_b"))
@@ -4168,25 +4120,7 @@ def containment_pairs_capped(t: Tables) -> DataFrame:
         )
         .select("doc_a", "doc_b")
     )
-    ka = kept.select(F.col("doc_id").alias("doc_a"), "s")
-    kb = kept.select(F.col("doc_id").alias("doc_b"), "s")
-    return (
-        cand.join(ka, "doc_a")
-        .join(kb, ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"),
-                         F.col("n_sh").alias("n_a")),
-            "doc_a",
-        )
-        .filter(F.col("n_common") * 2 >= F.col("n_a"))
-        .select(
-            "doc_a", "doc_b", "n_common", "n_a",
-            (F.col("n_common").cast("double")
-             / F.col("n_a").cast("double")).alias("containment"),
-        )
-    )
+    return _contained(dedup.overlap_counts(kept, cand))
 
 
 # The twin's multi-referenced CTEs carry MATERIALIZED hints: DuckDB

@@ -21,7 +21,8 @@ import sys
 
 import pytest
 
-SF1 = "/root/repo/testdata/sf1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF1 = os.path.join(REPO, "testdata", "sf1")
 HEAVY = [
     "fuzzy_part_pairs",
     "part_golden_records",
@@ -32,7 +33,7 @@ HEAVY = [
 
 _SCRIPT = r"""
 import glob, json, os, sys, tempfile
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, %(repo)r)
 from data_engineering_course_project_2023_spark.session import get_spark
 from data_engineering_course_project_2023_spark.plans import registry
 
@@ -80,7 +81,7 @@ def test_heavy_queries_complete_in_4g_heap():
     if not os.path.isdir(SF1):
         pytest.skip("self-generated sf1 absent (tools/gen_sf.py)")
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="4g")
-    script = _SCRIPT % {"names": repr(HEAVY), "sf": SF1}
+    script = _SCRIPT % {"names": repr(HEAVY), "sf": SF1, "repo": REPO}
     proc = subprocess.run(
         [sys.executable, "-c", script],
         capture_output=True,

@@ -215,6 +215,41 @@ def test_epoch_batches_rank_is_distributed(spark):
     assert "hashpartitioning(bucket" in plan, plan
 
 
+_PLAIN_SWEEP = """
+import sys, time; sys.path.insert(0, %(repo)r)
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[%(cpus)s]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+import __spark_entry__ as e
+bad = []
+for name, fn in e.queries().items():
+    print("START", name, flush=True)
+    t0 = time.perf_counter()
+    try:
+        fn(spark, "/root/testdata/sf0.001").count()
+    except Exception as ex:
+        bad.append((name, str(ex)[:200]))
+    print("DONE", name, round(time.perf_counter() - t0, 2), flush=True)
+assert not bad, bad
+print("PLAIN_SWEEP_OK")
+"""
+
+
+def _sweep_report(stdout: str) -> str:
+    """The last query the sweep started and its five slowest finished
+    ones, from the START/DONE lines it printed."""
+    started, secs = None, {}
+    for line in stdout.splitlines():
+        parts = line.split()
+        if parts[:1] == ["START"]:
+            started = parts[1]
+        elif parts[:1] == ["DONE"]:
+            secs[parts[1]] = float(parts[2])
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    return f"last started: {started}; slowest: {slowest}; finished: {len(secs)}"
+
+
 def test_all_queries_run_under_plain_driver_session():
     """Driver-environment robustness: every registry query must run
     under a PLAIN SparkSession in a separate JVM — default confs, no
@@ -222,33 +257,32 @@ def test_all_queries_run_under_plain_driver_session():
     nothing may depend on AQE/broadcast/Arrow/timezone settings we
     apply locally). Subprocess, not newSession(): builder-applied SQL
     confs leak into every session that shares the context, which would
-    make an in-process check vacuous."""
+    make an in-process check vacuous. The sweep imports this tree and
+    runs on the suite's core count; a timeout or failure names the
+    query that was running and the slowest ones."""
+    import os
     import subprocess
     import sys
 
-    script = """
-import sys; sys.path.insert(0, '/root/repo')
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local[8]")
-         .config("spark.ui.enabled", "false").getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-import __spark_entry__ as e
-bad = []
-for name, fn in e.queries().items():
+    from data_engineering_course_project_2023_spark.session import DEFAULT_CPUS
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = _PLAIN_SWEEP % {"repo": repo, "cpus": DEFAULT_CPUS}
     try:
-        fn(spark, "/root/testdata/sf0.001").count()
-    except Exception as ex:
-        bad.append((name, str(ex)[:200]))
-assert not bad, bad
-print("PLAIN_SWEEP_OK")
-"""
-    out = subprocess.run(
-        [sys.executable, "-c", script],
-        capture_output=True,
-        text=True,
-        timeout=600,
+        out = subprocess.run(
+            [sys.executable, "-c", script],
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+    except subprocess.TimeoutExpired as ex:
+        partial = ex.stdout or b""
+        if isinstance(partial, bytes):
+            partial = partial.decode(errors="replace")
+        raise AssertionError(f"timed out after 600 s; {_sweep_report(partial)}")
+    assert "PLAIN_SWEEP_OK" in out.stdout, (
+        _sweep_report(out.stdout) + "\n" + out.stdout[-2000:] + out.stderr[-2000:]
     )
-    assert "PLAIN_SWEEP_OK" in out.stdout, out.stdout[-2000:] + out.stderr[-2000:]
 
 
 def test_bm25_plan_is_map_side_plus_takeordered(spark):

@@ -6,7 +6,15 @@ oracle gate would only ever see zero redactions)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from data_engineering_course_project_2023_spark.operators.text import redact_pii
+
+SF1Z = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "testdata", "sf1z"
+)
 
 
 def test_redact_pii_all_classes(spark):
@@ -119,37 +127,73 @@ def test_dup_trigram_ratio_bounds(spark):
     assert len(rows[8]["g32"]) == 1 and rows[9]["g32"] == []
 
 
-def test_containment_short_docs_match_oracles(spark, tmp_path):
-    """Documents of 0, 1 and 2 tokens yield no shingles; both
-    containment queries must skip them, not fail on them, and still
-    match their DuckDB oracles on the longer docs, enough of which
-    share shingles that pairs survive the relative-df cut."""
-    import pandas as pd
+# Longer docs that share shingles, plus 16 unrelated fillers, so pairs
+# survive the containment queries' relative-df cut (df · 5 <= n_docs).
+_PAIRED_DOCS = [
+    (10, "alpha beta gamma delta epsilon"),
+    (11, "alpha beta gamma delta epsilon zeta eta theta"),
+    (12, "iota kappa lambda mu nu xi"),
+    (13, "omicron iota kappa lambda mu nu"),
+] + [(100 + i, " ".join(f"f{i}w{j}" for j in range(6))) for i in range(16)]
+
+# Each input is a documents table the near-dup family must stay total
+# on. "double_spaces" is where the Jaccard shingles' split(text, ' ')
+# and the containment tokens' split on runs of whitespace disagree.
+_EDGE_DOCS = {
+    "empty": [],
+    "one_doc": [(1, "alpha beta gamma delta epsilon")],
+    "short_docs": [(1, ""), (2, "   "), (3, "solo"), (4, "one two"),
+                   (5, "x  y")] + _PAIRED_DOCS,
+    "null_text": [(1, None), (2, None)] + _PAIRED_DOCS,
+    "five_identical": [(i, "the quick brown fox jumps over") for i in range(5)],
+    "double_spaces": [
+        (1, "a1  b1 c1 d1 e1"),
+        (2, "a1  b1 c1 d1 e1 f1"),
+        (3, "a1 b1  c1 d1 e1"),
+    ] + _PAIRED_DOCS,
+}
+# Pairs an input must yield, per query kind, beyond matching the oracle.
+_MUST_FIND = {
+    ("short_docs", "containment"): {(10, 11), (12, 13), (13, 12)},
+    ("five_identical", "jaccard"): {
+        (a, b) for a in range(5) for b in range(a + 1, 5)
+    },
+    ("double_spaces", "jaccard"): {(1, 2)},
+    ("double_spaces", "containment"): {(1, 2), (1, 3), (3, 1), (3, 2)},
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EDGE_DOCS))
+@pytest.mark.parametrize(
+    "query",
+    ["ngram_jaccard", "ngram_jaccard_capped", "prefix_jaccard",
+     "containment_pairs", "containment_pairs_capped"],
+)
+def test_neardup_family_edge_inputs_match_oracles(spark, tmp_path, query, case):
+    """Every near-dup family query matches its DuckDB oracle on empty,
+    single-document, short (0-2 token), NULL-text, all-identical and
+    double-spaced inputs: documents without shingles are skipped, not
+    failed on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from data_engineering_course_project_2023_spark.plans import llmops
     from tests.parity import compare
 
-    docs = [(1, ""), (2, "   "), (3, "solo"), (4, "one two"), (5, "x  y")]
-    docs += [
-        (10, "alpha beta gamma delta epsilon"),
-        (11, "alpha beta gamma delta epsilon zeta eta theta"),
-        (12, "iota kappa lambda mu nu xi"),
-        (13, "omicron iota kappa lambda mu nu"),
-    ]
-    docs += [
-        (100 + i, " ".join(f"f{i}w{j}" for j in range(6))) for i in range(16)
-    ]
-    path = str(tmp_path / "documents.parquet")
-    pd.DataFrame(docs, columns=["doc_id", "text"]).to_parquet(path)
-    t = {"documents": spark.read.parquet(path)}
-    for build, sql in (
-        (llmops.containment_pairs, llmops.CONTAINMENT_PAIRS_SQL),
-        (llmops.containment_pairs_capped, llmops.CONTAINMENT_PAIRS_CAPPED_SQL),
-    ):
-        out = build(t)
-        pairs = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
-        assert {(10, 11), (12, 13), (13, 12)} <= pairs, (build.__name__, pairs)
-        assert not compare(out, sql, str(tmp_path)), build.__name__
+    rows = _EDGE_DOCS[case]
+    pq.write_table(
+        pa.table(
+            {"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]},
+            schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())]),
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    t = {"documents": spark.read.parquet(str(tmp_path / "documents.parquet"))}
+    out = getattr(llmops, query)(t)
+    pairs = {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+    kind = "containment" if query.startswith("containment") else "jaccard"
+    assert _MUST_FIND.get((case, kind), set()) <= pairs, pairs
+    assert not compare(out, getattr(llmops, f"{query.upper()}_SQL"), str(tmp_path))
 
 
 def test_chunk_dedup_detects_verbatim_block_only(spark):
@@ -669,20 +713,16 @@ def test_doc_cosine_capped_recall_sf1z_slow(spark):
     ~10 min at sf1z): SPARK_GRAFT_SLOW=1 runs it; the round-8 measured
     value is 243/248 = 0.980 with every miss being an accidental
     common-token pair (min shared df >= 773), recorded in SCALE.md."""
-    import os
-
-    import pytest
-
     if os.environ.get("SPARK_GRAFT_SLOW") != "1":
         pytest.skip("slow sf1z recall pin (set SPARK_GRAFT_SLOW=1)")
-    if not os.path.isdir("/root/repo/testdata/sf1z"):
+    if not os.path.isdir(SF1Z):
         pytest.skip("self-generated sf1z absent (tools/gen_sf.py)")
     from data_engineering_course_project_2023_spark.plans import llmops
     from data_engineering_course_project_2023_spark.plans.registry import (
         load_tables,
     )
 
-    t = load_tables(spark, "/root/repo/testdata/sf1z", ("documents",))
+    t = load_tables(spark, SF1Z, ("documents",))
     exact = {
         (r["doc_a"], r["doc_b"]) for r in llmops.doc_cosine_pairs(t).collect()
     }
@@ -867,20 +907,16 @@ def test_containment_capped_adversarial_residue(spark):
 def test_ngram_jaccard_capped_recall_sf1z_slow(spark):
     """The sf1z decade pin for the shingle family — env-gated like the
     cosine one (the exact inverted index needs minutes at sf1z)."""
-    import os
-
-    import pytest
-
     if os.environ.get("SPARK_GRAFT_SLOW") != "1":
         pytest.skip("slow sf1z recall pin (set SPARK_GRAFT_SLOW=1)")
-    if not os.path.isdir("/root/repo/testdata/sf1z"):
+    if not os.path.isdir(SF1Z):
         pytest.skip("self-generated sf1z absent (tools/gen_sf.py)")
     from data_engineering_course_project_2023_spark.operators import dedup
     from data_engineering_course_project_2023_spark.plans.registry import (
         load_tables,
     )
 
-    t = load_tables(spark, "/root/repo/testdata/sf1z", ("documents",))
+    t = load_tables(spark, SF1Z, ("documents",))
     docs = t["documents"]
     exact = {
         (r["doc_a"], r["doc_b"])
