@@ -21,6 +21,7 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.expr import spread
 from .dedup import run_memo
@@ -59,17 +60,13 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-# Round-12 negative result, recorded so it is not re-tried: an
-# "unrolled fixed-width dot" (a 64-term element_at(a,i)·element_at(b,i)
-# chain, bit-identical fold order, dim probed from the data) was built
-# for the quadratic pair-cosine sites on the theory that the
-# aggregate/zip_with fold is interpreted. Measured at sf0.1
-# (task_metrics --warmups 2): executor CPU WORSE ~3× on all three
-# consumers (semdedup_keep 7.3→21.6 s, knn_graph 13.5→44.1 s,
-# embedding_neardup 2.2→20.8 s) — the ~400-node expression falls out of
-# whole-stage codegen and every element_at pays its own ANSI bounds
-# check, losing badly to the fold primitive. The norm HOIST (below)
-# is the part that measured well and shipped.
+# Measured negative, not to be re-tried: an unrolled fixed-width dot (a
+# 64-term element_at(a,i)·element_at(b,i) chain, same fold order) in
+# place of the aggregate/zip_with fold made the pair-cosine consumers'
+# executor CPU ~3× WORSE at sf0.1 (knn_graph 13.5→44.1 s): the ~400-node
+# expression falls out of whole-stage codegen and every element_at pays
+# its own ANSI bounds check. Hoisting the norm to once per row is what
+# measured well (see :func:`_blocked_cosines`).
 def norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -81,7 +78,41 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Float cosine; a zero-norm side gives NULL (``try_divide``), where
+    the ANSI ``/`` would raise DIVIDE_BY_ZERO."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
+
+
+def top_cosines(
+    cands: DataFrame,
+    q: Column,
+    k: int | None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    by: str | None = None,
+) -> DataFrame:
+    """The retrieval family's one scoring step: score every candidate
+    row ``cos_sim = round(cosine(vec_col, q), 6)`` and rank by (cos_sim
+    desc, id_col asc). Without ``by``: the k best ``(id_col, cos_sim)``
+    rows (TakeOrdered — per-partition heads merged, the corpus never
+    shuffles). With ``by``: every candidate column plus cos_sim and a
+    per-key ``rank``, cut at k unless k is None. Scores round to 6 dp
+    before ranking: cross-engine float agreement is ~1 ulp, far inside
+    the rounding, so both engines rank identically. A NULL score
+    (zero-norm side) ranks last."""
+    score = F.round(cosine(F.col(vec_col), q), 6).alias("cos_sim")
+    return _ranked(cands.select(id_col if by is None else "*", score), k, id_col, by)
+
+
+def _ranked(scored: DataFrame, k: int | None, id_col: str, by: str | None) -> DataFrame:
+    """Rank scored rows by (cos_sim desc, id_col asc): the k best
+    overall, or a per-``by`` ``rank`` cut at k unless k is None."""
+    order = (F.desc("cos_sim"), F.asc(id_col))
+    if by is None:
+        return scored.orderBy(*order).limit(k)
+    w = Window.partitionBy(by).orderBy(*order)
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    return ranked if k is None else ranked.filter(F.col("rank") <= k)
 
 
 # --- bit-deterministic cosine (quantized integer units) ----------------------
@@ -176,23 +207,13 @@ def brute_force_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """X3 baseline: exact cosine top-k against one stored query vector.
-    The query row is broadcast; the corpus never shuffles. Scores are
-    rounded to 6 dp — cross-engine float agreement is ~1 ulp, far inside
-    the rounding, while real score gaps are orders of magnitude larger.
-    """
+    Candidates are all other rows; the query row is broadcast, so the
+    corpus never shuffles. An absent query row gives no rows."""
     q = df.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("query_vec")
     )
-    return (
-        spread(df).filter(F.col(id_col) != query_vec_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("query_vec")), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    cands = spread(df).filter(F.col(id_col) != query_vec_id).crossJoin(F.broadcast(q))
+    return top_cosines(cands, F.col("query_vec"), k, id_col, vec_col)
 
 
 def lsh_bucket(vec: Column, planes: list[list[int]] | None = None) -> Column:
@@ -234,15 +255,48 @@ def lsh_topk(
             F.array(*[F.col("qbucket").bitwiseXOR(F.lit(m)) for m in PROBE_MASKS])
         ).alias("bucket"),
     )
+    cands = bucketed.filter(F.col(id_col) != query_vec_id).join(
+        F.broadcast(probes), "bucket"
+    )
+    return top_cosines(cands, F.col("query_vec"), k, id_col, vec_col)
+
+
+def _blocked_cosines(
+    df: DataFrame, block_col: str, id_col: str, vec_col: str
+) -> DataFrame:
+    """(vec_a, vec_b, cos_sim) for every pair vec_a < vec_b that shares a
+    block: a self-join keyed by the block, so the shuffle is bounded and
+    each block's quadratic cost stays local. Norms are computed once per
+    row before the join, so a pair pays exactly one dot fold (norm(a) ·
+    norm(b) per pair cost a block of n rows 2n² extra folds, and the
+    hoisted doubles are the same, so scores are bit-identical). A
+    zero-norm side scores NULL. Scores round to 6 dp."""
+    e = spread(df).select(
+        F.col(id_col),
+        F.col(block_col).alias("_blk"),
+        F.col(vec_col),
+        norm(F.col(vec_col)).alias("_nrm"),
+    )
+    b = e.select(
+        F.col(id_col).alias("_idb"),
+        F.col("_blk"),
+        F.col(vec_col).alias("_vecb"),
+        F.col("_nrm").alias("_nrmb"),
+    )
     return (
-        bucketed.filter(F.col(id_col) != query_vec_id)
-        .join(F.broadcast(probes), "bucket")
+        e.join(b, "_blk")
+        .filter(F.col(id_col) < F.col("_idb"))
         .select(
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("query_vec")), 6).alias("cos_sim"),
+            F.col(id_col).alias("vec_a"),
+            F.col("_idb").alias("vec_b"),
+            F.round(
+                F.try_divide(
+                    dot(F.col(vec_col), F.col("_vecb")),
+                    F.col("_nrm") * F.col("_nrmb"),
+                ),
+                6,
+            ).alias("cos_sim"),
         )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
     )
 
 
@@ -255,81 +309,45 @@ def blocked_cosine_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup with blocking: exact all-pairs *within*
     a blocking key (label, shard, source...) — the standard way to make
-    pairwise dedup tractable: the join is keyed by the block, so the
-    shuffle is bounded and each block's quadratic cost is local.
-    Scores rounded to 6 dp (cross-engine 1-ulp tolerance).
+    pairwise dedup tractable (see :func:`_blocked_cosines`)."""
+    return _blocked_cosines(df, block_col, id_col, vec_col).filter(
+        F.col("cos_sim") >= threshold
+    )
 
-    Norms are computed ONCE PER ROW before the join (round 12):
-    ``cosine()`` inline spelled norm(a)·norm(b) per PAIR, so a block of
-    n rows paid 2n² extra array folds — and Spark's higher-order
-    aggregate/zip_with lambdas are interpreted (not codegen'd),
-    allocation-heavy work that the 32-core contention diagnosis showed
-    inflating superlinearly under load (semdedup_keep CPU 10.0→241 s
-    under a co-running bench for identical tasks/bytes). Per-pair work
-    is now exactly one dot fold. Bit-identical: the hoisted norm/sqrt
-    values are the same doubles the per-pair expression produced (same
-    fold order, same ops), and dot/(na·nb) is the same
-    multiply-then-divide. (A codegen-unrolled fixed-width dot was
-    measured for the per-pair kernel and REJECTED: see the round-12
-    negative-result comment above :func:`norm`.)"""
-    e = spread(df).select(
-        F.col(id_col),
-        F.col(block_col).alias("_blk"),
-        F.col(vec_col),
-        norm(F.col(vec_col)).alias("_nrm"),
+
+# --- driver-held constants as SQL literals -----------------------------------
+# Codebooks and query vectors are folded into ONE ``F.expr`` string, so
+# the k·dim literals are parsed JVM-side in a single py4j call: nested
+# ``F.lit``/``F.struct`` Columns cost ~0.5 s of py4j round-trips per
+# k-means round.
+def _dbl_array(xs) -> str:
+    """DOUBLE array literal: ``repr(float)`` round-trips exactly; the
+    ``D`` suffix keeps the parser in DOUBLE."""
+    return "array({})".format(",".join(repr(float(x)) + "D" for x in xs))
+
+
+def _centroids_sql(cents) -> str:
+    """``array(struct(cid, c), ...)`` over (centroid id, vector) pairs."""
+    return "array({})".format(
+        ", ".join(f"struct({int(cid)} AS cid, {_dbl_array(c)} AS c)" for cid, c in cents)
     )
-    a = e.alias("a")
-    b = (
-        e.select(
-            F.col(id_col).alias("_idb"),
-            F.col("_blk"),
-            F.col(vec_col).alias("_vecb"),
-            F.col("_nrm").alias("_nrmb"),
-        )
-    ).alias("b")
-    return (
-        a.join(b, "_blk")
-        .filter(F.col(id_col) < F.col("_idb"))
-        .select(
-            F.col(id_col).alias("vec_a"),
-            F.col("_idb").alias("vec_b"),
-            F.round(
-                dot(F.col(vec_col), F.col("_vecb"))
-                / (F.col("_nrm") * F.col("_nrmb")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+
+
+def _nearest_sql(cents, vec: str) -> str:
+    """Id of the centroid nearest to the array expression ``vec`` (squared
+    L2): ``array_min`` over (distance, cid) structs picks the argmin in
+    one map-side pass, ties to the lowest cid (structs order
+    lexicographically). No shuffle, where a window argmin shuffles N·k
+    rows per k-means round."""
+    return f"""array_min(transform({_centroids_sql(cents)}, s -> struct(
+        aggregate(zip_with({vec}, s.c, (a, b) -> (a-b)*(a-b)),
+                  0.0D, (acc, x) -> acc + x) AS d,
+        s.cid AS cid))).cid"""
 
 
 def _argmin_expr(cent_list: list[tuple[int, list[float]]]) -> Column:
-    """Map-side nearest-centroid assignment over a column ``v``: the k
-    (distance, centroid_id) structs form one array expression over
-    driver-held centroid constants; ``array_min`` over the struct array
-    picks the argmin in a single pass (struct ordering is lexicographic,
-    so ties break to the lowest centroid_id — matching the r1 window
-    ordering). Zero shuffle — this replaces the r1 window-argmin plan,
-    which shuffled N·k rows per round.
-
-    Built as ONE ``F.expr`` string so the k·dim literals are parsed
-    JVM-side in a single py4j call — constructing them as nested
-    ``F.lit``/``F.struct`` Columns costs ~0.5 s of py4j round-trips per
-    k-means round, which dominated the r1 runtime more than the shuffle
-    did. ``repr(float)`` round-trips exactly; the ``D`` suffix keeps the
-    parser in DOUBLE."""
-    mat = ", ".join(
-        "struct({} AS cid, array({}) AS c)".format(
-            int(cid), ",".join(repr(float(x)) + "D" for x in c)
-        )
-        for cid, c in sorted(cent_list)
-    )
-    return F.expr(
-        f"""array_min(transform(array({mat}), s -> struct(
-            aggregate(zip_with(v, s.c, (a, b) -> (a-b)*(a-b)),
-                      0.0D, (acc, x) -> acc + x) AS d,
-            s.cid AS cid))).cid"""
-    )
+    """IVF cell of column ``v``: its nearest centroid."""
+    return F.expr(_nearest_sql(sorted(cent_list), "v"))
 
 
 def _kmeans_list(
@@ -400,6 +418,42 @@ def _kmeans_list(
     return run_memo(df, ("kmeans", k, n_iter, id_col, vec_col), build)
 
 
+
+def _query_vec(
+    df: DataFrame, query_vec_id: int, id_col: str, vec_col: str
+) -> list[float] | None:
+    """The query row's vector as driver doubles; None when the row is
+    absent (or its vector is NULL), so a search can answer no rows
+    before it trains anything."""
+    row = (
+        df.filter(F.col(id_col) == query_vec_id)
+        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        .first()
+    )
+    return None if row is None or row["v"] is None else list(row["v"])
+
+
+def _no_rows(df: DataFrame, id_col: str) -> DataFrame:
+    """The empty (id_col, cos_sim) answer of a search without a query."""
+    return df.select(id_col, F.lit(None).cast("double").alias("cos_sim")).limit(0)
+
+
+def _double_vecs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return spread(df).select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
+
+
+def _probe_cells(
+    qv: list[float], cent_list: list[tuple[int, list[float]]], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` cells nearest to the query, picked on the driver
+    (as FAISS picks them: the coarse quantizer is small by
+    construction); ties go to the lower centroid id."""
+    qdists = sorted(
+        (sum((a - b) * (a - b) for a, b in zip(qv, c)), cid) for cid, c in cent_list
+    )
+    return [cid for _, cid in qdists[:n_probe]]
+
+
 def ivf_topk(
     df: DataFrame,
     query_vec_id: int = 0,
@@ -412,38 +466,23 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF search: assign corpus to centroids map-side (argmin over
     driver-held centroid constants — zero shuffle), probe the query's
-    ``n_probe`` nearest cells, exact cosine rerank inside them.
-
-    Probe-cell selection is k distances computed on the driver (exactly
-    how FAISS picks cells — the coarse quantizer is small by
-    construction). The whole search is therefore: scan → map-side
-    assignment → probe filter → TakeOrdered. At scale the assignment is
-    written partitioned by centroid_id so a probe reads only matching
-    partitions.
+    ``n_probe`` nearest cells, exact cosine rerank inside them. The
+    whole search is scan → map-side assignment → probe filter →
+    TakeOrdered. At scale the assignment is written partitioned by
+    centroid_id so a probe reads only matching partitions. An absent
+    query row gives no rows and trains nothing.
     """
+    qv = _query_vec(df, query_vec_id, id_col, vec_col)
+    if qv is None:
+        return _no_rows(df, id_col)
     cent_list = _kmeans_list(df, k=n_clusters, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
-    qv = list(
-        df.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .first()["v"]
-    )
-    qdists = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, c)), cid) for cid, c in cent_list
-    )
-    probe_ids = [cid for _, cid in qdists[:n_probe]]
-    vecs = spread(df).select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-    assigned = vecs.withColumn("centroid_id", _argmin_expr(cent_list))
-    qarr = F.expr("array({})".format(",".join(repr(float(x)) + "D" for x in qv)))
-    return (
-        assigned.filter(F.col("centroid_id").isin(probe_ids))
+    cands = (
+        _double_vecs(df, id_col, vec_col)
+        .withColumn("centroid_id", _argmin_expr(cent_list))
+        .filter(F.col("centroid_id").isin(_probe_cells(qv, cent_list, n_probe)))
         .filter(F.col(id_col) != query_vec_id)
-        .select(
-            id_col,
-            F.round(cosine(F.col("v"), qarr), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
     )
+    return top_cosines(cands, F.expr(_dbl_array(qv)), k, id_col, "v")
 
 
 # --- product quantization (X3e): compressed codes + ADC search ------------
@@ -452,26 +491,16 @@ PQ_K = 16  # centroids per subspace → 4-bit codes, 64 floats → 8 nibbles
 
 
 def _pq_assign_expr(cents: list[list[list[float]]], d_sub: int) -> Column:
-    """codes array<int>: per subspace, argmin over that subspace's
-    centroid table applied to the matching slice of ``v``. One parsed
-    expr string (same py4j-cost rationale as :func:`_argmin_expr`);
-    ties break to the lowest code via struct ordering."""
-    parts = []
-    for j, sub in enumerate(cents):
-        mat = ", ".join(
-            "struct({} AS cid, array({}) AS c)".format(
-                cid, ",".join(repr(float(x)) + "D" for x in c)
-            )
-            for cid, c in enumerate(sub)
+    """codes array<int>: per subspace, the nearest code of that
+    subspace's table to the matching slice of ``v``."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            _nearest_sql(enumerate(sub), f"slice(v, {j * d_sub + 1}, {d_sub})")
+            for j, sub in enumerate(cents)
         )
-        parts.append(
-            f"""array_min(transform(array({mat}), s -> struct(
-                aggregate(zip_with(slice(v, {j * d_sub + 1}, {d_sub}), s.c,
-                          (a, b) -> (a-b)*(a-b)), 0.0D,
-                          (acc, x) -> acc + x) AS d,
-                s.cid AS cid))).cid"""
-        )
-    return F.expr("array(" + ", ".join(parts) + ")")
+        + ")"
+    )
 
 
 def _pq_train(
@@ -536,6 +565,23 @@ def _pq_train(
     return run_memo(df, ("pq", m, k, n_iter, id_col, vec_col), build)
 
 
+
+def _adc_sql(qv: list[float], cents: list[list[list[float]]], d_sub: int) -> str:
+    """ADC (asymmetric distance) of column ``codes`` to ``qv``: the
+    query's per-subspace table of squared distances to every trained
+    code, computed on the driver and folded into one expression, so
+    scoring a vector is m table lookups. A table row has one entry per
+    trained code, which is fewer than PQ_K under PQ_K training rows."""
+    table = [
+        [sum((qv[j * d_sub + p] - c[p]) ** 2 for p in range(d_sub)) for c in sub]
+        for j, sub in enumerate(cents)
+    ]
+    return (
+        f"aggregate(zip_with(array({', '.join(_dbl_array(r) for r in table)}), "
+        f"codes, (t, c) -> element_at(t, c + 1)), 0.0D, (acc, x) -> acc + x)"
+    )
+
+
 def pq_codes(
     df: DataFrame,
     m: int = PQ_M,
@@ -547,13 +593,15 @@ def pq_codes(
     """X3e compression path: each vector → m small codes (4-bit at the
     defaults): 64 float32 → 8 nibbles, a 64× size cut. The codes column
     is what a 100 TB pipeline persists; assignment is a zero-shuffle
-    map over driver-held codebooks."""
-    dim = df.select(F.size(vec_col).alias("d")).first()["d"]
+    map over driver-held codebooks. An empty table gives no rows and
+    trains nothing."""
+    dim = df.select(F.size(vec_col).alias("d")).first()
+    if dim is None:
+        return df.select(id_col, F.lit(None).cast("array<int>").alias("codes")).limit(0)
     cents = _pq_train(df, m, k, n_iter, id_col, vec_col)
-    vecs = spread(df).select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-    return vecs.withColumn("codes", _pq_assign_expr(cents, dim // m)).select(
-        id_col, "codes"
-    )
+    return _double_vecs(df, id_col, vec_col).withColumn(
+        "codes", _pq_assign_expr(cents, dim["d"] // m)
+    ).select(id_col, "codes")
 
 
 def pq_topk(
@@ -567,61 +615,28 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """X3e search: ADC (asymmetric distance computation) over PQ codes
-    + exact rerank. The query's per-subspace distance table (m×k
-    doubles) is computed driver-side and folded into the scoring
-    expression — scoring a vector is m table lookups, no float math on
-    the corpus vectors at all. The ADC shortlist then gets an exact
-    cosine rerank (the FAISS IVFADC+refine layout). Both passes are
-    map-side + TakeOrdered: the corpus never shuffles."""
+    """X3e search: ADC over PQ codes (:func:`_adc_sql`), no float math on
+    the corpus vectors, then an exact cosine rerank of the ADC
+    shortlist (the FAISS IVFADC+refine layout). Both passes are
+    map-side + TakeOrdered: the corpus never shuffles. An absent query
+    row gives no rows and trains nothing."""
+    qv = _query_vec(df, query_vec_id, id_col, vec_col)
+    if qv is None:
+        return _no_rows(df, id_col)
     cents = _pq_train(df, m, k, n_iter, id_col, vec_col)
-    dim = len(cents[0][0]) * m
-    d_sub = dim // m
-    qv = list(
-        df.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .first()["v"]
-    )
-    table = [
-        [
-            sum(
-                (qv[j * d_sub + p] - cents[j][c][p]) ** 2
-                for p in range(d_sub)
-            )
-            for c in range(k)
-        ]
-        for j in range(m)
-    ]
-    tbl_sql = ", ".join(
-        "array({})".format(",".join(repr(float(x)) + "D" for x in row))
-        for row in table
-    )
-    codes = _pq_assign_expr(cents, d_sub)
-    adc = F.expr(
-        f"""aggregate(zip_with(array({tbl_sql}), codes,
-                      (t, c) -> element_at(t, c + 1)),
-                      0.0D, (acc, x) -> acc + x)"""
-    )
-    vecs = spread(df).select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
+    d_sub = len(qv) // m
+    vecs = _double_vecs(df, id_col, vec_col)
     short_ids = [
         r[id_col]
         for r in vecs.filter(F.col(id_col) != query_vec_id)
-        .withColumn("codes", codes)
-        .select(id_col, adc.alias("adc_dist"))
+        .withColumn("codes", _pq_assign_expr(cents, d_sub))
+        .select(id_col, F.expr(_adc_sql(qv, cents, d_sub)).alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(shortlist)
         .collect()
     ]
-    qarr = F.expr("array({})".format(",".join(repr(float(x)) + "D" for x in qv)))
-    return (
-        vecs.filter(F.col(id_col).isin(short_ids))
-        .select(
-            id_col,
-            F.round(cosine(F.col("v"), qarr), 6).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(topk)
-    )
+    cands = vecs.filter(F.col(id_col).isin(short_ids))
+    return top_cosines(cands, F.expr(_dbl_array(qv)), topk, id_col, "v")
 
 
 def knn_graph(
@@ -636,44 +651,19 @@ def knn_graph(
     shard / cluster id). The kNN graph is the substrate for
     semantic-dedup clustering and graph-based diversity sampling.
 
-    Same scale shape as :func:`blocked_cosine_pairs`: the join is keyed
-    by the block so the shuffle is bounded and each block's quadratic
-    cost stays local; top-k is a per-vector window over the block join
-    output, ordered by the ROUNDED score (+ neighbor id tiebreak) so
-    engine and oracle rank identically. Norms hoisted to once-per-row
-    before the join (round 12, same bit-identical rewrite as
-    blocked_cosine_pairs — per-pair work is one dot fold).
-    """
-    from pyspark.sql.window import Window
-
-    e = spread(df).select(
-        F.col(id_col),
-        F.col(block_col).alias("_blk"),
-        F.col(vec_col),
-        norm(F.col(vec_col)).alias("_nrm"),
+    Each pair of :func:`_blocked_cosines` is scored once and emitted in
+    both directions by one ``inline``: IEEE products and the norm
+    product commute, so a→b and b→a carry the same double. Top-k is a
+    per-vector window ordered by the ROUNDED score (+ neighbor id
+    tiebreak), so engine and oracle rank identically."""
+    both = _blocked_cosines(df, block_col, id_col, vec_col).select(
+        F.inline(F.array(*[
+            F.struct(F.col(a).alias(id_col), F.col(b).alias("neighbor_id"), "cos_sim")
+            for a, b in (("vec_a", "vec_b"), ("vec_b", "vec_a"))
+        ]))
     )
-    b = e.select(
-        F.col(id_col).alias("_idb"),
-        F.col("_blk"),
-        F.col(vec_col).alias("_vecb"),
-        F.col("_nrm").alias("_nrmb"),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        e.join(b, "_blk")
-        .filter(F.col(id_col) != F.col("_idb"))
-        .select(
-            F.col(id_col),
-            F.col("_idb").alias("neighbor_id"),
-            F.round(
-                dot(F.col(vec_col), F.col("_vecb"))
-                / (F.col("_nrm") * F.col("_nrmb")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(id_col, "neighbor_id", "cos_sim")
+    return _ranked(both, k, "neighbor_id", by=id_col).select(
+        id_col, "neighbor_id", "cos_sim"
     )
 
 
@@ -732,26 +722,22 @@ def ivfpq_topk(
     encoded (centroid_id, codes) frame is the persisted index —
     partitioned by centroid_id so a probe scans only matching
     partitions — and search never touches raw vectors except to rerank
-    the shortlist."""
+    the shortlist. An absent query row gives no rows and trains
+    nothing."""
+    qv = _query_vec(df, query_vec_id, id_col, vec_col)
+    if qv is None:
+        return _no_rows(df, id_col)
     cent_list = _kmeans_list(df, k=n_clusters, id_col=id_col, vec_col=vec_col)
-    d_sub_dim = df.select(F.size(vec_col).alias("d")).first()["d"]
-    d_sub = d_sub_dim // m
+    d_sub = len(qv) // m
 
     # residual frame: v − assigned cell centroid, via a literal
     # cid→centroid lookup folded into the expression
-    cent_lookup = ", ".join(
-        "struct({} AS cid, array({}) AS c)".format(
-            int(cid), ",".join(repr(float(x)) + "D" for x in c)
-        )
-        for cid, c in cent_list
-    )
-    vecs = spread(df).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("v")
-    )
-    assigned = vecs.withColumn("centroid_id", _argmin_expr(cent_list)).withColumn(
+    assigned = _double_vecs(df, id_col, vec_col).withColumn(
+        "centroid_id", _argmin_expr(cent_list)
+    ).withColumn(
         "resid",
         F.expr(
-            f"""zip_with(v, filter(array({cent_lookup}),
+            f"""zip_with(v, filter({_centroids_sql(cent_list)},
                          s -> s.cid = centroid_id)[0].c,
                          (a, b) -> a - b)"""
         ),
@@ -765,120 +751,27 @@ def ivfpq_topk(
         lambda: _pq_train(assigned.select(id_col, "resid"), m, k, 2, id_col, "resid"),
     )
 
-    qrow = df.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).cast("array<double>").alias("v")
-    )
-    qv = list(qrow.first()["v"])
-    qdists = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, c)), cid)
-        for cid, c in cent_list
-    )
-    probe_ids = [cid for _, cid in qdists[:n_probe]]
+    # per probed cell, the ADC table over the query's residual in that cell
+    probe_ids = _probe_cells(qv, cent_list, n_probe)
     cent_by_id = dict(cent_list)
-
-    # per-probed-cell ADC table over the query's residual in that cell
-    def _adc_for_cell(cid: int) -> str:
-        qr = [a - b for a, b in zip(qv, cent_by_id[cid])]
-        table = [
-            [
-                sum(
-                    (qr[j * d_sub + p] - cents_pq[j][c][p]) ** 2
-                    for p in range(d_sub)
-                )
-                for c in range(k)
-            ]
-            for j in range(m)
-        ]
-        tbl = ", ".join(
-            "array({})".format(",".join(repr(float(x)) + "D" for x in row))
-            for row in table
-        )
-        return (
-            f"aggregate(zip_with(array({tbl}), codes, "
-            f"(t, c) -> element_at(t, c + 1)), 0.0D, (acc, x) -> acc + x)"
-        )
-
     adc_case = "CASE " + " ".join(
-        f"WHEN centroid_id = {cid} THEN ({_adc_for_cell(cid)})"
+        f"WHEN centroid_id = {cid} THEN "
+        f"({_adc_sql([a - b for a, b in zip(qv, cent_by_id[cid])], cents_pq, d_sub)})"
         for cid in probe_ids
     ) + " END"
 
     # _pq_assign_expr reads column `v`; point it at the residuals
-    coded = (
+    short = (
         assigned.filter(F.col("centroid_id").isin(probe_ids))
         .filter(F.col(id_col) != query_vec_id)
         .withColumnRenamed("v", "_raw")
         .withColumnRenamed("resid", "v")
         .withColumn("codes", _pq_assign_expr(cents_pq, d_sub))
         .withColumn("adc_dist", F.expr(adc_case))
+        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        .limit(shortlist)
     )
-    qarr = F.expr("array({})".format(",".join(repr(float(x)) + "D" for x in qv)))
-    short = coded.orderBy(F.asc("adc_dist"), F.asc(id_col)).limit(shortlist)
-    return (
-        short.select(
-            id_col, F.round(cosine(F.col("_raw"), qarr), 6).alias("cos_sim")
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(topk)
-    )
-
-
-# --- §2.7 grouped-map: per-label dominant eigenvector --------------------------
-def label_top_eigvec(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_power_iter: int = 100,
-) -> DataFrame:
-    """Per-label dominant eigenvector of the embedding covariance — the
-    1-component PCA a SemDeDup-style pipeline uses to orient each
-    cluster. This is the sanctioned ``applyInPandas`` (grouped-map)
-    seam: an eigen-solve is genuinely inexpressible in Spark SQL
-    expressions, each group's solve is independent, and the group
-    payload (one label's vectors) fits an executor by construction —
-    exactly the contract grouped-map is for.
-
-    Determinism: each group is sorted by ``id_col`` before the solve
-    (fp sums are order-sensitive, and grouped-map hands rows over in
-    partition order), then a fixed-iteration power method from an
-    all-ones start, float64 throughout, sign fixed by the first nonzero
-    component — BIT-identical output on any partitioning (pinned
-    against straight numpy in pytest).
-    Output: (label, n_vecs, eigval, eigvec).
-    """
-    import numpy as np
-    import pandas as pd
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col)
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        centered = mat - mat.mean(axis=0, keepdims=True)
-        cov = centered.T @ centered / len(mat)
-        v = np.ones(cov.shape[0], dtype=np.float64)
-        for _ in range(n_power_iter):
-            v = cov @ v
-            n = np.linalg.norm(v)
-            if n == 0.0:
-                break
-            v = v / n
-        nz = np.nonzero(v)[0]
-        if len(nz) and v[nz[0]] < 0:
-            v = -v
-        eigval = float(v @ cov @ v)
-        return pd.DataFrame(
-            {
-                "label": [pdf[label_col].iloc[0]],
-                "n_vecs": [len(mat)],
-                "eigval": [eigval],
-                "eigvec": [v.tolist()],
-            }
-        )
-
-    return df.groupBy(label_col).applyInPandas(
-        solve,
-        schema="label int, n_vecs long, eigval double, eigvec array<double>",
-    )
+    return top_cosines(short, F.expr(_dbl_array(qv)), topk, id_col, "_raw")
 
 
 def hard_negatives(
@@ -901,10 +794,8 @@ def hard_negatives(
     takes the top-k — identical topology to brute_force_topk, times a
     small constant. At billion-vector scale swap the scan for the
     IVF/LSH probe and keep the same label-exclusion filter and window
-    cut. Scores round to 6 dp for cross-engine float agreement (~1 ulp).
+    cut.
     """
-    from pyspark.sql.window import Window
-
     anchor_pred = (
         F.col(id_col).isin(query_ids)
         if query_ids is not None
@@ -915,24 +806,17 @@ def hard_negatives(
         F.col(vec_col).alias("query_vec"),
         F.col(label_col).alias("query_label"),
     )
-    scored = (
+    cands = (
         spread(df)
         .crossJoin(F.broadcast(q))  # n_queries rows: O(N·|anchors|)
         .filter(F.col(label_col) != F.col("query_label"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neg_id"),
-            F.col(label_col).alias("neg_label"),
-            F.round(cosine(F.col(vec_col), F.col("query_vec")), 6).alias(
-                "cos_sim"
-            ),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neg_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neg_id", "neg_label", "cos_sim")
+    return top_cosines(
+        cands, F.col("query_vec"), k, id_col, vec_col, by="query_id"
+    ).select(
+        "query_id",
+        "rank",
+        F.col(id_col).alias("neg_id"),
+        F.col(label_col).alias("neg_label"),
+        "cos_sim",
     )

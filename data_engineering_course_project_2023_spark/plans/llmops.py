@@ -4866,27 +4866,14 @@ def hybrid_rrf(
     )
     emb = t["embeddings"]
     if anchor_id is None:
-        anchor_id = hash_picked_ids(emb, "vec_id", 1)[0]
-    q = emb.filter(F.col("vec_id") == anchor_id).select(
-        F.col("embedding").alias("query_vec")
-    )
-    vec_short = (
-        spread(emb)
-        .filter(F.col("vec_id") != anchor_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            F.round(
-                similarity.cosine(F.col("embedding"), F.col("query_vec")), 6
-            ).alias("cos6"),
-        )
-        .orderBy(F.desc("cos6"), F.asc("vec_id"))
-        .limit(RRF_SHORTLIST)
-    )
+        # an empty corpus has no anchor: the vector side is empty and the
+        # fusion is lexical only, the twin's full-outer-join answer
+        anchor_id = next(iter(hash_picked_ids(emb, "vec_id", 1)), None)
+    vec_short = similarity.brute_force_topk(emb, anchor_id, RRF_SHORTLIST)
     vec = vec_short.select(
         F.col("vec_id").alias("id"),
         F.row_number()
-        .over(Window.orderBy(F.desc("cos6"), F.asc("vec_id")))
+        .over(Window.orderBy(F.desc("cos_sim"), F.asc("vec_id")))
         .alias("vec_rank"),
     )
     rrf = (
@@ -4987,17 +4974,10 @@ def mmr_rerank(t: Tables) -> DataFrame:
     in ONE job over the CHECKPOINTED 20-row frame (a shortlist²
     self-product — 380 rows, bounded by MMR_SHORTLIST², never
     corpus-sized) and collected; greedy pick SELECTION walks that
-    matrix driver-side (bounded state, MLlib discipline).
-    Round 12 (VERDICT r11 #5): the previous spelling ran each greedy
-    step as its own ``.first()`` — MMR_K sequential driver jobs, each
-    paying Catalyst planning + py4j + scheduling for a 20-row frame
-    (11 jobs/run; r11 measured 6.0 s wall / 4.1 s CPU over 43 tasks at
-    sf0.1, pure driver-barrier floor). A first rewrite that unrolled
-    the steps as chained broadcast-join/limit-1 subplans was measured
-    and REJECTED (22 jobs/run — every per-step broadcast and lazy
-    checkpoint is its own job — and warm wall 3.3–3.9 s vs the loop's
-    2.7–4.2 s). The shipped shape is 3 jobs total: shortlist
-    checkpoint, sim-matrix collect, final assembly.
+    matrix driver-side (bounded state, MLlib discipline). That is 3
+    jobs a run (shortlist checkpoint, sim-matrix collect, final
+    assembly); one ``.first()`` per greedy step took 11 jobs and 6.0 s
+    wall at sf0.1, and chained per-step subplans took 22 jobs.
 
     Exactness discipline: every value in the OUTPUT is engine-computed
     — rel and all pairwise sims come from the collected matrix
@@ -5716,8 +5696,6 @@ def retrieval_metrics(t: Tables) -> DataFrame:
     order — and therefore MRR — is identical cross-engine (~1 ulp
     float drift sits far inside the rounding; real score gaps are
     orders of magnitude larger)."""
-    from pyspark.sql.window import Window
-
     anchor_ids = hash_picked_ids(
         t["embeddings"], "vec_id", RETRIEVAL_N_ANCHORS
     )
@@ -5727,20 +5705,12 @@ def retrieval_metrics(t: Tables) -> DataFrame:
         F.col("embedding").alias("qv"),
         F.col("label").alias("qlabel"),
     )
-    scored = (
+    cands = (
         embs.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "qlabel",
-            "vec_id",
-            (F.col("label") == F.col("qlabel")).cast("int").alias("rel"),
-            F.round(similarity.cosine(F.col("embedding"), F.col("qv")), 6)
-            .alias("cos_sim"),
-        )
+        .withColumn("rel", (F.col("label") == F.col("qlabel")).cast("int"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
+    ranked = similarity.top_cosines(cands, F.col("qv"), None, by="query_id")
     per_anchor = (
         ranked.groupBy("query_id")
         .agg(

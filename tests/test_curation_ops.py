@@ -139,56 +139,6 @@ def test_brand_frontier_is_exactly_the_nondominated_set(spark):
     assert got == keep == {1, 3, 5, 6}
 
 
-def test_label_top_eigvec_matches_numpy_and_partitioning(spark):
-    """Grouped-map PCA: the per-label power-method eigenvector equals a
-    driver-side numpy reference, and is identical under a different
-    input partitioning."""
-    import numpy as np
-
-    from data_engineering_course_project_2023_spark.operators.similarity import (
-        label_top_eigvec,
-    )
-    from data_engineering_course_project_2023_spark.sources.readers import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    out1 = {r["label"]: r for r in label_top_eigvec(emb).collect()}
-    out2 = {r["label"]: r for r in label_top_eigvec(emb.repartition(7)).collect()}
-    assert set(out1) == set(out2)
-    for lbl in out1:
-        assert out1[lbl]["eigvec"] == out2[lbl]["eigvec"]  # exact
-    rows = sorted(
-        emb.select("vec_id", "label", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    by_label = {}
-    for r in rows:
-        by_label.setdefault(r["label"], []).append(
-            np.asarray(r["embedding"], dtype=np.float64)
-        )
-    for lbl, vecs in by_label.items():
-        mat = np.array(vecs)
-        centered = mat - mat.mean(axis=0, keepdims=True)
-        cov = centered.T @ centered / len(mat)
-        v = np.ones(cov.shape[0])
-        for _ in range(100):
-            v = cov @ v
-            n = np.linalg.norm(v)
-            if n == 0:
-                break
-            v = v / n
-        nz = np.nonzero(v)[0]
-        if len(nz) and v[nz[0]] < 0:
-            v = -v
-        got = np.array(out1[lbl]["eigvec"])
-        assert np.allclose(got, v, atol=1e-12)
-        # eigenvector sanity: Rayleigh quotient near the dominant
-        # eigenvalue (random embeddings have a tiny spectral gap, so
-        # fixed-iteration power method gets close, not exact — the
-        # contract under test is determinism + numpy equality)
-        w = np.linalg.eigvalsh(cov).max()
-        assert abs(out1[lbl]["eigval"] - w) / w < 1e-2
-
-
 def test_snapshot_diff_statuses_on_constructed_versions(spark):
     """All four diff statuses materialize correctly: the id-hash split
     plus the bucket-5 marker edit must classify every doc_id into

@@ -35,8 +35,8 @@ TEST_ONLY: set[str] = {
     "ARXIV_RAW", "CDC_LOG_SCHEMA", "cdc_materialize_stream",
     "cdc_state_view", "dedup_events_batch", "dsir_model_snapshot_stream",
     "enrich_by_key", "export_training_shards", "fetch_extract_cleanup",
-    "finalize_funnel", "frame_sample", "label_top_eigvec",
-    "novelty_ingest_batch", "read_binary_dir",
+    "finalize_funnel", "frame_sample", "novelty_ingest_batch",
+    "read_binary_dir",
     "running_user_totals_stream", "sentence_split_udtf", "stream_log_dir",
     "write_zordered",
     # named elsewhere only in comments or docstrings
